@@ -7,6 +7,11 @@ floats too since both sides round order-dependent aggregates).
 
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
 
+Verify also writes <verifyOutDir>/_status.json ("ok", or the error class
+and message per query); a query that failed in Verify is reported here
+by name with that error, and any failed query — oracled or rows-only —
+makes the exit status nonzero.
+
 Every oracle runs under a hard per-query time budget (ORACLE_BUDGET_S,
 default 30 s at sf0.01). A query that exceeds it is interrupted and
 FAILED LOUDLY by name. This exists because an oracle that is merely
@@ -81,11 +86,27 @@ def connect(sf_dir: str):
     return con
 
 
+def verify_errors(out_dir: str) -> dict:
+    """{query: "<error class>: <message>"} for every query Verify's
+    _status.json reports as failed (empty if the file is absent)."""
+    try:
+        status = json.load(open(f"{out_dir}/_status.json"))
+    except FileNotFoundError:
+        return {}
+    return {name: f"{s['error']}: {s['message']}"
+            for name, s in status.items() if s != "ok"}
+
+
 def main(sf_dir: str, out_dir: str) -> int:
     con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    errors = verify_errors(out_dir)
     failures = 0
     for name, sql in sorted(oracle.items()):
+        if name in errors:
+            print(f"FAIL {name}: verify error {errors[name]}")
+            failures += 1
+            continue
         try:
             got = pd.read_parquet(f"{out_dir}/{name}")
         except Exception as e:
@@ -164,8 +185,13 @@ def main(sf_dir: str, out_dir: str) -> int:
         else:
             slow = " [SLOW ORACLE]" if oracle_s > ORACLE_BUDGET_S / 3 else ""
             print(f"PASS {name} ({len(g)} rows, oracle {oracle_s:.2f}s){slow}")
+    rows_only = sorted(set(errors) - set(oracle))
+    for name in rows_only:
+        print(f"FAIL {name} (rows-only): verify error {errors[name]}")
     print(f"\n{len(oracle) - failures}/{len(oracle)} queries pass")
-    return 1 if failures else 0
+    if rows_only:
+        print(f"{len(rows_only)} rows-only queries failed in Verify")
+    return 1 if failures or rows_only else 0
 
 
 if __name__ == "__main__":

@@ -370,12 +370,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: initialize codegen/parquet-reader infrastructure
     // so the first measured query isn't charged for JVM startup. Only
@@ -399,8 +394,8 @@ object Bench {
     // measure the recurring delta-dedup cost against a COLD reopen,
     // not the one-time snapshot build
     try {
-      graft.queries.TextVector.dedupSnapshotFor(spark, sfDir, md5Kernel = true)
-      graft.queries.TextVector.dedupSnapshotFor(spark, sfDir, md5Kernel = false)
+      graft.queries.TextVector.dedupSnapshotFor(spark, sfDir, graft.operators.HashFamily.Md5)
+      graft.queries.TextVector.dedupSnapshotFor(spark, sfDir, graft.operators.HashFamily.Xx)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] dedup-snapshot warmup failed: $e") }
     // `-r N`: single-shot timings in this sandbox carry ±40% noise on

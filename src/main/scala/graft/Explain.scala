@@ -1,11 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted plans for selected queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     args(0).split(",").foreach { q =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool paired with scripts/h5check.py: export one parquet table
   * as HDF5 so the INDEPENDENT pure-Python reader (separate
   * implementation of the public format spec — struct+zlib only) can
@@ -9,8 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExportOne {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val df = spark.read.parquet(a(0))
     graft.io.hdf5.Hdf5Io.exportHdf5(graft.core.OCDataset(df), a(1),

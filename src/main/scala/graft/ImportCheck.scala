@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool paired with scripts/h5make.py: import an INDEPENDENTLY
@@ -10,8 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object ImportCheck {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val ds = graft.io.hdf5.Hdf5Io.importDataset(spark, a(0))
     println(s"rows=${ds.count()} box=${ds.header.boxSize} z=${ds.header.redshift}")

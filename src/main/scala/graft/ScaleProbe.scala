@@ -41,10 +41,7 @@ object ScaleProbe {
     // SPARK_GRAFT_CPUS lets memory-constrained probe runs (lmvocab's
     // small-heap no-driver-spike demonstration) scale down the
     // executor-thread working set; default matches the bench rig
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     if (tlMode) { twoLevelProbe(spark, outDir); return }
     if (bpeMode) { bpeProbe(spark, outDir); return }
@@ -108,7 +105,7 @@ object ScaleProbe {
       println(f"$name%-26s FAILED: ${e.getMessage}")
     }
 
-    import graft.operators.{CorpusStats, Dedup, Sampling, Similarity}
+    import graft.operators.{CorpusStats, Dedup, HashFamily, Sampling, Similarity}
     time("topk_ngrams", base, scaled)(d => CorpusStats.topKNgrams(d, "text", 3, 20).count())
     time("repetition", base, scaled)(d => CorpusStats.repetitionStats(d, "doc_id", "text").count())
     // the q136 one-pass Gopher kernel: per-row O(len·n), no shuffle,
@@ -246,7 +243,8 @@ object ScaleProbe {
     // path; the gate exists to be hash-replayable and brute-force-
     // equal at gate scale)
     time("minhash_md5_gate", base, scaled)(d =>
-      Dedup.minhashCandidatesMd5(d, "doc_id", "text", minEstimate = 0.5).count())
+      Dedup.minhashCandidates(d, "doc_id", "text", bands = 8, minEstimate = 0.5,
+        family = HashFamily.Md5).count())
     if (factor <= 10)
       time("simhash_md5_gate", base, scaled)(d =>
         Dedup.simhashPairsMd5(d, "doc_id", "text", maxHamming = 6).count())

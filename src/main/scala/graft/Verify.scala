@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * `_status.json`: per query, "ok" or the error class and message that
+  * stopped it, so a failed query is reported by name rather than as a
+  * missing result directory. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name prefixes (dev
@@ -13,25 +16,22 @@ object Verify {
     }
     def selected(name: String) =
       prefixes.isEmpty || prefixes.exists(name.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // only stop the session if WE created it: embedded callers (specs,
     // notebooks) hand getOrCreate an active session whose lifetime is
     // theirs, and stopping it would kill their later work
     val hadSession = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val status = SparkEntry.queries.filter(kv => selected(kv._1)).toSeq.map { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        name -> None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        name -> Some(e)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -49,6 +49,12 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val statusJson = status.map {
+      case (name, None) => s"${q(name)}: ${q("ok")}"
+      case (name, Some(e)) => s"${q(name)}: {${q("error")}: ${q(e.getClass.getName)}, " +
+        s"${q("message")}: ${q(String.valueOf(e.getMessage))}}"
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/_status.json"), statusJson)
     if (!hadSession) spark.stop()
   }
 }

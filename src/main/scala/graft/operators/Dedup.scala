@@ -5,8 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
 /** The md5-family MinHash affine constants — one definition shared by
-  * the DataFrame forms here, the oracle SQL builders, and the
-  * map-side codegen kernel in [[graft.plans.Md5Kernels]].
+  * [[HashFamily.Md5]], the oracle SQL builders, and the map-side
+  * codegen kernel in [[graft.plans.Md5Kernels]]. Component i of a
+  * signature is h_i(x) = (a_i·x + b_i) mod [[MinhashP]] over a 32-bit
+  * base hash x — the classic k-hashes-from-one-hash construction,
+  * replayable in any SQL engine with 64-bit integers (a_i < 2³¹ and
+  * x < 2³² keep every product under 2⁶³, so checked BIGINT
+  * arithmetic never overflows).
   */
 object DedupHashes {
   val MinhashP: Long = 4294967291L    // largest prime < 2^32
@@ -71,16 +76,29 @@ object Dedup {
     * map-side kernel stage shared by the self-join candidate pass and
     * the incremental [[dropSeenBefore]] path. Written to parquet this
     * IS the corpus dedup snapshot: tomorrow's batch dedups against it
-    * without touching yesterday's text.
+    * without touching yesterday's text — with the same `family` that
+    * wrote it. [[HashFamily.Md5]] signatures replay as SQL (the gate
+    * snapshot).
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, k: Int = 32): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
-    df.select(col(idCol).as("doc"),
-        call_function("graft_ngram_hashes",
-          transform(tokens(col(textCol)), t => xxhash64(t)), lit(shingleN)).as("hs"))
-      .filter(size(col("hs")) > 0)
-      .select(col("doc"), call_function("graft_minhash_sig", col("hs"), lit(k)).as("sig"))
+                        shingleN: Int = 3, k: Int = 32,
+                        family: HashFamily = HashFamily.Xx): DataFrame =
+    family.minhashSignatures(df, idCol, textCol, shingleN, k)
+
+  /** The band count a MinHash operator runs at: an explicit `bands`
+    * must divide k — a truncating k/nBands silently leaves signature
+    * components unbanded, and bands > k gives rowsPerBand 0: EMPTY
+    * band slices, identical bucket keys everywhere, and an O(n²)
+    * bucket join. `bands = 0` applies [[lshParams]] at the gating
+    * similarity (`minEstimate`, or the conventional 0.7 near-dup
+    * target when no gate is set).
+    */
+  private def bandCount(k: Int, bands: Int, minEstimate: Double): Int = {
+    val nBands = if (bands > 0) bands
+      else lshParams(k, if (minEstimate > 0) minEstimate else 0.7)._1
+    require(nBands >= 1 && nBands <= k && k % nBands == 0,
+      s"bands ($nBands) must divide k ($k)")
+    nBands
   }
 
   /** MinHash+LSH candidate pairs: signature (k values) per doc map-side,
@@ -95,35 +113,33 @@ object Dedup {
     * caller is actually gating on (`minEstimate`, or the conventional
     * 0.7 near-dup target when no gate is set) — the guessed-constant
     * regime is what SCALE.md measures going quadratic.
+    *
+    * `family = HashFamily.Md5` is the DuckDB-replayable gate (q26):
+    * the same pipeline over md5 signatures and md5 band keys;
+    * DedupSpec asserts the two families recover the same candidate
+    * pair set on the gate corpus.
     */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, k: Int = 32, bands: Int = 0,
-                        minEstimate: Double = 0.0): DataFrame = {
-    val nBands = if (bands > 0) bands
-      else lshParams(k, if (minEstimate > 0) minEstimate else 0.7)._1
-    // an explicit bands must divide k (the md5 twin's contract): a
-    // truncating k/nBands silently leaves signature components
-    // unbanded, and bands > k gives rowsPerBand 0 — EMPTY band slices,
-    // identical bucket keys everywhere, and an O(n²) bucket join
-    require(nBands >= 1 && nBands <= k && k % nBands == 0,
-      s"bands ($nBands) must divide k ($k)")
+                        minEstimate: Double = 0.0,
+                        family: HashFamily = HashFamily.Xx): DataFrame = {
+    val nBands = bandCount(k, bands, minEstimate)
     val rowsPerBand = k / nBands
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // Stage the signature through explicit projections (hash each
     // shingle once, then one native one-pass k-min kernel — a
-    // codegen'd Catalyst expression, plans/TextKernels.scala) and
-    // disk-snapshot it — the self-join would otherwise inline and
-    // recompute the whole signature expression on both sides. The
-    // snapshot (vs the round-14 MEMORY_AND_DISK persist) keeps the
-    // corpus-sized signature frame OFF the executor heap, keeps
-    // lineage, and is ContextCleaner-reaped with the result — no
-    // CacheManager entry to unpersist.
+    // codegen'd Catalyst expression, plans/TextKernels.scala and
+    // plans/Md5Kernels.scala) and disk-snapshot it — the self-join
+    // would otherwise inline and recompute the whole signature
+    // expression on both sides. The snapshot (vs the round-14
+    // MEMORY_AND_DISK persist) keeps the corpus-sized signature frame
+    // OFF the executor heap, keeps lineage, and is ContextCleaner-
+    // reaped with the result — no CacheManager entry to unpersist.
     val sigs = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      minhashSignatures(df, idCol, textCol, shingleN, k))
+      minhashSignatures(df, idCol, textCol, shingleN, k, family))
     // Candidate pairs carry ONLY ids through the bucket join + distinct;
     // signatures re-attach afterwards (two slim joins on doc id).
     val buckets = sigs.select(col("doc"),
-      posexplode(lshBands(col("sig"), nBands, rowsPerBand)).as(Seq("band", "bucket")))
+      posexplode(family.bandKeys(col("sig"), nBands, rowsPerBand)).as(Seq("band", "bucket")))
     val a = buckets.as("a"); val b = buckets.as("b")
     val pairs = a.join(b, col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") && col("a.doc") < col("b.doc"))
@@ -136,9 +152,9 @@ object Dedup {
         zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
         lit(0), (acc, v) => acc + v))
       // threshold on the UNROUNDED estimate (the family convention —
-      // jaccardPairs, containment, and the md5 twin all do; filtering
-      // the rounded value drops borderline pairs for non-power-of-two
-      // k); rounding is display-only on the kept rows
+      // jaccardPairs and containment do too; filtering the rounded
+      // value drops borderline pairs for non-power-of-two k);
+      // rounding is display-only on the kept rows
       .filter(col("n_match").cast("double") / lit(k.toDouble) >= minEstimate)
       .withColumn("est_jaccard", round(col("n_match").cast("double") / lit(k.toDouble), 6))
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
@@ -155,118 +171,20 @@ object Dedup {
     org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(scored)
   }
 
-  /** MinHash universal-hash family over a 32-bit base hash:
-    * h_i(x) = (a_i·x + b_i) mod [[MinhashP]] — the classic k-hashes-
-    * from-one-hash construction, replayable in any SQL engine with
-    * 64-bit integers (a_i < 2³¹ and x < 2³² keep every product under
-    * 2⁶³, so checked BIGINT arithmetic never overflows). Constants
-    * live in [[DedupHashes]] so the map-side codegen kernel
-    * ([[graft.plans.Md5Kernels]]) shares the ONE definition.
-    */
-  val MinhashP: Long = DedupHashes.MinhashP
-  private[operators] def minhashA(i: Int): Long = DedupHashes.minhashA(i)
-  private[operators] def minhashB(i: Int): Long = DedupHashes.minhashB(i)
-
-  /** DuckDB-replayable MinHash+LSH candidate pairs — the
-    * correctness-GATE twin of [[minhashCandidates]]: identical
-    * pipeline shape (distinct shingles map-side, ONE hash-agg shuffle
-    * for the k-component signature with map-side partial mins,
-    * ids-only bucket join, signatures re-attached after the
-    * distinct), but the hash family is SQL-replayable: ONE md5 per
-    * shingle string provides a 32-bit base (its first 8 hex chars),
-    * and the k components are affine transforms (a_i·base + b_i) mod
-    * P over it ([[minhashA]]/[[minhashB]] — one digest per shingle
-    * instead of k, which is what makes the gate kernel's cost
-    * comparable to the production one's). The xxhash64 kernel remains
-    * the production default; DedupSpec asserts the two kernels
-    * recover the same candidate pair set on the gate corpus.
-    */
-  /** Per-document md5-family MinHash signatures — the gate twin of
-    * [[minhashSignatures]] (same (doc, sig) shape): ONE md5 per
-    * distinct word-n-gram shingle provides a 32-bit base (first 8 hex
-    * chars), and the k components are affine transforms over it
-    * ([[minhashA]]/[[minhashB]] mod [[MinhashP]]) — fully
-    * SQL-replayable. Written to parquet this is the gate-side dedup
-    * SNAPSHOT the incremental [[dropSeenBeforeMd5]] path dedups
-    * against. One shuffle: the k per-family mins are agg columns, so
-    * partial agg folds each partition's shingles before anything
-    * moves.
-    */
-  def minhashSignaturesMd5(df: DataFrame, idCol: String, textCol: String,
-                           shingleN: Int = 3, k: Int = 32): DataFrame = {
-    // ONE map-side codegen kernel per row (plans/Md5Kernels.scala):
-    // the k affine minima over each shingle's md5 base, bit-identical
-    // to the former explode → groupBy(doc) → k-min-aggregate chain
-    // (Md5KernelsSpec pins the equality) — with the per-document
-    // Exchange removed outright (optimization guide §2.4: a signature
-    // derived only from a row's own text never needed a shuffle).
-    // Docs with < shingleN tokens return a null sig → filtered, the
-    // exact row set the exploded form produced.
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
-    // NO spread here (measured): the signature feeds a bucket-join
-    // shuffle chain, and at gate scale the spread's extra exchange +
-    // 32-way task fan-out costs more than the parallel hashing buys
-    // (q26 1.4 -> 2.0 s, q35 1.1 -> 1.9 s with a spread) — the same
-    // trade the windowHashes/denseFeatures kernels measure the other
-    // way (their corpora explode ×W / carry dense arrays).
-    df.select(col(idCol).as("doc"),
-        call_function("graft_md5_minhash_sig",
-          tokens(col(textCol)), lit(shingleN), lit(k)).as("sig"))
-      .filter(col("sig").isNotNull)
-  }
-
-  /** md5 band bucket keys: md5 of the comma-joined r-component band
-    * slice — shared by [[minhashCandidatesMd5]] and
-    * [[dropSeenBeforeMd5]] so the two gates band identically. */
-  private def md5Bands(sig: Column, bands: Int, r: Int): Column =
-    array((0 until bands).map(j =>
-      md5(array_join(slice(sig, j * r + 1, r).cast("array<string>"), ","))): _*)
-
-  def minhashCandidatesMd5(df: DataFrame, idCol: String, textCol: String,
-                           shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-                           minEstimate: Double = 0.5): DataFrame = {
-    require(bands > 0 && k % bands == 0,
-      s"k=$k must split into bands=$bands equal rows-per-band")
-    val r = k / bands
-    val sigs = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      minhashSignaturesMd5(df, idCol, textCol, shingleN, k))
-    val buckets = sigs.select(col("doc"),
-      posexplode(md5Bands(col("sig"), bands, r)).as(Seq("band", "bucket")))
-    val a = buckets.as("a"); val b = buckets.as("b")
-    val pairs = a.join(b, col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") && col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .distinct()
-    val scored = pairs
-      .join(sigs.select(col("doc").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sigs.select(col("doc").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .withColumn("__e", aggregate(
-        zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, v) => acc + v).cast("double") / lit(k.toDouble))
-      .filter(col("__e") >= minEstimate)
-      .select(col("doc_a"), col("doc_b"), round(col("__e"), 6).as("est_jaccard"))
-    // same lifecycle as minhashCandidates: the (small) pair list
-    // materializes eagerly with lineage kept; the signature snapshot
-    // stays on disk until the result is released
-    org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(scored)
-  }
-
-  /** DuckDB-replayable SimHash near-dup pairs — gate twin of
+  /** (doc, sig) md5-bit SimHash signatures — the map-side kernel of
+    * [[simhashPairsMd5]], the DuckDB-replayable gate twin of
     * [[simhashPairs]]: bit b of the 64-bit signature is the sign of
     * the token vote sum, where a token's bits are the first 16 hex
     * chars of md5(token) (nibble-major, high bit of each nibble
-    * first). Banded into `maxHamming + 1` DISJOINT bit ranges, so by
-    * pigeonhole every pair at Hamming distance <= maxHamming shares
-    * at least one exact band — the LSH pass is EXACT: the output
-    * equals the brute-force pair set, which is precisely what the
-    * DuckDB oracle computes with an O(n²) self-join. (The production
-    * [[simhashPairs]] keeps its fixed four 16-bit bands — a recall
-    * trade documented there; this gate shape is exhaustive by
-    * construction.)
-    */
-  /** (doc, sig) md5-bit SimHash signatures — the map-side kernel of
-    * [[simhashPairsMd5]], exposed so specs can brute-force the exact
-    * pair set over the same signatures the banded pass uses.
+    * first). [[simhashPairsMd5]] bands it into `maxHamming + 1`
+    * DISJOINT bit ranges, so by pigeonhole every pair at Hamming
+    * distance <= maxHamming shares at least one exact band — the LSH
+    * pass is EXACT: the output equals the brute-force pair set, which
+    * is precisely what the DuckDB oracle computes with an O(n²)
+    * self-join. (The production [[simhashPairs]] keeps its fixed four
+    * 16-bit bands — a recall trade documented there; the gate shape
+    * is exhaustive by construction.) Exposed so specs can brute-force
+    * the exact pair set over the same signatures the banded pass uses.
     */
   def simhashSignaturesMd5(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // ONE map-side codegen kernel per row (plans/Md5Kernels.scala):
@@ -278,7 +196,7 @@ object Dedup {
     // tokens). Null text → null sig → filtered (the exploded form
     // emitted no row there).
     graft.plans.GraftExtensions.registerAll(df.sparkSession)
-    // NO spread (measured, see minhashSignaturesMd5)
+    // NO spread (measured, see HashFamily.Md5.minhashSignatures)
     df.select(col(idCol).as("doc"),
         call_function("graft_md5_simhash64", tokens(col(textCol))).as("sig"))
       .filter(col("sig").isNotNull)
@@ -562,29 +480,19 @@ object Dedup {
     * component, drop the rest. The full pipeline is: map-side
     * signatures, one bucket shuffle, a few component rounds over the
     * (tiny) pair list, one anti-join back against the corpus.
+    *
+    * `family = HashFamily.Md5` is the DuckDB-replayable gate (q35):
+    * the oracle replays the md5/affine pair CTE and a recursive
+    * transitive-closure CTE for the components (a doc is dropped iff
+    * it reaches a smaller id); DedupSpec asserts both families keep
+    * the same survivor set on the gate corpus.
     */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, k: Int = 32, bands: Int = 0,
-                         minEstimate: Double = 0.7): DataFrame = {
-    val pairs = minhashCandidates(df, idCol, textCol, shingleN, k, bands, minEstimate)
-    dropByComponents(df, idCol, pairs)
-  }
-
-  /** Gate twin of [[dropNearDuplicates]] — identical pipeline
-    * (candidates → connected components → keep min id per component)
-    * over the SQL-replayable [[minhashCandidatesMd5]] kernel, so the
-    * whole end-to-end dedup (including the component resolution) can
-    * be hash-checked against a DuckDB oracle: the pair CTE replays
-    * the md5/affine MinHash, a recursive transitive-closure CTE
-    * replays the components (a doc is dropped iff it reaches a
-    * smaller id). Production callers keep [[dropNearDuplicates]]'s
-    * xxhash64 kernel; DedupSpec asserts both variants keep the same
-    * survivor set on the gate corpus.
-    */
-  def dropNearDuplicatesMd5(df: DataFrame, idCol: String, textCol: String,
-                            shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-                            minEstimate: Double = 0.5): DataFrame = {
-    val pairs = minhashCandidatesMd5(df, idCol, textCol, shingleN, k, bands, minEstimate)
+                         minEstimate: Double = 0.7,
+                         family: HashFamily = HashFamily.Xx): DataFrame = {
+    val pairs = minhashCandidates(df, idCol, textCol, shingleN, k, bands,
+      minEstimate, family)
     dropByComponents(df, idCol, pairs)
   }
 
@@ -614,27 +522,20 @@ object Dedup {
     * small). The two-stage winner (max score per label, then min id
     * among score-ties) keeps the survivor deterministic without
     * ordering floats inside a struct max.
+    *
+    * `family = HashFamily.Md5` is the gate (q105, the q35 pattern):
+    * the oracle replays the pair CTE, closes the components with the
+    * recursive reach CTE, labels each member with its component
+    * minimum, and keeps argmax-score/min-id per label; DedupSpec
+    * asserts both families keep the same survivors on a planted
+    * corpus at equal parameters.
     */
   def dropNearDuplicatesBest(df: DataFrame, idCol: String, textCol: String,
                              score: Column, shingleN: Int = 3, k: Int = 32,
-                             bands: Int = 0, minEstimate: Double = 0.7): DataFrame = {
-    val pairs = minhashCandidates(df, idCol, textCol, shingleN, k, bands, minEstimate)
-    dropByComponentsBest(df, idCol, score, pairs)
-  }
-
-  /** Gate twin of [[dropNearDuplicatesBest]] over the SQL-replayable
-    * [[minhashCandidatesMd5]] kernel (the q35 pattern): the oracle
-    * replays the pair CTE, closes the components with the recursive
-    * reach CTE, labels each member with its component minimum, and
-    * keeps argmax-score/min-id per label. Production callers use
-    * [[dropNearDuplicatesBest]]'s xxhash64 kernel; DedupSpec asserts
-    * both keep the same survivors on a planted corpus at equal
-    * parameters.
-    */
-  def dropNearDuplicatesBestMd5(df: DataFrame, idCol: String, textCol: String,
-                                score: Column, shingleN: Int = 3, k: Int = 32,
-                                bands: Int = 8, minEstimate: Double = 0.5): DataFrame = {
-    val pairs = minhashCandidatesMd5(df, idCol, textCol, shingleN, k, bands, minEstimate)
+                             bands: Int = 0, minEstimate: Double = 0.7,
+                             family: HashFamily = HashFamily.Xx): DataFrame = {
+    val pairs = minhashCandidates(df, idCol, textCol, shingleN, k, bands,
+      minEstimate, family)
     dropByComponentsBest(df, idCol, score, pairs)
   }
 
@@ -752,19 +653,19 @@ object Dedup {
     * band; one band-keyed shuffle join (new side is the small delta);
     * signature verify kills band-collision false positives; one
     * anti-join back against the delta. Returns the new docs that are
-    * NOT already represented in the snapshot.
+    * NOT already represented in the snapshot. The snapshot must have
+    * been written with the same `family`; `HashFamily.Md5` (q146)
+    * replays the whole path, persisted snapshot included, as SQL.
     */
   def dropSeenBefore(newDocs: DataFrame, idCol: String, textCol: String,
                      snapshotSigs: DataFrame,
                      shingleN: Int = 3, k: Int = 32, bands: Int = 0,
-                     minEstimate: Double = 0.7): DataFrame = {
+                     minEstimate: Double = 0.7,
+                     family: HashFamily = HashFamily.Xx): DataFrame = {
     // same tuning contract as minhashCandidates; banding only needs to
     // agree WITHIN this call (both sides band here), not with the run
     // that wrote the snapshot — only k must match (guarded below).
-    val nBands = if (bands > 0) bands
-      else lshParams(k, if (minEstimate > 0) minEstimate else 0.7)._1
-    require(nBands >= 1 && nBands <= k && k % nBands == 0,
-      s"bands ($nBands) must divide k ($k)") // see minhashCandidates
+    val nBands = bandCount(k, bands, minEstimate)
     val rowsPerBand = k / nBands
     // a snapshot written at a different k would zip against nulls and
     // silently score every candidate 0 — dedup quietly OFF. Refuse.
@@ -779,52 +680,9 @@ object Dedup {
             s"called with k=$k — rebuild the snapshot or pass matching k")
       }
     // no persist: the delta signatures are consumed exactly once
-    val newSigs = minhashSignatures(newDocs, idCol, textCol, shingleN, k)
+    val newSigs = minhashSignatures(newDocs, idCol, textCol, shingleN, k, family)
     def banded(s: DataFrame) = s.select(col("doc"), col("sig"),
-      posexplode(lshBands(col("sig"), nBands, rowsPerBand)).as(Seq("band", "bucket")))
-    val candidates = banded(newSigs).as("n")
-      .join(banded(snapshotSigs).as("s"),
-        col("n.band") === col("s.band") && col("n.bucket") === col("s.bucket"))
-      .select(col("n.doc").as("new_doc"), col("n.sig").as("sig_n"),
-        col("s.sig").as("sig_s"))
-      .distinct()
-      .withColumn("est", aggregate(
-        zip_with(col("sig_n"), col("sig_s"), (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, v) => acc + v).cast("double") / lit(k.toDouble))
-      .filter(col("est") >= minEstimate)
-      .select(col("new_doc").as(idCol)).distinct()
-    newDocs.join(candidates, Seq(idCol), "left_anti")
-  }
-
-  /** DuckDB-replayable incremental dedup — the correctness-GATE twin
-    * of [[dropSeenBefore]]: identical pipeline shape (delta
-    * signatures map-side, both sides band, ONE band-keyed shuffle
-    * join, signature verify, anti-join back against the delta), but
-    * over the md5 affine hash family ([[minhashSignaturesMd5]]) and
-    * md5 band keys, so the whole path — including the persisted
-    * snapshot parquet — replays as SQL. DedupSpec asserts the two
-    * kernels keep the same survivor set on the gate corpus.
-    */
-  def dropSeenBeforeMd5(newDocs: DataFrame, idCol: String, textCol: String,
-                        snapshotSigs: DataFrame,
-                        shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-                        minEstimate: Double = 0.5): DataFrame = {
-    require(bands >= 1 && bands <= k && k % bands == 0,
-      s"bands ($bands) must divide k ($k)")
-    val r = k / bands
-    // same k-mismatch refusal as the production path (one aggregate
-    // over the WHOLE snapshot — see dropSeenBefore for why a
-    // first-row probe is not enough)
-    snapshotSigs.agg(min(size(col("sig"))), max(size(col("sig")))).head(1)
-      .filterNot(_.isNullAt(0)).foreach { row =>
-        val (lo, hi) = (row.getInt(0), row.getInt(1))
-        require(lo == k && hi == k,
-          s"snapshot signatures have k in [$lo, $hi] but dropSeenBeforeMd5 " +
-            s"was called with k=$k — rebuild the snapshot or pass matching k")
-      }
-    val newSigs = minhashSignaturesMd5(newDocs, idCol, textCol, shingleN, k)
-    def banded(s: DataFrame) = s.select(col("doc"), col("sig"),
-      posexplode(md5Bands(col("sig"), bands, r)).as(Seq("band", "bucket")))
+      posexplode(family.bandKeys(col("sig"), nBands, rowsPerBand)).as(Seq("band", "bucket")))
     val candidates = banded(newSigs).as("n")
       .join(banded(snapshotSigs).as("s"),
         col("n.band") === col("s.band") && col("n.bucket") === col("s.bucket"))
@@ -880,19 +738,41 @@ object Dedup {
     * half-open duplicated spans. Compose with a filter on
     * `span_end - span_start` or aggregate per doc for a duplicated-
     * token fraction.
+    *
+    * `family = HashFamily.Md5` (the q102 gate) hashes windows with md5
+    * so the oracle rebuilds the identical marked set in SQL; the spans
+    * are identical unless md5 and xxhash64 disagree on a collision
+    * (DedupSpec pins set equality on the gate corpus).
     */
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                      windowTokens: Int = 50): DataFrame =
-    duplicatedSpansBy(df, idCol, textCol, windowTokens, "graft_xx_window_hashes")
-
-  /** [[duplicatedSpans]]'s DuckDB-replayable GATE twin: md5 window
-    * hashes so the oracle rebuilds the identical marked set in SQL.
-    * Identical span output unless md5 and xxhash64 disagree on a
-    * collision (DedupSpec pins set equality on the gate corpus).
-    */
-  def duplicatedSpansMd5(df: DataFrame, idCol: String, textCol: String,
-                         windowTokens: Int = 8): DataFrame =
-    duplicatedSpansBy(df, idCol, textCol, windowTokens, "graft_md5_window_hashes")
+                      windowTokens: Int = 50,
+                      family: HashFamily = HashFamily.Xx): DataFrame = {
+    val w = windowTokens
+    require(w > 0, s"windowTokens=$w must be positive")
+    import org.apache.spark.sql.expressions.Window
+    // the window-hash kernel (tokenize + one hash per window) is
+    // consumed TWICE (the dup-count agg and the marked semi-join) —
+    // snapshot the slim (doc, pos, h) frame so the per-row kernel is
+    // paid once; ContextCleaner reaps it with the result frame
+    val wins = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
+      windowHashes(df, idCol, textCol, w, family))
+    val dup = wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 2).select(col("h"))
+    val marked = wins.join(dup, Seq("h"), "left_semi")
+    // gaps-and-islands merge: a marked window extends the current
+    // span unless it starts past the running max end
+    val byDoc = Window.partitionBy(col("doc")).orderBy(col("pos"))
+    val prevEnd = max(col("pos") + lit(w.toLong))
+      .over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
+    marked
+      .withColumn("__new", when(prevEnd.isNull || col("pos") > prevEnd, 1)
+        .otherwise(0))
+      .withColumn("__isl", sum(col("__new")).over(byDoc))
+      .groupBy(col("doc"), col("__isl"))
+      .agg(min(col("pos")).as("span_start"),
+        (max(col("pos")) + lit(w.toLong)).as("span_end"))
+      .select(col("doc").as(idCol), col("span_start"), col("span_end"))
+  }
 
   /** [[duplicatedSpans]]'s removal companion: rewrite each document
     * with its duplicated content CUT, keeping the first global
@@ -904,6 +784,7 @@ object Dedup {
     * pathological self-overlapping case (a periodic token run whose
     * windows all share one hash collapses to one window's worth, not
     * to a single token). Returns (idCol, clean_text, n_removed).
+    * `family = HashFamily.Md5` is the DuckDB-replayable gate (q103).
     *
     * Scale shape: only DUPLICATED windows token-explode (×W of the
     * marked rows, not of the corpus); the removed-position sets join
@@ -911,64 +792,14 @@ object Dedup {
     * higher-order filter over each row's own tokens.
     */
   def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                            windowTokens: Int = 50): DataFrame =
-    removeDuplicatedSpansBy(df, idCol, textCol, windowTokens, "graft_xx_window_hashes")
-
-  /** [[removeDuplicatedSpans]]'s md5 GATE twin (DuckDB-replayable). */
-  def removeDuplicatedSpansMd5(df: DataFrame, idCol: String, textCol: String,
-                               windowTokens: Int = 8): DataFrame =
-    removeDuplicatedSpansBy(df, idCol, textCol, windowTokens, "graft_md5_window_hashes")
-
-  /** Span-level benchmark DECONTAMINATION: cut from every corpus
-    * document each token covered by a `windowTokens`-token window
-    * whose content appears anywhere in `benchmark` — the span-granular
-    * sibling of the n-gram decontam filters (which drop or flag whole
-    * documents): a page quoting one benchmark question loses the
-    * quote, not the page. No canonical carve-out — benchmark content
-    * has no "first occurrence to keep" in the corpus.
-    *
-    * Scale shape: benchmark windows hash map-side and distinct to an
-    * ids-free hash set (benchmarks are small next to the corpus, so
-    * the semi-join broadcasts under AQE); corpus text never shuffles.
-    */
-  def removeContaminatedSpans(df: DataFrame, idCol: String, textCol: String,
-                              benchmark: DataFrame, benchTextCol: String,
-                              windowTokens: Int = 13): DataFrame =
-    removeContaminatedSpansBy(df, idCol, textCol, benchmark, benchTextCol,
-      windowTokens, "graft_xx_window_hashes")
-
-  /** [[removeContaminatedSpans]]'s md5 GATE twin (DuckDB-replayable). */
-  def removeContaminatedSpansMd5(df: DataFrame, idCol: String, textCol: String,
-                                 benchmark: DataFrame, benchTextCol: String,
-                                 windowTokens: Int = 8): DataFrame =
-    removeContaminatedSpansBy(df, idCol, textCol, benchmark, benchTextCol,
-      windowTokens, "graft_md5_window_hashes")
-
-  private def removeContaminatedSpansBy(df: DataFrame, idCol: String,
-                                        textCol: String, benchmark: DataFrame,
-                                        benchTextCol: String, w: Int,
-                                        kernel: String): DataFrame = {
-    require(w > 0, s"windowTokens=$w must be positive")
-    val benchH = windowHashes(
-        benchmark.select(lit(0L).as("__bid"), col(benchTextCol)),
-        "__bid", benchTextCol, w, kernel)
-      .select(col("h")).distinct()
-    val marked = windowHashes(df, idCol, textCol, w, kernel)
-      .join(benchH, Seq("h"), "left_semi")
-    val cover = marked.select(col("doc"),
-        explode(sequence(col("pos"), col("pos") + lit((w - 1).toLong))).as("tpos"))
-      .distinct()
-    rebuildWithout(df, idCol, textCol, cover)
-  }
-
-  private def removeDuplicatedSpansBy(df: DataFrame, idCol: String,
-                                      textCol: String, w: Int,
-                                      kernel: String): DataFrame = {
+                            windowTokens: Int = 50,
+                            family: HashFamily = HashFamily.Xx): DataFrame = {
+    val w = windowTokens
     require(w > 0, s"windowTokens=$w must be positive")
     // consumed twice (canon agg + occ join) — snapshot like
-    // duplicatedSpansBy so the window kernel is paid once
+    // duplicatedSpans so the window kernel is paid once
     val wins = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      windowHashes(df, idCol, textCol, w, kernel))
+      windowHashes(df, idCol, textCol, w, family))
     // canonical occurrence per duplicated hash = min (doc, pos)
     val dup = wins.groupBy(col("h"))
       .agg(count(lit(1)).as("c"), min(struct(col("doc"), col("pos"))).as("canon"))
@@ -985,6 +816,37 @@ object Dedup {
       .agg(max(when(!col("is_canon"), 1).otherwise(0)).as("anyDup"),
         max(when(col("is_canon"), 1).otherwise(0)).as("anyCanon"))
       .filter(col("anyDup") === 1 && col("anyCanon") === 0)
+    rebuildWithout(df, idCol, textCol, cover)
+  }
+
+  /** Span-level benchmark DECONTAMINATION: cut from every corpus
+    * document each token covered by a `windowTokens`-token window
+    * whose content appears anywhere in `benchmark` — the span-granular
+    * sibling of the n-gram decontam filters (which drop or flag whole
+    * documents): a page quoting one benchmark question loses the
+    * quote, not the page. No canonical carve-out — benchmark content
+    * has no "first occurrence to keep" in the corpus.
+    * `family = HashFamily.Md5` is the DuckDB-replayable gate (q104).
+    *
+    * Scale shape: benchmark windows hash map-side and distinct to an
+    * ids-free hash set (benchmarks are small next to the corpus, so
+    * the semi-join broadcasts under AQE); corpus text never shuffles.
+    */
+  def removeContaminatedSpans(df: DataFrame, idCol: String, textCol: String,
+                              benchmark: DataFrame, benchTextCol: String,
+                              windowTokens: Int = 13,
+                              family: HashFamily = HashFamily.Xx): DataFrame = {
+    val w = windowTokens
+    require(w > 0, s"windowTokens=$w must be positive")
+    val benchH = windowHashes(
+        benchmark.select(lit(0L).as("__bid"), col(benchTextCol)),
+        "__bid", benchTextCol, w, family)
+      .select(col("h")).distinct()
+    val marked = windowHashes(df, idCol, textCol, w, family)
+      .join(benchH, Seq("h"), "left_semi")
+    val cover = marked.select(col("doc"),
+        explode(sequence(col("pos"), col("pos") + lit((w - 1).toLong))).as("tpos"))
+      .distinct()
     rebuildWithout(df, idCol, textCol, cover)
   }
 
@@ -1029,11 +891,11 @@ object Dedup {
     * marked sets and the oracles are unchanged.
     */
   private def windowHashes(df: DataFrame, idCol: String, textCol: String,
-                           w: Int, kernel: String): DataFrame = {
+                           w: Int, family: HashFamily): DataFrame = {
     graft.plans.GraftExtensions.registerAll(df.sparkSession)
-    // spread: same one-split rationale as minhashSignaturesMd5
+    // spread: same one-split rationale as shingleIntersections
     graft.Tables.spreadDf(df).select(col(idCol).as("doc"),
-        posexplode(call_function(kernel, tokens(col(textCol)), lit(w)))
+        posexplode(call_function(family.windowKernel, tokens(col(textCol)), lit(w)))
           .as(Seq("pos", "h")))
       .select(col("doc"), col("pos").cast("long").as("pos"), col("h"))
   }
@@ -1062,25 +924,16 @@ object Dedup {
     * removed-position sets group to one array per doc and join back
     * by id; the rebuild is a map-side indexed filter over each row's
     * own lines. Linear in total lines, no text shuffle.
+    *
+    * `family = HashFamily.Md5` is the DuckDB-replayable gate (q112):
+    * identical output unless md5 and xxhash64 disagree on a collision
+    * (DedupSpec pins equality on the gate corpus).
     */
   def removeDuplicatedLines(df: DataFrame, idCol: String, textCol: String,
                             minOccurrences: Int = 2,
-                            sep: String = "\n"): DataFrame =
-    removeDuplicatedLinesBy(df, idCol, textCol, minOccurrences, sep, xxhash64(_))
-
-  /** [[removeDuplicatedLines]]'s md5 GATE twin (DuckDB-replayable);
-    * identical output unless md5 and xxhash64 disagree on a collision
-    * (DedupSpec pins equality on the gate corpus). */
-  def removeDuplicatedLinesMd5(df: DataFrame, idCol: String, textCol: String,
-                               minOccurrences: Int = 2,
-                               sep: String = "\n"): DataFrame =
-    removeDuplicatedLinesBy(df, idCol, textCol, minOccurrences, sep, md5(_))
-
-  private def removeDuplicatedLinesBy(df: DataFrame, idCol: String,
-                                      textCol: String, minOcc: Int,
-                                      sep: String,
-                                      hash: Column => Column): DataFrame = {
-    require(minOcc >= 2, s"minOccurrences=$minOcc must be >= 2")
+                            sep: String = "\n",
+                            family: HashFamily = HashFamily.Xx): DataFrame = {
+    require(minOccurrences >= 2, s"minOccurrences=$minOccurrences must be >= 2")
     require(sep.nonEmpty, "sep must be non-empty")
     val sepRe = java.util.regex.Pattern.quote(sep)
     // empty lines are NEVER dedup candidates: blank lines are
@@ -1092,43 +945,14 @@ object Dedup {
         posexplode(split(col(textCol), sepRe)).as(Seq("pos", "line")))
       .filter(col("line") =!= lit(""))
       .select(col("doc"), col("pos").cast("long").as("pos"),
-        hash(col("line")).as("h"))
+        family.lineKey(col("line")).as("h"))
     val dup = hashed.groupBy(col("h"))
       .agg(count(lit(1)).as("c"), min(struct(col("doc"), col("pos"))).as("canon"))
-      .filter(col("c") >= minOcc)
+      .filter(col("c") >= minOccurrences)
       .select(col("h"), col("canon"))
     val drops = hashed.join(dup, Seq("h"))
       .filter(!(col("canon.doc") === col("doc") && col("canon.pos") === col("pos")))
       .select(col("doc"), col("pos").as("tpos"))
     rebuildWithoutBy(df, idCol, textCol, drops, split(_, sepRe), sep)
-  }
-
-  private def duplicatedSpansBy(df: DataFrame, idCol: String,
-                                textCol: String, w: Int,
-                                kernel: String): DataFrame = {
-    require(w > 0, s"windowTokens=$w must be positive")
-    import org.apache.spark.sql.expressions.Window
-    // the window-hash kernel (tokenize + one hash per window) is
-    // consumed TWICE (the dup-count agg and the marked semi-join) —
-    // snapshot the slim (doc, pos, h) frame so the per-row kernel is
-    // paid once; ContextCleaner reaps it with the result frame
-    val wins = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      windowHashes(df, idCol, textCol, w, kernel))
-    val dup = wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select(col("h"))
-    val marked = wins.join(dup, Seq("h"), "left_semi")
-    // gaps-and-islands merge: a marked window extends the current
-    // span unless it starts past the running max end
-    val byDoc = Window.partitionBy(col("doc")).orderBy(col("pos"))
-    val prevEnd = max(col("pos") + lit(w.toLong))
-      .over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
-    marked
-      .withColumn("__new", when(prevEnd.isNull || col("pos") > prevEnd, 1)
-        .otherwise(0))
-      .withColumn("__isl", sum(col("__new")).over(byDoc))
-      .groupBy(col("doc"), col("__isl"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(w.toLong)).as("span_end"))
-      .select(col("doc").as(idCol), col("span_start"), col("span_end"))
   }
 }

@@ -41,25 +41,20 @@ object Sampling {
     * their sum). Map-side only — no shuffle, no sort: the 32-bit
     * content bucket compares against precomputed INTEGER thresholds
     * (`round(cum_i · 2³²)`), so slice boundaries never hinge on float
-    * rounding. Production hash is xxhash64 (codegen'd, one pass).
+    * rounding. Production hash is xxhash64 (codegen'd, one pass);
+    * `family = HashFamily.Md5` (the q106 gate) buckets on the first 8
+    * hex chars of `md5(id || '#' || seed)` so a DuckDB oracle replays
+    * every assignment bit-for-bit (`('0x' || substr(md5(…),1,8))::BIGINT`
+    * against the same integer thresholds and CASE chain).
     */
   def hashSplit(df: DataFrame, idCol: String, weights: Seq[(String, Double)],
-                seed: Long = 42L, splitCol: String = "split"): DataFrame =
-    df.withColumn(splitCol, splitAssign(
-      pmod(xxhash64(concat(col(idCol).cast("string"), lit("#" + seed))),
-        lit(4294967296L)), weights))
+                seed: Long = 42L, splitCol: String = "split",
+                family: HashFamily = HashFamily.Xx): DataFrame =
+    df.withColumn(splitCol, splitAssign(family.idBucket(seedKey(idCol, seed)), weights))
 
-  /** Gate twin of [[hashSplit]]: the bucket is the first 8 hex chars
-    * of `md5(id || '#' || seed)` so a DuckDB oracle replays every
-    * assignment bit-for-bit (`('0x' || substr(md5(…),1,8))::BIGINT`
-    * against the same integer thresholds). Same thresholds, same
-    * CASE chain — only the hash family differs.
-    */
-  def hashSplitMd5(df: DataFrame, idCol: String, weights: Seq[(String, Double)],
-                   seed: Long = 42L, splitCol: String = "split"): DataFrame =
-    df.withColumn(splitCol, splitAssign(
-      conv(substring(md5(concat(col(idCol).cast("string"), lit("#" + seed))
-        .cast("binary")), 1, 8), 16, 10).cast("long"), weights))
+  /** The per-row string the seeded samplers hash: `id || '#' || seed`. */
+  private def seedKey(idCol: String, seed: Long): Column =
+    concat(col(idCol).cast("string"), lit("#" + seed))
 
   private def splitAssign(bucket: Column, weights: Seq[(String, Double)]): Column = {
     require(weights.nonEmpty, "hashSplit needs at least one slice")
@@ -83,27 +78,16 @@ object Sampling {
     * phase 1 takes each (group, 16-way salt)'s local top-n in
     * parallel windows; phase 2 ranks the ≤ 16·n survivors per group.
     * Result is salt-invariant: the global n smallest all survive
-    * their salt's local cut.
+    * their salt's local cut. `family = HashFamily.Md5` (the q116 gate)
+    * orders by the md5 hex string, replayed by the oracle's
+    * `row_number() OVER (… ORDER BY md5(id || '#' || seed), id)`.
     */
   def sampleNPerGroup(df: DataFrame, idCol: String, groupCols: Seq[String],
-                      n: Int, seed: Long = 42L): DataFrame =
-    sampleNPerGroupBy(df, idCol, groupCols, n,
-      xxhash64(concat(col(idCol).cast("string"), lit("#" + seed))))
-
-  /** [[sampleNPerGroup]]'s GATE twin: md5 hex order (string compare),
-    * replayed by the oracle's `row_number() OVER (… ORDER BY
-    * md5(id || '#' || seed), id)`. */
-  def sampleNPerGroupMd5(df: DataFrame, idCol: String, groupCols: Seq[String],
-                         n: Int, seed: Long = 42L): DataFrame =
-    sampleNPerGroupBy(df, idCol, groupCols, n,
-      md5(concat(col(idCol).cast("string"), lit("#" + seed)).cast("binary")))
-
-  private def sampleNPerGroupBy(df: DataFrame, idCol: String,
-                                groupCols: Seq[String], n: Int,
-                                key: Column): DataFrame = {
+                      n: Int, seed: Long = 42L,
+                      family: HashFamily = HashFamily.Xx): DataFrame = {
     require(n >= 1, s"n=$n must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    val keyed = df.withColumn("__k", key)
+    val keyed = df.withColumn("__k", family.idSortKey(seedKey(idCol, seed)))
       .withColumn("__salt", pmod(xxhash64(col(idCol).cast("string")), lit(16L)))
     val wLocal = Window
       .partitionBy((groupCols.map(col) :+ col("__salt")): _*)
@@ -139,27 +123,16 @@ object Sampling {
     *
     * Scale shape: map-side key + TakeOrderedAndProject (per-partition
     * heaps, k rows to the driver) — no global sort, no shuffle of
-    * non-winners.
+    * non-winners. `family = HashFamily.Md5` (the q132 gate) draws u
+    * from the md5 prefix so a DuckDB oracle replays every key
+    * bit-for-bit.
     */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String,
-                     k: Int, seed: Long = 42L): DataFrame =
-    weightedSampleBy(df, idCol, weightCol, k,
-      pmod(xxhash64(concat(col(idCol).cast("string"), lit("#" + seed))),
-        lit(4294967296L)))
-
-  /** [[weightedSample]]'s GATE twin: u from the md5 prefix so a
-    * DuckDB oracle replays every key bit-for-bit. */
-  def weightedSampleMd5(df: DataFrame, idCol: String, weightCol: String,
-                        k: Int, seed: Long = 42L): DataFrame =
-    weightedSampleBy(df, idCol, weightCol, k,
-      conv(substring(md5(concat(col(idCol).cast("string"), lit("#" + seed))
-        .cast("binary")), 1, 8), 16, 10).cast("long"))
-
-  private def weightedSampleBy(df: DataFrame, idCol: String,
-                               weightCol: String, k: Int,
-                               bucket: Column): DataFrame = {
+                     k: Int, seed: Long = 42L,
+                     family: HashFamily = HashFamily.Xx): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
-    val u = (bucket + lit(1.0)) / lit(4294967297.0) // (0,1), never 0 or 1
+    val u = (family.idBucket(seedKey(idCol, seed)) + lit(1.0)) /
+      lit(4294967297.0) // (0,1), never 0 or 1
     // clamp BEFORE the long cast: for sub-1e-9 weights ln(u)/w·1e9
     // falls below Long range and the overflowing cast is a runtime
     // error under ANSI (engine-dependent saturation otherwise).

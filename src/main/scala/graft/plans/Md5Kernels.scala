@@ -42,6 +42,10 @@ object Md5Kernels {
     * are session-registered SQL functions a user can call on any
     * array<string> — a null element used to NPE inside
     * MessageDigest.update mid-task. Reject by kernel name instead.
+    * Callers run it FIRST, before any short-array early return (e.g.
+    * minhashSig's `len < n` null result), on purpose: a null token is
+    * refused whatever the array's length, so whether a malformed row
+    * fails never depends on how many tokens it happens to have.
     */
   @inline private def requireNoNullTokens(tokens: ArrayData, fn: String): Unit = {
     val n = tokens.numElements()
@@ -71,7 +75,7 @@ object Md5Kernels {
     dig.digest()
   }
 
-  /** [[graft.operators.Dedup.minhashSignaturesMd5]]'s per-row kernel:
+  /** [[graft.operators.HashFamily.Md5]]'s MinHash signature kernel:
     * k affine-family minima over the md5 base of every n-token
     * shingle. Returns null when the doc has < n tokens (the aggregate
     * form emitted no row there — callers filter). Duplicate shingles

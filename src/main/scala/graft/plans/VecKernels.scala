@@ -76,15 +76,6 @@ object VecKernels {
     if (denom == 0.0) 0.0 else d / denom
   }
 
-  /** Squared-L2 distance of float vector `v` to EVERY row of the
-    * double centroid matrix `cents` (array<array<double>>), as one
-    * fused loop. IEEE-identical to the per-centroid
-    * zip_with+aggregate fold (left-to-right accumulation), but the
-    * matrix rides in as a SINGLE Literal — the lambda-tree form
-    * plants k×dim Literal nodes, which at auto-tuned cluster counts
-    * (hundreds of cells) blows up analysis/codegen and falls out of
-    * compiled eval entirely.
-    */
   /** A vector/centroid dimension mismatch would make every distance a
     * partial sum — a plausible-but-wrong cell assignment. Refuse by
     * kernel name instead of truncating the loop.
@@ -100,19 +91,40 @@ object VecKernels {
     * replace; copying to a primitive double[] once also removes the
     * per-(centroid, pos) ArrayData dispatch from the k×dim inner loop.
     */
-  private def toDoubles(v: ArrayData, vIsFloat: Boolean): Array[Double] = {
+  private def toDoubles(v: ArrayData, vIsFloat: Boolean, fn: String): Array[Double] = {
     val n = v.numElements()
     val qv = new Array[Double](n)
     var j = 0
     while (j < n) {
+      if (v.isNullAt(j)) throw nullElement(fn, j)
       qv(j) = if (vIsFloat) v.getFloat(j).toDouble else v.getDouble(j)
       j += 1
     }
     qv
   }
 
+  /** Null-element refusal for the centroid and dot kernels: a raw
+    * `getFloat`/`getDouble` reads a null element as 0.0 — a
+    * plausible-but-wrong distance or dot product — where the
+    * zip_with+aggregate folds these kernels replaced return null.
+    * Refuse by kernel name instead, as the token kernels' null guard
+    * does (Md5Kernels.requireNoNullTokens).
+    */
+  private def nullElement(fn: String, i: Int): IllegalArgumentException =
+    new IllegalArgumentException(s"$fn: null element at index $i of the vector " +
+      "(null vector elements are not supported — filter or coalesce them first)")
+
+  /** Squared-L2 distance of float vector `v` to EVERY row of the
+    * double centroid matrix `cents` (array<array<double>>), as one
+    * fused loop. IEEE-identical to the per-centroid
+    * zip_with+aggregate fold (left-to-right accumulation), but the
+    * matrix rides in as a SINGLE Literal — the lambda-tree form
+    * plants k×dim Literal nodes, which at auto-tuned cluster counts
+    * (hundreds of cells) blows up analysis/codegen and falls out of
+    * compiled eval entirely.
+    */
   def cellDists(v: ArrayData, cents: ArrayData, vIsFloat: Boolean): ArrayData = {
-    val qv = toDoubles(v, vIsFloat)
+    val qv = toDoubles(v, vIsFloat, "graft_cell_dists")
     val k = cents.numElements()
     val out = new Array[Double](k)
     var c = 0
@@ -177,7 +189,7 @@ object VecKernels {
     * same contract as `array_position(ds, array_min(ds)) - 1`.
     */
   def nearestCell(v: ArrayData, cents: ArrayData, vIsFloat: Boolean): Int = {
-    val qv = toDoubles(v, vIsFloat)
+    val qv = toDoubles(v, vIsFloat, "graft_nearest_cell")
     val k = cents.numElements()
     var best = 0
     var bestD = Double.PositiveInfinity
@@ -203,7 +215,7 @@ object VecKernels {
     * exact-integer code dot products (compressed-ANN candidate
     * scoring). Left-to-right accumulation: bit-identical to
     * `aggregate(zip_with(a, b, _*_), 0.0, _+_)`. Dimension mismatch
-    * refuses by kernel name like the siblings.
+    * and null elements refuse by kernel name like the siblings.
     */
   def dotD(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
@@ -212,7 +224,11 @@ object VecKernels {
         s"graft_dot_q: dim mismatch $n vs ${b.numElements()}")
     var s = 0.0
     var i = 0
-    while (i < n) { s += a.getDouble(i) * b.getDouble(i); i += 1 }
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) throw nullElement("graft_dot_q", i)
+      s += a.getDouble(i) * b.getDouble(i)
+      i += 1
+    }
     s
   }
 

@@ -73,7 +73,7 @@ object Production {
       graft.operators.Dedup.dropSeenBefore(
         t(s, dir, "documents").filter(col("doc_id") % 3 === 0),
         "doc_id", "text",
-        TextVector.dedupSnapshotFor(s, dir, md5Kernel = false),
+        TextVector.dedupSnapshotFor(s, dir, graft.operators.HashFamily.Xx),
         shingleN = 3, k = 32, bands = 8, minEstimate = 0.5)
         .select(col("doc_id"), col("n_chars"))),
     "q35p_dedup_pipeline_prod" -> ((s, dir) =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.graftshim.DiskSnapshot
 import graft.Tables
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
-import graft.operators.{Clustering, Dedup, Multimodal, Similarity}
+import graft.operators.{Clustering, Dedup, HashFamily, Multimodal, Similarity}
 
 /** Training-data pipeline operators (builder prompt §beyond-reference):
   * text analysis, dedup, similarity search, multimodal plumbing — each
@@ -130,9 +130,9 @@ object TextVector {
     })
   }
 
-  /** Persisted dedup-snapshot signatures per (session, dir, kernel) —
+  /** Persisted dedup-snapshot signatures per (session, dir, family) —
     * the incremental daily-delta artifact ([[graft.operators.Dedup
-    * .minhashSignatures]] / the md5 gate twin, written to parquet and
+    * .minhashSignatures]] in the given hash family, written to parquet and
     * reopened COLD, like the ANN indexes above): q146 dedups a delta
     * slice against yesterday's corpus represented ONLY by this (doc,
     * sig) table — the snapshot's text is never re-read, which is the
@@ -145,21 +145,18 @@ object TextVector {
   private val snapCache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, DataFrame]]()
-  def dedupSnapshotFor(s: SparkSession, dir: String, md5Kernel: Boolean): DataFrame = {
+  def dedupSnapshotFor(s: SparkSession, dir: String, family: HashFamily): DataFrame = {
     val perSession = snapCache.synchronized {
       var m = snapCache.get(s)
       if (m == null) { m = scala.collection.concurrent.TrieMap.empty; snapCache.put(s, m) }
       m
     }
-    perSession.getOrElseUpdate(s"$dir#md5=$md5Kernel", {
+    perSession.getOrElseUpdate(s"$dir#$family", {
       val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-snap-")
       deleteOnExit(tmp)
       val snapDocs = t(s, dir, "documents").filter(col("doc_id") % 2 === 0)
-      val sigs =
-        if (md5Kernel) graft.operators.Dedup.minhashSignaturesMd5(
-          snapDocs, "doc_id", "text", shingleN = 3, k = 32)
-        else graft.operators.Dedup.minhashSignatures(
-          snapDocs, "doc_id", "text", shingleN = 3, k = 32)
+      val sigs = Dedup.minhashSignatures(snapDocs, "doc_id", "text",
+        shingleN = 3, k = 32, family = family)
       val out = tmp.resolve("sigs.parquet").toString
       sigs.write.mode("overwrite").parquet(out)
       s.read.parquet(out)
@@ -223,8 +220,9 @@ object TextVector {
     // kernel stays the production default and DedupSpec asserts both
     // recover the same pair set.
     "q26_minhash_pairs" -> ((s, dir) => {
-      Dedup.minhashCandidatesMd5(t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5)
+      Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5,
+        family = HashFamily.Md5)
     }),
 
     // SimHash near-dup pairs. GATE = md5-bit signature with
@@ -394,8 +392,8 @@ object TextVector {
     // oracle replays the marked set verbatim; production keeps
     // xxhash64 (same spans, DedupSpec pins equality).
     "q102_span_dedup" -> ((s, dir) => {
-      Dedup.duplicatedSpansMd5(t(s, dir, "documents"), "doc_id", "text",
-        windowTokens = 8)
+      Dedup.duplicatedSpans(t(s, dir, "documents"), "doc_id", "text",
+        windowTokens = 8, family = HashFamily.Md5)
     }),
 
     // LINE-level dedup (C4/CCNet boilerplate removal): the fixture
@@ -404,8 +402,8 @@ object TextVector {
     // on every third doc — the op's actual target shape) and strips
     // every non-canonical repeated line. GATE = md5 line keys.
     "q112_line_dedup" -> ((s, dir) => {
-      Dedup.removeDuplicatedLinesMd5(linedDocs(t(s, dir, "documents")),
-          "doc_id", "text")
+      Dedup.removeDuplicatedLines(linedDocs(t(s, dir, "documents")),
+          "doc_id", "text", family = HashFamily.Md5)
         .filter(length(col("clean_text")) >= 0)
     }),
 
@@ -418,8 +416,8 @@ object TextVector {
       // bench's count() cannot let Catalyst eliminate the unique-key
       // left join and price the query as a bare scan (verify writes
       // the frame anyway; this pins the same honest cost under count)
-      Dedup.removeDuplicatedSpansMd5(t(s, dir, "documents"), "doc_id", "text",
-          windowTokens = 8)
+      Dedup.removeDuplicatedSpans(t(s, dir, "documents"), "doc_id", "text",
+          windowTokens = 8, family = HashFamily.Md5)
         .filter(length(col("clean_text")) >= 0)
     }),
 
@@ -430,8 +428,9 @@ object TextVector {
     "q104_span_decontam" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // same count()-proof output filter as q103
-      Dedup.removeContaminatedSpansMd5(docs, "doc_id", "text",
-          docs.filter(col("doc_id") % 50 === 0), "text", windowTokens = 8)
+      Dedup.removeContaminatedSpans(docs, "doc_id", "text",
+          docs.filter(col("doc_id") % 50 === 0), "text", windowTokens = 8,
+          family = HashFamily.Md5)
         .filter(length(col("clean_text")) >= 0)
     }),
 
@@ -456,8 +455,8 @@ object TextVector {
     // kernel stays the production default and DedupSpec asserts both
     // keep the same survivor set.
     "q35_dedup_pipeline" -> ((s, dir) => {
-      Dedup.dropNearDuplicatesMd5(t(s, dir, "documents"), "doc_id", "text",
-        minEstimate = 0.5)
+      Dedup.dropNearDuplicates(t(s, dir, "documents"), "doc_id", "text",
+        bands = 8, minEstimate = 0.5, family = HashFamily.Md5)
         .select(col("doc_id"), col("n_chars"))
     }),
 
@@ -471,11 +470,12 @@ object TextVector {
     // production twin q146p runs the xxhash64 kernel on the same
     // slices against its own persisted snapshot.
     "q146_incremental_dedup" -> ((s, dir) => {
-      Dedup.dropSeenBeforeMd5(
+      Dedup.dropSeenBefore(
         t(s, dir, "documents").filter(col("doc_id") % 3 === 0),
         "doc_id", "text",
-        dedupSnapshotFor(s, dir, md5Kernel = true),
-        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5)
+        dedupSnapshotFor(s, dir, HashFamily.Md5),
+        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5,
+        family = HashFamily.Md5)
         .select(col("doc_id"), col("n_chars"))
     }),
 
@@ -486,8 +486,9 @@ object TextVector {
     // closure with a component-label CTE and replays the two-stage
     // winner (max score per label, min id among ties).
     "q105_dedup_keepbest" -> ((s, dir) => {
-      Dedup.dropNearDuplicatesBestMd5(t(s, dir, "documents"), "doc_id",
-        "text", col("n_chars"), minEstimate = 0.5)
+      Dedup.dropNearDuplicatesBest(t(s, dir, "documents"), "doc_id",
+        "text", col("n_chars"), bands = 8, minEstimate = 0.5,
+        family = HashFamily.Md5)
         .select(col("doc_id"), col("n_chars"))
     }),
 
@@ -496,8 +497,9 @@ object TextVector {
     // the oracle's CASE chain. Production twin (q106p) runs the
     // xxhash64 kernel.
     "q106_hash_split" -> ((s, dir) => {
-      graft.operators.Sampling.hashSplitMd5(t(s, dir, "documents"),
-        "doc_id", Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))
+      graft.operators.Sampling.hashSplit(t(s, dir, "documents"),
+        "doc_id", Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)),
+        family = HashFamily.Md5)
         .select(col("doc_id"), col("split"))
     }),
 
@@ -507,8 +509,8 @@ object TextVector {
     // keys, ties by weight desc then id. Production twin q132p runs
     // the xxhash64 key.
     "q132_weighted_sample" -> ((s, dir) => {
-      graft.operators.Sampling.weightedSampleMd5(t(s, dir, "documents"),
-          "doc_id", "n_chars", k = 100)
+      graft.operators.Sampling.weightedSample(t(s, dir, "documents"),
+          "doc_id", "n_chars", k = 100, family = HashFamily.Md5)
         .select(col("doc_id"), col("key9"))
     }),
 
@@ -517,8 +519,8 @@ object TextVector {
     // salted window. GATE = md5 ordering; production = xxhash64
     // (q116p; SamplingSpec pins salt-invariance + determinism).
     "q116_sample_per_group" -> ((s, dir) => {
-      graft.operators.Sampling.sampleNPerGroupMd5(t(s, dir, "documents"),
-          "doc_id", Seq("source"), 5)
+      graft.operators.Sampling.sampleNPerGroup(t(s, dir, "documents"),
+          "doc_id", Seq("source"), 5, family = HashFamily.Md5)
         .select(col("doc_id"), col("source"))
     }),
 
@@ -1196,13 +1198,13 @@ object TextVector {
     init + steps
   }
 
-  /** CTE chain replaying `Dedup.minhashCandidatesMd5` up to the
+  /** CTE chain replaying `Dedup.minhashCandidates(family = Md5)` up to the
     * banded candidate pairs: distinct 3-gram shingles, one md5 per
     * shingle -> 32-bit base (first 8 hex chars), 32 affine
     * universal-hash mins (a_i*x+b_i mod the largest prime < 2^32;
     * a_i < 2^31 keeps checked BIGINT products under 2^63), 8
     * four-component bands, bucket join — constants mirror
-    * `Dedup.minhashA/minhashB` exactly. Shared verbatim by the q26
+    * `DedupHashes.minhashA/minhashB` exactly. Shared verbatim by the q26
     * and q35 oracles so a kernel change edited in one can never
     * silently leave the other replaying a different kernel.
     */
@@ -1228,7 +1230,7 @@ object TextVector {
          sigs$sfx AS MATERIALIZED (SELECT doc_id, list(h ORDER BY ki) AS sig FROM sg$sfx GROUP BY doc_id)"""
 
   /** md5 band-key CTE over a sigs table (8 four-component bands) —
-    * mirrors `Dedup.md5Bands`. */
+    * mirrors `HashFamily.Md5.bandKeys`. */
   private def minhashBandCtes(name: String, sigsName: String) =
     s"""$name AS (SELECT doc_id, b.j AS band,
                      md5(array_to_string(sig[CAST(b.j*4+1 AS INTEGER):CAST(b.j*4+4 AS INTEGER)], ',')) AS key
@@ -1550,7 +1552,7 @@ object TextVector {
          FROM h""",
     "q23_fingerprint" ->
       "SELECT doc_id, md5(trim(lower(text))) AS fp FROM documents",
-    // replays minhashCandidatesMd5 end to end: shared CTE chain
+    // replays minhashCandidates(family = Md5) end to end: shared CTE chain
     // (minhashPairsCtes) up to banded candidate pairs, then the
     // signature-agreement estimate
     "q26_minhash_pairs" ->
@@ -1601,7 +1603,7 @@ object TextVector {
          doomed AS (SELECT DISTINCT a FROM reach WHERE b < a)
          SELECT doc_id, n_chars FROM documents
          WHERE doc_id NOT IN (SELECT a FROM doomed)""",
-    // replays dropSeenBeforeMd5: the SAME signature kernel
+    // replays dropSeenBefore(family = Md5): the SAME signature kernel
     // (minhashSigCtes — shared with q26/q35 so the kernels cannot
     // drift) over the snapshot slice (doc_id % 2 = 0, standing in for
     // the persisted parquet artifact) and the delta slice
@@ -1648,7 +1650,7 @@ object TextVector {
          SELECT doc_id, n_chars FROM documents
          WHERE doc_id NOT IN (SELECT node FROM doomed)""",
     // thresholds are round(0.8 * 2^32) and round(0.9 * 2^32) — the
-    // same integers hashSplitMd5 computes; the bucket decode is the
+    // same integers hashSplit(family = Md5) computes; the bucket decode is the
     // minhashPairsCtes '0x'-cast idiom
     "q106_hash_split" ->
       """SELECT doc_id,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, HashFamily}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -59,8 +59,8 @@ class DedupSpec extends SparkSpec {
     val fast = Dedup.minhashCandidates(d, "doc_id", "text",
         shingleN = 3, k = 32, bands = 8, minEstimate = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val gate = Dedup.minhashCandidatesMd5(d, "doc_id", "text",
-        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5)
+    val gate = Dedup.minhashCandidates(d, "doc_id", "text",
+        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5, family = HashFamily.Md5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fast.nonEmpty && gate == fast,
       s"minhash kernels diverge: md5-only=${gate -- fast} xxhash-only=${fast -- gate}")
@@ -89,8 +89,8 @@ class DedupSpec extends SparkSpec {
     val prod = Dedup.dropNearDuplicates(d, "doc_id", "text",
         bands = 8, minEstimate = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val gate = Dedup.dropNearDuplicatesMd5(d, "doc_id", "text",
-        bands = 8, minEstimate = 0.5)
+    val gate = Dedup.dropNearDuplicates(d, "doc_id", "text",
+        bands = 8, minEstimate = 0.5, family = HashFamily.Md5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(prod.nonEmpty && gate == prod,
       s"survivor sets diverge: md5-only=${gate -- prod} xxhash-only=${prod -- gate}")
@@ -258,8 +258,8 @@ class DedupSpec extends SparkSpec {
         col("q"), bands = 8, minEstimate = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(11L, 21L, 30L), s"survivors were $kept")
-    val keptGate = Dedup.dropNearDuplicatesBestMd5(corpus, "doc_id", "text",
-        col("q"), bands = 8, minEstimate = 0.5)
+    val keptGate = Dedup.dropNearDuplicatesBest(corpus, "doc_id", "text",
+        col("q"), bands = 8, minEstimate = 0.5, family = HashFamily.Md5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptGate == kept, "gate and production kernels disagree")
     // min-id policy on the same corpus keeps 10 and 20 instead — the
@@ -329,7 +329,8 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def spans(out: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
       out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val gate = spans(Dedup.duplicatedSpansMd5(df, "doc_id", "text", windowTokens = 8))
+    val gate = spans(Dedup.duplicatedSpans(df, "doc_id", "text", windowTokens = 8,
+      family = HashFamily.Md5))
     val prod = spans(Dedup.duplicatedSpans(df, "doc_id", "text", windowTokens = 8))
     assert(gate == prod, s"gate $gate != production $prod")
     // 9 shared tokens at offset 3 -> windows at pos 3 and 4 merge to [3, 12)
@@ -354,7 +355,8 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def out(o: org.apache.spark.sql.DataFrame): Map[Long, (String, Long)] =
       o.collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-    val gate = out(Dedup.removeDuplicatedSpansMd5(df, "doc_id", "text", windowTokens = 8))
+    val gate = out(Dedup.removeDuplicatedSpans(df, "doc_id", "text", windowTokens = 8,
+      family = HashFamily.Md5))
     val prod = out(Dedup.removeDuplicatedSpans(df, "doc_id", "text", windowTokens = 8))
     assert(gate == prod, s"gate $gate != production $prod")
     // doc 10 holds the canonical copies (lowest id) — untouched
@@ -379,8 +381,8 @@ class DedupSpec extends SparkSpec {
     val df = Seq((20L, d20), (21L, d21), (22L, d22)).toDF("doc_id", "text")
     def out(o: org.apache.spark.sql.DataFrame): Map[Long, (String, Long)] =
       o.collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-    val gate = out(Dedup.removeContaminatedSpansMd5(df, "doc_id", "text",
-      bench, "btext", windowTokens = 8))
+    val gate = out(Dedup.removeContaminatedSpans(df, "doc_id", "text",
+      bench, "btext", windowTokens = 8, family = HashFamily.Md5))
     val prod = out(Dedup.removeContaminatedSpans(df, "doc_id", "text",
       bench, "btext", windowTokens = 8))
     assert(gate == prod, s"gate $gate != production $prod")
@@ -410,9 +412,10 @@ class DedupSpec extends SparkSpec {
       s"expected only fresh docs to survive, got $kept")
     // gate twin: the md5 kernel against ITS OWN md5 snapshot keeps
     // the same survivor set (the q146/q146p contract)
-    val snapshotMd5 = Dedup.minhashSignaturesMd5(corpus, "doc_id", "text")
-    val keptMd5 = Dedup.dropSeenBeforeMd5(delta, "doc_id", "text",
-      snapshotMd5, minEstimate = 0.5)
+    val snapshotMd5 = Dedup.minhashSignatures(corpus, "doc_id", "text",
+      family = HashFamily.Md5)
+    val keptMd5 = Dedup.dropSeenBefore(delta, "doc_id", "text",
+      snapshotMd5, bands = 8, minEstimate = 0.5, family = HashFamily.Md5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptMd5 == kept, s"md5 gate $keptMd5 != production $kept")
     // both paths refuse a snapshot built at a different k
@@ -420,9 +423,11 @@ class DedupSpec extends SparkSpec {
     val eProd = intercept[IllegalArgumentException] {
       Dedup.dropSeenBefore(delta, "doc_id", "text", snapK16).count() }
     assert(eProd.getMessage.contains("rebuild the snapshot"))
-    val snapK16Md5 = Dedup.minhashSignaturesMd5(corpus, "doc_id", "text", k = 16)
+    val snapK16Md5 = Dedup.minhashSignatures(corpus, "doc_id", "text", k = 16,
+      family = HashFamily.Md5)
     val eGate = intercept[IllegalArgumentException] {
-      Dedup.dropSeenBeforeMd5(delta, "doc_id", "text", snapK16Md5).count() }
+      Dedup.dropSeenBefore(delta, "doc_id", "text", snapK16Md5, bands = 8,
+        minEstimate = 0.5, family = HashFamily.Md5).count() }
     assert(eGate.getMessage.contains("rebuild the snapshot"))
   }
 
@@ -442,7 +447,8 @@ class DedupSpec extends SparkSpec {
     assert(got(3L) == (("", 2L)))
     assert(got(4L) == (("", 1L)))
     assert(got(5L) == (("unique line", 0L)))
-    assert(got == run(Dedup.removeDuplicatedLinesMd5(df, "doc_id", "text")))
+    assert(got == run(Dedup.removeDuplicatedLines(df, "doc_id", "text",
+      family = HashFamily.Md5)))
   }
 
   test("removeDuplicatedLines: minOccurrences=3 spares a mere pair; roundtrip keeps empties") {

@@ -300,6 +300,10 @@ class DriverContractSpec extends AnyFunSuite {
       Verify.main(Array("/nonexistent/sf-dir", out.toString, "q1_agg,q2_filter"))
       val oracles = java.nio.file.Files.readString(out.resolve("oracle_sql.json"))
       assert(oracles.startsWith("{") && oracles.endsWith("}"))
+      // every selected query is reported by name with its error
+      val status = java.nio.file.Files.readString(out.resolve("_status.json"))
+      assert(status.contains("\"q1_agg\": {\"error\": ") &&
+        status.contains("\"q2_filter\": {\"error\": "), status)
     } finally {
       import scala.jdk.CollectionConverters._
       scala.util.Using.resource(java.nio.file.Files.walk(out)) { w =>

@@ -28,8 +28,8 @@ class Md5KernelsSpec extends SparkSpec {
   test("graft_md5_minhash_sig == explode/groupBy k-min aggregate form") {
     val df = fixture
     val k = 32; val n = 3
-    val kernel = graft.operators.Dedup
-      .minhashSignaturesMd5(df, "doc_id", "text", n, k)
+    val kernel = graft.operators.Dedup.minhashSignatures(df, "doc_id", "text", n, k,
+      graft.operators.HashFamily.Md5)
     // the former aggregate form, verbatim
     val w = split(col("text"), " ")
     val starts = when(size(w) >= n, sequence(lit(1), size(w) - (n - 1)))
@@ -289,6 +289,31 @@ class Md5KernelsSpec extends SparkSpec {
         r.getInt(2),
         java.lang.Double.toString(r.getDouble(3)))).toSet
     assert(rows(ker).nonEmpty && rows(ker) == rows(hof))
+  }
+
+  test("centroid and dot kernels reject null vector elements by kernel name") {
+    // the HOF folds above return null for a vector with a null
+    // element; a raw getDouble/getFloat would read it as 0.0 and give
+    // a plausible-but-wrong distance, so the kernels refuse by name
+    graft.plans.GraftExtensions.registerAll(spark)
+    val one = spark.range(1)
+    val dbl = one.select(array(lit(1.0), lit(null).cast("double"), lit(3.0)).as("v"))
+    val flt = one.select(array(lit(1.0f), lit(null).cast("float"), lit(3.0f)).as("v"))
+    val fold = dbl.select(aggregate(zip_with(col("v"), col("v"), (x, y) => x * y),
+      lit(0.0), (acc, x) => acc + x)).head()
+    assert(fold.isNullAt(0))
+    val centLit = typedlit[Seq[Seq[Double]]](Seq(Seq(0.0, 0.0, 0.0), Seq(1.0, 1.0, 1.0)))
+    def m(t: Throwable): String =
+      Option(t.getMessage).getOrElse("") + Option(t.getCause).map(m).getOrElse("")
+    for ((fn, df, other) <- Seq(
+        ("graft_cell_dists", dbl, centLit), ("graft_nearest_cell", dbl, centLit),
+        ("graft_cell_dists", flt, centLit), ("graft_nearest_cell", flt, centLit),
+        ("graft_dot_q", dbl, col("v")))) {
+      val e = intercept[Exception] {
+        df.select(call_function(fn, col("v"), other)).collect()
+      }
+      assert(m(e).contains(fn) && m(e).contains("null element"), s"$fn: ${m(e)}")
+    }
   }
 
   test("token kernels reject null array elements with a kernel-named error (r19 ADVICE)") {

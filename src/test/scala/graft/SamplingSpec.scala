@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Sampling
+import graft.operators.{HashFamily, Sampling}
 
 /** Token-budget sampling + decontamination semantics. */
 class SamplingSpec extends SparkSpec {
@@ -82,7 +82,8 @@ class SamplingSpec extends SparkSpec {
     val s3 = Sampling.hashSplit(df, "id", w, seed = 7L)
     assert(s1.except(s3).count() > 500)
     // the md5 gate twin partitions with the same proportions contract
-    val g = Sampling.hashSplitMd5(df, "id", w).groupBy("split").count()
+    val g = Sampling.hashSplit(df, "id", w, family = HashFamily.Md5)
+      .groupBy("split").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(g.keySet == Set("train", "val", "test"))
     assert(math.abs(g("train") - 4000L) < 90, s"gate train=${g("train")}")
@@ -135,7 +136,7 @@ class SamplingSpec extends SparkSpec {
   test("sampleNPerGroupMd5 gate twin uses md5 order (differs only in hash family)") {
     val df = spark.range(100L)
       .select(col("id"), (col("id") % 2).cast("string").as("g"))
-    val gate = Sampling.sampleNPerGroupMd5(df, "id", Seq("g"), 3)
+    val gate = Sampling.sampleNPerGroup(df, "id", Seq("g"), 3, family = HashFamily.Md5)
       .collect().map(r => (r.getString(1), r.getLong(0))).toSet
     // reference: sort by md5 hex on the driver
     def m(s: String) = java.security.MessageDigest.getInstance("MD5")
@@ -180,7 +181,7 @@ class SamplingSpec extends SparkSpec {
       val u = (java.lang.Long.parseLong(hex, 16) + 1.0) / 4294967297.0
       math.round(math.log(u) / w * 1e9)
     }
-    val twin = Sampling.weightedSampleMd5(base, "id", "w", k = 5)
+    val twin = Sampling.weightedSample(base, "id", "w", k = 5, family = HashFamily.Md5)
       .select("id", "key9").collect().map(r => (r.getLong(0), r.getLong(1)))
     val want = (0L until 200L).map(i => (i, key9(i, 10L)))
       .sortBy { case (i, k9) => (-k9, i) }.take(5)
