@@ -5,13 +5,26 @@ v0, v1 object headers, symbol-table groups, contiguous/chunked
 datasets, shuffle+deflate). Written separately from the Scala reader so
 writer bugs can't hide behind a shared implementation: a file produced
 by graft's Hdf5Writer is decoded here with nothing but struct+zlib and
-compared against the source parquet.
+compared against the source parquet (timestamps as epoch
+microseconds, see graft.ExportOne).
 
 Usage: python3 scripts/h5check.py <file.hdf5> [<table.parquet>]
 """
 import struct
 import sys
 import zlib
+from datetime import datetime, timezone
+
+EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def micros(d):
+    """timestamp -> int64 microseconds since the epoch (naive = UTC),
+    the encoding graft.ExportOne gives timestamp columns"""
+    if d.tzinfo is None:
+        d = d.replace(tzinfo=timezone.utc)
+    delta = d - EPOCH
+    return (delta.days * 86400 + delta.seconds) * 1000000 + delta.microseconds
 
 
 class H5:
@@ -215,9 +228,12 @@ def main():
         t = pq.read_table(sys.argv[2])
         bad = 0
         for name in t.column_names:
-            want = t[name].to_pylist()
+            want = [micros(v) if isinstance(v, datetime) else v
+                    for v in t[name].to_pylist()]
             got = cols[name]
-            if isinstance(want[0], float):
+            if len(got) != len(want):
+                ok = False
+            elif isinstance(want[0], float):
                 ok = all(abs(a - b) < 1e-9 or a == b for a, b in zip(got, want))
             else:
                 ok = got == want

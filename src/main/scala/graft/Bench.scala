@@ -37,11 +37,31 @@ object Bench {
     * with an empty per_query/no geomean because the old last line
     * carried only flagged entries; this restores the contract the
     * driver parses. Extracted so DriverContractSpec pins it.
+    * Past [[DriverLineMaxBytes]] the flag objects are dropped for their
+    * bare `t` values ([[bareEntry]]) and the line says so with
+    * `"flags_dropped":true`: a reader with a line limit gets every
+    * time, never a cut JSON.
     */
   private[graft] def driverLine(total: Double, sfDir: String,
                                 extraFields: String, nQueries: Int,
-                                entries: Seq[String]): String =
-    s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"$extraFields,"n_queries":$nQueries}"""
+                                entries: Seq[String]): String = {
+    def line(qs: Seq[String], dropped: String): String =
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${qs.mkString("{", ",", "}")},"sf":"$sfDir"$extraFields$dropped,"n_queries":$nQueries}"""
+    val full = line(entries, "")
+    if (full.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= DriverLineMaxBytes) full
+    else line(entries.map(bareEntry), ""","flags_dropped":true""")
+  }
+
+  /** Byte budget of the [[driverLine]] before its flag detail goes. */
+  private[graft] val DriverLineMaxBytes: Int = 64 * 1024
+
+  private val FlaggedEntry = """("[^"]*"):\{"t":([^,}]+).*""".r
+
+  /** An [[entry]] reduced to its bare `"name":t` form. */
+  private[graft] def bareEntry(e: String): String = e match {
+    case FlaggedEntry(k, t) => s"$k:$t"
+    case _ => e
+  }
 
   /** One per-query JSON entry. Suspect entries carry two churn
     * signals: `ctl` — the fixed control query's contemporaneous time
@@ -659,7 +679,15 @@ object Bench {
     val total = results.map(_._2).sum
     val nFailed = results.count(_._4 == 2)
     val failedField = if (nFailed > 0) s""","failed_queries":$nFailed""" else ""
-    val fullLine = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"$failedField$churnField}"""
+    // the LAST stdout line, complete per-query map in compact
+    // encoding (no "runs"; flags ride along where set)
+    val compactQs = results.zipWithIndex.map { case ((k, v, _, st, susp, ctl, mn), i) =>
+      entry(k, v, 1, st, susp, ctl, mn, isoTimes.get(k),
+        trendOf(k, v, st, susp, i)) }
+    val lastLine = driverLine(total, sfDir, failedField + churnField,
+      results.length, compactQs)
+    val lineBytes = lastLine.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    val fullLine = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"$failedField$churnField,"driver_line_bytes":$lineBytes}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_out.json"),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -673,13 +701,7 @@ object Bench {
           trendOf(k, v, st, susp, i)) }
     println(compactHeadline(total, sfDir, failedField + churnField,
       results.length, flagged))
-    // LAST stdout line: the complete per-query map the driver parses
-    // (compact encoding — no "runs"; flags ride along where set)
-    val compactQs = results.zipWithIndex.map { case ((k, v, _, st, susp, ctl, mn), i) =>
-      entry(k, v, 1, st, susp, ctl, mn, isoTimes.get(k),
-        trendOf(k, v, st, susp, i)) }
-    println(driverLine(total, sfDir, failedField + churnField,
-      results.length, compactQs))
+    println(lastLine)
     // refresh the phantom reference after a FULL successful pass:
     // "t" = min(prev, measured) per query (the trajectory floor),
     // "h" = the last HistLen reported values (the median floor)

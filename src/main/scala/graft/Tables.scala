@@ -43,14 +43,17 @@ object Tables {
     // Shuffle-free lineage only (r19 ADVICE): `df.rdd` under AQE
     // materializes every upstream shuffle stage AT CONSTRUCTION time —
     // the DiskSnapshot-documented pitfall — so the partition probe is
-    // gated to plans with no exchange-inducing operator. A frame BELOW
-    // a shuffle is already laid out by spark.sql.shuffle.partitions
-    // (cluster-sized), so the spread was a no-op there anyway; every
-    // current call site passes a scan or a map-only derivation of one.
+    // gated to plans with no exchange-inducing operator, and a frame
+    // below a shuffle is returned as it is. Caveat: that frame is NOT
+    // always cluster-sized — AQE coalesces small shuffle outputs, so a
+    // small post-aggregate or post-join frame can arrive as a single
+    // partition and is still not spread. Every current call site
+    // passes a scan or a map-only derivation of one, so none hits this.
     import org.apache.spark.sql.catalyst.plans.logical._
     val shuffly = df.queryExecution.analyzed.exists {
-      case _: Aggregate | _: Join | _: Sort | _: Window | _: Distinct |
+      case _: Aggregate | _: Join | _: Window | _: Distinct |
            _: Deduplicate | _: RepartitionByExpression | _: GlobalLimit => true
+      case s: Sort => s.global // sortWithinPartitions is narrow
       case r: Repartition => r.shuffle // coalesce() is narrow — keep probing it
       case _ => false
     }

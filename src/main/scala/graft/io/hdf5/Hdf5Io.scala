@@ -1,6 +1,8 @@
 package graft.io.hdf5
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{Header, OCDataset}
@@ -527,14 +529,13 @@ object Hdf5Io {
   def exportLightconeHdf5(lc: graft.collections.Lightcone, path: String,
                           chunkRows: Int = 1 << 16,
                           compress: Boolean = true): Unit = {
-    // cap-check EVERY step before opening (truncating) the file
+    // plan (and cap-check) EVERY step before opening (truncating) the file
     val steps = lc.steps.toSeq.sortBy(_._1)
-      .map { case (s, ds) => (s, ds, capCheckedRows(ds.getData)) }
+      .map { case (s, ds) => (s, ds, planExport(ds.getData)) }
     val w = new Hdf5Writer(path)
     try {
-      val stepGrps = steps.map { case (s, ds, n) =>
-        val data = writeDataGroup(w, ds.getData, ds.header, chunkRows,
-          compress, n)
+      val stepGrps = steps.map { case (s, ds, plan) =>
+        val data = writeDataGroup(w, plan, ds.header, chunkRows, compress)
         val hdr = writeHeaderGroup(w,
           ds.header.copy(step = s, isLightcone = true))
         s"step_$s" -> w.writeGroup(Seq("data" -> data, "header" -> hdr))
@@ -787,14 +788,23 @@ object Hdf5Io {
   /** Export an OCDataset as a SPEC.md-layout HDF5 file: `data/` column
     * datasets (with `unit`/`description` attrs and a `column_order`
     * attr for order-stable round trips), `header/` attribute groups.
-    * Interchange path: column data streams through the driver one
-    * partition at a time (`toLocalIterator`), one pass per column —
-    * HDF5 is a single-writer format, so this is inherently a
-    * driver-bound export, like the reference's serial writer
-    * (io/serial.py). Use parquet for engine-to-engine data movement.
-    * REFUSES past `spark.graft.hdf5.exportMaxRows` (default
-    * [[ExportMaxRows]]) rather than silently serializing a
-    * cluster-sized frame through one JVM — see the cap's doc.
+    * Interchange path, two Spark passes over the source whatever its
+    * column count: one job ([[planExport]]) counts the rows and
+    * measures the string and array widths, then ONE streaming pass
+    * brings every column through the driver a partition at a time
+    * ([[writeDataGroup]]), one job per non-empty partition. HDF5 is a
+    * single-writer format, so this is inherently a driver-bound
+    * export, like the reference's serial writer (io/serial.py). Use
+    * parquet for engine-to-engine data movement. REFUSES past
+    * `spark.graft.hdf5.exportMaxRows` (default [[ExportMaxRows]])
+    * rather than silently serializing a cluster-sized frame through
+    * one JVM — see the cap's doc.
+    *
+    * Driver memory: one partition's encoded columns, plus the writer's
+    * buffers — `chunkRows` × the summed row width of all columns when
+    * `compress` (one chunk per column, refused past 2 GiB), and a
+    * constant 64 KiB per column when not (the contiguous layout writes
+    * rows at their reserved offsets).
     *
     * HDF5 has no null representation: null numerics export as zero
     * and null strings as "" (the reference's files simply never
@@ -803,41 +813,98 @@ object Hdf5Io {
     */
   def exportHdf5(ds: OCDataset, path: String,
                  chunkRows: Int = 1 << 16, compress: Boolean = true): Unit = {
-    // cap-check BEFORE opening (truncating) the destination file
-    val nRows = capCheckedRows(ds.getData)
+    // plan (and cap-check) BEFORE opening (truncating) the destination
+    val plan = planExport(ds.getData)
     val w = new Hdf5Writer(path)
     try {
-      val dataAddr = writeDataGroup(w, ds.getData, ds.header, chunkRows,
-        compress, nRows)
+      val dataAddr = writeDataGroup(w, plan, ds.header, chunkRows, compress)
       val headerAddr = writeHeaderGroup(w, ds.header)
       w.finish(w.writeGroup(Seq("data" -> dataAddr, "header" -> headerAddr)))
     } catch { case e: Throwable => w.close(); throw e }
   }
 
   /** Interop-scale row cap for the driver-funneled HDF5 export paths.
-    * `toLocalIterator` keeps driver MEMORY flat (one partition at a
-    * time), so unlike `objects()` this is not an OOM guard — it bounds
+    * Streaming one partition at a time keeps driver MEMORY flat, so
+    * unlike `objects()` this is not an OOM guard — it bounds
     * WALL TIME: HDF5 is a single-writer format, so every exported row
-    * serializes through one JVM one column at a time, and a user
-    * pointing `exportHdf5` at a cluster-sized frame would wait hours
-    * for what `oc.write` (Parquet + sidecar, all executors writing)
-    * finishes in seconds. Overridable per session via
-    * `spark.graft.hdf5.exportMaxRows` when the serial wait is an
-    * explicit choice.
+    * serializes through one JVM, and a user pointing `exportHdf5` at a
+    * cluster-sized frame would wait hours for what `oc.write` (Parquet
+    * + sidecar, all executors writing) finishes in seconds.
+    * Overridable per session via `spark.graft.hdf5.exportMaxRows` when
+    * the serial wait is an explicit choice.
     */
   val ExportMaxRows: Long = 100000000L
 
-  /** Count `df` and refuse past the interop cap (see
-    * [[ExportMaxRows]]). MUST run before the export's `Hdf5Writer` is
-    * constructed: the writer truncates an existing file at the path,
-    * so a refusal after construction would destroy a prior good
-    * export while telling the user to use `oc.write`. Every export
-    * entry point cap-checks ALL of its frames through this funnel
-    * first, then opens the file. Returns the counted rows so the
-    * write pass reuses them.
+  /** One exported column: its HDF5 element type (strings at their
+    * probed byte width) and, for an array column, its probed width.
     */
-  private def capCheckedRows(df: DataFrame): Long = {
-    val rows = df.count()
+  private final case class ExportColumn(name: String, dtype: Hdf5Writer.WDType,
+                                        arrayWidth: Option[Int])
+
+  /** A frame ready to stream: the RDD both passes run on, the rows of
+    * each of its partitions, and the columns.
+    */
+  private final case class ExportPlan(rdd: RDD[InternalRow], partRows: Array[Long],
+                                      columns: Seq[ExportColumn]) {
+    val rows: Long = partRows.sum
+  }
+
+  /** Everything an export needs to know before it opens the file, from
+    * ONE job with no shuffle: per partition, the rows and the widest
+    * UTF-8 string and longest array of each column. The total is
+    * refused past the interop cap (see [[ExportMaxRows]]). MUST run
+    * before the export's `Hdf5Writer` is constructed: the writer
+    * truncates an existing file at the path, so a refusal after
+    * construction would destroy a prior good export while telling the
+    * user to use `oc.write`. Every export entry point plans ALL of its
+    * frames first, then opens the file; unsupported column types are
+    * refused here, before any job, for the same reason.
+    */
+  private def planExport(df: DataFrame): ExportPlan = {
+    import Hdf5Writer._
+    val fields = df.schema.fields.toSeq
+    def elem(f: StructField, dt: DataType): WDType = dt match {
+      case LongType    => I64
+      case IntegerType => I32
+      case DoubleType  => F64
+      case FloatType   => F32
+      case other => throw new IllegalArgumentException(
+        s"exportHdf5: unsupported column type $other (${f.name})")
+    }
+    // per column: the element type (None for a string: the stats job
+    // sizes it) and whether it is an array
+    val shapes = fields.map { f =>
+      f.dataType match {
+        case StringType => (None, false)
+        case ArrayType(et @ (DoubleType | FloatType | LongType), _) => (Some(elem(f, et)), true)
+        case dt => (Some(elem(f, dt)), false)
+      }
+    }
+    // 0 = fixed width, 1 = string, 2 = array: what the stats job measures
+    val kinds = shapes.map { case (et, isArray) =>
+      if (et.isEmpty) 1 else if (isArray) 2 else 0
+    }.toArray
+    val rdd = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .queryExecution.toRdd
+    // per partition: rows, then each column's widest value (-1: none)
+    val stats = rdd.mapPartitions { it =>
+      val st = Array.fill(kinds.length + 1)(-1L)
+      st(0) = 0L
+      it.foreach { r =>
+        st(0) += 1
+        var i = 0
+        while (i < kinds.length) {
+          if (kinds(i) != 0 && !r.isNullAt(i)) {
+            val w = if (kinds(i) == 1) r.getUTF8String(i).numBytes else r.getArray(i).numElements
+            if (w > st(i + 1)) st(i + 1) = w
+          }
+          i += 1
+        }
+      }
+      Iterator.single(st)
+    }.collect()
+    val partRows = stats.map(_(0))
+    val rows = partRows.sum
     val cap = df.sparkSession.conf
       .get("spark.graft.hdf5.exportMaxRows", ExportMaxRows.toString).toLong
     require(rows <= cap,
@@ -847,55 +914,60 @@ object Hdf5Io {
         "distributed) for engine-scale data movement, or set " +
         "spark.graft.hdf5.exportMaxRows higher if the serial export " +
         "time is an explicit choice.")
-    rows
+    // a string column with no value is 1 byte wide plus its terminator;
+    // an array column with no value has zero-width rows (legal)
+    val columns = fields.zip(shapes).zipWithIndex.map { case ((f, (et, isArray)), i) =>
+      val widest = stats.map(_(i + 1)).foldLeft(-1L)(math.max)
+      ExportColumn(f.name, et.getOrElse(Str((if (widest < 0) 1 else widest.toInt) + 1)),
+        if (isArray) Some(widest.max(0L).toInt) else None)
+    }
+    ExportPlan(rdd, partRows, columns)
   }
 
-  /** Stream a DataFrame into a `data` group (one pass per column);
-    * returns the group's object-header address. `rows` is the
-    * caller's [[capCheckedRows]] result — the cap has already been
-    * enforced before the writer opened.
+  /** Stream a planned frame into a `data` group in ONE pass over its
+    * source: one job per non-empty partition, in partition order, on
+    * the RDD [[planExport]] measured (a partition that held no rows
+    * there is skipped). Each task encodes its rows into one block per
+    * column, and the driver feeds the blocks to
+    * [[Hdf5Writer.writeDatasets]]. Every column of a row thus comes
+    * from the same execution of the source, which keeps the columns
+    * aligned even when its rows differ between runs (a
+    * nondeterministic expression, an unstable tie order after a
+    * shuffle). A stream shorter or longer than the planned rows fails
+    * loudly in the writer. Returns the group's object-header address.
     */
-  private def writeDataGroup(w: Hdf5Writer, df: DataFrame, header: Header,
-                             chunkRows: Int, compress: Boolean,
-                             rows: Long): Long = {
-    import Hdf5Writer._
-    // one job probes every string column's max byte width + array widths
-    val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name)
-    val arrCols = df.schema.fields.collect { case f if f.dataType.isInstanceOf[ArrayType] => f.name }
-    val probes = strCols.map(c => max(octet_length(col(c))).as(s"s_$c")) ++
-      arrCols.map(c => max(size(col(c))).as(s"a_$c"))
-    val probeRow = if (probes.isEmpty) null else df.agg(probes.head, probes.tail.toSeq: _*).head()
-    val strW = strCols.map(c => c -> (Option(probeRow.getAs[Any](s"s_$c"))
-      .fold(1)(_.asInstanceOf[Number].intValue) + 1)).toMap
-    // empty frames probe null widths — zero-width arrays are legal
-    val arrW = arrCols.map(c => c -> Option(probeRow.getAs[Any](s"a_$c"))
-      .fold(0)(_.asInstanceOf[Number].intValue)).toMap
-    val colAddrs = df.schema.fields.map { f =>
-      val (dt, dims) = f.dataType match {
-        case LongType    => (I64, Seq(rows))
-        case IntegerType => (I32, Seq(rows))
-        case DoubleType  => (F64, Seq(rows))
-        case FloatType   => (F32, Seq(rows))
-        case StringType  => (Str(strW(f.name)), Seq(rows))
-        case ArrayType(DoubleType, _) => (F64, Seq(rows, arrW(f.name).toLong))
-        case ArrayType(FloatType, _)  => (F32, Seq(rows, arrW(f.name).toLong))
-        case ArrayType(LongType, _)   => (I64, Seq(rows, arrW(f.name).toLong))
-        case other => throw new IllegalArgumentException(
-          s"exportHdf5: unsupported column type $other (${f.name})")
-      }
-      val attrs =
-        header.columnUnits.get(f.name).map("unit" -> _).toSeq ++
-        header.columnDescriptions.get(f.name).map("description" -> _).toSeq
-      import scala.jdk.CollectionConverters._
-      val it = df.select(col(f.name)).toLocalIterator().asScala
-        .map(r => encodeValue(dt, f.dataType, r.get(0), strW.get(f.name), arrW.get(f.name)))
-      val addr = w.writeDataset(dt, dims, it, attrs,
-        chunkRows = if (compress) math.min(chunkRows.toLong, math.max(1L, rows)).toInt else 0,
-        deflate = compress, shuffle = compress && !dt.isInstanceOf[Str])
-      f.name -> addr
+  private def writeDataGroup(w: Hdf5Writer, plan: ExportPlan, header: Header,
+                             chunkRows: Int, compress: Boolean): Long = {
+    val specs = plan.columns.map { c =>
+      Hdf5Writer.DatasetSpec(c.name, c.dtype,
+        plan.rows +: c.arrayWidth.map(_.toLong).toSeq,
+        header.columnUnits.get(c.name).map("unit" -> _).toSeq ++
+          header.columnDescriptions.get(c.name).map("description" -> _).toSeq,
+        shuffle = compress && !c.dtype.isInstanceOf[Hdf5Writer.Str])
     }
-    w.writeGroup(colAddrs.toSeq,
-      attrs = Seq("column_order" -> df.schema.fieldNames.toSeq))
+    val columns = plan.columns.toArray
+    val sc = plan.rdd.sparkContext
+    val data = plan.partRows.indices.iterator.filter(plan.partRows(_) > 0).map { p =>
+      sc.runJob(plan.rdd, (rows: Iterator[InternalRow]) => encodePartition(rows, columns),
+        Seq(p)).head
+    }
+    val addrs = w.writeDatasets(specs, data,
+      chunkRows = if (compress) math.min(chunkRows.toLong, math.max(1L, plan.rows)).toInt else 0,
+      deflate = compress)
+    val names = plan.columns.map(_.name)
+    w.writeGroup(names.zip(addrs), attrs = Seq("column_order" -> names))
+  }
+
+  /** One partition's rows as one little-endian block per column. */
+  private def encodePartition(rows: Iterator[InternalRow],
+                              columns: Array[ExportColumn]): Array[Array[Byte]] = {
+    val encoders = columns.map(new ColumnEncoder(_))
+    val outs = columns.map(_ => new java.io.ByteArrayOutputStream())
+    rows.foreach { r =>
+      var i = 0
+      while (i < encoders.length) { outs(i).write(encoders(i).encode(r, i)); i += 1 }
+    }
+    outs.map(_.toByteArray)
   }
 
   private def writeHeaderGroup(w: Hdf5Writer, h: Header): Long = {
@@ -921,9 +993,10 @@ object Hdf5Io {
     * RECONSTRUCTED here from the equality link: children sort by the
     * link key (one cluster per parent), per-parent counts join against
     * the sorted parent, and starts are the running sum of sizes —
-    * folded over a partition-at-a-time stream of the sorted
-    * one-row-per-parent frame, so the driver never materializes the
-    * whole link table even at 10⁸ parents.
+    * folded over the same partition-at-a-time stream of the sorted
+    * one-row-per-parent frame that writes the sizes, so the driver
+    * never materializes the whole link table even at 10⁸ parents.
+    * Every data group streams in one pass, as in [[exportHdf5]].
     */
   def exportStructureHdf5(coll: graft.collections.StructureCollection,
                           path: String,
@@ -931,6 +1004,7 @@ object Hdf5Io {
                           chunkRows: Int = 1 << 16,
                           compress: Boolean = true): Unit = {
     import org.apache.spark.sql.graftshim.DiskSnapshot
+    import scala.jdk.CollectionConverters._
     val key = coll.linkKey
     // parent keys must be unique — the start/size reconstruction
     // needs exactly one parent row per key
@@ -939,65 +1013,53 @@ object Hdf5Io {
       .map(_.asInstanceOf[Long]).toArray
     require(nRows == nKeys,
       s"exportStructureHdf5 needs unique $key values ($nKeys distinct of $nRows rows)")
-    // the export streams each column in its OWN job, so every frame it
-    // iterates must be MATERIALIZED once (eager disk snapshot): a
-    // bare orderBy would re-execute per column, and within-key tie
-    // order after a shuffle is not stable across executions — child
-    // rows (many per parent: the key is deliberately non-unique there)
-    // could silently misalign across columns. Snapshot blocks are
-    // fixed once, so every per-column pass reads the same rows in the
-    // same order; the sort also prices once instead of per column.
+    // the link ranges and the data they index come from separate
+    // passes (per-key counts, the sizes stream, each data group's
+    // stream), so every frame is MATERIALIZED once (eager disk
+    // snapshot): a bare orderBy would re-execute per pass, and a
+    // source whose rows differ between runs would get ranges counted
+    // over other rows than the ones written. Snapshot blocks are fixed
+    // once, so every pass reads the same rows in the same order; the
+    // sort also prices once instead of per pass.
     val parentSorted = DiskSnapshot.diskCachedEager(
       coll.properties.df.orderBy(col(key)))
     val childSorted = coll.children.toSeq.map { case (name, child) =>
       name -> DiskSnapshot.diskCachedEager(child.orderBy(col(key)))
     }
-    // cap-check parent AND every child before opening (truncating)
-    // the file — a refusal must never leave a half-written or
-    // destroyed multi-table file behind
-    capCheckedRows(parentSorted)
-    val childRows = childSorted
-      .map { case (name, child) => name -> capCheckedRows(child) }.toMap
+    // plan (and cap-check) parent AND every child before opening
+    // (truncating) the file — a refusal must never leave a
+    // half-written or destroyed multi-table file behind
+    val parentPlan = planExport(parentSorted)
+    val childPlans = childSorted.map { case (name, child) => name -> planExport(child) }
     val w = new Hdf5Writer(path)
     try {
-      val parentData = writeDataGroup(w, parentSorted, coll.properties.header,
-        chunkRows, compress, nRows)
+      val parentData = writeDataGroup(w, parentPlan, coll.properties.header,
+        chunkRows, compress)
       val linkAddrs = childSorted.map { case (name, child) =>
         // per-parent sizes in parent (key-sorted) order, 0 for
-        // childless. STREAMED to the writer partition-at-a-time
-        // (toLocalIterator over the sorted frame — partition order is
-        // global order after a range sort): the driver never holds
-        // more than one partition of the (one row per parent) frame,
-        // so a 10⁸-structure export stays flat-memory even though the
-        // file itself is written by one process. The running-prefix
-        // starts fold over the same stream.
-        import scala.jdk.CollectionConverters._
+        // childless, with the running-prefix starts beside them — ONE
+        // toLocalIterator pass over the sorted frame (partition order
+        // is global order after a range sort) feeds both datasets
         val counts = child.groupBy(col(key)).agg(count(lit(1)).as("__n"))
-        val sizesDf = parentSorted.select(col(key))
+        val sizes = parentSorted.select(col(key))
           .join(counts, Seq(key), "left")
           .orderBy(col(key))
           .select(coalesce(col("__n"), lit(0L)).as("__sz"))
-          .persist() // consumed twice: starts pass, then sizes pass
-        def szIter = sizesDf.toLocalIterator().asScala.map(_.getLong(0))
-        def i64(vals: Iterator[Long]) = w.writeDataset(Hdf5Writer.I64,
-          Seq(nRows),
-          vals.grouped(1 << 16).map { g =>
-            val b = java.nio.ByteBuffer.allocate(8 * g.length)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            g.foreach(b.putLong); b.array()
-          })
+          .toLocalIterator().asScala.map(_.getLong(0))
+        val start, size = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        val row = Array(start.array(), size.array())
         var acc = 0L
-        val starts = i64(szIter.map { s => val st = acc; acc += s; st })
-        val sizes = i64(szIter)
-        sizesDf.unpersist()
-        Seq(s"${name}_start" -> starts, s"${name}_size" -> sizes)
+        val names = Seq(s"${name}_start", s"${name}_size")
+        val addrs = w.writeDatasets(
+          names.map(n => Hdf5Writer.DatasetSpec(n, Hdf5Writer.I64, Seq(parentPlan.rows))),
+          sizes.map { s => start.putLong(0, acc); size.putLong(0, s); acc += s; row })
+        names.zip(addrs)
       }
       val dataLinked = w.writeGroup(linkAddrs.flatten)
       val parentGrp = w.writeGroup(
         Seq("data" -> parentData, "data_linked" -> dataLinked))
-      val childGrps = childSorted.map { case (name, child) =>
-        val childData = writeDataGroup(w, child,
-          Header(), chunkRows, compress, childRows(name))
+      val childGrps = childPlans.map { case (name, plan) =>
+        val childData = writeDataGroup(w, plan, Header(), chunkRows, compress)
         name -> w.writeGroup(Seq("data" -> childData))
       }
       val headerAddr = writeHeaderGroup(w,
@@ -1007,37 +1069,51 @@ object Hdf5Io {
     } catch { case e: Throwable => w.close(); throw e }
   }
 
-  private def encodeValue(dt: Hdf5Writer.WDType, st: DataType, v: Any,
-                          strW: Option[Int], arrW: Option[Int]): Array[Byte] = {
-    import java.nio.{ByteBuffer, ByteOrder}
+  /** Encodes one column's values into a reused row-sized block. HDF5
+    * has no nulls: a null value or array element encodes as zeros, and
+    * a shorter array or string is zero-padded to the planned width. A
+    * value wider than [[planExport]] measured means the source changed
+    * between the two passes, and fails loudly.
+    */
+  private final class ColumnEncoder(c: ExportColumn) {
     import Hdf5Writer._
-    def one(b: ByteBuffer, x: Any): Unit = (dt, x) match {
-      case (I64, l: Long)   => b.putLong(l)
-      case (I32, i: Int)    => b.putInt(i)
-      case (F64, d: Double) => b.putDouble(d)
-      case (F32, f: Float)  => b.putFloat(f)
-      case (Str(k), s: String) =>
-        val sb = s.getBytes("UTF-8")
-        b.put(sb); b.put(new Array[Byte](k - sb.length))
-      case (_, null) => b.put(new Array[Byte](dt.size)) // null → zero row
-      case other => throw new IllegalArgumentException(s"encode mismatch: $other")
-    }
-    st match {
-      case _: ArrayType =>
-        val wdt = arrW.get
-        // a NULL array cell exports as a zero row, same as scalar
-        // nulls (HDF5 has no null representation) — matching on the
-        // Seq first would NPE mid-export
-        if (v == null) return new Array[Byte](dt.size * wdt)
-        val seq = v.asInstanceOf[scala.collection.Seq[Any]]
-        val b = ByteBuffer.allocate(dt.size * wdt).order(ByteOrder.LITTLE_ENDIAN)
-        seq.foreach(x => one(b, x))
-        (seq.size until wdt).foreach(_ => b.put(new Array[Byte](dt.size)))
-        b.array()
-      case _ =>
-        val b = ByteBuffer.allocate(dt.size).order(ByteOrder.LITTLE_ENDIAN)
-        one(b, v)
-        b.array()
+    private val block = new Array[Byte](c.dtype.size * c.arrayWidth.getOrElse(1))
+    private val bb = java.nio.ByteBuffer.wrap(block)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+
+    def encode(r: InternalRow, ordinal: Int): Array[Byte] = {
+      java.util.Arrays.fill(block, 0.toByte)
+      bb.clear()
+      if (!r.isNullAt(ordinal)) c.arrayWidth match {
+        case Some(width) =>
+          val a = r.getArray(ordinal)
+          require(a.numElements <= width, s"exportHdf5: column ${c.name} has a " +
+            s"${a.numElements}-element array, wider than the $width planned " +
+            "before the write pass — the source changed between passes")
+          var j = 0
+          while (j < a.numElements) {
+            if (a.isNullAt(j)) bb.position(bb.position() + c.dtype.size)
+            else c.dtype match {
+              case I64 => bb.putLong(a.getLong(j))
+              case F64 => bb.putDouble(a.getDouble(j))
+              case _   => bb.putFloat(a.getFloat(j))
+            }
+            j += 1
+          }
+        case None => c.dtype match {
+          case I64 => bb.putLong(r.getLong(ordinal))
+          case I32 => bb.putInt(r.getInt(ordinal))
+          case F64 => bb.putDouble(r.getDouble(ordinal))
+          case F32 => bb.putFloat(r.getFloat(ordinal))
+          case Str(k) =>
+            val sb = r.getUTF8String(ordinal).getBytes
+            require(sb.length <= k, s"exportHdf5: column ${c.name} has a " +
+              s"${sb.length}-byte string, wider than the $k bytes planned " +
+              "before the write pass — the source changed between passes")
+            bb.put(sb)
+        }
+      }
+      block
     }
   }
 }

@@ -22,9 +22,10 @@ import java.nio.file.{Paths, StandardOpenOption}
   * `unit`/`description` attributes, `header/` attribute groups,
   * `data_linked/` and `index/` range datasets. Objects are written
   * bottom-up (children first, then the groups that reference them,
-  * then the superblock), so everything streams through one append-only
-  * channel — no in-memory image of the file, and column data arrives
-  * through iterators so the caller can stream one partition at a time.
+  * then the superblock), so everything streams through one channel —
+  * no in-memory image of the file. The columns of a data group arrive
+  * together through one iterator ([[writeDatasets]]), so the caller
+  * streams its source once, one partition at a time.
   *
   * Files written here are read back by [[Hdf5Reader]]; both sides are
   * written independently against the published format document, and
@@ -40,16 +41,16 @@ final class Hdf5Writer(val path: String) extends AutoCloseable {
     StandardOpenOption.TRUNCATE_EXISTING)
   private var pos: Long = SuperblockSize // superblock patched in finish()
 
-  private def writeAt(off: Long, b: Array[Byte]): Unit = {
-    val bb = ByteBuffer.wrap(b)
+  private def writeAt(off: Long, b: Array[Byte], len: Int): Unit = {
+    val bb = ByteBuffer.wrap(b, 0, len)
     var written = 0
-    while (written < b.length) written += ch.write(bb, off + written)
+    while (written < len) written += ch.write(bb, off + written)
   }
 
   /** Append a block, return its file offset. */
   def writeBlock(b: Array[Byte]): Long = {
     val at = pos
-    writeAt(at, b)
+    writeAt(at, b, b.length)
     pos += b.length
     at
   }
@@ -82,106 +83,174 @@ final class Hdf5Writer(val path: String) extends AutoCloseable {
 
   // ---- datasets -----------------------------------------------------
 
-  /** Write a dataset whose row-major bytes arrive from `data` in
-    * arbitrary block sizes. Contiguous layout when `chunkRows` is 0;
-    * otherwise a chunked layout with `chunkRows` rows per chunk and
-    * (optionally) shuffle+deflate filters, which is how large columns
-    * keep parquet-like compression in interchange files.
-    * Returns the dataset's object header address.
+  /** Write several datasets in ONE pass over `data`. Each element of
+    * `data` holds one block per dataset, in `specs` order, of any size
+    * (a row, a batch of rows, a whole column or nothing); a block is
+    * copied before the next element is pulled, so the caller may reuse
+    * its arrays. Returns the object header addresses in `specs` order.
+    *
+    * Chunked layout when `chunkRows` > 0: every dataset buffers one
+    * chunk of `chunkRows` rows and appends it, through the optional
+    * shuffle+deflate filters, as soon as it fills, so chunks of
+    * different datasets interleave in the file; the trailing partial
+    * chunk is stored full-size, zero-padded (the spec's chunks are
+    * uniform). The chunk B-trees and object headers follow the data.
+    * Memory is one chunk per dataset — `chunkRows` × the summed row
+    * width — refused loudly past 2 GiB. Contiguous layout when
+    * `chunkRows` is 0: every dataset's extent is reserved up front and
+    * its bytes land at their known offsets through a fixed
+    * [[StageBytes]] buffer per dataset.
+    *
+    * Every dataset must receive exactly its dims-implied bytes: a
+    * stream that ends short, or runs past them, fails loudly instead
+    * of exporting zero-filled or overwritten rows.
     */
+  def writeDatasets(specs: Seq[DatasetSpec], data: Iterator[Array[Array[Byte]]],
+                    chunkRows: Int = 0, deflate: Boolean = false): Seq[Long] = {
+    require(chunkRows > 0 || (!deflate && !specs.exists(_.shuffle)),
+      "filters require a chunked layout")
+    if (chunkRows > 0) {
+      // chunkRows x rowBytes is unbounded (a wide array column
+      // multiplies it); a silent Int wrap would mis-size a buffer or
+      // the trailing-chunk pad, so refuse loudly before any data is
+      // consumed. A negative product means the Long itself overflowed.
+      val perDataset = specs.map(_.rowBytes * chunkRows)
+      val buffered =
+        if (perDataset.exists(b => b < 0 || b > Int.MaxValue)) -1L else perDataset.sum
+      require(buffered >= 0 && buffered <= Int.MaxValue,
+        s"chunk too large: chunkRows = $chunkRows rows x " +
+          s"${specs.map(_.rowBytes).mkString(" + ")} B/row over ${specs.size} " +
+          s"dataset(s) buffers ${if (buffered < 0) "over 2^63" else buffered.toString} B " +
+          "(limit 2 GiB) — lower chunkRows")
+    }
+    val streams = specs.map(new DatasetStream(_, chunkRows, deflate)).toArray
+    data.foreach { blocks =>
+      require(blocks.length == streams.length,
+        s"${blocks.length} blocks for ${streams.length} datasets")
+      var i = 0
+      while (i < blocks.length) { streams(i).append(blocks(i)); i += 1 }
+    }
+    streams.toSeq.map(_.finish())
+  }
+
+  /** The one-dataset case of [[writeDatasets]]. */
   def writeDataset(dtype: WDType, dims: Seq[Long],
                    data: Iterator[Array[Byte]],
                    attrs: Seq[(String, Any)] = Nil,
                    chunkRows: Int = 0,
                    deflate: Boolean = false,
-                   shuffle: Boolean = false): Long = {
-    val rowBytes = (if (dims.size <= 1) 1L else dims.tail.product) * dtype.size
-    val totalBytes = (if (dims.isEmpty) 1L else dims.head) * rowBytes
-    val layoutMsg: (Int, Array[Byte]) =
-      if (chunkRows <= 0) {
-        require(!deflate && !shuffle, "filters require a chunked layout")
-        val addr = pos
-        var written = 0L
-        data.foreach { block => written += block.length; writeBlock(block) }
-        require(written == totalBytes,
-          s"dataset data size $written != dims-implied $totalBytes")
-        val b = buf(18)
-        b.put(3.toByte).put(1.toByte).putLong(addr).putLong(totalBytes)
-        (0x0008, b.array())
-      } else {
-        val rank = dims.size.max(1)
-        // chunkRows × rowBytes must stay below 2 GiB: rowBytes is
-        // unbounded (a wide array column multiplies it), and a silent
-        // Int wrap here would either crash confusingly downstream or
-        // mis-size the trailing-chunk pad — refuse loudly instead,
-        // like every other integrity check in this writer
-        val chunkBytesL = chunkRows.toLong * rowBytes
-        // zero is legal (an empty dataset's chunk writes nothing);
-        // negative means the Long product itself overflowed
-        require(chunkBytesL >= 0 && chunkBytesL <= Int.MaxValue,
-          s"chunk too large: $chunkRows rows x $rowBytes B/row = " +
-            s"$chunkBytesL B (limit 2 GiB) — lower chunkRows")
-        val chunkBytes = chunkBytesL.toInt
-        // pull exactly chunkRows*rowBytes per chunk from the block stream
-        val feed = new ByteFeed(data)
-        val chunks = Seq.newBuilder[(Long, Long, Int)] // (startRow, addr, storedBytes)
-        var row = 0L
-        val nRows = if (dims.isEmpty) 1L else dims.head
-        while (row < nRows) {
-          val rows = math.min(chunkRows.toLong, nRows - row).toInt
-          // the stream must supply EXACTLY rows*rowBytes here — a
-          // short stream (frame re-evaluation yielding fewer rows
-          // than the caller counted) must fail loudly like the
-          // contiguous path's length require, never silently export
-          // zero-filled rows
-          val expected = (rows * rowBytes).toInt
-          val raw0 = feed.take(expected)
-          require(raw0.length == expected,
-            s"dataset data stream ended at ${row * rowBytes + raw0.length} " +
-              s"bytes; dims imply $totalBytes")
-          // trailing partial chunk is stored full-size (spec: chunks are
-          // uniform; unused tail is undefined) — pad with zeros
-          val raw = if (rows == chunkRows) raw0
-                    else raw0 ++ new Array[Byte](chunkBytes - raw0.length)
-          val filtered0 = if (shuffle) shuffleBytes(raw, dtype.size) else raw
-          val filtered = if (deflate) deflateBytes(filtered0) else filtered0
-          val addr = writeBlock(filtered)
-          chunks += ((row, addr, filtered.length))
-          row += rows
-        }
-        require(!feed.hasMore,
-          s"dataset data stream has trailing bytes past dims-implied $totalBytes")
-        val entries = chunks.result()
-        // v1 chunk b-tree, single level-0 node; key: nbytes, filter
-        // mask, rank+1 chunk offsets (trailing elem offset 0)
-        val keySize = 8 + 8 * (rank + 1)
-        val b = buf(24 + entries.size * (keySize + 8) + keySize)
-        b.put("TREE".getBytes("US-ASCII")).put(1.toByte).put(0.toByte)
-        b.putShort(entries.size.toShort)
-        b.putLong(Undef).putLong(Undef)
-        def key(startRow: Long, nbytes: Int): Unit = {
-          b.putInt(nbytes).putInt(0)
-          b.putLong(startRow)
-          (1 until rank).foreach(_ => b.putLong(0L))
-          b.putLong(0L) // element offset
-        }
-        entries.foreach { case (startRow, addr, nbytes) =>
-          key(startRow, nbytes); b.putLong(addr)
-        }
-        key(if (dims.isEmpty) 1L else dims.head, 0) // final (upper-bound) key
-        val btAddr = writeBlock(b.array())
-        val lb = buf(11 + 4 * (rank + 1))
-        lb.put(3.toByte).put(2.toByte).put((rank + 1).toByte).putLong(btAddr)
-        lb.putInt(chunkRows)
-        dims.tail.foreach(d => lb.putInt(d.toInt))
-        lb.putInt(dtype.size)
-        (0x0008, lb.array())
+                   shuffle: Boolean = false): Long =
+    writeDatasets(Seq(DatasetSpec("", dtype, dims, attrs, shuffle)),
+      data.map(Array(_)), chunkRows, deflate).head
+
+  /** One dataset of a [[writeDatasets]] pass: its buffer, how many
+    * bytes it has taken, and where its data went.
+    */
+  private final class DatasetStream(spec: DatasetSpec, chunkRows: Int,
+                                    deflate: Boolean) {
+    import spec.{dtype, dims}
+    private val label = if (spec.name.isEmpty) "dataset" else s"dataset ${spec.name}"
+    private val nRows = if (dims.isEmpty) 1L else dims.head
+    private val totalBytes = nRows * spec.rowBytes
+    private val chunked = chunkRows > 0
+    private val stage = new Array[Byte](
+      if (chunked) (chunkRows * spec.rowBytes).toInt
+      else math.min(StageBytes.toLong, totalBytes).toInt)
+    private var fill = 0
+    private var received = 0L
+    // contiguous: the reserved extent and how much of it is written
+    private val base = if (chunked) 0L else { val at = pos; pos += totalBytes; at }
+    private var flushed = 0L
+    // chunked: (startRow, addr, storedBytes) per chunk written
+    private val chunks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+    private val nChunks = if (chunked) (nRows + chunkRows - 1) / chunkRows else 0L
+    // the single-node chunk B-tree counts its entries in 16 bits
+    require(nChunks <= 0xFFFF, s"$label needs $nChunks chunks of $chunkRows " +
+      "rows, past the 65535 one chunk B-tree node holds — raise chunkRows")
+
+    def append(b: Array[Byte]): Unit = {
+      require(received + b.length <= totalBytes,
+        s"$label data stream has trailing bytes past dims-implied $totalBytes")
+      received += b.length
+      var off = 0
+      while (off < b.length) {
+        val k = math.min(b.length - off, stage.length - fill)
+        System.arraycopy(b, off, stage, fill, k)
+        fill += k; off += k
+        if (fill == stage.length) flush()
       }
-    val filterMsg: Seq[(Int, Array[Byte])] =
-      if (!deflate && !shuffle) Nil
+    }
+
+    private def flush(): Unit =
+      if (chunked) {
+        java.util.Arrays.fill(stage, fill, stage.length, 0.toByte)
+        val shuffled = if (spec.shuffle) shuffleBytes(stage, dtype.size) else stage
+        val stored = if (deflate) deflateBytes(shuffled) else shuffled
+        chunks += ((chunks.size.toLong * chunkRows, writeBlock(stored), stored.length))
+        fill = 0
+      } else {
+        writeAt(base + flushed, stage, fill)
+        flushed += fill; fill = 0
+      }
+
+    /** Write the trailing chunk (or staged bytes) and the object
+      * header; returns the header's address.
+      */
+    def finish(): Long = {
+      require(received == totalBytes,
+        s"$label data stream ended at $received bytes; dims imply $totalBytes")
+      // a zero-width row fills no buffer, so its chunks are written here
+      if (chunked) while (chunks.size < nChunks) flush()
+      else if (fill > 0) flush()
+      writeObjectHeader(Seq(
+        (0x0001, dataspace(dims)),
+        (0x0003, dtype.encoded),
+        (0x0008, if (chunked) chunkedLayout() else contiguousLayout())) ++
+        filterPipeline ++
+        spec.attrs.map { case (n, v) => (0x000C, attribute(n, v)) })
+    }
+
+    private def contiguousLayout(): Array[Byte] = {
+      val b = buf(18)
+      b.put(3.toByte).put(1.toByte).putLong(base).putLong(totalBytes)
+      b.array()
+    }
+
+    /** v1 chunk B-tree (single level-0 node), then the layout message
+      * pointing at it. Key: nbytes, filter mask, rank+1 chunk offsets
+      * (trailing element offset 0).
+      */
+    private def chunkedLayout(): Array[Byte] = {
+      val rank = dims.size.max(1)
+      val keySize = 8 + 8 * (rank + 1)
+      val b = buf(24 + chunks.size * (keySize + 8) + keySize)
+      b.put("TREE".getBytes("US-ASCII")).put(1.toByte).put(0.toByte)
+      b.putShort(chunks.size.toShort)
+      b.putLong(Undef).putLong(Undef)
+      def key(startRow: Long, nbytes: Int): Unit = {
+        b.putInt(nbytes).putInt(0)
+        b.putLong(startRow)
+        (1 until rank).foreach(_ => b.putLong(0L))
+        b.putLong(0L) // element offset
+      }
+      chunks.foreach { case (startRow, addr, nbytes) =>
+        key(startRow, nbytes); b.putLong(addr)
+      }
+      key(nRows, 0) // final (upper-bound) key
+      val btAddr = writeBlock(b.array())
+      val lb = buf(11 + 4 * (rank + 1))
+      lb.put(3.toByte).put(2.toByte).put((rank + 1).toByte).putLong(btAddr)
+      lb.putInt(chunkRows)
+      dims.tail.foreach(d => lb.putInt(d.toInt))
+      lb.putInt(dtype.size)
+      lb.array()
+    }
+
+    private def filterPipeline: Seq[(Int, Array[Byte])] =
+      if (!deflate && !spec.shuffle) Nil
       else {
         // write-order pipeline: shuffle (id 2) before deflate (id 1)
-        val ids = (if (shuffle) Seq((2, dtype.size)) else Nil) ++
+        val ids = (if (spec.shuffle) Seq((2, dtype.size)) else Nil) ++
                   (if (deflate) Seq((1, 6)) else Nil)
         val b = buf(8 + ids.size * 16)
         b.put(1.toByte).put(ids.size.toByte)
@@ -194,11 +263,6 @@ final class Hdf5Writer(val path: String) extends AutoCloseable {
         }
         Seq((0x000B, b.array()))
       }
-    val msgs = Seq(
-      (0x0001, dataspace(dims)),
-      (0x0003, dtype.encoded),
-      layoutMsg) ++ filterMsg ++ attrs.map { case (n, v) => (0x000C, attribute(n, v)) }
-    writeObjectHeader(msgs)
   }
 
   // ---- groups -------------------------------------------------------
@@ -274,7 +338,7 @@ final class Hdf5Writer(val path: String) extends AutoCloseable {
     b.putLong(0L).putLong(rootAddr)        // root symbol-table entry
     b.putInt(0).putInt(0)                  // cache type, reserved
     b.put(new Array[Byte](16))             // scratch
-    writeAt(0, b.array())
+    writeAt(0, b.array(), SuperblockSize)
     close()
   }
 
@@ -284,6 +348,22 @@ final class Hdf5Writer(val path: String) extends AutoCloseable {
 object Hdf5Writer {
   private val SuperblockSize = 96
   private val Undef = -1L // 0xFFFF…FF
+  /** Staging buffer per dataset in the contiguous layout. */
+  private val StageBytes: Int = 1 << 16
+
+  /** One dataset of a [[Hdf5Writer.writeDatasets]] pass. `name` only
+    * labels its errors; the caller links the returned address into a
+    * group under whatever name it likes. `shuffle` needs a chunked
+    * layout.
+    */
+  final case class DatasetSpec(name: String, dtype: WDType, dims: Seq[Long],
+                               attrs: Seq[(String, Any)] = Nil,
+                               shuffle: Boolean = false) {
+    /** Bytes per row: the product of the trailing dims times the
+      * element size.
+      */
+    val rowBytes: Long = (if (dims.size <= 1) 1L else dims.tail.product) * dtype.size
+  }
 
   private def buf(n: Int): ByteBuffer =
     ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
@@ -408,32 +488,6 @@ object Hdf5Writer {
         (Str(width), Seq(s.size.toLong), b.array())
       case other => throw new IllegalArgumentException(
         s"unsupported attribute array element: $other")
-    }
-  }
-
-  /** Re-blocks an iterator of byte arrays into exact-size takes. */
-  final class ByteFeed(blocks: Iterator[Array[Byte]]) {
-    private var cur: Array[Byte] = Array.emptyByteArray
-    private var off = 0
-    /** True if any unconsumed bytes remain (drains empty blocks). */
-    def hasMore: Boolean = {
-      while (off == cur.length && blocks.hasNext) { cur = blocks.next(); off = 0 }
-      off < cur.length
-    }
-    def take(n: Int): Array[Byte] = {
-      val out = new Array[Byte](n)
-      var got = 0
-      while (got < n) {
-        if (off == cur.length) {
-          if (!blocks.hasNext) return out.take(got)
-          cur = blocks.next(); off = 0
-        } else {
-          val k = math.min(n - got, cur.length - off)
-          System.arraycopy(cur, off, out, got, k)
-          off += k; got += k
-        }
-      }
-      out
     }
   }
 

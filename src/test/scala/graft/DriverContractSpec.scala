@@ -83,6 +83,30 @@ class DriverContractSpec extends AnyFunSuite {
     assert(fn.get("queries").get("qx").get("t").asDouble == 9.9)
   }
 
+  test("driverLine past 64 KB drops the flag detail for bare times, never cut JSON") {
+    // every entry flagged with every field: ~100 B each, so 1500 of
+    // them are far past the budget
+    val names = (0 until 1500).map(i => f"q$i%04d")
+    val flagged = names.map(n => Bench.entry(n, 12.345, 1, 2, susp = true,
+      ctl = Some(1.5), minT = Some(3.3), iso = Some(2.2), trend = true))
+    assert(flagged.map(_.length + 1).sum > Bench.DriverLineMaxBytes)
+    val line = Bench.driverLine(9.9, "sf", ""","failed_queries":1500""",
+      names.length, flagged)
+    assert(line.getBytes("UTF-8").length <= Bench.DriverLineMaxBytes,
+      s"${line.length} B")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("flags_dropped").asBoolean)
+    assert(node.get("failed_queries").asInt == 1500)
+    assert(node.get("n_queries").asInt == names.length)
+    val qs = node.get("queries")
+    assert(qs.size == names.length)
+    names.foreach(n => assert(qs.get(n).isNumber && qs.get(n).asDouble == 12.345, n))
+    // under the budget the flags stay and nothing is announced
+    val small = Bench.driverLine(9.9, "sf", "", 10, flagged.take(10))
+    assert(!small.contains("flags_dropped") && small.contains("\"suspect\":true"))
+    assert(Bench.bareEntry("\"qx\":1.500") == "\"qx\":1.500")
+  }
+
   test("bench floor file: reads all three shapes, median floor, min trajectory") {
     // historical flat shape + {"t":} shape + history shape must all
     // parse (the committed bench_prev predates histories)

@@ -1105,6 +1105,149 @@ class Hdf5Spec extends SparkSpec {
           Iterator(Array.emptyByteArray), chunkRows = 2, deflate = true)
       }
       assert(e.getMessage.contains("chunk too large"), e.getMessage)
+      // the limit covers the chunks buffered across ALL datasets of one
+      // pass: two 1 GiB-per-chunk datasets are refused together
+      val spec = Hdf5Writer.DatasetSpec("wide", Hdf5Writer.F64, Seq(4L, 1L << 27))
+      val e2 = intercept[IllegalArgumentException] {
+        w.writeDatasets(Seq(spec, spec.copy(name = "wide2")),
+          Iterator.empty, chunkRows = 1, deflate = true)
+      }
+      assert(e2.getMessage.contains("chunk too large") &&
+        e2.getMessage.contains("chunkRows"), e2.getMessage)
     } finally w.close()
   }
+
+  /** Little-endian int64 bytes. */
+  private def le(vals: Long*): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(8 * vals.size).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    vals.foreach(b.putLong); b.array()
+  }
+
+  test("writer refuses a dataset stream shorter or longer than its dims, in both layouts") {
+    val specs = Seq("a", "b").map(n => Hdf5Writer.DatasetSpec(n, Hdf5Writer.I64, Seq(3L)))
+    for (chunkRows <- Seq(0, 2)) {
+      def attempt(rows: Iterator[Array[Array[Byte]]]): String = {
+        val w = new Hdf5Writer(tmp(s"stream$chunkRows.hdf5"))
+        try intercept[IllegalArgumentException](
+          w.writeDatasets(specs, rows, chunkRows = chunkRows)).getMessage
+        finally w.close()
+      }
+      // b gets two of its three rows
+      val short = attempt(Iterator(Array(le(1, 2, 3), le(1, 2))))
+      assert(short.contains("dataset b") && short.contains("ended at 16 bytes"), short)
+      // a gets a fourth row, refused before it is written
+      val long = attempt(Iterator(Array(le(1, 2, 3), le(1, 2, 3)), Array(le(4), le())))
+      assert(long.contains("dataset a") && long.contains("trailing bytes"), long)
+    }
+  }
+
+  test("writeDatasets interleaves the chunks of its datasets in one pass") {
+    val a = (0L until 10L).map(_ * 3); val b = (0L until 10L).map(_ * -7 - 1)
+    val p = tmp("interleaved.hdf5")
+    val w = new Hdf5Writer(p)
+    // one row per element; unfiltered 4-row chunks stay findable as bytes
+    val addrs = w.writeDatasets(
+      Seq("a", "b").map(n => Hdf5Writer.DatasetSpec(n, Hdf5Writer.I64, Seq(10L))),
+      a.indices.iterator.map(i => Array(le(a(i)), le(b(i)))), chunkRows = 4)
+    w.finish(w.writeGroup(Seq("data" -> w.writeGroup(Seq("a", "b").zip(addrs)))))
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(p))
+    def at(chunk: Array[Byte]): Int =
+      bytes.indices.find(i => bytes.startsWith(chunk, i)).getOrElse(-1)
+    val order = Seq(at(le(a.slice(0, 4): _*)), at(le(b.slice(0, 4): _*)),
+      at(le(a.slice(4, 8): _*)), at(le(b.slice(4, 8): _*)))
+    assert(order.forall(_ >= 0) && order == order.sorted, s"chunk offsets $order")
+    val back = Hdf5Io.openDataFrame(spark, p).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(back == a.zip(b))
+  }
+
+  /** Spark jobs started by `body`, counted by a listener on a job group. */
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      body
+      Thread.sleep(1000) // let listener events drain
+      jobs.get
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  test("export reads its source once: the job count does not grow with the columns") {
+    val narrow = spark.range(0, 3000, 1, 4).select(col("id"),
+      (col("id") * 0.5).as("x"), concat(lit("s"), col("id")).as("s"))
+    val wide = narrow.select(narrow.columns.map(col).toSeq ++
+      (1 to 9).map(i => (col("id") * i).as(s"c$i")): _*)
+    assert(wide.columns.length == 12)
+    val n3 = jobsIn("h5-export-3")(Hdf5Io.exportHdf5(OCDataset(narrow), tmp("n3.hdf5")))
+    val n12 = jobsIn("h5-export-12")(Hdf5Io.exportHdf5(OCDataset(wide), tmp("n12.hdf5")))
+    assert(n3 > 0 && n3 == n12, s"3 columns: $n3 jobs, 12 columns: $n12 jobs")
+  }
+
+  test("nondeterministic source: every row's columns come from one execution") {
+    // a driver-JVM counter (a static, so local-mode tasks share it, not
+    // a serialized copy): every execution of the source yields new
+    // values, so columns streamed by separate executions misalign
+    Hdf5Spec.counter.set(0L)
+    val next = udf(() => Hdf5Spec.counter.incrementAndGet()).asNondeterministic()
+    val df = spark.range(0, 2000, 1, 4).select(next().as("a"))
+      .withColumn("b", col("a"))
+    for (compress <- Seq(true, false)) {
+      val p = tmp(s"nondet$compress.hdf5")
+      Hdf5Io.exportHdf5(OCDataset(df), p, chunkRows = 256, compress = compress)
+      val back = Hdf5Io.importDataset(spark, p).df
+      assert(back.count() == 2000)
+      assert(back.filter(col("a") =!= col("b")).count() == 0,
+        s"a and b misaligned (compress = $compress)")
+    }
+  }
+
+  test("10k rows over 4 partitions round-trip value for value, chunked and contiguous") {
+    // strings, a variable-width double array with null elements and
+    // null arrays, and null scalars: at chunkRows = 1000 every column
+    // spans ten interleaved chunks
+    val src = spark.range(0, 10000, 1, 4).select(
+      col("id"),
+      (col("id") % 3).cast("int").as("n"),
+      when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 1.5).as("x"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(
+        concat(lit("row-"), col("id"), when(col("id") % 2 === 0, lit("-é")).otherwise(lit(""))))
+        .as("s"),
+      when(col("id") % 11 === 0, lit(null))
+        .when(col("id") % 4 === 0, array((col("id") * 0.25).cast("double")))
+        .otherwise(array((col("id") * 0.25).cast("double"), lit(null).cast("double"),
+          (-col("id")).cast("double"))).as("v"))
+    assert(src.rdd.getNumPartitions == 4)
+    // HDF5 has no nulls: zeros and "" in their place, arrays zero-padded
+    // to the widest (3)
+    val want = src.collect().map { r =>
+      val v = Option(r.getSeq[Any](4)).getOrElse(Nil)
+        .map(e => if (e == null) 0.0 else e.asInstanceOf[Double]).padTo(3, 0.0)
+      (r.getLong(0), r.getInt(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2),
+        Option(r.getString(3)).getOrElse(""), v)
+    }.sortBy(_._1).toSeq
+    for (compress <- Seq(true, false)) {
+      val p = tmp(s"tenk$compress.hdf5")
+      Hdf5Io.exportHdf5(OCDataset(src), p, chunkRows = 1000, compress = compress)
+      val got = Hdf5Io.importDataset(spark, p).df.collect().map { r =>
+        (r.getLong(0), r.getInt(1), r.getDouble(2), r.getString(3), r.getSeq[Double](4))
+      }.sortBy(_._1).toSeq
+      assert(got.length == want.length)
+      got.zip(want).foreach { case (g, w) => assert(g == w, s"compress = $compress") }
+    }
+  }
+}
+
+object Hdf5Spec {
+  val counter = new java.util.concurrent.atomic.AtomicLong(0L)
 }
