@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 
@@ -260,62 +260,29 @@ object Clustering {
       seeds.filter(_.getInt(0) == s).sortBy(_.getInt(1))
         .map(_.getSeq[Double](2).toArray)
     }
-    // The per-(super, child, pos) partial sums either collect DIRECTLY
-    // (cells × dim rows — one shuffle per step) or re-assemble into
-    // ONE array row per cell first (a pos-sorted collect_list of
-    // (pos, sum, count) triples — a second shuffle, but the driver
-    // pulls cells rows, not cells × dim). The direct path is taken
-    // while cells × dim stays under [[MaxChildSumRows]] (gate-scale
-    // fits always do — it removes an exchange and its AQE sub-job from
-    // every Lloyd step); the regrouped path keeps the driver-row bound
-    // for big fits. Both paths: each position divides by ITS OWN
-    // count, absent positions keep the zero-fill into a ctr.length
-    // array — centroids bit-identical either way (the sums are the
-    // same rows, only their driver-side assembly differs).
-    val directRows = kSuper.toLong * kChild * dim
+    // The per-(super, child, pos) partial sums collect directly: cells ×
+    // dim rows, already capped by [[MaxChildLiteralDoubles]] above. Each
+    // position divides by ITS OWN count; absent positions keep the
+    // zero-fill into a ctr.length array.
     for (_ <- 0 until iters) {
-      val partial = assignChildren(withSuper, mats)
+      val sums = assignChildren(withSuper, mats)
         .select(col("__super"), col("__child"),
           posexplode(col("__qv")).as(Seq("__pos", "__v")))
         .groupBy(col("__super"), col("__child"), col("__pos"))
         .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
-      mats =
-        if (directRows <= MaxChildSumRows) {
-          val sums = partial.collect()
-          val bySC = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-          mats.zipWithIndex.map { case (m, s) =>
-            m.zipWithIndex.map { case (ctr, c) =>
-              bySC.get((s, c)) match {
-                case Some(rs) =>
-                  val nm = new Array[Double](ctr.length)
-                  rs.foreach(t =>
-                    nm(t.getInt(2)) = t.getDouble(3) / t.getLong(4))
-                  nm
-                case None => ctr // empty child keeps its centroid
-              }
-            }
-          }
-        } else {
-          val sums = partial
-            .groupBy(col("__super"), col("__child"))
-            .agg(array_sort(collect_list(
-              struct(col("__pos"), col("__s"), col("__n")))).as("__psn"))
-            .collect()
-          val byCell = sums.map(r => (r.getInt(0), r.getInt(1)) -> r).toMap
-          mats.zipWithIndex.map { case (m, s) =>
-            m.zipWithIndex.map { case (ctr, c) =>
-              byCell.get((s, c)) match {
-                case Some(r) =>
-                  val nm = new Array[Double](ctr.length)
-                  r.getSeq[Row](2).foreach { t =>
-                    nm(t.getInt(0)) = t.getDouble(1) / t.getLong(2)
-                  }
-                  nm
-                case None => ctr // empty child keeps its centroid
-              }
-            }
+        .collect()
+      val bySC = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
+      mats = mats.zipWithIndex.map { case (m, s) =>
+        m.zipWithIndex.map { case (ctr, c) =>
+          bySC.get((s, c)) match {
+            case Some(rs) =>
+              val nm = new Array[Double](ctr.length)
+              rs.foreach(t => nm(t.getInt(2)) = t.getDouble(3) / t.getLong(4))
+              nm
+            case None => ctr // empty child keeps its centroid
           }
         }
+      }
     }
     mats
   }
@@ -324,12 +291,6 @@ object Clustering {
     * cells x dim doubles per [[assignChildren]] plan and per-iteration
     * collect. ~16 MB of literal at the cap. */
   private[graft] val MaxChildLiteralDoubles: Long = 1L << 21
-
-  /** Direct-collect bound for [[childLloydMd5]]'s per-step sums:
-    * while cells × dim ≤ this, the (super, child, pos) partial sums
-    * collect as-is (one shuffle per Lloyd step); past it they regroup
-    * to one row per cell first. 64k Rows ≈ a few MB on the driver. */
-  private[graft] val MaxChildSumRows: Long = 1L << 16
 
   /** The per-super centroid matrices as ONE nested plan literal
     * (indexed by `__super`; a row-less super keeps a never-consulted

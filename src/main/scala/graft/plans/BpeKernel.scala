@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import KernelExpr._
 
 /** One-pass BPE word encoder (reference semantics: the subword-unit
   * merge table of arXiv:1508.07909, applied at encode time).
@@ -147,14 +145,23 @@ object BpeKernel {
   * array<struct<a:string,b:string>> in rank order — it is evaluated
   * once, compiled into a [[BpeKernel.Table]], and referenced from
   * generated code (never re-evaluated per row).
+  *
+  * Unlike every other kernel, analysis does NOT check the constant's
+  * foldability: these expressions live inside HOF lambdas
+  * (transform/aggregate), and making `resolved` depend on foldability
+  * during the analyzer's staged lambda resolution broke resolution
+  * outright (fertilityStats). The lazy table's named require still
+  * rejects a per-row merges argument, just at execution.
   */
-final case class BpeWordExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_bpe_word(word, merges)")
-  private def child = children.head
-
-  // foldability is checked here, not in the constructor: the Column
-  // API hands the builder UNRESOLVED children (functions.struct is an
-  // UnresolvedFunction until the analyzer runs), on which `foldable`
+final case class BpeWordExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(text("word")), Seq(Input("merges",
+      "array<struct<string,string>>", {
+        case ArrayType(st: StructType, _) =>
+          st.length == 2 && st.fields.forall(_.dataType == StringType)
+        case _ => false
+      }))) {
+  // built on first use, not in the constructor: the Column API
+  // constructs the kernel on UNRESOLVED children, on which `foldable`
   // is not yet meaningful
   @transient private lazy val table: BpeKernel.Table = {
     require(children(1).foldable, "graft_bpe_word: merges must be foldable")
@@ -170,61 +177,21 @@ final case class BpeWordExpr(children: Seq[Expression]) extends Expression {
     }
     new BpeKernel.Table(as, bs)
   }
-
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (child.dataType, children(1).dataType) match {
-      case (StringType, ArrayType(st: StructType, _))
-        if st.length == 2 && st.fields.forall(_.dataType == StringType) =>
-        // NO foldability gate here, unlike the sibling kernels: these
-        // expressions live inside HOF lambdas (transform/aggregate),
-        // and making `resolved` depend on foldability during the
-        // analyzer's staged lambda resolution broke resolution
-        // outright (fertilityStats). The lazy table's named require
-        // still rejects a per-row merges argument, just at execution
-        TypeCheckResult.TypeCheckSuccess
-      case (cd, md) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (word string, merges array<struct<string,string>>), " +
-          s"got (${cd.simpleString}, ${md.simpleString})")
-    }
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val w = child.eval(input)
-    if (w == null) null
-    else BpeKernel.encodeWord(w.asInstanceOf[UTF8String], table)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    val tbl = ctx.addReferenceObj("bpeTable", table, classOf[BpeKernel.Table].getName)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.BpeKernel.encodeWord(${cg.value}, $tbl);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  override protected def constantsFoldableAtAnalysis = false
+  protected def args = Seq(In(0), Const("bpeTable", table))
+  protected def method = "graft.plans.BpeKernel.encodeWord"
+  protected def call(a: Args) = BpeKernel.encodeWord(a.string(0), a.ref(1))
 }
 
 /** graft_syms_to_ids(syms, vocab) → array<int>: vocabulary ids of a
   * symbol array. `vocab` must be a FOLDABLE array<string> whose index
   * IS the id (duplicates resolve first-wins); compiled once into a
-  * hash map and referenced from generated code.
+  * hash map and referenced from generated code. Its foldability is
+  * checked at execution, as for [[BpeWordExpr]].
   */
-final case class SymsToIdsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_syms_to_ids(syms, vocab)")
-  private def child = children.head
-
+final case class SymsToIdsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("syms", StringType)), Seq(arrayOf("vocab", StringType))) {
   @transient private lazy val vocabMap: java.util.HashMap[String, Int] = {
     require(children(1).foldable, "graft_syms_to_ids: vocab must be foldable")
     val arr = children(1).eval(null).asInstanceOf[ArrayData]
@@ -237,44 +204,9 @@ final case class SymsToIdsExpr(children: Seq[Expression]) extends Expression {
     }
     m
   }
-
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (child.dataType, children(1).dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        // no foldability gate — see BpeWordExpr (HOF-lambda analyzer
-        // interplay); the lazy vocabMap's named require rejects a
-        // per-row vocab at execution
-        TypeCheckResult.TypeCheckSuccess
-      case (cd, vd) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (syms array<string>, vocab array<string>), " +
-          s"got (${cd.simpleString}, ${vd.simpleString})")
-    }
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val s = child.eval(input)
-    if (s == null) null
-    else BpeKernel.symsToIds(s.asInstanceOf[ArrayData], vocabMap)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    val vm = ctx.addReferenceObj("bpeVocab", vocabMap, "java.util.HashMap")
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.BpeKernel.symsToIds(${cg.value}, $vm);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  override protected def constantsFoldableAtAnalysis = false
+  protected def args = Seq(In(0), Const("bpeVocab", vocabMap))
+  protected def method = "graft.plans.BpeKernel.symsToIds"
+  protected def call(a: Args) = BpeKernel.symsToIds(a.array(0), a.ref(1))
 }

@@ -2,12 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
-import graft.spatial.Morton
+import scala.reflect.ClassTag
+import graft.spatial.{Healpix, Morton}
+import KernelExpr._
 
 /** Catalyst extension point (builder-prompt preference order (b)/(c):
   * a custom `Expression` with `doGenCode`, registered through the
@@ -25,100 +24,46 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
+  /** One registry entry per codegen'd kernel (see [[KernelExpr]]):
+    * its SQL name and constructor, the `ExpressionInfo` derived from
+    * both. */
+  private def kernel[K <: KernelExpr](name: String, build: Seq[Expression] => K)(
+      implicit k: ClassTag[K]) =
+    (FunctionIdentifier(name), new ExpressionInfo(k.runtimeClass.getName, name),
+      build: Seq[Expression] => Expression)
+
   private[plans] val descriptors = Seq(
-    (FunctionIdentifier("graft_morton_key"),
-      new ExpressionInfo(classOf[MortonKeyExpr].getName, "graft_morton_key"),
-      (children: Seq[Expression]) => MortonKeyExpr(children): Expression),
-    (FunctionIdentifier("graft_healpix_pix"),
-      new ExpressionInfo(classOf[HealpixPixExpr].getName, "graft_healpix_pix"),
-      (children: Seq[Expression]) => HealpixPixExpr(children): Expression),
-    (FunctionIdentifier("graft_healpix_disc"),
-      new ExpressionInfo(classOf[HealpixDiscExpr].getName, "graft_healpix_disc"),
-      (children: Seq[Expression]) => HealpixDiscExpr(children): Expression),
-    (FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
-      (children: Seq[Expression]) => SimHash64Expr(children): Expression),
-    (FunctionIdentifier("graft_ngram_hashes"),
-      new ExpressionInfo(classOf[NgramHashesExpr].getName, "graft_ngram_hashes"),
-      (children: Seq[Expression]) => NgramHashesExpr(children): Expression),
-    (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "graft_minhash_sig"),
-      (children: Seq[Expression]) => MinHashSigExpr(children): Expression),
-    (FunctionIdentifier("graft_cosine_int8"),
-      new ExpressionInfo(classOf[CosineInt8Expr].getName, "graft_cosine_int8"),
-      (children: Seq[Expression]) => CosineInt8Expr(children): Expression),
-    (FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineExpr].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineExpr(children): Expression),
-    (FunctionIdentifier("graft_l2norm"),
-      new ExpressionInfo(classOf[L2NormExpr].getName, "graft_l2norm"),
-      (children: Seq[Expression]) => L2NormExpr(children): Expression),
-    (FunctionIdentifier("graft_cell_dists"),
-      new ExpressionInfo(classOf[CellDistsExpr].getName, "graft_cell_dists"),
-      (children: Seq[Expression]) => CellDistsExpr(children): Expression),
-    (FunctionIdentifier("graft_nearest_cell"),
-      new ExpressionInfo(classOf[NearestCellExpr].getName, "graft_nearest_cell"),
-      (children: Seq[Expression]) => NearestCellExpr(children): Expression),
-    (FunctionIdentifier("graft_dot_q"),
-      new ExpressionInfo(classOf[DotQExpr].getName, "graft_dot_q"),
-      (children: Seq[Expression]) => DotQExpr(children): Expression),
-    (FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncodeExpr].getName, "graft_pq_encode"),
-      (children: Seq[Expression]) => PqEncodeExpr(children): Expression),
-    (FunctionIdentifier("graft_jl_project"),
-      new ExpressionInfo(classOf[JlProjectExpr].getName, "graft_jl_project"),
-      (children: Seq[Expression]) => JlProjectExpr(children): Expression),
-    (FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[NormalizeExpr].getName, "graft_normalize"),
-      (children: Seq[Expression]) => NormalizeExpr(children): Expression),
-    (FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[CharEntropyExpr].getName, "graft_char_entropy"),
-      (children: Seq[Expression]) => CharEntropyExpr(children): Expression),
-    (FunctionIdentifier("graft_deflate_len"),
-      new ExpressionInfo(classOf[DeflateLenExpr].getName, "graft_deflate_len"),
-      (children: Seq[Expression]) => DeflateLenExpr(children): Expression),
-    (FunctionIdentifier("graft_rep_signals"),
-      new ExpressionInfo(classOf[RepSignalsExpr].getName, "graft_rep_signals"),
-      (children: Seq[Expression]) => RepSignalsExpr(children): Expression),
-    (FunctionIdentifier("graft_bpe_word"),
-      new ExpressionInfo(classOf[BpeWordExpr].getName, "graft_bpe_word"),
-      (children: Seq[Expression]) => BpeWordExpr(children): Expression),
-    (FunctionIdentifier("graft_syms_to_ids"),
-      new ExpressionInfo(classOf[SymsToIdsExpr].getName, "graft_syms_to_ids"),
-      (children: Seq[Expression]) => SymsToIdsExpr(children): Expression),
-    (FunctionIdentifier("graft_md5_minhash_sig"),
-      new ExpressionInfo(classOf[Md5MinhashSigExpr].getName, "graft_md5_minhash_sig"),
-      (children: Seq[Expression]) => Md5MinhashSigExpr(children): Expression),
-    (FunctionIdentifier("graft_md5_simhash64"),
-      new ExpressionInfo(classOf[Md5Simhash64Expr].getName, "graft_md5_simhash64"),
-      (children: Seq[Expression]) => Md5Simhash64Expr(children): Expression),
-    (FunctionIdentifier("graft_md5_bucket_counts"),
-      new ExpressionInfo(classOf[Md5BucketCountsExpr].getName, "graft_md5_bucket_counts"),
-      (children: Seq[Expression]) => Md5BucketCountsExpr(children): Expression),
-    (FunctionIdentifier("graft_md5_sign_sums"),
-      new ExpressionInfo(classOf[Md5SignSumsExpr].getName, "graft_md5_sign_sums"),
-      (children: Seq[Expression]) => Md5SignSumsExpr(children): Expression),
-    (FunctionIdentifier("graft_gram_counts"),
-      new ExpressionInfo(classOf[GramCountsExpr].getName, "graft_gram_counts"),
-      (children: Seq[Expression]) => GramCountsExpr(children): Expression),
-    (FunctionIdentifier("graft_md5_window_hashes"),
-      new ExpressionInfo(classOf[Md5WindowHashesExpr].getName, "graft_md5_window_hashes"),
-      (children: Seq[Expression]) => Md5WindowHashesExpr(children): Expression),
-    (FunctionIdentifier("graft_xx_window_hashes"),
-      new ExpressionInfo(classOf[XxWindowHashesExpr].getName, "graft_xx_window_hashes"),
-      (children: Seq[Expression]) => XxWindowHashesExpr(children): Expression),
-    (FunctionIdentifier("graft_md5_bucket_entries"),
-      new ExpressionInfo(classOf[BucketEntriesExpr].getName, "graft_md5_bucket_entries"),
-      (children: Seq[Expression]) => BucketEntriesExpr(children, xx = false): Expression),
-    (FunctionIdentifier("graft_xx_bucket_entries"),
-      new ExpressionInfo(classOf[BucketEntriesExpr].getName, "graft_xx_bucket_entries"),
-      (children: Seq[Expression]) => BucketEntriesExpr(children, xx = true): Expression),
-    (FunctionIdentifier("graft_xx_bucket_counts"),
-      new ExpressionInfo(classOf[XxBucketCountsExpr].getName, "graft_xx_bucket_counts"),
-      (children: Seq[Expression]) => XxBucketCountsExpr(children): Expression),
-    (FunctionIdentifier("graft_xx_sign_sums"),
-      new ExpressionInfo(classOf[XxSignSumsExpr].getName, "graft_xx_sign_sums"),
-      (children: Seq[Expression]) => XxSignSumsExpr(children): Expression),
+    kernel("graft_morton_key", MortonKeyExpr(_)),
+    kernel("graft_healpix_pix", HealpixPixExpr(_)),
+    kernel("graft_healpix_disc", HealpixDiscExpr(_)),
+    kernel("graft_simhash64", SimHash64Expr(_)),
+    kernel("graft_ngram_hashes", NgramHashesExpr(_)),
+    kernel("graft_minhash_sig", MinHashSigExpr(_)),
+    kernel("graft_cosine_int8", CosineInt8Expr(_)),
+    kernel("graft_cosine", CosineExpr(_)),
+    kernel("graft_l2norm", L2NormExpr(_)),
+    kernel("graft_cell_dists", CellDistsExpr(_)),
+    kernel("graft_nearest_cell", NearestCellExpr(_)),
+    kernel("graft_dot_q", DotQExpr(_)),
+    kernel("graft_pq_encode", PqEncodeExpr(_)),
+    kernel("graft_jl_project", JlProjectExpr(_)),
+    kernel("graft_normalize", NormalizeExpr(_)),
+    kernel("graft_char_entropy", CharEntropyExpr(_)),
+    kernel("graft_deflate_len", DeflateLenExpr(_)),
+    kernel("graft_rep_signals", RepSignalsExpr(_)),
+    kernel("graft_bpe_word", BpeWordExpr(_)),
+    kernel("graft_syms_to_ids", SymsToIdsExpr(_)),
+    kernel("graft_md5_minhash_sig", Md5MinhashSigExpr(_)),
+    kernel("graft_md5_simhash64", Md5Simhash64Expr(_)),
+    kernel("graft_md5_bucket_counts", Md5BucketCountsExpr(_)),
+    kernel("graft_md5_sign_sums", Md5SignSumsExpr(_)),
+    kernel("graft_gram_counts", GramCountsExpr(_)),
+    kernel("graft_md5_window_hashes", Md5WindowHashesExpr(_)),
+    kernel("graft_xx_window_hashes", XxWindowHashesExpr(_)),
+    kernel("graft_md5_bucket_entries", BucketEntriesExpr(_, xx = false)),
+    kernel("graft_xx_bucket_entries", BucketEntriesExpr(_, xx = true)),
+    kernel("graft_xx_bucket_counts", XxBucketCountsExpr(_)),
+    kernel("graft_xx_sign_sums", XxSignSumsExpr(_)),
     // Spark's own bloom-filter pair (the machinery behind runtime
     // join filters), surfaced as callable functions for the
     // bloom-prefiltered decontamination path: the aggregate builds a
@@ -159,52 +104,21 @@ object GraftExtensions {
   * Codegen'd Morton cell key (reference spatial/octree.py:48-57
   * `get_octtree_index`): one static JVM call per row inside
   * whole-stage codegen — the preferred custom-scalar-function shape
-  * (native `Expression` > UDF).
+  * (native `Expression` > UDF). Numeric coordinates are cast to double.
   */
-final case class MortonKeyExpr(children: Seq[Expression]) extends Expression {
-
-  require(children.length == 6, "graft_morton_key(x, y, z, origin, size, level)")
-  private def xe = children(0); private def ye = children(1); private def ze = children(2)
-
-  // origin/size/level must be foldable (plan-time constants)
-  private lazy val originV = children(3).eval(null).toString.toDouble
-  private lazy val sizeV = children(4).eval(null).toString.toDouble
-  private lazy val levelV = children(5).eval(null).toString.toInt
-
+final case class MortonKeyExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(cast("x", DoubleType), cast("y", DoubleType), cast("z", DoubleType)),
+      Seq(constant("origin"), constant("size"), constant("level"))) {
+  private lazy val originV = doubleAt(3)
+  private lazy val size = doubleAt(4)
+  private lazy val level = intAt(5)
   override def dataType: DataType = LongType
-  override def nullable: Boolean = Seq(xe, ye, ze).exists(_.nullable)
   override def foldable: Boolean = children.forall(_.foldable)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.foldableConstants(
-      Seq(children(3) -> "origin", children(4) -> "size",
-        children(5) -> "level"), "graft_morton_key")
-
-  override def eval(input: InternalRow): Any = {
-    val x = xe.eval(input); val y = ye.eval(input); val z = ze.eval(input)
-    if (x == null || y == null || z == null) null
-    else Morton.pointKey(x.asInstanceOf[Double], y.asInstanceOf[Double],
-      z.asInstanceOf[Double], originV, sizeV, levelV)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val xg = xe.genCode(ctx); val yg = ye.genCode(ctx); val zg = ze.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${xg.code}
-        ${yg.code}
-        ${zg.code}
-        boolean ${ev.isNull} = ${xg.isNull} || ${yg.isNull} || ${zg.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.spatial.Morton.pointKey(
-            ${xg.value}, ${yg.value}, ${zg.value}, $originV, $sizeV, $levelV);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+  protected def args = Seq(In(0), In(1), In(2), Const("origin", originV),
+    Const("size", size), Const("level", level))
+  protected def method = "graft.spatial.Morton.pointKey"
+  protected def call(a: Args) = Morton.pointKey(a.double(0), a.double(1), a.double(2),
+    a.double(3), a.double(4), a.int(5))
 }
 
 /** graft_healpix_pix(ra, dec, nside) → long
@@ -216,55 +130,20 @@ final case class MortonKeyExpr(children: Seq[Expression]) extends Expression {
   * As an `Expression` the pixel key fuses into the surrounding
   * codegen stage exactly like [[MortonKeyExpr]] — one static JVM call
   * per row — and stays eligible for constant folding on literal
-  * coordinates.
+  * coordinates. nside is a plan-time constant (it selects a
+  * resolution, not a per-row value), checked power-of-2 once here
+  * instead of per row inside the kernel.
   */
-final case class HealpixPixExpr(children: Seq[Expression]) extends Expression {
-
-  require(children.length == 3, "graft_healpix_pix(ra, dec, nside)")
-  private def rae = children(0); private def dece = children(1)
-
-  // nside must be a foldable plan-time constant (it selects a
-  // resolution, not a per-row value); power-of-2 is checked once here
-  // instead of per row inside the kernel
-  private lazy val nsideV = {
-    val n = children(2).eval(null).toString.toInt
-    require(n > 0 && (n & (n - 1)) == 0, s"nside $n not a power of 2")
-    n
-  }
-
+final case class HealpixPixExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(cast("ra", DoubleType), cast("dec", DoubleType)),
+      Seq(constant("nside"))) {
+  private lazy val nside = Nside.checked(intAt(2))
   override def dataType: DataType = LongType
-  override def nullable: Boolean = rae.nullable || dece.nullable
   override def foldable: Boolean = children.forall(_.foldable)
   override def prettyName: String = "graft_healpix_pix"
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.foldableConstants(
-      Seq(children(2) -> "nside"), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val r = rae.eval(input); val d = dece.eval(input)
-    if (r == null || d == null) null
-    else graft.spatial.Healpix.ang2pixNest(nsideV,
-      r.asInstanceOf[Double], d.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rg = rae.genCode(ctx); val dg = dece.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${rg.code}
-        ${dg.code}
-        boolean ${ev.isNull} = ${rg.isNull} || ${dg.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.spatial.Healpix.ang2pixNest(
-            $nsideV, ${rg.value}, ${dg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+  protected def args = Seq(Const("nside", nside), In(0), In(1))
+  protected def method = "graft.spatial.Healpix.ang2pixNest"
+  protected def call(a: Args) = Healpix.ang2pixNest(a.int(0), a.double(1), a.double(2))
 }
 
 /** graft_healpix_disc(pix, nside, radius_deg) → array<long>
@@ -278,47 +157,23 @@ final case class HealpixPixExpr(children: Seq[Expression]) extends Expression {
   * boxing, serialization, and optimizer opacity. The returned
   * `ArrayData` feeds `explode` directly.
   */
-final case class HealpixDiscExpr(children: Seq[Expression]) extends Expression {
+final case class HealpixDiscExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(cast("pix", LongType)),
+      Seq(constant("nside"), constant("radius_deg"))) {
+  private lazy val nside = Nside.checked(intAt(1))
+  private lazy val radius = doubleAt(2)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_healpix_disc"
+  protected def args = Seq(Const("nside", nside), In(0), Const("radius_deg", radius))
+  protected def method = "graft.spatial.Healpix.discCoverCached"
+  protected def call(a: Args) = Healpix.discCoverCached(a.int(0), a.long(1), a.double(2))
+}
 
-  require(children.length == 3, "graft_healpix_disc(pix, nside, radius_deg)")
-  private def pixe = children(0)
-
-  private lazy val nsideV = {
-    val n = children(1).eval(null).toString.toInt
+private[plans] object Nside {
+  /** nside selects a HEALPix resolution: a power of two, checked once
+    * per plan rather than per row. */
+  def checked(n: Int): Int = {
     require(n > 0 && (n & (n - 1)) == 0, s"nside $n not a power of 2")
     n
   }
-  private lazy val radiusV = children(2).eval(null).toString.toDouble
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = pixe.nullable
-  override def prettyName: String = "graft_healpix_disc"
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.foldableConstants(
-      Seq(children(1) -> "nside", children(2) -> "radius_deg"), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val p = pixe.eval(input)
-    if (p == null) null
-    else graft.spatial.Healpix.discCoverCached(nsideV,
-      p.asInstanceOf[Long], radiusV)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pg = pixe.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${pg.code}
-        boolean ${ev.isNull} = ${pg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.spatial.Healpix.discCoverCached(
-            $nsideV, ${pg.value}, $radiusV);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
 }

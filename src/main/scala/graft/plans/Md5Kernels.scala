@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import KernelExpr._
 
 /** Map-side one-pass kernels for the md5-family GATE signatures
   * (round-19 optimization): each computes, per row, exactly what the
@@ -367,430 +365,123 @@ object Md5Kernels {
 }
 
 /** graft_md5_minhash_sig(tokens array<string>, n, k) → array<long>;
-  * null when the doc has fewer than n tokens (n, k foldable). */
-final case class Md5MinhashSigExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 3, "graft_md5_minhash_sig(tokens, n, k)")
-  private def child = children.head
-  private lazy val n = children(1).eval(null).toString.toInt
-  private lazy val k = children(2).eval(null).toString.toInt
+  * null when the doc has fewer than n tokens. */
+final case class Md5MinhashSigExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("n"), integral("k"))) {
+  private lazy val n = intAt(1)
+  private lazy val k = intAt(2)
   // the affine family constants, staged once per plan (not per row)
   private lazy val aVals = Array.tabulate(k)(graft.operators.DedupHashes.minhashA)
   private lazy val bVals = Array.tabulate(k)(graft.operators.DedupHashes.minhashB)
-
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true // short docs → null
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "n integral literal"),
-        (children(2), TextKernelChecks.isIntegral, "k integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(
-        Seq(children(1) -> "n", children(2) -> "k"), prettyName))
-
-  private def pConst: Long = graft.operators.DedupHashes.MinhashP
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.minhashSig(arr.asInstanceOf[ArrayData], n, k, aVals, bVals, pConst)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    val aRef = ctx.addReferenceObj("aVals", aVals, "long[]")
-    val bRef = ctx.addReferenceObj("bVals", bVals, "long[]")
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.minhashSig(
-            ${cg.value}, $n, $k, $aRef, $bRef, ${pConst}L);
-          ${ev.isNull} = ${ev.value} == null;
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  override protected def mayReturnNull = true
+  protected def args = Seq(In(0), Const("n", n), Const("k", k), Const("aVals", aVals),
+    Const("bVals", bVals), Const("p", graft.operators.DedupHashes.MinhashP))
+  protected def method = "graft.plans.Md5Kernels.minhashSig"
+  protected def call(a: Args) =
+    Md5Kernels.minhashSig(a.array(0), a.int(1), a.int(2), a.ref(3), a.ref(4), a.long(5))
 }
 
-/** graft_md5_simhash64(tokens array<string>) → long (null array → null). */
-final case class Md5Simhash64Expr(children: Seq[Expression]) extends Expression {
-  require(children.length == 1, "graft_md5_simhash64(tokens)")
-  private def child = children.head
-
+/** graft_md5_simhash64(tokens array<string>) → long. */
+final case class Md5Simhash64Expr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens)) {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    TextKernelChecks.expect(Seq(
-      (child, TextKernelChecks.isStringArray, "tokens array<string>")),
-      prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.simhash64(arr.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.simhash64(${cg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0))
+  protected def method = "graft.plans.Md5Kernels.simhash64"
+  protected def call(a: Args) = Md5Kernels.simhash64(a.array(0))
 }
 
-/** graft_md5_bucket_counts(tokens array<string>, dim) → array<long>
-  * (dim foldable; null array → null). */
-final case class Md5BucketCountsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_md5_bucket_counts(tokens, dim)")
-  private def child = children.head
-  private lazy val dim = children(1).eval(null).toString.toInt
-
+/** graft_md5_bucket_counts(tokens array<string>, dim) → array<long>. */
+final case class Md5BucketCountsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("dim"))) {
+  private lazy val dim = intAt(1)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "dim integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "dim"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.bucketCounts(arr.asInstanceOf[ArrayData], dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.bucketCounts(${cg.value}, $dim);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("dim", dim))
+  protected def method = "graft.plans.Md5Kernels.bucketCounts"
+  protected def call(a: Args) = Md5Kernels.bucketCounts(a.array(0), a.int(1))
 }
 
 /** graft_gram_counts(tokens array<string>, n) → array<struct<g string,
-  * c long>> of per-row n-gram occurrence counts (n foldable; null
-  * array → null; < n tokens → empty). */
-final case class GramCountsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_gram_counts(tokens, n)")
-  private def child = children.head
-  private lazy val n = children(1).eval(null).toString.toInt
-
+  * c long>> of per-row n-gram occurrence counts (< n tokens → empty). */
+final case class GramCountsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("n"))) {
+  private lazy val n = intAt(1)
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("g", StringType, nullable = false),
     StructField("c", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "n integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "n"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.gramCounts(arr.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.gramCounts(${cg.value}, $n);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("n", n))
+  protected def method = "graft.plans.Md5Kernels.gramCounts"
+  protected def call(a: Args) = Md5Kernels.gramCounts(a.array(0), a.int(1))
 }
 
 /** graft_md5_window_hashes(tokens array<string>, w) → array<string>
-  * of md5-hex window hashes in position order (w foldable; null array
-  * → null; < w tokens → empty). */
-final case class Md5WindowHashesExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_md5_window_hashes(tokens, w)")
-  private def child = children.head
-  private lazy val w = children(1).eval(null).toString.toInt
-
+  * of md5-hex window hashes in position order (< w tokens → empty). */
+final case class Md5WindowHashesExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("w"))) {
+  private lazy val w = intAt(1)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "w integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "w"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.md5WindowHashes(arr.asInstanceOf[ArrayData], w)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.md5WindowHashes(${cg.value}, $w);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("w", w))
+  protected def method = "graft.plans.Md5Kernels.md5WindowHashes"
+  protected def call(a: Args) = Md5Kernels.md5WindowHashes(a.array(0), a.int(1))
 }
 
 /** graft_xx_window_hashes(tokens array<string>, w) → array<long> of
-  * xxhash64 window hashes in position order (w foldable; null array
-  * → null; < w tokens → empty). */
-final case class XxWindowHashesExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_xx_window_hashes(tokens, w)")
-  private def child = children.head
-  private lazy val w = children(1).eval(null).toString.toInt
-
+  * xxhash64 window hashes in position order (< w tokens → empty). */
+final case class XxWindowHashesExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("w"))) {
+  private lazy val w = intAt(1)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "w integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "w"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.xxWindowHashes(arr.asInstanceOf[ArrayData], w)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.xxWindowHashes(${cg.value}, $w);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("w", w))
+  protected def method = "graft.plans.Md5Kernels.xxWindowHashes"
+  protected def call(a: Args) = Md5Kernels.xxWindowHashes(a.array(0), a.int(1))
 }
 
 /** graft_md5_bucket_entries / graft_xx_bucket_entries
   * (tokens array<string>, dim) → array<struct<b int, c long>> of the
-  * NON-ZERO bucket counts (dim foldable; null array → null) — the
-  * sparse form for dim ≫ tokens-per-row consumers (TF-IDF). */
+  * NON-ZERO bucket counts — the sparse form for dim ≫ tokens-per-row
+  * consumers (TF-IDF). */
 final case class BucketEntriesExpr(children: Seq[Expression], xx: Boolean)
-    extends Expression {
-  require(children.length == 2, "graft_*_bucket_entries(tokens, dim)")
-  private def child = children.head
-  private lazy val dim = children(1).eval(null).toString.toInt
-
+    extends KernelExpr(Seq(tokens), Seq(integral("dim"))) {
+  private lazy val dim = intAt(1)
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("b", IntegerType, nullable = false),
     StructField("c", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "dim integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "dim"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else if (xx) Md5Kernels.bucketEntriesXx(arr.asInstanceOf[ArrayData], dim)
-    else Md5Kernels.bucketEntries(arr.asInstanceOf[ArrayData], dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    val fn = if (xx) "bucketEntriesXx" else "bucketEntries"
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.$fn(${cg.value}, $dim);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("dim", dim))
+  protected def method =
+    if (xx) "graft.plans.Md5Kernels.bucketEntriesXx" else "graft.plans.Md5Kernels.bucketEntries"
+  protected def call(a: Args) =
+    if (xx) Md5Kernels.bucketEntriesXx(a.array(0), a.int(1))
+    else Md5Kernels.bucketEntries(a.array(0), a.int(1))
 }
 
-/** graft_xx_bucket_counts(tokens array<string>, dim) → array<long>
-  * (dim foldable; null array → null): the xxhash64 production twin. */
-final case class XxBucketCountsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_xx_bucket_counts(tokens, dim)")
-  private def child = children.head
-  private lazy val dim = children(1).eval(null).toString.toInt
-
+/** graft_xx_bucket_counts(tokens array<string>, dim) → array<long>:
+  * the xxhash64 production twin. */
+final case class XxBucketCountsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("dim"))) {
+  private lazy val dim = intAt(1)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "dim integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "dim"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.bucketCountsXx(arr.asInstanceOf[ArrayData], dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.bucketCountsXx(${cg.value}, $dim);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("dim", dim))
+  protected def method = "graft.plans.Md5Kernels.bucketCountsXx"
+  protected def call(a: Args) = Md5Kernels.bucketCountsXx(a.array(0), a.int(1))
 }
 
-/** graft_xx_sign_sums(tokens array<string>, dim) → array<double>
-  * (dim foldable; null array → null): the xxhash64 production twin. */
-final case class XxSignSumsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_xx_sign_sums(tokens, dim)")
-  private def child = children.head
-  private lazy val dim = children(1).eval(null).toString.toInt
-
+/** graft_xx_sign_sums(tokens array<string>, dim) → array<double>: the
+  * xxhash64 production twin. */
+final case class XxSignSumsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("dim"))) {
+  private lazy val dim = intAt(1)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "dim integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "dim"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.signSumsXx(arr.asInstanceOf[ArrayData], dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.signSumsXx(${cg.value}, $dim);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("dim", dim))
+  protected def method = "graft.plans.Md5Kernels.signSumsXx"
+  protected def call(a: Args) = Md5Kernels.signSumsXx(a.array(0), a.int(1))
 }
 
-/** graft_md5_sign_sums(tokens array<string>, dim) → array<double>
-  * (dim foldable; null array → null). */
-final case class Md5SignSumsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_md5_sign_sums(tokens, dim)")
-  private def child = children.head
-  private lazy val dim = children(1).eval(null).toString.toInt
-
+/** graft_md5_sign_sums(tokens array<string>, dim) → array<double>. */
+final case class Md5SignSumsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(tokens), Seq(integral("dim"))) {
+  private lazy val dim = intAt(1)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isStringArray, "tokens array<string>"),
-        (children(1), TextKernelChecks.isIntegral, "dim integral literal")),
-        prettyName),
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "dim"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else Md5Kernels.signSums(arr.asInstanceOf[ArrayData], dim)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.Md5Kernels.signSums(${cg.value}, $dim);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("dim", dim))
+  protected def method = "graft.plans.Md5Kernels.signSums"
+  protected def call(a: Args) = Md5Kernels.signSums(a.array(0), a.int(1))
 }

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import KernelExpr._
 
 /** Tight-loop JVM kernels for the text-similarity signatures, exposed
   * as codegen'd Catalyst expressions (`graft_simhash64`,
@@ -314,152 +312,33 @@ object TextKernels {
   }
 }
 
-/** Analysis-time input checks for the text kernels (the
-  * VecKernelChecks pattern): a wrong child type must fail resolution
-  * with the function name, not surface later as a ClassCastException
-  * or a generated-Java compile error.
-  */
-private[plans] object TextKernelChecks {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-
-  def expect(exprs: Seq[(Expression, DataType => Boolean, String)],
-             fn: String): TypeCheckResult =
-    exprs.collectFirst {
-      case (e, ok, want) if !ok(e.dataType) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$fn expects $want, got ${e.dataType.simpleString}")
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-
-  def isString(dt: DataType): Boolean = dt == StringType
-  def isLongArray(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true; case _ => false
-  }
-  def isStringArray(dt: DataType): Boolean = dt match {
-    case ArrayType(StringType, _) => true; case _ => false
-  }
-  def isIntegral(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true; case _ => false
-  }
-}
-
-/** graft_simhash64(array<long>) → long (null array → null). */
-final case class SimHash64Expr(children: Seq[Expression]) extends Expression {
-  require(children.length == 1, "graft_simhash64(token_hashes)")
-  private def child = children.head
-
+/** graft_simhash64(array<long>) → long */
+final case class SimHash64Expr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("token_hashes", LongType))) {
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    TextKernelChecks.expect(Seq(
-      (child, TextKernelChecks.isLongArray, "token_hashes array<long>")),
-      prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else TextKernels.simhash64(arr.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.TextKernels.simhash64(${cg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0))
+  protected def method = "graft.plans.TextKernels.simhash64"
+  protected def call(a: Args) = TextKernels.simhash64(a.array(0))
 }
 
-/** graft_ngram_hashes(array<long>, n) → array<long> distinct (n foldable). */
-final case class NgramHashesExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_ngram_hashes(token_hashes, n)")
-  private def child = children.head
-  private lazy val n = children(1).eval(null).toString.toInt
-
+/** graft_ngram_hashes(array<long>, n) → array<long> distinct */
+final case class NgramHashesExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("token_hashes", LongType)), Seq(integral("n"))) {
+  private lazy val n = intAt(1)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isLongArray, "token_hashes array<long>"),
-        (children(1), TextKernelChecks.isIntegral, "n integral literal")),
-        prettyName),
-      // n is extracted once at plan time via eval(null); a column
-      // there must fail analysis, not NPE in codegen
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "n"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else TextKernels.ngramHashes(arr.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.TextKernels.ngramHashes(${cg.value}, $n);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("n", n))
+  protected def method = "graft.plans.TextKernels.ngramHashes"
+  protected def call(a: Args) = TextKernels.ngramHashes(a.array(0), a.int(1))
 }
 
-/** graft_minhash_sig(array<long>, k) → array<long> (k foldable). */
-final case class MinHashSigExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_minhash_sig(shingle_hashes, k)")
-  private def child = children.head
-  private lazy val k = children(1).eval(null).toString.toInt
-
+/** graft_minhash_sig(array<long>, k) → array<long> */
+final case class MinHashSigExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("shingle_hashes", LongType)), Seq(integral("k"))) {
+  private lazy val k = intAt(1)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      TextKernelChecks.expect(Seq(
-        (child, TextKernelChecks.isLongArray, "shingle_hashes array<long>"),
-        (children(1), TextKernelChecks.isIntegral, "k integral literal")),
-        prettyName),
-      // k is extracted once at plan time via eval(null); a column
-      // there must fail analysis, not NPE in codegen
-      VecKernelChecks.foldableConstants(Seq(children(1) -> "k"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val arr = child.eval(input)
-    if (arr == null) null
-    else TextKernels.minhashSig(arr.asInstanceOf[ArrayData], k)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.TextKernels.minhashSig(${cg.value}, $k);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("k", k))
+  protected def method = "graft.plans.TextKernels.minhashSig"
+  protected def call(a: Args) = TextKernels.minhashSig(a.array(0), a.int(1))
 }
 
 /** graft_normalize(string) → string: one-pass canonical text
@@ -471,38 +350,12 @@ final case class MinHashSigExpr(children: Seq[Expression]) extends Expression {
   * → trim), which scans the string three times and allocates two
   * intermediates; this is one scan, one output buffer.
   */
-final case class NormalizeExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 1, "graft_normalize(text)")
-  private def child = children.head
-
+final case class NormalizeExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(text("text"))) {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    TextKernelChecks.expect(Seq(
-      (child, TextKernelChecks.isString, "text string")), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val s = child.eval(input)
-    if (s == null) null
-    else TextKernels.normalize(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.TextKernels.normalize(${cg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0))
+  protected def method = "graft.plans.TextKernels.normalize"
+  protected def call(a: Args) = TextKernels.normalize(a.string(0))
 }
 
 /** graft_char_entropy(text) → double: Shannon entropy (nats) of the
@@ -511,95 +364,32 @@ final case class NormalizeExpr(children: Seq[Expression]) extends Expression {
   * high for natural prose (quality-filter input alongside the
   * repetition and stopword signals). Empty string → 0.0.
   */
-final case class CharEntropyExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 1, "graft_char_entropy(text)")
-  private def child = children.head
-
+final case class CharEntropyExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(text("text"))) {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    TextKernelChecks.expect(Seq(
-      (child, TextKernelChecks.isString, "text string")), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val s = child.eval(input)
-    if (s == null) null
-    else TextKernels.charEntropy(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        double ${ev.value} = 0.0;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.TextKernels.charEntropy(${cg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0))
+  protected def method = "graft.plans.TextKernels.charEntropy"
+  protected def call(a: Args) = TextKernels.charEntropy(a.string(0))
 }
 
 /** graft_deflate_len(text, level) → long: DEFLATE-compressed byte
-  * length of the UTF-8 text at the given level (level must be
-  * foldable). compressed/raw is the compression-ratio quality signal
-  * (low ratio ⇒ repetitive/templated text). Deflaters come from a
-  * per-thread pool (one per level, reset between rows) — no state is
-  * shared ACROSS threads, safe inside codegen.
+  * length of the UTF-8 text at the given level. compressed/raw is the
+  * compression-ratio quality signal (low ratio ⇒ repetitive/templated
+  * text). Deflaters come from a per-thread pool (one per level, reset
+  * between rows) — no state is shared ACROSS threads, safe inside
+  * codegen.
   */
-final case class DeflateLenExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_deflate_len(text, level)")
-  private def child = children.head
-  private def levelExpr = children(1)
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    TextKernelChecks.expect(Seq(
-      (child, TextKernelChecks.isString, "text string"),
-      (levelExpr, TextKernelChecks.isIntegral, "level integral literal")),
-      prettyName)
-
-  // level folds lazily, NOT in the constructor: Catalyst rewrites
-  // children during planning (binding, subexpression elimination) and
-  // a constructor-time foldable require trips on the intermediate
-  // trees; the wrapper API (TextFunctions.compressionRatio) validates
-  // the user-facing range eagerly
-  private lazy val level: Int = {
-    require(levelExpr.foldable, "graft_deflate_len level must be a literal")
-    val l = levelExpr.eval(null).asInstanceOf[Number].intValue()
+final case class DeflateLenExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(text("text")), Seq(integral("level"))) {
+  private lazy val level = {
+    val l = intAt(1)
     require(l >= 0 && l <= 9, s"deflate level must be 0..9, got $l")
     l
   }
-
-  override def eval(input: InternalRow): Any = {
-    val s = child.eval(input)
-    if (s == null) null
-    else TextKernels.deflateLen(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], level)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.TextKernels.deflateLen(${cg.value}, $level);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  override def dataType: DataType = LongType
+  protected def args = Seq(In(0), Const("level", level))
+  protected def method = "graft.plans.TextKernels.deflateLen"
+  protected def call(a: Args) = TextKernels.deflateLen(a.string(0), a.int(1))
 }
 
 /** graft_rep_signals(text) → array<long>[11]: the Gopher repetition
@@ -607,36 +397,10 @@ final case class DeflateLenExpr(children: Seq[Expression]) extends Expression {
   * codegen'd pass per row; integer outputs so the driver oracle can
   * hash-compare the signals themselves rather than float fractions.
   */
-final case class RepSignalsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 1, "graft_rep_signals(text)")
-  private def child = children.head
-
+final case class RepSignalsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(text("text"))) {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    TextKernelChecks.expect(Seq(
-      (child, TextKernelChecks.isString, "text string")), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val s = child.eval(input)
-    if (s == null) null
-    else TextKernels.repSignals(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cg = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${cg.code}
-        boolean ${ev.isNull} = ${cg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.TextKernels.repSignals(${cg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0))
+  protected def method = "graft.plans.TextKernels.repSignals"
+  protected def call(a: Args) = TextKernels.repSignals(a.string(0))
 }

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import KernelExpr._
 
 /** Native vector-math kernels over `array<float>` embeddings
   * (`graft_cosine`, `graft_l2norm` — registered in [[GraftExtensions]]).
@@ -272,312 +270,66 @@ object VecKernels {
   }
 }
 
-/** Input check shared by every float-vector kernel: the JVM loops
-  * read elements with `ArrayData.getFloat`, so any other element type
-  * (notably array<double>) would silently misread bytes — refuse it
-  * at analysis time instead.
-  */
-private[plans] object VecKernelChecks {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-
-  def floatArrays(exprs: Seq[(Expression, String)],
-                  fn: String): TypeCheckResult = {
-    exprs.collectFirst {
-      case (e, role) if !e.dataType.isInstanceOf[ArrayType] ||
-          e.dataType.asInstanceOf[ArrayType].elementType != FloatType =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$fn expects $role array<float>, got ${e.dataType.simpleString}")
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-  }
-
-  /** Constant operands (nside, radius, m/dsub/ksub, codebooks…) are
-    * extracted ONCE at plan time via `eval(null)` — a non-foldable
-    * child there would NPE/ClassCastException at execution instead of
-    * failing analysis with a usable message. These functions are
-    * session-registered SQL surface, so a user CAN write
-    * `graft_healpix_pix(ra, dec, some_col)`; reject it here.
-    */
-  def foldableConstants(exprs: Seq[(Expression, String)],
-                        fn: String): TypeCheckResult = {
-    exprs.collectFirst {
-      case (e, role) if !e.foldable =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$fn expects $role to be a plan-time constant (foldable), " +
-            s"got non-foldable ${e.sql}")
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-  }
-
-  /** Chain checks: first failure wins. */
-  def all(checks: TypeCheckResult*): TypeCheckResult =
-    checks.find(!_.isSuccess).getOrElse(TypeCheckResult.TypeCheckSuccess)
-
-  /** array<array<double>> — the centroid-matrix literal shape. */
-  def doubleMatrix(e: Expression, fn: String): TypeCheckResult =
-    e.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$fn expects centroids array<array<double>>, got ${other.simpleString}")
-    }
-}
-
-private[plans] abstract class BinaryVecExpr extends Expression {
-  def children: Seq[Expression]
-  protected def kernel: String // static method name on VecKernels
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.floatArrays(
-      Seq(children.head -> "left", children(1) -> "right"), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val a = children.head.eval(input); val b = children(1).eval(input)
-    if (a == null || b == null) null
-    else kernelEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  }
-  protected def kernelEval(a: ArrayData, b: ArrayData): Double
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ag = children.head.genCode(ctx); val bg = children(1).genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${ag.code}
-        ${bg.code}
-        boolean ${ev.isNull} = ${ag.isNull} || ${bg.isNull};
-        double ${ev.value} = 0.0;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.$kernel(${ag.value}, ${bg.value});
-        }
-      """)
-  }
-}
-
 /** graft_cosine(array<float>, array<float>) → double */
-final case class CosineExpr(children: Seq[Expression]) extends BinaryVecExpr {
-  require(children.length == 2, "graft_cosine(a, b)")
-  override protected def kernel = "cosine"
-  override protected def kernelEval(a: ArrayData, b: ArrayData): Double =
-    VecKernels.cosine(a, b)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+final case class CosineExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("left", FloatType), arrayOf("right", FloatType))) {
+  override def dataType: DataType = DoubleType
+  protected def args = Seq(In(0), In(1))
+  protected def method = "graft.plans.VecKernels.cosine"
+  protected def call(a: Args) = VecKernels.cosine(a.array(0), a.array(1))
 }
 
 /** graft_cosine_int8(q array<float>, codes array<int>, scale double)
   * → double: fused dequantize+cosine (see [[VecKernels.cosineInt8]]).
   */
-final case class CosineInt8Expr(children: Seq[Expression]) extends Expression {
-  require(children.length == 3, "graft_cosine_int8(q, codes, scale)")
+final case class CosineInt8Expr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("query", FloatType), arrayOf("codes", IntegerType),
+      of("scale", DoubleType))) {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    val q = VecKernelChecks.floatArrays(Seq(children.head -> "query"), prettyName)
-    if (!q.isSuccess) q
-    else children(1).dataType match {
-      case ArrayType(IntegerType, _) =>
-        if (children(2).dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-        else TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects scale double, got ${children(2).dataType.simpleString}")
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects codes array<int>, got ${other.simpleString}")
-    }
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val q = children.head.eval(input)
-    val c = children(1).eval(input)
-    val s = children(2).eval(input)
-    if (q == null || c == null || s == null) null
-    else VecKernels.cosineInt8(q.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData], s.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qg = children.head.genCode(ctx)
-    val cg = children(1).genCode(ctx)
-    val sg = children(2).genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${qg.code}
-        ${cg.code}
-        ${sg.code}
-        boolean ${ev.isNull} = ${qg.isNull} || ${cg.isNull} || ${sg.isNull};
-        double ${ev.value} = 0.0;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.cosineInt8(${qg.value}, ${cg.value}, ${sg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), In(1), In(2))
+  protected def method = "graft.plans.VecKernels.cosineInt8"
+  protected def call(a: Args) = VecKernels.cosineInt8(a.array(0), a.array(1), a.double(2))
 }
 
-/** Shared analysis check for the centroid kernels: the vector child is
-  * array<float> (production embeddings) OR array<double> (the gate
-  * twins' quantized vectors — round 20 moved their interpreted
-  * zip_with+aggregate argmin folds onto these kernels); anything else
-  * refuses by name.
-  */
-private[plans] object CentroidKernelChecks {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  def check(vec: Expression, mat: Expression, fn: String): TypeCheckResult =
-    vec.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        VecKernelChecks.doubleMatrix(mat, fn)
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$fn expects vector array<float|double>, got ${other.simpleString}")
-    }
-  def isFloat(vec: Expression): Boolean =
-    vec.dataType.asInstanceOf[ArrayType].elementType == FloatType
-}
-
-/** graft_cell_dists(array<float|double>, array<array<double>>) → array<double> */
-final case class CellDistsExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_cell_dists(v, centroids)")
-  private lazy val vIsFloat = CentroidKernelChecks.isFloat(children.head)
+/** graft_cell_dists(array<float|double>, array<array<double>>) →
+  * array<double>. The vector is array<float> (production embeddings)
+  * or array<double> (the gate twins' quantized vectors). */
+final case class CellDistsExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("vector", FloatType, DoubleType), matrix("centroids"))) {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    CentroidKernelChecks.check(children.head, children(1), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val a = children.head.eval(input); val b = children(1).eval(input)
-    if (a == null || b == null) null
-    else VecKernels.cellDists(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], vIsFloat)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ag = children.head.genCode(ctx); val bg = children(1).genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${ag.code}
-        ${bg.code}
-        boolean ${ev.isNull} = ${ag.isNull} || ${bg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.cellDists(${ag.value}, ${bg.value}, $vIsFloat);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), In(1), Const("vIsFloat", isFloatArray(0)))
+  protected def method = "graft.plans.VecKernels.cellDists"
+  protected def call(a: Args) = VecKernels.cellDists(a.array(0), a.array(1), a.bool(2))
 }
 
 /** graft_nearest_cell(array<float|double>, array<array<double>>) → int */
-final case class NearestCellExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_nearest_cell(v, centroids)")
-  private lazy val vIsFloat = CentroidKernelChecks.isFloat(children.head)
+final case class NearestCellExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("vector", FloatType, DoubleType), matrix("centroids"))) {
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    CentroidKernelChecks.check(children.head, children(1), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val a = children.head.eval(input); val b = children(1).eval(input)
-    if (a == null || b == null) null
-    else VecKernels.nearestCell(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], vIsFloat)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ag = children.head.genCode(ctx); val bg = children(1).genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${ag.code}
-        ${bg.code}
-        boolean ${ev.isNull} = ${ag.isNull} || ${bg.isNull};
-        int ${ev.value} = 0;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.nearestCell(${ag.value}, ${bg.value}, $vIsFloat);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), In(1), Const("vIsFloat", isFloatArray(0)))
+  protected def method = "graft.plans.VecKernels.nearestCell"
+  protected def call(a: Args) = VecKernels.nearestCell(a.array(0), a.array(1), a.bool(2))
 }
 
 /** graft_dot_q(array<double>, array<double>) → double — the gate
   * twins' exact-integer code dot product (one fused loop instead of a
   * zip_with+aggregate lambda tree in the q119 candidate-pair scorer).
   */
-final case class DotQExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 2, "graft_dot_q(a, b)")
+final case class DotQExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("a", DoubleType), arrayOf("b", DoubleType))) {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    children.collectFirst {
-      case e if !(e.dataType match {
-        case ArrayType(DoubleType, _) => true
-        case _ => false
-      }) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<double>, got ${e.dataType.simpleString}")
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val a = children.head.eval(input); val b = children(1).eval(input)
-    if (a == null || b == null) null
-    else VecKernels.dotD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ag = children.head.genCode(ctx); val bg = children(1).genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${ag.code}
-        ${bg.code}
-        boolean ${ev.isNull} = ${ag.isNull} || ${bg.isNull};
-        double ${ev.value} = 0.0;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.dotD(${ag.value}, ${bg.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), In(1))
+  protected def method = "graft.plans.VecKernels.dotD"
+  protected def call(a: Args) = VecKernels.dotD(a.array(0), a.array(1))
 }
 
 /** graft_l2norm(array<float>) → double */
-final case class L2NormExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 1, "graft_l2norm(a)")
+final case class L2NormExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("input", FloatType))) {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.head.nullable
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.floatArrays(Seq(children.head -> "input"), prettyName)
-
-  override def eval(input: InternalRow): Any = {
-    val a = children.head.eval(input)
-    if (a == null) null else VecKernels.l2Norm(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ag = children.head.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${ag.code}
-        boolean ${ev.isNull} = ${ag.isNull};
-        double ${ev.value} = 0.0;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.l2Norm(${ag.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0))
+  protected def method = "graft.plans.VecKernels.l2Norm"
+  protected def call(a: Args) = VecKernels.l2Norm(a.array(0))
 }
 
 /** graft_pq_encode(vec, flat_codebook, m, dsub, ksub) → array<int>
@@ -586,62 +338,30 @@ final case class L2NormExpr(children: Seq[Expression]) extends Expression {
   * round-14 Scala UDF deserialized every corpus vector to a boxed
   * Seq[Float] and copied each subspace slice before the scan; this
   * reads both the vector and the (plan-literal) flat codeword table
-  * in place. m/dsub/ksub are plan-time constants.
+  * in place. The codebook is extracted ONCE to a primitive float[]
+  * (checked against m·ksub·dsub) and referenced from generated code.
   */
-final case class PqEncodeExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 5,
-    "graft_pq_encode(vec, flat_codebook, m, dsub, ksub)")
-  private def ve = children(0); private def fe = children(1)
-  private lazy val mV = children(2).eval(null).toString.toInt
-  private lazy val dsubV = children(3).eval(null).toString.toInt
-  private lazy val ksubV = children(4).eval(null).toString.toInt
-  // the codebook child must be foldable: it is extracted ONCE here to
-  // a primitive float[] (checked against m·ksub·dsub) and shipped to
-  // the generated code as a reference object — per-row evaluation
-  // never touches the literal's boxed ArrayData
-  private lazy val flatV: Array[Float] = {
-    val a = fe.eval(null).asInstanceOf[ArrayData].toFloatArray()
-    require(a.length == mV * ksubV * dsubV,
+final case class PqEncodeExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("vector", FloatType)),
+      Seq(arrayOf("flat codebook", FloatType), constant("m"), constant("dsub"),
+        constant("ksub"))) {
+  private lazy val m = intAt(2)
+  private lazy val dsub = intAt(3)
+  private lazy val ksub = intAt(4)
+  private lazy val flat: Array[Float] = {
+    val a = children(1).eval(null).asInstanceOf[ArrayData].toFloatArray()
+    require(a.length == m * ksub * dsub,
       s"graft_pq_encode codebook has ${a.length} floats, " +
-        s"expected m*ksub*dsub = ${mV * ksubV * dsubV}")
+        s"expected m*ksub*dsub = ${m * ksub * dsub}")
     a
   }
-
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = ve.nullable
   override def prettyName: String = "graft_pq_encode"
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      VecKernelChecks.floatArrays(
-        Seq(ve -> "vector", fe -> "flat codebook"), prettyName),
-      VecKernelChecks.foldableConstants(
-        Seq(fe -> "flat codebook", children(2) -> "m",
-          children(3) -> "dsub", children(4) -> "ksub"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val v = ve.eval(input)
-    if (v == null) null
-    else VecKernels.pqEncode(v.asInstanceOf[ArrayData], flatV, mV, dsubV, ksubV)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vg = ve.genCode(ctx)
-    val flatRef = ctx.addReferenceObj("pqFlat", flatV, "float[]")
-    ev.copy(code =
-      code"""
-        ${vg.code}
-        boolean ${ev.isNull} = ${vg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.pqEncode(
-            ${vg.value}, $flatRef, $mV, $dsubV, $ksubV);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("pqFlat", flat), Const("m", m),
+    Const("dsub", dsub), Const("ksub", ksub))
+  protected def method = "graft.plans.VecKernels.pqEncode"
+  protected def call(a: Args) =
+    VecKernels.pqEncode(a.array(0), a.ref(1), a.int(2), a.int(3), a.int(4))
 }
 
 /** graft_jl_project(vec, flat_planes, out_dim, scale) → array<bigint>
@@ -650,74 +370,27 @@ final case class PqEncodeExpr(children: Seq[Expression]) extends Expression {
   * `VectorFunctions.randomProjectMd5Q`'s zip_with+aggregate lambda
   * trees (outDim·dim interpreted closure dispatches per row was the
   * single biggest line in the q119 gate's cost). The flat
-  * [plane][j] weight table is a plan-time constant, extracted ONCE to
-  * a primitive long[] and shipped to the generated code as a
-  * reference object.
+  * [plane][j] weight table is extracted ONCE to a primitive long[] and
+  * referenced from generated code. Float components widen to double
+  * exactly (same value as the HOF form's cast("double")).
   */
-final case class JlProjectExpr(children: Seq[Expression]) extends Expression {
-  require(children.length == 4,
-    "graft_jl_project(vec, flat_planes, out_dim, scale)")
-  private def ve = children(0); private def fe = children(1)
-  private lazy val outDimV = children(2).eval(null).toString.toInt
-  private lazy val scaleV = children(3).eval(null).toString.toDouble
-  private lazy val flatV: Array[Long] = {
-    val a = fe.eval(null).asInstanceOf[ArrayData].toLongArray()
-    require(outDimV >= 1 && a.length % outDimV == 0,
+final case class JlProjectExpr(children: Seq[Expression])
+    extends KernelExpr(Seq(arrayOf("vector", FloatType, DoubleType)),
+      Seq(arrayOf("flat_planes", LongType), constant("out_dim"), constant("scale"))) {
+  private lazy val outDim = intAt(2)
+  private lazy val scale = doubleAt(3)
+  private lazy val flat: Array[Long] = {
+    val a = children(1).eval(null).asInstanceOf[ArrayData].toLongArray()
+    require(outDim >= 1 && a.length % outDim == 0,
       s"graft_jl_project flat table has ${a.length} longs, " +
-        s"not a multiple of out_dim = $outDimV")
+        s"not a multiple of out_dim = $outDim")
     a
   }
-  // float components widen to double exactly (same value as the HOF
-  // form's cast("double")); double components pass through untouched
-  private lazy val vecIsFloat: Boolean =
-    ve.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = ve.nullable
   override def prettyName: String = "graft_jl_project"
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    VecKernelChecks.all(
-      ve.dataType match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"$prettyName expects vector array<float|double>, got ${other.simpleString}")
-      },
-      fe.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"$prettyName expects flat_planes array<bigint>, got ${other.simpleString}")
-      },
-      VecKernelChecks.foldableConstants(
-        Seq(fe -> "flat_planes", children(2) -> "out_dim",
-          children(3) -> "scale"), prettyName))
-
-  override def eval(input: InternalRow): Any = {
-    val v = ve.eval(input)
-    if (v == null) null
-    else VecKernels.jlProject(v.asInstanceOf[ArrayData], flatV, outDimV,
-      scaleV, vecIsFloat)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vg = ve.genCode(ctx)
-    val flatRef = ctx.addReferenceObj("jlFlat", flatV, "long[]")
-    ev.copy(code =
-      code"""
-        ${vg.code}
-        boolean ${ev.isNull} = ${vg.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.plans.VecKernels.jlProject(
-            ${vg.value}, $flatRef, $outDimV, ${scaleV}D, $vecIsFloat);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(children = c)
+  protected def args = Seq(In(0), Const("jlFlat", flat), Const("out_dim", outDim),
+    Const("scale", scale), Const("vIsFloat", isFloatArray(0)))
+  protected def method = "graft.plans.VecKernels.jlProject"
+  protected def call(a: Args) =
+    VecKernels.jlProject(a.array(0), a.ref(1), a.int(2), a.double(3), a.bool(4))
 }

@@ -589,10 +589,13 @@ class PlanShapeSpec extends SparkSpec {
     val mMh = analysisMessage(
       call_function("graft_minhash_sig", col("hs"), col("n")), on = hdf)
     assert(mMh.contains("plan-time constant") && mMh.contains("k"), mMh)
+    val mDefl = analysisMessage(call_function("graft_deflate_len",
+      col("id").cast("string"), col("n")))
+    assert(mDefl.contains("plan-time constant") && mDefl.contains("level"), mDefl)
     // the BPE kernels reject per-row table/vocab arguments too — at
     // EXECUTION via their named lazy-compile requires (an analysis
     // gate there breaks the analyzer's staged HOF-lambda resolution;
-    // see BpeWordExpr.checkInputDataTypes)
+    // see the BpeWordExpr Scaladoc)
     val bdf = spark.range(3).select(
       concat(lit("w"), col("id")).as("w"),
       array(concat(lit("v"), col("id"))).as("vocab"),
