@@ -20,4 +20,6 @@ object WeightedMean extends Aggregator[(Double, Double), (Double, Double), Doubl
   override def bufferEncoder: Encoder[(Double, Double)] =
     Encoders.product[(Double, Double)]
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+  // plans print the aggregator: a stable name instead of `WeightedMean$@<hash>`
+  override def toString: String = "WeightedMean"
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 
@@ -39,7 +39,7 @@ object Clustering {
              k: Int = 8, iters: Int = 4): KMeansModel = {
     val idx = Similarity.buildIvfIndex(df, idCol, vecCol, nlist = k, iters = iters)
     val withD = idx.cells.withColumn("__d2",
-      element_at(idx.dists(col("cv")), col("cell") + 1))
+      element_at(Lloyd.cellDists(col("cv"), idx.centroids), col("cell") + 1))
     val wcssRow = withD.agg(sum(col("__d2"))).head()
     // sum() over zero rows is SQL NULL — name the real problem
     // instead of an opaque NPE from getDouble
@@ -76,9 +76,9 @@ object Clustering {
     graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val (q, cents) = lloydMd5(df, idCol, vecCol, k, iters, scale)
     val out = DiskSnapshot.diskCachedEager(q
-      .withColumn("cluster", cellOfQuantized(cents)(col("__qv")))
+      .withColumn("cluster", Lloyd.nearestCell(col("__qv"), cents))
       .withColumn("__d2",
-        element_at(quantizedDists(cents)(col("__qv")), col("cluster") + 1))
+        element_at(Lloyd.cellDists(col("__qv"), cents), col("cluster") + 1))
       .select(col("__id").as(idCol), col("cluster"),
         round(col("__d2"), 6).as("dist2")))
     q.unpersist()
@@ -101,12 +101,10 @@ object Clustering {
     graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val (q, cents) = lloydMd5(df, idCol, vecCol, k, iters, scale)
     val asg = q.select(col("__id"), col("__vec"),
-      cellOfQuantized(cents)(col("__qv")).as("cluster"))
+      Lloyd.nearestCell(col("__qv"), cents).as("cluster"))
     // shared dominance rule (fused graft_cosine — IEEE-identical to
     // the HOF folds the SQL oracle replays)
-    val out = DiskSnapshot.diskCachedEager(
-      Similarity.dominanceSurvivors(asg, threshold)
-        .select(col("__id").as(idCol), col("cluster")))
+    val out = Similarity.keptRows(asg, threshold, idCol)
     q.unpersist()
     out
   }
@@ -127,28 +125,15 @@ object Clustering {
     graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val (q, cents) = lloydMd5(corpus, idCol, vecCol, nlist, iters, scale)
     val cells = q.select(col("__id").as("neighbor_id"), col("__vec").as("cv"),
-      cellOfQuantized(cents)(col("__qv")).as("cell"))
+      Lloyd.nearestCell(col("__qv"), cents).as("cell"))
     val qq = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      transform(col(vecCol), x => round(x.cast("double") * scale)).as("__qqv"))
-    val probes = qq.withColumn("__d", quantizedDists(cents)(col("__qqv")))
-      .withColumn("probe", explode(slice(array_sort(
-        // the index sequence must match the ACTUAL centroid count —
-        // a corpus smaller than nlist yields fewer centroids, and
-        // zipping against nlist pads null distances whose structs
-        // sort FIRST, displacing every real probe (0 results, no error)
-        zip_with(col("__d"), sequence(lit(0), lit(cents.length - 1)),
-          (d, i) => struct(d.as("d"), i.as("cell")))), 1, nprobe)))
+      Lloyd.quantize(col(vecCol), scale).as("__qqv"))
+    val probes = qq.withColumn("__d", Lloyd.cellDists(col("__qqv"), cents))
+      .withColumn("probe", Similarity.nearestCells(col("__d"), cents.length, nprobe))
       .select(col("query_id"), col("qv"), col("probe.cell").as("cell"))
-    val scored = cells.join(broadcast(probes), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", call_function("graft_cosine", col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    val out = DiskSnapshot.diskCachedEager(scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cosine")))
+    val out = DiskSnapshot.diskCachedEager(Similarity.topKByCosine(
+      cells.join(broadcast(probes), "cell").filter(col("query_id") =!= col("neighbor_id")),
+      col("qv"), col("cv"), k))
     q.unpersist()
     out
   }
@@ -183,7 +168,7 @@ object Clustering {
     // (the child seeds' full window pass) writes the blocks inside its
     // own job — one fewer materialization barrier (r19 ask #3 shape).
     val withSuper = DiskSnapshot.diskCached(q
-      .withColumn("__super", cellOfQuantized(superCents)(col("__qv"))))
+      .withColumn("__super", Lloyd.nearestCell(col("__qv"), superCents)))
     val children = childLloydMd5(withSuper, superCents.length, kChild, iters)
     // the assignment is consumed THREE times by the dominance filter
     // (both sides of the cluster self-join plus the survivor
@@ -192,12 +177,11 @@ object Clustering {
     // the argmin is paid once. (Round 16's release-correctness fixes
     // removed leaked blocks that used to hide exactly this recompute,
     // which is why the gate slowed.)
-    val asg = DiskSnapshot.diskCachedEager(
-      assignChildren(withSuper, children).select(col("__id"), col("__vec"),
+    val asg = DiskSnapshot.diskCachedEager(withSuper
+      .withColumn("__child", childOf(children))
+      .select(col("__id"), col("__vec"),
         (col("__super") * kChild + col("__child")).as("cluster")))
-    val out = DiskSnapshot.diskCachedEager(
-      Similarity.dominanceSurvivors(asg, threshold)
-        .select(col("__id").as(idCol), col("cluster")))
+    val out = Similarity.keptRows(asg, threshold, idCol)
     // `out` is materialized and the gate chain (asg → withSuper → q's
     // cache) is corpus-sized: free ALL of it NOW rather than waiting
     // for a GC + ContextCleaner cycle. `out` keeps lineage, so an
@@ -213,20 +197,19 @@ object Clustering {
 
   /** The per-super child Lloyd shared by [[semanticDedupLargeMd5]]
     * and [[compressedAnnTopKMd5]]: children seed from each super's
-    * kChild md5-smallest rows, then `iters` distributed
-    * (super, child, pos) partial-sum steps with empty children
-    * keeping their centroid. The centroids are DRIVER-SIDE (k-sized —
-    * same posture as [[lloydQuantized]]'s super loop): one collect
-    * job per step instead of a per-step broadcast-join + snapshot
-    * chain, and downstream assignment consumes them as plan
-    * LITERALS. All sums are over exact small integers in doubles, so
-    * the driver-side `s/n` update is bit-identical to the former
-    * in-Spark division. Returns `mats(super)(child) = centroid`
+    * kChild md5-smallest rows, then `iters` [[Lloyd]] steps over the
+    * global cells super·kChild + child, empty children keeping their
+    * centroid. The centroids are DRIVER-SIDE (k-sized — same posture
+    * as the super loop): one collect job per step,
+    * and downstream assignment consumes them as plan LITERALS. All
+    * sums are over exact small integers in doubles, so the grouping
+    * cannot change a bit. Returns `mats(super)(child) = centroid`
     * (ragged — a super with fewer than kChild rows seeds fewer
     * children).
     */
-  private def childLloydMd5(withSuper: DataFrame, kSuper: Int, kChild: Int,
-                            iters: Int): Array[Array[Array[Double]]] = {
+  private[operators] def childLloydMd5(withSuper: DataFrame, kSuper: Int,
+                                       kChild: Int,
+                                       iters: Int): Array[Array[Array[Double]]] = {
     // the GATE twins keep child centroids as plan literals (one
     // driver-sized matrix, zero join jobs) — a deliberate gate-scale
     // trade. Past the flat-literal cluster ceiling that is exactly
@@ -238,80 +221,47 @@ object Clustering {
         s"flat-literal ceiling (${Similarity.MaxAutoClusters}); use the " +
         "production two-level path (Similarity.semanticDedupLarge / " +
         "CompressedAnn) for cluster counts at this scale")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__super")).orderBy(md5(col("__id").cast("string")))
-    val seeds = withSuper
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= kChild)
-      .select(col("__super"), (col("__rk") - 1).as("__child"), col("__qv"))
-      .collect()
+    val seeds = Lloyd.seedPerGroup(withSuper, col("__super"), kSuper, col("__qv"),
+      md5Key, kChild)
     // the cell ceiling alone does not bound DRIVER cost — literal
     // nodes and collected sums both scale with cells x dim, so a
     // 64-dim code at the 16384-cell ceiling is ~1M doubles of plan
-    // literal per assignChildren call. Fold dim into the budget and
+    // literal per child assignment. Fold dim into the budget and
     // refuse past it, same posture as the cell ceiling above.
-    val dim = seeds.headOption.map(_.getSeq[Double](2).length).getOrElse(0)
+    val dim = seeds.flatten.headOption.fold(0)(_.length)
     require(kSuper.toLong * kChild * dim <= MaxChildLiteralDoubles,
       s"md5 gate twin: $kSuper x $kChild cells at dim $dim exceed the " +
         s"child-centroid literal budget ($MaxChildLiteralDoubles " +
         "doubles); use the production two-level path " +
         "(Similarity.semanticDedupLarge / CompressedAnn) at this scale")
-    var mats: Array[Array[Array[Double]]] = Array.tabulate(kSuper) { s =>
-      seeds.filter(_.getInt(0) == s).sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2).toArray)
-    }
-    // The per-(super, child, pos) partial sums collect directly: cells ×
-    // dim rows, already capped by [[MaxChildLiteralDoubles]] above. Each
-    // position divides by ITS OWN count; absent positions keep the
-    // zero-fill into a ctr.length array.
-    for (_ <- 0 until iters) {
-      val sums = assignChildren(withSuper, mats)
-        .select(col("__super"), col("__child"),
-          posexplode(col("__qv")).as(Seq("__pos", "__v")))
-        .groupBy(col("__super"), col("__child"), col("__pos"))
-        .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
-        .collect()
-      val bySC = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-      mats = mats.zipWithIndex.map { case (m, s) =>
-        m.zipWithIndex.map { case (ctr, c) =>
-          bySC.get((s, c)) match {
-            case Some(rs) =>
-              val nm = new Array[Double](ctr.length)
-              rs.foreach(t => nm(t.getInt(2)) = t.getDouble(3) / t.getLong(4))
-              nm
-            case None => ctr // empty child keeps its centroid
-          }
-        }
-      }
-    }
-    mats
+    // Lloyd cell ids are super·kChild + child; a super with fewer than
+    // kChild rows leaves its missing children's ids null
+    def perSuper(cents: Array[Array[Double]]): Array[Array[Array[Double]]] =
+      cents.grouped(kChild).map(_.takeWhile(_ != null)).toArray
+    val init = seeds.flatMap(s => s.padTo(kChild, null))
+    perSuper(Lloyd.run(withSuper, col("__qv"), init, iters)(cents =>
+      Seq(col("__super") * kChild + childOf(perSuper(cents)))))
   }
 
   /** Driver budget for the md5 gate twins' child-centroid literals:
-    * cells x dim doubles per [[assignChildren]] plan and per-iteration
+    * cells x dim doubles per [[childOf]] plan and per-iteration
     * collect. ~16 MB of literal at the cap. */
   private[graft] val MaxChildLiteralDoubles: Long = 1L << 21
 
-  /** The per-super centroid matrices as ONE nested plan literal
-    * (indexed by `__super`; a row-less super keeps a never-consulted
-    * dummy so the literal stays rectangular at the top level).
-    * typedlit — one Literal node instead of kSuper×kChild×dim of them
-    * (same values; the nested-lit build was a plan-size cost at every
-    * assignChildren call). */
-  private def childMatsLit(mats: Array[Array[Array[Double]]]):
-      org.apache.spark.sql.Column =
-    typedlit[Seq[Seq[Seq[Double]]]](mats.map { m =>
-      if (m.isEmpty) Seq(Seq(0.0))
-      else m.map(_.toSeq).toSeq
+  /** A row's child cell: argmin (fused `graft_nearest_cell`, ties to
+    * the lowest child) against its super's matrix, picked per row out
+    * of ONE nested plan literal of all per-super matrices (indexed by
+    * `__super`; a row-less super keeps a never-consulted dummy so the
+    * literal stays rectangular at the top level). No join: the
+    * matrices ride in the plan, one Literal node instead of
+    * kSuper×kChild×dim of them.
+    */
+  private def childOf(mats: Array[Array[Array[Double]]]): Column = {
+    val lit3 = typedlit[Seq[Seq[Seq[Double]]]](mats.map { m =>
+      if (m.isEmpty) Seq(Seq(0.0)) else m.map(_.toSeq).toSeq
     }.toSeq)
-
-  /** Assign every `withSuper` row its child cell against ITS super's
-    * literal centroid matrix (argmin, ties to the lowest child —
-    * [[cellOfMat]]'s fold). No join: the matrices ride in the plan. */
-  private def assignChildren(withSuper: DataFrame,
-                             mats: Array[Array[Array[Double]]]): DataFrame =
-    withSuper.withColumn("__child",
-      cellOfMat(col("__qv"), element_at(childMatsLit(mats), col("__super") + 1)))
+    call_function("graft_nearest_cell", col("__qv"), element_at(lit3, col("__super") + 1))
+  }
 
   /** DuckDB-replayable gate twin of the composed [[CompressedAnn]]
     * recipe (q119): md5-int JL projection (q114's exact-integer
@@ -355,11 +305,6 @@ object Clustering {
     // the literal-heavy chain out of the ~10 Catalyst plans below
     // (its frame is a LogicalRDD leaf) while the RDD lineage stays
     // recomputable after an executor loss.
-    def prof[T](name: String)(f: => T): T =
-      if (sys.env.contains("GRAFT_PROF")) {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[prof] $name%-20s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      } else f
     // LAZY snapshots (r19 verdict ask #3 "fuse super init into the
     // q-snapshot job"): a diskCached frame writes its blocks inside
     // the FIRST consumer's job, and both first consumers here read
@@ -368,15 +313,14 @@ object Clustering {
     // foreachPartition materialization jobs disappear from the chain
     // while every later consumer still reads the persisted blocks.
     val spread = graft.Tables.spreadDf(corpus)
-    val q = prof("q snapshot")(DiskSnapshot.diskCached(spread
+    val q = DiskSnapshot.diskCached(spread
       .select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-        codes(col(vecCol)).as("__qv"))))
-    val superCents = prof("super lloyd")(lloydQuantized(q, kSuper, superIters))
-    val withSuper = prof("withSuper snap")(DiskSnapshot.diskCached(q
-      .withColumn("__super", cellOfQuantized(superCents)(col("__qv")))))
-    val children = prof("child lloyd")(
-      childLloydMd5(withSuper, superCents.length, kChild, iters))
-    val cells = assignChildren(withSuper, children)
+        codes(col(vecCol)).as("__qv")))
+    val superCents = Lloyd.flat(q, col("__qv"), md5Key, kSuper, superIters)
+    val withSuper = DiskSnapshot.diskCached(q
+      .withColumn("__super", Lloyd.nearestCell(col("__qv"), superCents)))
+    val children = childLloydMd5(withSuper, superCents.length, kChild, iters)
+    val cells = withSuper.withColumn("__child", childOf(children))
       .select(col("__id").as("neighbor_id"), col("__vec").as("nvec"),
         col("__qv").as("nqv"), col("__super").as("super"),
         col("__child").as("child"))
@@ -400,11 +344,9 @@ object Clustering {
     val qq = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
       codes(col(vecCol)).as("qqv"))
     // super probe: nprobeSuper nearest super centroids (ties → lowest)
-    val sp = qq.withColumn("__d", quantizedDists(superCents)(col("qqv")))
-      .withColumn("probe", explode(slice(array_sort(
-        // actual super-centroid count, not kSuper (see ivfTopKMd5)
-        zip_with(col("__d"), sequence(lit(0), lit(superCents.length - 1)),
-          (d, i) => struct(d.as("d"), i.as("super")))), 1, nprobeSuper)))
+    val sp = qq.withColumn("__d", Lloyd.cellDists(col("qqv"), superCents))
+      .withColumn("probe",
+        Similarity.nearestCells(col("__d"), superCents.length, nprobeSuper, "super"))
       .select(col("query_id"), col("qvec"), col("qqv"),
         col("probe.super").as("super"))
     // child probe: nprobeCells nearest (super, child) cells among the
@@ -414,13 +356,10 @@ object Clustering {
       val d = x - y
       d * d
     }), lit(0.0), (acc, x) => acc + x)
-    val wCell = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("__dc"), col("super"), col("child"))
     val cp = sp.join(broadcast(childrenDf), Seq("super"))
       .withColumn("__dc", dChild)
-      .withColumn("__rc", row_number().over(wCell))
-      .filter(col("__rc") <= nprobeCells)
+      .transform(Similarity.topPerQuery(nprobeCells, "__rc",
+        col("__dc"), col("super"), col("child")))
       .select(col("query_id"), col("qvec"), col("qqv"),
         col("super"), col("child"))
     // candidates in the probed cells, approximate cosine over the
@@ -431,8 +370,6 @@ object Clustering {
     // candidate scorer, the gate's hottest remaining expression.
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       call_function("graft_dot_q", a, b)
-    val wApprox = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("__ac").desc, col("neighbor_id"))
     // norms price ONCE per query / per corpus row — computing them in
     // the candidate-pair loop re-ran the interpreted fold per PAIR
     val cpN = cp.withColumn("__qn", dot(col("qqv"), col("qqv")))
@@ -443,35 +380,15 @@ object Clustering {
         when(col("__qn") === 0.0 || col("__nn") === 0.0, lit(-2.0))
           .otherwise(dot(col("qqv"), col("nqv"))
             / (sqrt(col("__qn")) * sqrt(col("__nn")))))
-      .withColumn("__ra", row_number().over(wApprox))
-      .filter(col("__ra") <= topCandidates)
+      .transform(Similarity.topPerQuery(topCandidates, "__ra",
+        col("__ac").desc, col("neighbor_id")))
     // exact rerank on the original floats
-    val wExact = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    val out = prof("out pipeline")(DiskSnapshot.diskCachedEager(cands
-      .withColumn("cos", call_function("graft_cosine", col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cosine"))))
+    val out = DiskSnapshot.diskCachedEager(
+      Similarity.topKByCosine(cands, col("qvec"), col("nvec"), k))
     // q/withSuper are DiskSnapshots — reaped with this frame; the
     // child centroids are plan literals
     out
   }
-
-  /** Argmin cell against a per-row matrix COLUMN (vs the literal form
-    * [[cellOfQuantized]]): the fused `graft_nearest_cell` kernel —
-    * same sequential left-to-right distance accumulation as the former
-    * zip_with+aggregate fold (IEEE-identical; here the quantized
-    * inputs are exact integers in doubles anyway), same
-    * first-position-of-min tie-break to the lowest cell. The fold ran
-    * kChild×dim interpreted lambda dispatches per row in the gate
-    * twins' hot assignment loop (guide §4.1 — prefer codegen
-    * expressions in the hot path).
-    */
-  private def cellOfMat(v: org.apache.spark.sql.Column,
-                        mat: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("graft_nearest_cell", v, mat)
 
   /** Shared quantized md5-init Lloyd loop behind [[kmeansMd5]] and
     * [[ivfTopKMd5]]: returns the persisted quantized frame
@@ -483,51 +400,19 @@ object Clustering {
                                   k: Int, iters: Int,
                                   scale: Int): (DataFrame, Array[Array[Double]]) = {
     val q = df.select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-        transform(col(vecCol), x => round(x.cast("double") * scale)).as("__qv"))
+        Lloyd.quantize(col(vecCol), scale).as("__qv"))
       .persist()
-    (q, lloydQuantized(q, k, iters))
+    (q, Lloyd.flat(q, col("__qv"), md5Key, k, iters))
   }
 
-  /** The Lloyd loop proper, over a frame already carrying `__id` and
-    * the quantized vector `__qv` (lets [[pqTopKMd5]] run one loop per
-    * subspace SLICE of a single persisted quantized corpus).
-    */
-  private def lloydQuantized(q: DataFrame, k: Int,
-                             iters: Int): Array[Array[Double]] = {
-    // the assignment expressions below run on the fused centroid
-    // kernels — register them for callers that reach this loop
-    // without their own registerAll (idempotent)
-    graft.plans.GraftExtensions.registerAll(q.sparkSession)
-    var cents: Array[Array[Double]] = q
-      .withColumn("__h", md5(col("__id").cast("string")))
-      .orderBy(col("__h")).limit(k)
-      .select(col("__qv")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    for (_ <- 0 until iters) {
-      val sums = q.withColumn("__cell", cellOfQuantized(cents)(col("__qv")))
-        .select(col("__cell"), posexplode(col("__qv")).as(Seq("__pos", "__v")))
-        .groupBy(col("__cell"), col("__pos"))
-        .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
-        .collect()
-      val byCell = sums.groupBy(_.getAs[Int]("__cell"))
-      cents = cents.indices.map { cell =>
-        byCell.get(cell) match {
-          case Some(rows) =>
-            val m = new Array[Double](cents(cell).length)
-            rows.foreach(r => m(r.getAs[Int]("__pos")) =
-              r.getAs[Double]("__s") / r.getAs[Long]("__n"))
-            m
-          case None => cents(cell) // empty cell keeps its centroid
-        }
-      }.toArray
-    }
-    cents
-  }
+  /** The gate twins' Lloyd seed order: md5 of the id's string form,
+    * which SQL can sort by too. */
+  private def md5Key = md5(col("__id").cast("string"))
 
   /** DuckDB-replayable gate twin of [[Pq.topK]] (PQ-compressed ANN):
     * per-subspace codebooks come from the quantized md5-init Lloyd
-    * loop (one [[lloydQuantized]] run per subspace slice of one
-    * persisted quantized corpus — every codeword bit-replayable),
+    * loop (one [[Lloyd]] run with one segment per subspace slice of
+    * one persisted quantized corpus — every codeword bit-replayable),
     * encode is the per-subspace argmin in quantized space (ties to
     * the lowest code), ADC sums the query-slice→codeword distances in
     * subspace order (left-assoc on both engines), and the top-`rerank`
@@ -543,113 +428,69 @@ object Clustering {
                 iters: Int = 2, rerank: Int = 50, scale: Int = 1024): DataFrame = {
     graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val q0 = corpus.select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-        transform(col(vecCol), x => round(x.cast("double") * scale)).as("__qv"))
+        Lloyd.quantize(col(vecCol), scale).as("__qv"))
       .persist()
-    // The m per-subspace Lloyd loops fuse into ONE driver loop with one
-    // job per step instead of m independent [[lloydQuantized] runs:
-    //  - the init rows (k smallest md5(id)) are the same rows for every
-    //    subspace, so one sorted collect seeds all m codebooks;
-    //  - the update sums key on the GLOBAL position, which already
-    //    encodes the subspace (sub = pos/dsub), so all m codebooks
-    //    update from one groupBy per iteration.
-    // Per-(cell,pos) sums and averages are identical to the
-    // independent-loop form — the SQL oracle replays each subspace's
-    // chain separately and still hash-matches.
-    val initRows = q0.withColumn("__h", md5(col("__id").cast("string")))
-      .orderBy(col("__h")).limit(ksub)
-      .select(col("__qv")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(initRows.nonEmpty, "empty corpus")
-    val dim = initRows.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    def codesFor(cs: Array[Array[Array[Double]]]) =
-      array((0 until m).map(sub =>
-        cellOfQuantized(cs(sub))(slice(col("__qv"), sub * dsub + 1, dsub))): _*)
-    var cents: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(sub => initRows.map(v =>
-        java.util.Arrays.copyOfRange(v, sub * dsub, (sub + 1) * dsub)))
-    for (_ <- 0 until iters) {
-      val sums = q0.withColumn("__codes", codesFor(cents))
-        .select(col("__codes"), posexplode(col("__qv")).as(Seq("__pos", "__v")))
-        .withColumn("__cell",
-          element_at(col("__codes"), (col("__pos") / dsub).cast("int") + 1))
-        .groupBy(col("__cell"), col("__pos"))
-        .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
-        .collect()
-      val bySub = sums.groupBy(_.getAs[Int]("__pos") / dsub)
-      cents = Array.tabulate(m) { sub =>
-        bySub.get(sub) match {
-          case Some(rs0) =>
-            val byCell = rs0.groupBy(_.getAs[Int]("__cell"))
-            cents(sub).zipWithIndex.map { case (old, cell) =>
-              byCell.get(cell) match {
-                case Some(rs) =>
-                  val nu = new Array[Double](dsub)
-                  rs.foreach(r => nu(r.getAs[Int]("__pos") % dsub) =
-                    r.getAs[Double]("__s") / r.getAs[Long]("__n"))
-                  nu
-                case None => old // empty cell keeps its codeword
-              }
-            }
-          case None => cents(sub)
-        }
-      }
-    }
-    val codes = codesFor(cents)
-    val enc = q0.select(col("__id").as("neighbor_id"), codes.as("__codes"))
+    val cents = pqCodebooks(q0, m, ksub, iters)
+    val enc = q0.select(col("__id").as("neighbor_id"),
+      array(perSubspace(col("__qv"), cents)(Lloyd.nearestCell): _*).as("__codes"))
     // ADC table computed once per QUERY (m x ksub subspace distances)
     // before the broadcast — the per-pair work is then m lookups + a
     // left-assoc sum, exactly the values the oracle derives per pair
     // via its per-subspace codebook joins
     val qq = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        transform(col(vecCol), x => round(x.cast("double") * scale)).as("__qqv"))
-      .withColumn("__tab", array((0 until m).map(sub =>
-        quantizedDists(cents(sub))(slice(col("__qqv"), sub * dsub + 1, dsub))): _*))
+        Lloyd.quantize(col(vecCol), scale).as("__qqv"))
+      .withColumn("__tab", array(perSubspace(col("__qqv"), cents)(Lloyd.cellDists): _*))
       .select(col("query_id"), col("qv"), col("__tab"))
     val adc = (0 until m).map { sub =>
       element_at(element_at(col("__tab"), sub + 1),
         element_at(col("__codes"), sub + 1) + 1)
     }.reduce(_ + _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("adc").asc, col("neighbor_id"))
     val cand = enc.crossJoin(broadcast(qq))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc", adc)
-      .withColumn("__prank", row_number().over(w))
-      .filter(col("__prank") <= rerank)
+      .transform(Similarity.topPerQuery(rerank, "__prank", col("adc").asc, col("neighbor_id")))
     val raw = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    val out = DiskSnapshot.diskCachedEager(cand
-      .select(col("query_id"), col("neighbor_id"), col("qv"))
-      .join(raw, "neighbor_id")
-      .withColumn("cos", call_function("graft_cosine", col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w2).cast("long"))
-      .filter(col("rank") <= k)
+    val out = DiskSnapshot.diskCachedEager(Similarity.topKByCosine(
+        cand.select(col("query_id"), col("neighbor_id"), col("qv")).join(raw, "neighbor_id"),
+        col("qv"), col("cv"), k)
       .select(col("query_id"), col("neighbor_id"), col("rank")))
     q0.unpersist()
     out
   }
 
-  /** Distances/argmin of a quantized array<double> vector against the
-    * centroid matrix, via the fused codegen kernels (round 20; guide
-    * §4.1): value-identical to the former per-centroid
-    * zip_with+aggregate folds — same left-to-right accumulation (and
-    * the quantized inputs are exact integers in doubles, so every sum
-    * is exact regardless), same first-position-of-min tie-break. The
-    * folds were the gate twins' single hottest expression (k×dim
-    * interpreted lambda dispatches per row, per Lloyd iteration); the
-    * matrix now rides in as ONE typedlit Literal instead of k×dim
-    * Literal nodes, which also shrinks analysis/codegen.
+  /** The PQ gate's codebooks over `q` (`__id`, quantized `__qv`):
+    * `books(sub)(code)` is a width-dim/m codeword. The m per-subspace
+    * Lloyd loops are ONE [[Lloyd]] run with m segments and one job per
+    * step:
+    *  - the init rows (k smallest md5(id)) are the same rows for every
+    *    subspace, so one sorted collect seeds all m codebooks;
+    *  - subspace sub's code c is Lloyd cell sub·n + c, so all m
+    *    codebooks update from one (cell, pos) groupBy per iteration.
+    * Per-(cell,pos) sums and averages are identical to the
+    * independent-loop form — the SQL oracle replays each subspace's
+    * chain separately and still hash-matches.
     */
-  private def quantizedDists(cents: Array[Array[Double]])
-      (v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("graft_cell_dists", v,
-      typedlit[Seq[Seq[Double]]](cents.map(_.toSeq).toSeq))
+  private[operators] def pqCodebooks(q: DataFrame, m: Int, ksub: Int,
+                                     iters: Int): Array[Array[Array[Double]]] = {
+    val initRows = Lloyd.seed(q, col("__qv"), md5Key, ksub)
+    require(initRows.nonEmpty, "empty corpus")
+    val dim = initRows.head.length
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    val dsub = dim / m
+    val n = initRows.length
+    val init = for (sub <- 0 until m; v <- initRows)
+      yield java.util.Arrays.copyOfRange(v, sub * dsub, (sub + 1) * dsub)
+    Lloyd.run(q, col("__qv"), init.toArray, iters)(cs =>
+      perSubspace(col("__qv"), cs.grouped(n).toArray)(Lloyd.nearestCell).zipWithIndex.map {
+        case (code, sub) => code + sub * n })
+      .grouped(n).toArray
+  }
 
-  private def cellOfQuantized(cents: Array[Array[Double]])
-      (v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("graft_nearest_cell", v,
-      typedlit[Seq[Seq[Double]]](cents.map(_.toSeq).toSeq))
+  /** `f` of each subspace slice of `v` against that subspace's codebook
+    * (`Lloyd.nearestCell` gives the codes, `Lloyd.cellDists` the ADC table). */
+  private def perSubspace(v: Column, books: Array[Array[Array[Double]]])
+                         (f: (Column, Array[Array[Double]]) => Column): Seq[Column] = {
+    val dsub = books.head.head.length
+    books.indices.map(sub => f(slice(v, sub * dsub + 1, dsub), books(sub)))
+  }
 }

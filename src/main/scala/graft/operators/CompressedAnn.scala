@@ -115,7 +115,6 @@ object CompressedAnn {
             idCol: String, vecCol: String, k: Int,
             topCandidates: Int = 64, nprobeSuper: Int = 4,
             nprobe: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     graft.plans.GraftExtensions.registerAll(queries.sparkSession)
     require(topCandidates >= k, s"topCandidates=$topCandidates < k=$k")
     val q = queries.select(col(idCol).as("query_id"),
@@ -124,28 +123,21 @@ object CompressedAnn {
     // approximate scores: FUSED dequantize+cosine kernel — one pass
     // over the codes, no per-row intermediate array, full-double
     // dequantized components
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("ac").desc, col("neighbor_id"))
     val cands = index.cells.join(broadcast(probes), "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("ac", call_function("graft_cosine_int8",
         col("qv"), col("qv8"), col("scale")))
-      .withColumn("__r", row_number().over(wApprox))
-      .filter(col("__r") <= topCandidates)
+      .transform(Similarity.topPerQuery(topCandidates, "__r",
+        col("ac").desc, col("neighbor_id")))
       .select(col("query_id"), col("neighbor_id"))
     // exact rerank: small candidate set broadcast against the corpus
     // (by id) and the query originals
     val qOrig = queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qvec"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"))
-      .join(broadcast(cands), "neighbor_id")
-      .join(broadcast(qOrig), "query_id")
-      .withColumn("cos", call_function("graft_cosine", col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(wExact).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cosine"))
+    Similarity.topKByCosine(
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"))
+        .join(broadcast(cands), "neighbor_id")
+        .join(broadcast(qOrig), "query_id"),
+      col("qvec"), col("nvec"), k)
   }
 }

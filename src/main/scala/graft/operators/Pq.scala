@@ -153,28 +153,16 @@ object Pq {
                 rawCorpus: Option[DataFrame] = None,
                 codeCol: String = "pq_code"): DataFrame = {
     graft.plans.GraftExtensions.registerAll(encodedCells.sparkSession)
-    val b = queries.sparkSession.sparkContext.broadcast(cb)
-    val tableUdf = udf { (v: scala.collection.Seq[Float]) =>
-      adcTable(b.value)(v.toArray)
-    }
-    val nlist = ivf.nlist
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__tab", tableUdf(col("qv")))
-      .withColumn("__d", ivf.dists(col("qv")))
-      .withColumn("probe", explode(slice(array_sort(
-        zip_with(col("__d"), sequence(lit(0), lit(nlist - 1)),
-          (d, i) => struct(d.as("d"), i.as("cell")))), 1, nprobe)))
+    val q = withAdcTables(queries, idCol, vecCol, cb)
+      .withColumn("__d", Lloyd.cellDists(col("qv"), ivf.centroids))
+      .withColumn("probe", Similarity.nearestCells(col("__d"), ivf.nlist, nprobe))
       .select(col("query_id"), col("qv"), col("__tab"),
         col("probe.cell").as("cell"))
-    val ksub = cb.ksub
     val scored = encodedCells
       .select(col(idCol).as("neighbor_id"), col("cell"), col(codeCol))
       .join(broadcast(q), "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", aggregate(
-        zip_with(col(codeCol), sequence(lit(0), lit(cb.m - 1)),
-          (c, sub) => element_at(col("__tab"), sub * ksub + c + lit(1))),
-        lit(0.0f), (acc, v) => acc + v))
+      .withColumn("adc", adc(cb, codeCol))
     rankAndRerank(scored, idCol, vecCol, k, rerank, rawCorpus)
   }
 
@@ -188,26 +176,32 @@ object Pq {
            rerank: Int = 0, rawCorpus: Option[DataFrame] = None,
            codeCol: String = "pq_code"): DataFrame = {
     graft.plans.GraftExtensions.registerAll(encoded.sparkSession)
+    // queries (with tables) broadcast, corpus never shuffles
+    val scored = encoded
+      .select(col(idCol).as("neighbor_id"), col(codeCol))
+      .crossJoin(broadcast(withAdcTables(queries, idCol, vecCol, cb)))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("adc", adc(cb, codeCol))
+    rankAndRerank(scored, idCol, vecCol, k, rerank, rawCorpus)
+  }
+
+  /** (query_id, qv, `__tab`): each query with its ADC table. */
+  private def withAdcTables(queries: DataFrame, idCol: String, vecCol: String,
+                            cb: PqCodebook): DataFrame = {
     val b = queries.sparkSession.sparkContext.broadcast(cb)
     val tableUdf = udf { (v: scala.collection.Seq[Float]) =>
       adcTable(b.value)(v.toArray)
     }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("__tab", tableUdf(col("qv")))
-    val ksub = cb.ksub
-    // corpus-side scoring: M element_at lookups + a sum — all builtin,
-    // codegen'd; queries (with tables) broadcast, corpus never shuffles
-    val scored = encoded
-      .select(col(idCol).as("neighbor_id"), col(codeCol))
-      .crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", aggregate(
-        zip_with(col(codeCol),
-          sequence(lit(0), lit(cb.m - 1)),
-          (c, sub) => element_at(col("__tab"), sub * ksub + c + lit(1))),
-        lit(0.0f), (acc, v) => acc + v))
-    rankAndRerank(scored, idCol, vecCol, k, rerank, rawCorpus)
   }
+
+  /** Corpus-side ADC score of `codeCol` against `__tab`: M element_at
+    * lookups + a sum — all builtin, codegen'd. */
+  private def adc(cb: PqCodebook, codeCol: String): Column =
+    aggregate(zip_with(col(codeCol), sequence(lit(0), lit(cb.m - 1)),
+        (c, sub) => element_at(col("__tab"), sub * cb.ksub + c + lit(1))),
+      lit(0.0f), (acc, v) => acc + v)
 
   /** Shared rank + optional exact-rerank tail of [[topK]] and
     * [[ivfPqTopK]] — ONE copy, so a guard or ordering fix cannot
@@ -232,13 +226,9 @@ object Pq {
       val raw = rawCorpus.getOrElse(throw new IllegalArgumentException(
         "rerank needs rawCorpus")).select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cv"))
-      val exact = cand.select(col("query_id"), col("neighbor_id"), col("qv"))
-        .join(raw, "neighbor_id")
-        .withColumn("cos", call_function("graft_cosine", col("qv"), col("cv")))
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      exact.withColumn("rank", row_number().over(w2).cast("long"))
-        .filter(col("rank") <= k)
+      Similarity.topKByCosine(
+          cand.select(col("query_id"), col("neighbor_id"), col("qv")).join(raw, "neighbor_id"),
+          col("qv"), col("cv"), k)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }
   }

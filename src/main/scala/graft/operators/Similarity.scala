@@ -66,16 +66,49 @@ object Similarity {
     graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", call_function("graft_cosine", col("qv"), col("cv")))
+    topKByCosine(c.crossJoin(broadcast(q)).filter(col("query_id") =!= col("neighbor_id")),
+      col("qv"), col("cv"), k)
+  }
+
+  /** The exact-cosine re-rank tail of every ANN operator: `scored`
+    * holds candidate (query_id, neighbor_id) pairs with the query and
+    * neighbor vectors `qVec`, `nVec`; each query keeps its `k` best by
+    * `graft_cosine`, ties to the lower neighbor_id. Output:
+    * (query_id, neighbor_id, rank, cosine rounded to 6 places).
+    */
+  private[operators] def topKByCosine(scored: DataFrame, qVec: Column, nVec: Column,
+                                      k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
+    scored.withColumn("cos", call_function("graft_cosine", qVec, nVec))
+      .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("cos"), 6).as("cosine"))
   }
+
+  /** Each query's first `n` rows by `order`, numbered from 1 in
+    * `rankCol`: the candidate-pool and probe cuts of the ANN operators
+    * (`df.transform(topPerQuery(...))`). */
+  private[operators] def topPerQuery(n: Int, rankCol: String, order: Column*)
+                                    (df: DataFrame): DataFrame =
+    df.withColumn(rankCol,
+        row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col(rankCol) <= n)
+
+  /** The `nprobe` nearest of `n` cells as exploded struct(d, `field`)
+    * rows: `dists` (one distance per cell) sorted with ties to the
+    * lower cell — the probe ranking of every IVF-style operator.
+    */
+  private[operators] def nearestCells(dists: Column, n: Int, nprobe: Int,
+                                      field: String = "cell"): Column =
+    explode(slice(array_sort(
+      // the index sequence must match the ACTUAL centroid count — a
+      // corpus smaller than nlist yields fewer centroids, and zipping
+      // against nlist pads null distances whose structs sort FIRST,
+      // displacing every real probe (0 results, no error)
+      zip_with(dists, sequence(lit(0), lit(n - 1)),
+        (d, i) => struct(d.as("d"), i.as(field)))), 1, nprobe))
 
   /** LSH-bucketed ANN: candidates share a sign-LSH bucket (with
     * multi-probe: query also probes buckets at Hamming distance ≤ 2),
@@ -127,17 +160,11 @@ object Similarity {
                         probeBuckets: Seq[Column], k: Int): DataFrame = {
     val probes = qBase.select(col("query_id"), col("qv"),
       explode(array(probeBuckets: _*)).as("bucket"))
-    val scored = probes.join(cB, "bucket")
+    val cands = probes.join(cB, "bucket")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("qv"), col("cv"))
       .distinct()
-      .withColumn("cos", call_function("graft_cosine", col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cosine"))
+    topKByCosine(cands, col("qv"), col("cv"), k)
   }
 
   /** DuckDB-replayable gate twin of [[lshTopK]]: md5-family planes
@@ -176,24 +203,6 @@ object Similarity {
     */
   final case class IvfIndex(cells: DataFrame, centroids: Array[Array[Double]]) {
     def nlist: Int = centroids.length
-    /** the centroid MATRIX as one Literal (array<array<double>>) — a
-      * nested-`lit` build plants nlist×dim Literal nodes, which at
-      * auto-tuned cluster counts blew analysis/codegen up (measured
-      * exp 1.88 in ScaleProbe before the fused kernels).
-      */
-    private def centLit: Column =
-      typedlit[Seq[Seq[Double]]](centroids.map(_.toSeq).toSeq)
-    /** squared-L2 distance of a vector column to every centroid
-      * (fused codegen'd loop; IEEE-identical to the former per-
-      * centroid zip_with+aggregate fold).
-      */
-    private[operators] def dists(v: Column): Column =
-      call_function("graft_cell_dists", v, centLit)
-    /** argmin cell, ties to the lowest index (same contract as
-      * `array_position(ds, array_min(ds)) - 1`).
-      */
-    private[operators] def cellOf(v: Column): Column =
-      call_function("graft_nearest_cell", v, centLit)
     def unpersist(): Unit = { cells.unpersist(); () }
   }
 
@@ -213,37 +222,9 @@ object Similarity {
                     nlist: Int = 16, iters: Int = 2): IvfIndex = {
     graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-
     // deterministic init: the nlist vectors with smallest xxhash64(id)
-    var cents: Array[Array[Double]] = c
-      .withColumn("h", xxhash64(col("neighbor_id")))
-      .orderBy(col("h")).limit(nlist)
-      .select(col("cv")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-
-    for (_ <- 0 until iters) {
-      val idx = IvfIndex(c, cents)
-      // one shuffle per step: (cell, pos) partial sums -> new means
-      val sums = c.withColumn("cell", idx.cellOf(col("cv")))
-        .select(col("cell"), posexplode(col("cv")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("v").cast("double")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val byCell = sums.groupBy(_.getAs[Int]("cell"))
-      cents = cents.indices.map { cell =>
-        byCell.get(cell) match {
-          case Some(rows) =>
-            val dim = cents(cell).length
-            val m = new Array[Double](dim)
-            rows.foreach(r => m(r.getAs[Int]("pos")) =
-              r.getAs[Double]("s") / r.getAs[Long]("n"))
-            m
-          case None => cents(cell) // empty cell keeps its centroid
-        }
-      }.toArray
-    }
-
-    val assigned = c.withColumn("cell", IvfIndex(c, cents).cellOf(col("cv"))).persist()
+    val cents = Lloyd.flat(c, col("cv"), xxhash64(col("neighbor_id")), nlist, iters)
+    val assigned = c.withColumn("cell", Lloyd.nearestCell(col("cv"), cents)).persist()
     IvfIndex(assigned, cents)
   }
 
@@ -255,22 +236,12 @@ object Similarity {
   def ivfProbe(index: IvfIndex, queries: DataFrame, idCol: String,
                vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
     graft.plans.GraftExtensions.registerAll(queries.sparkSession)
-    val nlist = index.nlist
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = q.withColumn("__d", index.dists(col("qv")))
-      .withColumn("probe", explode(slice(array_sort(
-        zip_with(col("__d"), sequence(lit(0), lit(nlist - 1)),
-          (d, i) => struct(d.as("d"), i.as("cell")))), 1, nprobe)))
+    val probes = q.withColumn("__d", Lloyd.cellDists(col("qv"), index.centroids))
+      .withColumn("probe", nearestCells(col("__d"), index.nlist, nprobe))
       .select(col("query_id"), col("qv"), col("probe.cell").as("cell"))
-    val scored = index.cells.join(broadcast(probes), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", call_function("graft_cosine", col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cosine"))
+    topKByCosine(index.cells.join(broadcast(probes), "cell")
+      .filter(col("query_id") =!= col("neighbor_id")), col("qv"), col("cv"), k)
   }
 
   /** Persist an IVF index: cells `partitionBy("cell")` (probe-time
@@ -442,9 +413,7 @@ object Similarity {
       // survivor frame must materialize before the bigger index cache
       // is released, but it keeps lineage (executor loss recomputes
       // instead of failing) and lives on disk, not heap
-      val out = org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
-        dominanceSurvivors(asg, threshold)
-          .select(col("__id").as(idCol), col("cluster")))
+      val out = keptRows(asg, threshold, idCol)
       idx.unpersist()
       out
     }
@@ -469,9 +438,7 @@ object Similarity {
         "__vec", "cluster")
       .select(col("__id"), col("__vec"), col("cluster"))
     // same eager-snapshot lifecycle as the flat path above
-    val out = org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
-      dominanceSurvivors(asg, threshold)
-        .select(col("__id").as(idCol), col("cluster")))
+    val out = keptRows(asg, threshold, idCol)
     tl.unpersist()
     out
   }
@@ -566,6 +533,14 @@ object Similarity {
       .select(col("a.__id").as("__drop")).distinct()
     asg.join(dropped, col("__id") === col("__drop"), "left_anti")
   }
+
+  /** Every SemDeDup operator's result: the [[dominanceSurvivors]] of
+    * `asg` as (`idCol`, cluster), materialized as an eager disk
+    * snapshot so the caller can release its clustering caches. */
+  private[operators] def keptRows(asg: DataFrame, threshold: Double,
+                                  idCol: String): DataFrame =
+    org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
+      dominanceSurvivors(asg, threshold).select(col("__id").as(idCol), col("cluster")))
 
   /** DuckDB-replayable gate twin of [[cosineNearDupPairs]]: identical
     * single-shuffle plan, but the sign-LSH planes come from the md5

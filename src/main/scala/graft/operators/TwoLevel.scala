@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 
@@ -66,9 +66,6 @@ object TwoLevel {
     private def dim: Int = superCentroids.headOption.map(_.length).getOrElse(0)
     private[operators] def matBytes: Long = k.toLong * dim * 8
 
-    private def superLit: Column =
-      typedlit[Seq[Seq[Double]]](superCentroids.map(_.toSeq).toSeq)
-
     /** (super → ordered child matrix), the join side of assignment.
       * Child ids are contiguous 0..n-1 per super (init makes them so,
       * Lloyd preserves them), so position in the sorted matrix IS the
@@ -91,7 +88,7 @@ object TwoLevel {
       val mats = childMats.select(
         col("super").as("__tl_s2"), col("mat").as("__tl_mat"))
       val withSuper = df.withColumn("__tl_super",
-        call_function("graft_nearest_cell", col(vecCol), superLit))
+        Lloyd.nearestCell(col(vecCol), superCentroids))
       val joined =
         if (matBytes <= broadcastBytes(df.sparkSession))
           withSuper.join(broadcast(mats), col("__tl_super") === col("__tl_s2"), "left")
@@ -108,12 +105,6 @@ object TwoLevel {
       // no-op; release every persisted RDD in the chain explicitly
       org.apache.spark.sql.graftshim.DiskSnapshot.release(children)
     }
-
-    /** squared-L2 distance of a vector column to every SUPER centroid
-      * (the literal-sized level) — the probe's first ranking stage.
-      */
-    private[operators] def superDists(v: Column): Column =
-      call_function("graft_cell_dists", v, superLit)
   }
 
   /** (super, child, ctr) rows → (super → child matrix ordered by
@@ -219,18 +210,6 @@ object TwoLevel {
     TwoLevelIvfIndex(tl, cells)
   }
 
-  /** Probe a two-level IVF index: rank the `nprobeSuper` nearest
-    * super-cells map-side (literal kernel), rank the `nprobe` nearest
-    * CHILD cells within just those supers (small broadcast join onto
-    * the query side — queries are the small side by contract), then
-    * exact-cosine re-rank inside the probed cells. The corpus-side
-    * `cells` scan joins against a BROADCAST probe list, so — exactly
-    * like the flat [[Similarity.ivfProbe]] — the corpus never
-    * shuffles. Two-stage probing is the standard hierarchical-IVF
-    * recall trade: a nearest global cell under an unprobed super is
-    * missed, bought back by raising `nprobeSuper` (spec measures
-    * recall vs brute force).
-    */
   /** The two-stage probe-cell ranking shared by [[ivfProbeTwoLevel]]
     * and the compressed-ANN pipeline: `nprobeSuper` nearest supers
     * map-side (literal kernel), then the `nprobe` nearest child cells
@@ -238,12 +217,9 @@ object TwoLevel {
     */
   private[operators] def probeCells(tl: TwoLevelQuantizer, q: DataFrame,
                                     nprobeSuper: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val supers = q
-      .withColumn("probe", explode(slice(array_sort(
-        zip_with(tl.superDists(col("qv")),
-          sequence(lit(0), lit(tl.kSuper - 1)),
-          (d, i) => struct(d.as("d"), i.as("super")))), 1, nprobeSuper)))
+      .withColumn("probe", Similarity.nearestCells(Lloyd.cellDists(col("qv"), tl.superCentroids),
+        tl.kSuper, nprobeSuper, "super"))
       .select(col("query_id"), col("qv"), col("probe.super").as("super"))
     // same ceiling discipline as assign(): the child-matrix table is
     // only broadcast while it is small; past the ceiling the PROBE
@@ -260,28 +236,29 @@ object TwoLevel {
       .select(col("query_id"), col("qv"),
         (col("super") * tl.kChild + col("pc.child")).as("cell"),
         col("pc.d").as("d"))
-    val wp = Window.partitionBy(col("query_id")).orderBy(col("d"), col("cell"))
-    cellRanked.withColumn("__r", row_number().over(wp))
-      .filter(col("__r") <= nprobe)
+    cellRanked.transform(Similarity.topPerQuery(nprobe, "__r", col("d"), col("cell")))
       .select(col("query_id"), col("qv"), col("cell"))
   }
 
+  /** Probe a two-level IVF index: rank the `nprobeSuper` nearest
+    * super-cells map-side (literal kernel), rank the `nprobe` nearest
+    * CHILD cells within just those supers (small broadcast join onto
+    * the query side — queries are the small side by contract), then
+    * exact-cosine re-rank inside the probed cells. The corpus-side
+    * `cells` scan joins against a BROADCAST probe list, so — exactly
+    * like the flat [[Similarity.ivfProbe]] — the corpus never
+    * shuffles. Two-stage probing is the standard hierarchical-IVF
+    * recall trade: a nearest global cell under an unprobed super is
+    * missed, bought back by raising `nprobeSuper` (spec measures
+    * recall vs brute force).
+    */
   def ivfProbeTwoLevel(index: TwoLevelIvfIndex, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        nprobeSuper: Int = 4, nprobe: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     graft.plans.GraftExtensions.registerAll(queries.sparkSession)
-    val tl = index.quantizer
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = probeCells(tl, q, nprobeSuper, nprobe)
-    val scored = index.cells.join(broadcast(probes), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", call_function("graft_cosine", col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cosine"))
+    val probes = probeCells(index.quantizer, q, nprobeSuper, nprobe)
+    Similarity.topKByCosine(index.cells.join(broadcast(probes), "cell")
+      .filter(col("query_id") =!= col("neighbor_id")), col("qv"), col("cv"), k)
   }
 }

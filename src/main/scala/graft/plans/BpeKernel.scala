@@ -132,8 +132,7 @@ object BpeKernel {
     val out = new Array[Int](n)
     var i = 0
     while (i < n) {
-      val v = vocab.get(syms.getUTF8String(i).toString)
-      out(i) = if (v == null) -1 else v.intValue()
+      out(i) = vocab.getOrDefault(syms.getUTF8String(i).toString, -1)
       i += 1
     }
     new GenericArrayData(out)

@@ -236,6 +236,24 @@ class BpeSpec extends SparkSpec {
     val md = java.security.MessageDigest.getInstance("MD5")
     val fp = md.digest("2|2|1".getBytes("UTF-8")).map("%02x".format(_)).mkString
     assert(got.getString(2) == fp)
+    // an unknown symbol maps to -1 (not to the first vocabulary id),
+    // folded, compiled and interpreted
+    import org.apache.spark.sql.functions.{call_function, col, expr}
+    graft.plans.GraftExtensions.registerAll(spark)
+    val syms = spark.sparkContext.parallelize(Seq(Tuple1(Seq("b", "zz"))), 1).toDF("syms")
+    def ids: Seq[Seq[Int]] = Seq(
+      spark.sql("SELECT graft_syms_to_ids(array('b','zz'), array('a','b'))"),
+      syms.select(call_function("graft_syms_to_ids", col("syms"), expr("array('a','b')"))))
+      .map(_.head().getSeq[Int](0))
+    Seq(Seq("spark.sql.codegen.fallback" -> "false"),
+        Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+          "spark.sql.codegen.wholeStage" -> "false")).foreach { mode =>
+      val prev = mode.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        mode.foreach { case (k, v) => spark.conf.set(k, v) }
+        assert(ids == Seq(Seq(1, -1), Seq(1, -1)), mode)
+      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("save/load tokenizer roundtrip: reloaded artifacts encode identically") {

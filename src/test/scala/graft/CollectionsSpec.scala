@@ -171,6 +171,8 @@ class CollectionsSpec extends SparkSpec {
     // the weights SUM into the output, so the degrade is associative
     // and re-degradable
     assert(row.getAs[Double]("w") == 5.0)
+    // the plan names the aggregator stably, not by object identity
+    assert(!m.df.queryExecution.optimizedPlan.toString.contains("WeightedMean$@"))
   }
 
   test("structure collection IO roundtrip with child clustering") {
