@@ -1,5 +1,7 @@
 #!/bin/bash
 # Fast local Verify run (bypasses sbt JVM spin-up): java -cp classes + spark jars.
+# The classes are this checkout's build: the repo root is the script's parent dir.
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
@@ -9,5 +11,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT" ${3:+"$3"}

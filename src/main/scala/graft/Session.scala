@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.collection.concurrent.TrieMap
 
 /** The one local SparkSession configuration shared by every main
   * (Bench, Verify, ScaleProbe, JobProbe, Explain, ImportCheck,
@@ -17,4 +18,15 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** Artifacts built once per (session, key): `cache(s, key)(build)`.
+    * Weakly keyed on the session OBJECT: an artifact holds DataFrames
+    * bound to one session and must not leak into another (identity hash
+    * codes can collide), and a collected session's entries drop out. */
+  private[graft] final class Cache[V] {
+    private val bySession = new java.util.WeakHashMap[SparkSession, TrieMap[String, V]]()
+    def apply(s: SparkSession, key: String)(build: => V): V =
+      bySession.synchronized(bySession.computeIfAbsent(s, _ => TrieMap.empty[String, V]))
+        .getOrElseUpdate(key, build)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.collections
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{Header, OCDataset}
 import graft.expr.OCMask
@@ -113,18 +113,6 @@ final case class Lightcone(steps: Map[Int, OCDataset]) {
         // inverted the reading
         min(col("redshift")).as("z_min"),
         max(col("redshift")).as("z_max"))
-}
-
-object Lightcone {
-  /** Open a directory of `step_<N>/` datasets written by OCIO. */
-  def open(spark: SparkSession, path: String): Lightcone = {
-    val dirs = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("step_"))
-    val steps = dirs.map { d =>
-      d.getName.stripPrefix("step_").toInt -> graft.io.OCIO.open(spark, d.getPath)
-    }.toMap
-    Lightcone(steps)
-  }
 }
 
 /** HEALPix sky-map dataset (reference healpix_map.py:93): rows are

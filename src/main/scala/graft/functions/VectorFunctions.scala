@@ -54,15 +54,10 @@ object VectorFunctions {
     array(vals.map(lit).toIndexedSeq: _*)
   }
 
-  /** Random-hyperplane (sign) LSH bucket id from `nPlanes` planes:
-    * bit p = sign(v · plane_p). One long column, map-side only.
-    */
-  def signLshBucket(v: Column, nPlanes: Int, dim: Int): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      when(dot(v, hyperplane(p, dim)) >= 0.0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    dimChecked(v, dim, "signLshBucket", bits.reduce((a, b) => a.bitwiseOR(b)))
-  }
+  /** Double dots of `v` with the first `n` [[hyperplane]] planes: the
+    * xxhash64 family's LSH bucket bits and [[randomProject]]. */
+  private[graft] def hyperplaneDots(v: Column, n: Int, dim: Int): Seq[Column] =
+    (0 until n).map(p => dot(v, hyperplane(p, dim)))
 
   /** Refuse a vector/`dim` mismatch loudly: zip_with null-pads the
     * shorter side, so a mismatched dot is NULL, `when(null >= 0)`
@@ -70,7 +65,7 @@ object VectorFunctions {
     * in bucket 0 — the "scale path" then runs the full quadratic
     * self-join inside one bucket with no error anywhere.
     */
-  private def dimChecked(v: Column, dim: Int, fn: String, out: Column): Column =
+  private[graft] def dimChecked(v: Column, dim: Int, fn: String, out: Column): Column =
     when(size(v) === dim, out).otherwise(raise_error(concat(
       lit(s"$fn: vector dim "), size(v).cast("string"),
       lit(s" != configured dim $dim"))).cast("long"))
@@ -103,24 +98,19 @@ object VectorFunctions {
     array(hyperplaneMd5IntValues(planeId, dim).map(lit).toIndexedSeq: _*)
   }
 
-  /** [[signLshBucket]] over the md5 plane family — the gate kernel
-    * for DuckDB-replayable LSH bucketing. The bit decision is a pure
-    * 64-bit INTEGER dot product (component quantized to
-    * floor(x·2^16), weight an exact [-2^31,2^31) integer), so the sum
-    * is associative and order-independent — a SQL engine may aggregate
-    * the terms in any order and still reproduce every bit, unlike a
-    * float dot whose near-zero sign could flip under reassociation.
-    * Exact for |x| < 2^10 (|term| ≤ 2^16·|x|·2^31, dim ≤ 64 ⇒
-    * |sum| < 2^63); embedding fixtures are O(1)-scaled.
+  /** Dots of floor(v·2^16) with the first `n` [[hyperplaneMd5Int]]
+    * planes: the md5 family's LSH bucket bits and [[randomProjectMd5Q]].
+    * A pure 64-bit INTEGER sum, so a SQL engine may aggregate the terms
+    * in any order and still reproduce every value — a float dot's
+    * near-zero sign could flip under reassociation. Exact for |x| <
+    * 2^10 (|term| ≤ 2^16·|x|·2^31, dim ≤ 64 ⇒ |sum| < 2^63).
     */
-  def signLshBucketMd5(v: Column, nPlanes: Int, dim: Int): Column = {
+  private[graft] def hyperplaneMd5Dots(v: Column, n: Int, dim: Int): Seq[Column] = {
     val qv = transform(v, x => floor(x.cast("double") * lit(65536.0)))
-    val bits = (0 until nPlanes).map { p =>
-      val qdot = aggregate(zip_with(qv, hyperplaneMd5Int(p, dim), (x, w) => x * w),
+    (0 until n).map { p =>
+      aggregate(zip_with(qv, hyperplaneMd5Int(p, dim), (x, w) => x * w),
         lit(0L), (acc, t) => acc + t)
-      when(qdot >= 0L, shiftleft(lit(1L), p)).otherwise(lit(0L))
     }
-    dimChecked(v, dim, "signLshBucketMd5", bits.reduce((a, b) => a.bitwiseOR(b)))
   }
 
   /** Johnson–Lindenstrauss random projection to `outDim` dimensions
@@ -137,24 +127,17 @@ object VectorFunctions {
   def randomProject(v: Column, outDim: Int, dim: Int): Column = {
     require(outDim >= 1 && dim >= 1)
     val s = math.sqrt(3.0 / outDim)
-    array((0 until outDim).map(p => dot(v, hyperplane(p, dim)) * lit(s)): _*)
+    array(hyperplaneDots(v, outDim, dim).map(_ * lit(s)): _*)
   }
 
   /** [[randomProject]]'s DuckDB-replayable GATE twin, kept in EXACT
-    * INTEGER form like [[signLshBucketMd5]]: component p is the
-    * integer dot of floor(x·2¹⁶) with the [[hyperplaneMd5Int]]
-    * weights — order-independent under any SQL engine's aggregation,
-    * no float at all (the caller can rescale by
-    * √(3/outDim)/(2¹⁶·2³¹) when real-valued output matters; the gate
-    * hashes the integers). Exact for |x| < 2¹⁰ at dim ≤ 64.
+    * INTEGER form: component p is [[hyperplaneMd5Dots]]' dot p — no
+    * float at all (the caller can rescale by √(3/outDim)/(2¹⁶·2³¹)
+    * when real-valued output matters; the gate hashes the integers).
     */
   def randomProjectMd5Q(v: Column, outDim: Int, dim: Int): Column = {
     require(outDim >= 1 && dim >= 1)
-    val qv = transform(v, x => floor(x.cast("double") * lit(65536.0)))
-    array((0 until outDim).map { p =>
-      aggregate(zip_with(qv, hyperplaneMd5Int(p, dim), (x, w) => x * w),
-        lit(0L), (acc, t) => acc + t)
-    }: _*)
+    array(hyperplaneMd5Dots(v, outDim, dim): _*)
   }
 
   /** [[randomProjectMd5Q]] through the fused codegen kernel

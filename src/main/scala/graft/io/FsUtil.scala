@@ -20,4 +20,9 @@ object FsUtil {
       }
     }
   }
+
+  /** Delete `root` recursively at JVM exit, ignoring failures: the
+    * cleanup of temp artifacts cached for the JVM's life. */
+  def deleteOnExit(root: java.nio.file.Path): Unit =
+    sys.addShutdownHook(try deleteRecursively(root) catch { case _: Throwable => () })
 }

@@ -23,11 +23,8 @@ object OCIO {
     * writing in storage order to keep its tree index valid
     * (handler.py:330-350).
     */
-  def write(ds: OCDataset, path: String, sortColumn: Option[String] = None): Unit = {
-    val d = sortColumn.fold(ds.df)(c => ds.df.sortWithinPartitions(col(c)))
-    d.write.mode("overwrite").parquet(s"$path/data.parquet")
-    Header.write(path, ds.header)
-  }
+  def write(ds: OCDataset, path: String, sortColumn: Option[String] = None): Unit =
+    writeAs(ds, path, "parquet", sortColumn)
 
   /** Open a dataset directory written by [[write]]. `hooks` are
     * open-time enrichment functions (the Spark analog of the
@@ -36,27 +33,17 @@ object OCIO {
     * columns at open, collection/lightcone/plugins.py:20-108).
     */
   def open(spark: SparkSession, path: String,
-           hooks: Seq[OCDataset => OCDataset] = Nil): OCDataset = {
-    val header = Header.read(path)
-    val raw = spark.read.parquet(s"$path/data.parquet")
-    // Partition query hook (reference PartitionCtx, plugins/contexts.py:
-    // 110-130): the first responding plugin replaces the default
-    // file-split frame (repartition, bucketed re-read, ...); no
-    // response keeps Spark's default splits.
-    val df = graft.plugins.Hooks.partition
-      .query(graft.plugins.Hooks.PartitionRequest(header, raw)).getOrElse(raw)
-    val ds = OCDataset(df, header)
-    val opened = (Hooks.forType(header.dataType) ++ hooks).foldLeft(ds)((d, h) => h(d))
-    graft.plugins.Hooks.datasetOpen.fold(opened)
-  }
+           hooks: Seq[OCDataset => OCDataset] = Nil): OCDataset =
+    read(spark, path, "parquet", None, hooks)
 
   /** Data-type-keyed open hooks (reference plugin registration,
     * plugins/hook.py:15-71: plugins declare which dataset types they
     * enrich — e.g. the lightcone plugin synthesizing redshift/ra/dec
     * columns at open, collection/lightcone/plugins.py:20-108). Hooks
-    * registered here run on every [[open]] whose sidecar `data_type`
-    * matches, before any per-call hooks. Hooks are plan rewrites —
-    * they add derived columns lazily, nothing executes at open.
+    * registered here run on every [[open]] and [[openAs]] whose sidecar
+    * `data_type` matches, before any per-call hooks. Hooks are plan
+    * rewrites — they add derived columns lazily, nothing executes at
+    * open.
     */
   object Hooks {
     private val byType =
@@ -153,13 +140,21 @@ object OCIO {
     Header.write(path, ds.header)
   }
 
-  /** Open any [[writeAs]] output; csv re-applies a caller-provided
-    * schema (csv is stringly-typed on disk).
+  /** Open any [[writeAs]] output, hooks applied as in [[open]]; csv
+    * re-applies a caller-provided schema (csv is stringly-typed on disk).
     */
   def openAs(spark: SparkSession, path: String, format: String,
-             csvSchema: Option[org.apache.spark.sql.types.StructType] = None): OCDataset = {
+             csvSchema: Option[org.apache.spark.sql.types.StructType] = None): OCDataset =
+    read(spark, path, format, csvSchema, Nil)
+
+  /** The one open path: header, the format's frame, then the partition
+    * query hook (reference PartitionCtx, plugins/contexts.py:110-130),
+    * type-keyed [[Hooks]], per-call `hooks` and the DatasetOpen fold. */
+  private def read(spark: SparkSession, path: String, format: String,
+                   csvSchema: Option[org.apache.spark.sql.types.StructType],
+                   hooks: Seq[OCDataset => OCDataset]): OCDataset = {
     val header = Header.read(path)
-    val df = format match {
+    val raw = format match {
       case "parquet" => spark.read.parquet(s"$path/data.parquet")
       case "json"    => spark.read.json(s"$path/data.json")
       case "csv" =>
@@ -168,7 +163,11 @@ object OCIO {
           .csv(s"$path/data.csv")
       case other => throw new IllegalArgumentException(s"format $other")
     }
-    OCDataset(df, header)
+    val df = graft.plugins.Hooks.partition
+      .query(graft.plugins.Hooks.PartitionRequest(header, raw)).getOrElse(raw)
+    val opened = (Hooks.forType(header.dataType) ++ hooks)
+      .foldLeft(OCDataset(df, header))((d, h) => h(d))
+    graft.plugins.Hooks.datasetOpen.fold(opened)
   }
 
   /** Write a structure collection: parent at <path>/, children under

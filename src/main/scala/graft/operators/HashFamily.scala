@@ -3,10 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.{lshBands, tokens}
+import graft.functions.VectorFunctions
 
-/** The hash family a text-hashing operator runs on — the ONE place the
-  * hash algorithm is chosen, so MinHash, window-hash spans, line dedup
-  * and the seeded samplers each keep a single code path:
+/** The hash family a hashing operator runs on — the ONE place the
+  * hash algorithm is chosen, so MinHash, window-hash spans, line dedup,
+  * the seeded samplers and the sign-LSH operators (bucket, ANN top-k,
+  * cosine near-dup) each keep a single code path:
   *
   *  - [[HashFamily.Xx]]: xxhash64, the production default (codegen'd,
   *    one pass per value);
@@ -14,12 +16,28 @@ import graft.functions.TextFunctions.{lshBands, tokens}
   *    correctness gate the DuckDB oracle re-runs verbatim.
   *
   * Each family's kernels are pinned against their folds in
-  * Md5KernelsSpec and PropertySpec; DedupSpec and SamplingSpec pin the
-  * two families' operator outputs against each other on the gate
-  * corpus. Keys from different families never mix: a dedup snapshot
-  * must be matched with the family that wrote it.
+  * Md5KernelsSpec and PropertySpec; DedupSpec, SamplingSpec and
+  * SimilaritySpec pin the two families' operator outputs against each
+  * other on the gate corpus. Keys from different families never mix: a
+  * dedup snapshot must be matched with the family that wrote it.
   */
 sealed trait HashFamily {
+
+  /** Random-hyperplane (sign) LSH bucket id of `v` from this family's
+    * first `nPlanes` planes: bit p = sign(v · plane_p). One long column,
+    * map-side only; a `v` whose size is not `dim` fails the query.
+    */
+  def lshBucket(v: Column, nPlanes: Int, dim: Int): Column = {
+    val bits = planeSigns(v, nPlanes, dim).zipWithIndex.map { case (s, p) =>
+      when(s, shiftleft(lit(1L), p)).otherwise(lit(0L))
+    }
+    VectorFunctions.dimChecked(v, dim, lshBucketName, bits.reduce((a, b) => a.bitwiseOR(b)))
+  }
+
+  /** `v · plane_p >= 0` for this family's first `n` LSH planes, and the
+    * name a [[lshBucket]] dimension mismatch is reported under. */
+  private[operators] def planeSigns(v: Column, n: Int, dim: Int): Seq[Column]
+  private[operators] def lshBucketName: String
 
   /** Per-document MinHash signatures (doc, sig array<long>) over the
     * distinct word-`shingleN`-gram shingles; documents with fewer than
@@ -49,8 +67,11 @@ object HashFamily {
 
   /** xxhash64 throughout: token hashes feed the one-pass n-gram and
     * k-min kernels (plans/TextKernels.scala); bands key on xxhash64 of
-    * the tagged band slice. */
+    * the tagged band slice; LSH planes are [[VectorFunctions.hyperplane]]. */
   case object Xx extends HashFamily {
+    private[operators] def planeSigns(v: Column, n: Int, dim: Int): Seq[Column] =
+      VectorFunctions.hyperplaneDots(v, n, dim).map(_ >= 0.0)
+    private[operators] val lshBucketName = "signLshBucket"
     private[operators] def minhashSignatures(df: DataFrame, idCol: String,
                                              textCol: String, shingleN: Int,
                                              k: Int): DataFrame = {
@@ -76,8 +97,12 @@ object HashFamily {
     * mod [[DedupHashes.MinhashP]] over it ([[DedupHashes]] holds the
     * constants — one digest per shingle instead of k); a band key is
     * md5 of the comma-joined band slice; buckets decode the first 8
-    * hex chars; sort keys are the md5 hex string. */
+    * hex chars; sort keys are the md5 hex string; LSH planes are
+    * [[VectorFunctions.hyperplaneMd5Int]] under an exact integer dot. */
   case object Md5 extends HashFamily {
+    private[operators] def planeSigns(v: Column, n: Int, dim: Int): Seq[Column] =
+      VectorFunctions.hyperplaneMd5Dots(v, n, dim).map(_ >= 0L)
+    private[operators] val lshBucketName = "signLshBucketMd5"
     private[operators] def minhashSignatures(df: DataFrame, idCol: String,
                                              textCol: String, shingleN: Int,
                                              k: Int): DataFrame = {

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -131,15 +130,24 @@ object Similarity {
     * ([[Hamming2Budget]] probes) — per-query work past the knee grows
     * only linearly (Hamming-1), with no recall cliff at the boundary
     * (SimilaritySpec asserts recall just above it).
+    *
+    * `family = HashFamily.Md5` is the DuckDB-replayable gate (q30): it
+    * needs a static plane count ≤ [[MaxHamming2Planes]], so the ring is
+    * complete and the probe set is exactly "all buckets within Hamming
+    * distance 2" — a SQL oracle states it as
+    * `bit_count(xor(sig_q, sig_c)) <= 2` over replayed signatures.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, nPlanes: Int = 0, dim: Int = 64): DataFrame = {
+              vecCol: String, k: Int, nPlanes: Int = 0, dim: Int = 64,
+              family: HashFamily = HashFamily.Xx): DataFrame = {
+    if (family == HashFamily.Md5) require(nPlanes > 0 && nPlanes <= MaxHamming2Planes,
+      s"gate kernel needs 1..$MaxHamming2Planes static planes (full Hamming-2 ring)")
     graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val planes = if (nPlanes > 0) nPlanes else autoPlanes(corpus.count())
     val cB = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      signLshBucket(col(vecCol), planes, dim).as("bucket"))
+      family.lshBucket(col(vecCol), planes, dim).as("bucket"))
     val qBase = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      signLshBucket(col(vecCol), planes, dim).as("b0"))
+      family.lshBucket(col(vecCol), planes, dim).as("b0"))
     // multi-probe: own bucket + all buckets at Hamming distance 1, and
     // a BUDGETED Hamming-2 ring — full below the knee, the first
     // Hamming2Budget pairs above it (graded, no recall cliff)
@@ -148,51 +156,13 @@ object Similarity {
         yield (p, q))
       .take(Hamming2Budget)
       .map { case (p, q) => col("b0").bitwiseXOR(lit((1L << p) | (1L << q))) }
-    lshRerank(qBase, cB, col("b0") +: (h1 ++ h2), k)
-  }
-
-  /** Shared probe-explode → bucket-join → distinct → exact-cosine →
-    * window-re-rank tail of [[lshTopK]] and [[lshTopKMd5]]: one
-    * implementation so the gate kernel's plan cannot silently diverge
-    * from the production plan it is documented to mirror.
-    */
-  private def lshRerank(qBase: DataFrame, cB: DataFrame,
-                        probeBuckets: Seq[Column], k: Int): DataFrame = {
     val probes = qBase.select(col("query_id"), col("qv"),
-      explode(array(probeBuckets: _*)).as("bucket"))
+      explode(array(col("b0") +: (h1 ++ h2): _*)).as("bucket"))
     val cands = probes.join(cB, "bucket")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("qv"), col("cv"))
       .distinct()
     topKByCosine(cands, col("qv"), col("cv"), k)
-  }
-
-  /** DuckDB-replayable gate twin of [[lshTopK]]: md5-family planes
-    * ([[graft.functions.VectorFunctions.hyperplaneMd5Int]]) and a STATIC
-    * plane count small enough that the budgeted Hamming-2 ring is
-    * complete (nPlanes ≤ [[MaxHamming2Planes]] ⇒ probes = self +
-    * Hamming-1 + the whole Hamming-2 ring), so the probe set is
-    * exactly "all buckets within Hamming distance 2" — which a SQL
-    * oracle states directly as `bit_count(xor(sig_q, sig_c)) <= 2`
-    * over replayed signatures, followed by the exact cosine re-rank.
-    * Same plan shape as production (map-side bucketing, one bucket
-    * join, window re-rank); production callers keep [[lshTopK]]'s
-    * xxhash64 planes + autoPlanes tuning.
-    */
-  def lshTopKMd5(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, k: Int, nPlanes: Int,
-                 dim: Int = 64): DataFrame = {
-    require(nPlanes > 0 && nPlanes <= MaxHamming2Planes,
-      s"gate kernel needs 1..$MaxHamming2Planes static planes (full Hamming-2 ring)")
-    graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
-    val cB = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      signLshBucketMd5(col(vecCol), nPlanes, dim).as("bucket"))
-    val qBase = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      signLshBucketMd5(col(vecCol), nPlanes, dim).as("b0"))
-    val h1 = (0 until nPlanes).map(p => col("b0").bitwiseXOR(lit(1L << p)))
-    val h2 = for (p <- 0 until nPlanes; q <- (p + 1) until nPlanes)
-      yield col("b0").bitwiseXOR(lit((1L << p) | (1L << q)))
-    lshRerank(qBase, cB, col("b0") +: (h1 ++ h2), k)
   }
 
   /** A built IVF-Flat index: the corpus with its cell assignment
@@ -326,16 +296,24 @@ object Similarity {
     * to buy back), so ~16/bucket ≈ 8 evals/vector matches the probe's
     * tuned regime — at 64/bucket the "linear" path loses to the exact
     * join until n is large.
+    *
+    * `family = HashFamily.Md5` is the DuckDB-replayable gate (q37): a SQL
+    * oracle rebuilds every bucket bit from the md5 plane weights and
+    * replays the bucket self-join and exact cosine filter, so its
+    * `nPlanes` must be explicit (the oracle knows it statically).
     */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double, nPlanes: Int = 0, dim: Int = 64): DataFrame = {
+                         threshold: Double, nPlanes: Int = 0, dim: Int = 64,
+                         family: HashFamily = HashFamily.Xx): DataFrame = {
+    if (family == HashFamily.Md5)
+      require(nPlanes > 0, "gate kernel needs an explicit plane count")
     val planes = if (nPlanes > 0) nPlanes
       else autoPlanes(df.count(), targetBucket = 16L)
     // snapshot: the per-row plane fold feeds BOTH sides of the
     // bucket self-join — pay it once (the simhash/minhash pattern)
     val b = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
       df.select(col(idCol).as("doc"), col(vecCol).as("v"),
-        signLshBucket(col(vecCol), planes, dim).as("bucket")))
+        family.lshBucket(col(vecCol), planes, dim).as("bucket")))
     val a = b.as("a"); val c = b.as("b")
     // codegen'd kernel cosine (identical values to the HOF form —
     // both sum left to right; SimilaritySpec pins them equal): the
@@ -541,40 +519,4 @@ object Similarity {
                                   idCol: String): DataFrame =
     org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
       dominanceSurvivors(asg, threshold).select(col("__id").as(idCol), col("cluster")))
-
-  /** DuckDB-replayable gate twin of [[cosineNearDupPairs]]: identical
-    * single-shuffle plan, but the sign-LSH planes come from the md5
-    * family ([[graft.functions.VectorFunctions.hyperplaneMd5Int]]), so a
-    * SQL oracle can rebuild every bucket bit (dot-product signs over
-    * md5-derived weights) and replay the bucket self-join + exact
-    * cosine filter end to end. `nPlanes` is explicit (no corpus-count
-    * auto-tune) because the oracle must know the plane count
-    * statically. Production callers keep [[cosineNearDupPairs]]'s
-    * xxhash64 planes + autoPlanes; SimilaritySpec asserts the gate's
-    * precision is 1.0 against the exact pair set and its recall is
-    * comparable to the production kernel's.
-    */
-  def cosineNearDupPairsMd5(df: DataFrame, idCol: String, vecCol: String,
-                            threshold: Double, nPlanes: Int,
-                            dim: Int = 64): DataFrame = {
-    require(nPlanes > 0, "gate kernel needs an explicit plane count")
-    // snapshot: same both-sides-of-the-self-join reuse as the
-    // production kernel above
-    val b = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      df.select(col(idCol).as("doc"), col(vecCol).as("v"),
-        signLshBucketMd5(col(vecCol), nPlanes, dim).as("bucket")))
-    val a = b.as("a"); val c = b.as("b")
-    // codegen'd kernel cosine (identical values to the HOF form —
-    // both sum left to right; SimilaritySpec pins them equal): the
-    // bucket expansion is the HOT pair loop, and the interpreted HOF
-    // would make the scale path slower per pair than the exact
-    // baseline it exists to beat
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
-    a.join(c, col("a.bucket") === col("b.bucket") && col("a.doc") < col("b.doc"))
-      .withColumn("cos", org.apache.spark.sql.functions.call_function(
-        "graft_cosine", col("a.v"), col("b.v")))
-      .filter(col("cos") >= threshold)
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        round(col("cos"), 6).as("cosine"))
-  }
 }

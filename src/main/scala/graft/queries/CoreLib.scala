@@ -325,10 +325,13 @@ object CoreLib {
     // single bent byte anywhere in the format pipeline hash-mismatches.
     "q66_hdf5_roundtrip" -> ((s, dir) => {
       val src = OCDataset(t(s, dir, "supplier"))
-      val h5 = java.nio.file.Files.createTempDirectory("graft-h5q-")
-        .resolve("supplier.hdf5").toString
-      graft.io.hdf5.Hdf5Io.exportHdf5(src, h5, chunkRows = 4096, compress = true)
-      graft.io.hdf5.Hdf5Io.importDataset(s, h5).df
+      val tmp = java.nio.file.Files.createTempDirectory("graft-h5q-")
+      try {
+        val h5 = tmp.resolve("supplier.hdf5").toString
+        graft.io.hdf5.Hdf5Io.exportHdf5(src, h5, chunkRows = 4096, compress = true)
+        // materialize before the finally deletes the file the import reads
+        DiskSnapshot.diskCachedEager(graft.io.hdf5.Hdf5Io.importDataset(s, h5).df)
+      } finally graft.io.FsUtil.deleteRecursively(tmp)
     }),
 
     // Arrow IPC interchange (reference output-format surface,

@@ -48,7 +48,7 @@ object Events {
     stagedInputs.getOrElseUpdate(s"$gate|$srcDir", {
       val d = java.nio.file.Files.createTempDirectory(s"graft-$gate-in-")
       write(d.toString)
-      sys.addShutdownHook(deleteRecursively(d))
+      graft.io.FsUtil.deleteOnExit(d)
       d.toString
     })
 

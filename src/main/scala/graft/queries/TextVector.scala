@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 import graft.Tables
+import graft.io.FsUtil
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
-import graft.operators.{Clustering, Dedup, HashFamily, Multimodal, Similarity}
+import graft.operators.{Clustering, CompressedAnn, Dedup, HashFamily, Multimodal, Pq, Similarity}
 
 /** Training-data pipeline operators (builder prompt §beyond-reference):
   * text analysis, dedup, similarity search, multimodal plumbing — each
@@ -54,81 +55,50 @@ object TextVector {
     * `partitionBy(cell)` + centroid sidecar) and reopened COLD: probes
     * measured against it pay the real recurring cost — a
     * partition-pruned parquet scan — not reads from an in-memory cache.
-    * The cache is keyed on the SparkSession OBJECT through a weak map:
-    * a cached index holds DataFrames bound to one session and must not
-    * leak into a different one (identity hash codes can collide), and
-    * when a session is garbage-collected its entry — and only its
-    * entry — drops out. Index directories are registered for JVM-exit
-    * cleanup, so repeated sessions don't accrete /tmp artifacts.
+    * Built once per session ([[graft.Session.Cache]]); index
+    * directories are registered for JVM-exit cleanup, so repeated
+    * sessions don't accrete /tmp artifacts.
     */
-  private val ivfCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]]()
-  def ivfIndexFor(s: SparkSession, dir: String): Similarity.IvfIndex = {
-    val perSession = ivfCache.synchronized {
-      var m = ivfCache.get(s)
-      if (m == null) { m = scala.collection.concurrent.TrieMap.empty; ivfCache.put(s, m) }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
+  private val ivfCache = new graft.Session.Cache[Similarity.IvfIndex]
+  def ivfIndexFor(s: SparkSession, dir: String): Similarity.IvfIndex =
+    ivfCache(s, dir) {
       val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-")
-      deleteOnExit(tmp)
+      FsUtil.deleteOnExit(tmp)
       val built = Similarity.buildIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding")
       Similarity.writeIvfIndex(built, tmp.toString)
       built.unpersist() // drop the build-time cache; probes read from disk
       Similarity.openIvfIndex(s, tmp.toString)
-    })
-  }
+    }
 
   /** Compressed-ANN index per (session, dir) — same offline-build /
     * online-probe split as [[ivfIndexFor]]: the q119p gate prices the
     * recurring cost (cold partition-pruned probe of the int8 cells),
     * with the projection+fit+encode build running once per session.
     */
-  private val cannCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        graft.operators.CompressedAnn.Index]]()
-  def compressedAnnIndexFor(s: SparkSession, dir: String)
-      : graft.operators.CompressedAnn.Index = {
-    val perSession = cannCache.synchronized {
-      var m = cannCache.get(s)
-      if (m == null) { m = scala.collection.concurrent.TrieMap.empty; cannCache.put(s, m) }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
+  private val cannCache = new graft.Session.Cache[CompressedAnn.Index]
+  def compressedAnnIndexFor(s: SparkSession, dir: String): CompressedAnn.Index =
+    cannCache(s, dir) {
       val tmp = java.nio.file.Files.createTempDirectory("graft-cann-")
-      deleteOnExit(tmp)
-      val built = graft.operators.CompressedAnn.build(
+      FsUtil.deleteOnExit(tmp)
+      val built = CompressedAnn.build(
         t(s, dir, "embeddings"), "vec_id", "embedding", nlist = 32, outDim = 16)
-      graft.operators.CompressedAnn.write(built, tmp.toString)
+      CompressedAnn.write(built, tmp.toString)
       built.unpersist()
-      graft.operators.CompressedAnn.open(s, tmp.toString)
-    })
-  }
+      CompressedAnn.open(s, tmp.toString)
+    }
 
   /** PQ codebook + encoded corpus per (session, dir) — same offline-
     * build / online-probe split as the IVF index: training and
     * encoding are one-time artifact builds, the recurring cost is the
-    * ADC scan. Weak-keyed like [[ivfCache]].
+    * ADC scan. Cached like [[ivfCache]].
     */
-  private val pqCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        (graft.operators.Pq.PqCodebook, DataFrame)]]()
-  def pqIndexFor(s: SparkSession, dir: String): (graft.operators.Pq.PqCodebook, DataFrame) = {
-    val perSession = pqCache.synchronized {
-      var m = pqCache.get(s)
-      if (m == null) { m = scala.collection.concurrent.TrieMap.empty; pqCache.put(s, m) }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
-      import graft.operators.Pq
+  private val pqCache = new graft.Session.Cache[(Pq.PqCodebook, DataFrame)]
+  def pqIndexFor(s: SparkSession, dir: String): (Pq.PqCodebook, DataFrame) =
+    pqCache(s, dir) {
       val e = t(s, dir, "embeddings")
       val cb = Pq.train(e, "vec_id", "embedding", m = 8, ksub = 16, iters = 4)
       (cb, DiskSnapshot.diskCachedEager(Pq.encode(e, "embedding", cb)))
-    })
-  }
+    }
 
   /** Persisted dedup-snapshot signatures per (session, dir, family) —
     * the incremental daily-delta artifact ([[graft.operators.Dedup
@@ -140,39 +110,24 @@ object TextVector {
     * doc_id % 2 = 0; the q146 delta (doc_id % 3 = 0) overlaps it at
     * doc_id % 6 = 0 (exact dups, est 1.0 → dropped), shares the
     * corpus's natural near-dups across the slices, and carries fresh
-    * rows that must survive. Weak-keyed like [[ivfCache]].
+    * rows that must survive. Cached like [[ivfCache]].
     */
-  private val snapCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-  def dedupSnapshotFor(s: SparkSession, dir: String, family: HashFamily): DataFrame = {
-    val perSession = snapCache.synchronized {
-      var m = snapCache.get(s)
-      if (m == null) { m = scala.collection.concurrent.TrieMap.empty; snapCache.put(s, m) }
-      m
-    }
-    perSession.getOrElseUpdate(s"$dir#$family", {
+  private val snapCache = new graft.Session.Cache[DataFrame]
+  def dedupSnapshotFor(s: SparkSession, dir: String, family: HashFamily): DataFrame =
+    snapCache(s, s"$dir#$family") {
       val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-snap-")
-      deleteOnExit(tmp)
+      FsUtil.deleteOnExit(tmp)
       val snapDocs = t(s, dir, "documents").filter(col("doc_id") % 2 === 0)
       val sigs = Dedup.minhashSignatures(snapDocs, "doc_id", "text",
         shingleN = 3, k = 32, family = family)
       val out = tmp.resolve("sigs.parquet").toString
       sigs.write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-    })
-  }
+    }
 
   /** q147's staged streaming input files, one copy per (session, dir)
     * — see the gate's comment. */
-  private val stagedIngestInputs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def deleteOnExit(root: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try graft.io.FsUtil.deleteRecursively(root)
-      catch { case _: Throwable => () }
-    }))
+  private val stagedIngestInputs = new graft.Session.Cache[String]
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // token counting (whitespace tokenizer, codegen'd).
@@ -315,8 +270,8 @@ object TextVector {
     // xxhash64 planes + autoPlanes + budgeted ring.
     "q30_ann_lsh" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.lshTopKMd5(e, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5, nPlanes = 6)
+      Similarity.lshTopK(e, e.filter(col("vec_id") < 10),
+        "vec_id", "embedding", 5, nPlanes = 6, family = HashFamily.Md5)
     }),
 
     // IVF-Flat ANN. The GATE builds the coarse quantizer with the
@@ -360,8 +315,8 @@ object TextVector {
     // xxhash64 planes + autoPlanes tuning stay the production
     // default, cross-checked in SimilaritySpec.
     "q37_cosine_neardup_lsh" -> ((s, dir) => {
-      Similarity.cosineNearDupPairsMd5(t(s, dir, "embeddings"),
-        "vec_id", "embedding", threshold = 0.3, nPlanes = 6)
+      Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id",
+        "embedding", threshold = 0.3, nPlanes = 6, family = HashFamily.Md5)
     }),
 
     // SemDeDup-shaped semantic dedup: quantized md5-Lloyd cluster
@@ -860,29 +815,27 @@ object TextVector {
       // the staged INPUT is harness setup (same files every run — the
       // q49 stagedDir convention): cached per (session, dir).
       // Checkpoint + sink stay strictly per-run.
-      val in = stagedIngestInputs.synchronized {
-        stagedIngestInputs.getOrElseUpdate(s"${System.identityHashCode(s)}|$dir", {
-          val d = java.nio.file.Files.createTempDirectory("graft-ingest-in-")
-          deleteOnExit(d)
-          val docs = t(s, dir, "documents").select(col("doc_id"),
-            timestamp_seconds(lit(1700000000L) + (col("doc_id") % 7200L) * 131L)
-              .as("ts"),
+      val in = stagedIngestInputs(s, dir) {
+        val d = java.nio.file.Files.createTempDirectory("graft-ingest-in-")
+        FsUtil.deleteOnExit(d)
+        val docs = t(s, dir, "documents").select(col("doc_id"),
+          timestamp_seconds(lit(1700000000L) + (col("doc_id") % 7200L) * 131L)
+            .as("ts"),
+          col("text"))
+        docs.write.mode("overwrite").parquet(d.toString)
+        val closer = s.createDataFrame(
+          Seq(Row(999999999L, 1800000000L,
+            "the quick brown fox jumps over the lazy dog again and again today"))
+            .asJava,
+          StructType(Seq(StructField("doc_id", LongType),
+            StructField("sec", LongType), StructField("text", StringType))))
+          .select(col("doc_id"), timestamp_seconds(col("sec")).as("ts"),
             col("text"))
-          docs.write.mode("overwrite").parquet(d.toString)
-          val closer = s.createDataFrame(
-            Seq(Row(999999999L, 1800000000L,
-              "the quick brown fox jumps over the lazy dog again and again today"))
-              .asJava,
-            StructType(Seq(StructField("doc_id", LongType),
-              StructField("sec", LongType), StructField("text", StringType))))
-            .select(col("doc_id"), timestamp_seconds(col("sec")).as("ts"),
-              col("text"))
-          closer.write.mode("append").parquet(d.toString)
-          d.toString
-        })
+        closer.write.mode("append").parquet(d.toString)
+        d.toString
       }
       val base = java.nio.file.Files.createTempDirectory("graft-ingest-")
-      deleteOnExit(base)
+      FsUtil.deleteOnExit(base)
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("ts", TimestampType), StructField("text", StringType)))
       val q = graft.streaming.StreamingPipelines.corpusIngestToParquet(

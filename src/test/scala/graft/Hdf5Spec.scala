@@ -1246,6 +1246,18 @@ class Hdf5Spec extends SparkSpec {
       got.zip(want).foreach { case (g, w) => assert(g == w, s"compress = $compress") }
     }
   }
+
+  test("q66 round trip deletes its HDF5 file and keeps every supplier row") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def h5Dirs(): Set[String] =
+      Option(tmpRoot.list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith("graft-h5q-")).toSet
+    val before = h5Dirs()
+    val got = SparkEntry.queries("q66_hdf5_roundtrip")(spark, sf001)
+    assert(got.count() == graft.Tables(spark, sf001, "supplier").count())
+    val leaked = h5Dirs() -- before
+    assert(leaked.isEmpty, s"q66 left $leaked under $tmpRoot")
+  }
 }
 
 object Hdf5Spec {

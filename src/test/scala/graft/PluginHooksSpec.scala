@@ -109,4 +109,21 @@ class PluginHooksSpec extends SparkSpec {
       assert(back.steps(601).columns.contains("far"))
     } finally Hooks.clearAll()
   }
+
+  test("openAs applies type-keyed open hooks for parquet and json") {
+    // the same directory must open the same way through open and openAs
+    OCIO.Hooks.clear()
+    OCIO.Hooks.register("typed_halos")(d =>
+      d.copy(df = d.df.withColumn("typed", col("mass") > 1e13)))
+    try {
+      for (fmt <- Seq("parquet", "json")) {
+        val dir = java.nio.file.Files.createTempDirectory(s"graft_hookas_$fmt").toString
+        OCIO.writeAs(halos.copy(header = halos.header.copy(dataType = "typed_halos")),
+          dir, fmt)
+        val back = OCIO.openAs(spark, dir, fmt)
+        assert(back.columns.contains("typed"), s"$fmt skipped the type-keyed hook")
+        assert(back.df.filter(col("typed")).count() == 2, fmt)
+      }
+    } finally OCIO.Hooks.clear()
+  }
 }

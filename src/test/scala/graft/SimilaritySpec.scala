@@ -125,7 +125,8 @@ class SimilaritySpec extends SparkSpec {
     // the md5 gate kernel (q30's gate: static planes, complete
     // Hamming-2 ring) must hold the same recall floor — different
     // plane family, identical probe structure
-    val gate = Similarity.lshTopKMd5(e, q, "vec_id", "embedding", 5, nPlanes = 6)
+    val gate = Similarity.lshTopK(e, q, "vec_id", "embedding", 5, nPlanes = 6,
+        family = graft.operators.HashFamily.Md5)
       .collect().groupBy(_.getLong(0)).map { case (k, v) => k -> v.map(_.getLong(1)).toSet }
     val gateRecall = brute.map { case (k, t) =>
       (t & gate.getOrElse(k, Set.empty)).size.toDouble / t.size }.sum / brute.size
@@ -207,8 +208,9 @@ class SimilaritySpec extends SparkSpec {
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
     val exact = Similarity.cosineNearDupPairsExact(e, "vec_id", "embedding",
       threshold = 0.3).select("doc_a", "doc_b").collect().map(key).toSet
-    val gate = Similarity.cosineNearDupPairsMd5(e, "vec_id", "embedding",
-      threshold = 0.3, nPlanes = 6).select("doc_a", "doc_b").collect().map(key).toSet
+    val gate = Similarity.cosineNearDupPairs(e, "vec_id", "embedding",
+      threshold = 0.3, nPlanes = 6, family = graft.operators.HashFamily.Md5)
+      .select("doc_a", "doc_b").collect().map(key).toSet
     val prod = Similarity.cosineNearDupPairs(e, "vec_id", "embedding",
       threshold = 0.3, nPlanes = 6).select("doc_a", "doc_b").collect().map(key).toSet
     assert(gate.nonEmpty && gate.subsetOf(exact),
@@ -224,10 +226,11 @@ class SimilaritySpec extends SparkSpec {
   test("lshTopK probe fan-out is capped: no Hamming-2 ring above 12 planes") {
     import org.apache.spark.sql.catalyst.plans.logical.Generate
     import org.apache.spark.sql.catalyst.expressions.{CreateArray, Explode}
+    import graft.operators.HashFamily
     val e = Tables(spark, sf001, "embeddings")
-    def probes(nPlanes: Int): Int = {
+    def probes(nPlanes: Int, family: HashFamily = HashFamily.Xx): Int = {
       val df = Similarity.lshTopK(e, e.limit(2), "vec_id", "embedding", 5,
-        nPlanes = nPlanes)
+        nPlanes = nPlanes, family = family)
       df.queryExecution.analyzed.collect {
         case g: Generate => g.generator
       }.collectFirst {
@@ -243,6 +246,41 @@ class SimilaritySpec extends SparkSpec {
     assert(probes(13) == 1 + 13 + 66)
     assert(probes(16) == 1 + 16 + 66)
     assert(probes(24) == 1 + 24 + 66) // 301 probes before the budget existed
+    // the md5 gate probes the same complete ring, and refuses a plane
+    // count it cannot state statically or whose ring is budgeted
+    assert(probes(6, HashFamily.Md5) == 1 + 6 + 15)
+    assert(probes(12, HashFamily.Md5) == 1 + 12 + 66)
+    for (n <- Seq(0, 13)) {
+      val boom = intercept[IllegalArgumentException](probes(n, HashFamily.Md5))
+      assert(boom.getMessage.contains(
+        "gate kernel needs 1..12 static planes (full Hamming-2 ring)"), boom.getMessage)
+    }
+    val noPlanes = intercept[IllegalArgumentException](
+      Similarity.cosineNearDupPairs(e, "vec_id", "embedding", threshold = 0.3,
+        family = HashFamily.Md5))
+    assert(noPlanes.getMessage.contains("gate kernel needs an explicit plane count"))
+  }
+
+  test("lshBucket bit p is the sign of the family's projection component p") {
+    // the bucket and the JL projection share one plane family: each
+    // family's 8-plane bucket is the sign pattern of its outDim-8
+    // projection, row by row
+    import graft.operators.HashFamily
+    val e = Tables(spark, sf001, "embeddings")
+    for ((family, proj) <- Seq(
+        HashFamily.Xx -> randomProject(col("embedding"), 8, 64),
+        HashFamily.Md5 -> randomProjectMd5Q(col("embedding"), 8, 64))) {
+      val rows = e.select(family.lshBucket(col("embedding"), 8, 64),
+        transform(proj, c => c >= 0)).collect()
+      assert(rows.map(_.getLong(0)).distinct.length > 8, s"$family buckets degenerate")
+      rows.foreach { r =>
+        val signs = r.getSeq[Boolean](1)
+        (0 until 8).foreach { p =>
+          assert(((r.getLong(0) >> p) & 1L) == (if (signs(p)) 1L else 0L),
+            s"$family plane $p: bucket ${r.getLong(0)} vs signs $signs")
+        }
+      }
+    }
   }
 
   test("recall just above the Hamming-2 knee stays near the knee's") {
