@@ -34,13 +34,13 @@ object OCIO {
     */
   def open(spark: SparkSession, path: String,
            hooks: Seq[OCDataset => OCDataset] = Nil): OCDataset =
-    read(spark, path, "parquet", None, hooks)
+    read(spark, Seq(path), "parquet", None, hooks)
 
   /** Data-type-keyed open hooks (reference plugin registration,
     * plugins/hook.py:15-71: plugins declare which dataset types they
     * enrich — e.g. the lightcone plugin synthesizing redshift/ra/dec
     * columns at open, collection/lightcone/plugins.py:20-108). Hooks
-    * registered here run on every [[open]] and [[openAs]] whose sidecar
+    * registered here run on every [[open]], [[openAs]] and [[openMany]] whose sidecar
     * `data_type` matches, before any per-call hooks. Hooks are plan
     * rewrites — they add derived columns lazily, nothing executes at
     * open.
@@ -145,22 +145,30 @@ object OCIO {
     */
   def openAs(spark: SparkSession, path: String, format: String,
              csvSchema: Option[org.apache.spark.sql.types.StructType] = None): OCDataset =
-    read(spark, path, format, csvSchema, Nil)
+    read(spark, Seq(path), format, csvSchema, Nil)
 
   /** The one open path: header, the format's frame, then the partition
     * query hook (reference PartitionCtx, plugins/contexts.py:110-130),
-    * type-keyed [[Hooks]], per-call `hooks` and the DatasetOpen fold. */
-  private def read(spark: SparkSession, path: String, format: String,
+    * type-keyed [[Hooks]], per-call `hooks` and the DatasetOpen fold.
+    * Several `paths` read as one multi-path scan carrying the first
+    * header; their unit conventions must agree. */
+  private def read(spark: SparkSession, paths: Seq[String], format: String,
                    csvSchema: Option[org.apache.spark.sql.types.StructType],
                    hooks: Seq[OCDataset => OCDataset]): OCDataset = {
-    val header = Header.read(path)
+    val headers = paths.map(Header.read)
+    val header = headers.head
+    headers.tail.foreach { h =>
+      require(h.unitConvention == header.unitConvention,
+        s"mixed unit conventions: ${h.unitConvention} vs ${header.unitConvention}")
+    }
+    def files(name: String) = paths.map(p => s"$p/$name")
     val raw = format match {
-      case "parquet" => spark.read.parquet(s"$path/data.parquet")
-      case "json"    => spark.read.json(s"$path/data.json")
+      case "parquet" => spark.read.parquet(files("data.parquet"): _*)
+      case "json"    => spark.read.json(files("data.json"): _*)
       case "csv" =>
         val r = spark.read.option("header", "true")
         csvSchema.fold(r.option("inferSchema", "true"))(r.schema)
-          .csv(s"$path/data.csv")
+          .csv(files("data.csv"): _*)
       case other => throw new IllegalArgumentException(s"format $other")
     }
     val df = graft.plugins.Hooks.partition
@@ -297,17 +305,12 @@ object OCIO {
     * `oc.open(*paths)` merging multiple files of one data type,
     * io/io.py:59-113): a multi-path parquet scan — one distributed
     * read, no driver-side concat — with the first header carried
-    * (unit tables must agree; mismatching conventions throw).
+    * (unit tables must agree; mismatching conventions throw) and the
+    * open hooks applied as in [[open]].
     */
   def openMany(spark: SparkSession, paths: Seq[String]): OCDataset = {
     require(paths.nonEmpty, "openMany of nothing")
-    val headers = paths.map(Header.read)
-    headers.tail.foreach { h =>
-      require(h.unitConvention == headers.head.unitConvention,
-        s"mixed unit conventions: ${h.unitConvention} vs ${headers.head.unitConvention}")
-    }
-    val df = spark.read.parquet(paths.map(p => s"$p/data.parquet"): _*)
-    OCDataset(df, headers.head)
+    read(spark, paths, "parquet", None, Nil)
   }
 
   /** Open dispatch by sidecar dataType (reference oc.open,

@@ -30,12 +30,15 @@ object Evaluate {
     * order.
     */
   def rowWise(ds: OCDataset, outFields: Seq[StructField],
-              f: Row => Seq[Any]): OCDataset = {
-    val inSchema = ds.df.schema
-    val outSchema = StructType(inSchema.fields ++ outFields)
-    val rdd = ds.df.rdd.map(r => Row.fromSeq(r.toSeq ++ f(r)))
-    ds.copy(df = ds.df.sparkSession.createDataFrame(rdd, outSchema))
-  }
+              f: Row => Seq[Any]): OCDataset =
+    ds.copy(df = appendColumns(ds.df, outFields)(f))
+
+  /** The one row-append hop: `df`'s rows through an RDD map, each
+    * extended by `f`'s values for `fields`, in order. */
+  private[graft] def appendColumns(df: DataFrame, fields: Seq[StructField])(
+      f: Row => Seq[Any]): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd.map(r => Row.fromSeq(r.toSeq ++ f(r))),
+      StructType(df.schema.fields ++ fields))
 
   /** Append columns computed over bounded row batches — the vectorize/
     * batched strategies. `f` sees one batch at a time (so per-batch

@@ -73,12 +73,8 @@ object Multimodal {
     */
   final class ImageIoDecoder(featDim: Int = 8) extends Decoder {
     override def decode(p: Array[Byte]): Decoded = {
-      // ImageIO's default stream cache is DISK-backed (a temp file per
-      // payload — silent file churn per row at scale); payloads are
-      // already in memory, so force the memory cache in this task's JVM
-      javax.imageio.ImageIO.setUseCache(false)
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(p))
+      val iis = memoryCached(javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(p)))
       try {
         val readers = javax.imageio.ImageIO.getImageReaders(iis)
         require(readers.hasNext, "undecodable image payload (no ImageIO reader)")
@@ -167,14 +163,14 @@ object Multimodal {
     * [[AudioDecoder]].
     */
   private[operators] object AudioSpi {
-    lazy val readers: Array[javax.sound.sampled.spi.AudioFileReader] = {
-      val it = java.util.ServiceLoader
-        .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[javax.sound.sampled.spi.AudioFileReader]
-      while (it.hasNext) buf += it.next()
-      buf.filterNot(_.getClass.getName.contains("Midi")).toArray
+    /** Every installed provider of `cls`, one ServiceLoader scan. */
+    def providers[T: scala.reflect.ClassTag](cls: Class[T]): Array[T] = {
+      import scala.jdk.CollectionConverters._
+      java.util.ServiceLoader.load(cls).asScala.toArray
     }
+    lazy val readers: Array[javax.sound.sampled.spi.AudioFileReader] =
+      providers(classOf[javax.sound.sampled.spi.AudioFileReader])
+        .filterNot(_.getClass.getName.contains("Midi"))
     def open(p: Array[Byte]): javax.sound.sampled.AudioInputStream = {
       var i = 0
       while (i < readers.length) {
@@ -185,6 +181,61 @@ object Multimodal {
       }
       throw new javax.sound.sampled.UnsupportedAudioFileException(
         "no audio reader recognizes payload")
+    }
+  }
+
+  /** Receives one PCM sample: (frame, channel, centred sample). A SAM
+    * trait rather than a Function3, which would box every sample. */
+  private[operators] trait SampleVisitor {
+    def apply(frame: Int, channel: Int, sample: Long): Unit
+  }
+
+  /** One PCM payload read through [[AudioSpi]]: signed or unsigned
+    * PCM, 8/16/24/32-bit, either endianness, channels interleaved
+    * frame-major. Throws on anything else. */
+  private[operators] final class Pcm(p: Array[Byte]) {
+    import javax.sound.sampled.AudioFormat.Encoding
+    private val (format, data) = {
+      val ais = AudioSpi.open(p)
+      try (ais.getFormat, ais.readAllBytes()) finally ais.close()
+    }
+    private val enc = format.getEncoding
+    require(enc == Encoding.PCM_SIGNED || enc == Encoding.PCM_UNSIGNED,
+      s"unsupported audio encoding $enc (PCM_SIGNED/PCM_UNSIGNED only)")
+    val bits: Int = format.getSampleSizeInBits
+    require(bits == 8 || bits == 16 || bits == 24 || bits == 32,
+      s"unsupported PCM sample size $bits bits")
+    val channels: Int = format.getChannels
+    private val bps = bits / 8
+    private val frameSize = format.getFrameSize
+    require(frameSize == channels * bps,
+      s"unexpected PCM frame size $frameSize for $channels ch x $bps B")
+    val sampleRate: Int = format.getSampleRate.toInt
+    val nFrames: Int = data.length / frameSize
+
+    /** Visit every sample in frame order: unsigned PCM centred on 0,
+      * signed PCM sign-extended. */
+    def foreach(visit: SampleVisitor): Unit = {
+      val big = format.isBigEndian
+      val unsigned = enc == Encoding.PCM_UNSIGNED
+      var f = 0
+      while (f < nFrames) {
+        var c = 0
+        while (c < channels) {
+          val off = f * frameSize + c * bps
+          var v = 0L
+          var i = 0
+          while (i < bps) {
+            val b = data(off + i) & 0xFFL
+            v |= (if (big) b << (8 * (bps - 1 - i)) else b << (8 * i))
+            i += 1
+          }
+          visit(f, c, if (unsigned) v - (1L << (bits - 1))
+                      else (v << (64 - bits)) >> (64 - bits))
+          c += 1
+        }
+        f += 1
+      }
     }
   }
 
@@ -216,63 +267,24 @@ object Multimodal {
     //    MIDI reader is excluded (such payloads degrade to null like
     //    any other undecodable row).
     override def decode(p: Array[Byte]): Decoded = {
-      val ais = AudioSpi.open(p)
-      try {
-        import javax.sound.sampled.AudioFormat.Encoding
-        val fmt = ais.getFormat
-        val enc = fmt.getEncoding
-        require(enc == Encoding.PCM_SIGNED || enc == Encoding.PCM_UNSIGNED,
-          s"unsupported audio encoding $enc (PCM_SIGNED/PCM_UNSIGNED only)")
-        val bits = fmt.getSampleSizeInBits
-        require(bits == 8 || bits == 16 || bits == 24 || bits == 32,
-          s"unsupported PCM sample size $bits bits")
-        val ch = fmt.getChannels
-        val bps = bits / 8
-        val frameSize = fmt.getFrameSize
-        require(frameSize == ch * bps,
-          s"unexpected PCM frame size $frameSize for $ch ch x $bps B")
-        val data = ais.readAllBytes()
-        val nFrames = data.length / frameSize
-        val big = fmt.isBigEndian
-        val unsigned = enc == Encoding.PCM_UNSIGNED
-        val full = (1L << (bits - 1)).toDouble
-        val energy = new Array[Double](featDim)
-        val counts = new Array[Long](featDim)
-        var sumAbs = 0.0
-        var f = 0
-        while (f < nFrames) {
-          val bin = (f.toLong * featDim / nFrames).toInt
-          var c = 0
-          while (c < ch) {
-            val off = f * frameSize + c * bps
-            var v = 0L
-            var i = 0
-            while (i < bps) {
-              val b = data(off + i) & 0xFFL
-              v |= (if (big) b << (8 * (bps - 1 - i)) else b << (8 * i))
-              i += 1
-            }
-            // center unsigned PCM, sign-extend signed PCM
-            val s = (if (unsigned) v - (1L << (bits - 1))
-                     else (v << (64 - bits)) >> (64 - bits)) / full
-            sumAbs += math.abs(s)
-            energy(bin) += s * s
-            counts(bin) += 1
-            c += 1
-          }
-          f += 1
-        }
-        val feat = new Array[Float](featDim)
-        var i = 0
-        while (i < featDim) {
-          feat(i) = if (counts(i) == 0) 0f
-            else math.sqrt(energy(i) / counts(i)).toFloat
-          i += 1
-        }
-        val n = nFrames.toLong * ch
-        Decoded(fmt.getSampleRate.toInt, bits, nFrames, ch,
-          if (n == 0) 0.0 else sumAbs / n, feat)
-      } finally ais.close()
+      val pcm = new Pcm(p)
+      val nFrames = pcm.nFrames
+      val full = (1L << (pcm.bits - 1)).toDouble
+      val energy = new Array[Double](featDim)
+      val counts = new Array[Long](featDim)
+      var sumAbs = 0.0
+      pcm.foreach { (f, _, v) =>
+        val bin = (f.toLong * featDim / nFrames).toInt
+        val s = v / full
+        sumAbs += math.abs(s)
+        energy(bin) += s * s
+        counts(bin) += 1
+      }
+      val feat = Array.tabulate(featDim)(i =>
+        if (counts(i) == 0) 0f else math.sqrt(energy(i) / counts(i)).toFloat)
+      val n = nFrames.toLong * pcm.channels
+      Decoded(pcm.sampleRate, pcm.bits, nFrames, pcm.channels,
+        if (n == 0) 0.0 else sumAbs / n, feat)
     }
   }
 
@@ -283,14 +295,8 @@ object Multimodal {
     */
   // write-side twin of AudioDecoder.readers: AudioSystem.write pays
   // the same uncached per-call SPI discovery
-  @transient private lazy val audioWriters: Array[javax.sound.sampled.spi.AudioFileWriter] = {
-    val it = java.util.ServiceLoader
-      .load(classOf[javax.sound.sampled.spi.AudioFileWriter]).iterator()
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[javax.sound.sampled.spi.AudioFileWriter]
-    while (it.hasNext) buf += it.next()
-    buf.toArray
-  }
+  @transient private lazy val audioWriters: Array[javax.sound.sampled.spi.AudioFileWriter] =
+    AudioSpi.providers(classOf[javax.sound.sampled.spi.AudioFileWriter])
 
   def pcmBytes(sampleRate: Int, channels: Int, samples: Array[Short],
                aiff: Boolean = false): Array[Byte] = {
@@ -431,11 +437,9 @@ object Multimodal {
             }
             frameN = 3L * w * h
           case "MJPG" =>
-            javax.imageio.ImageIO.setUseCache(false)
             // zero-copy region view — p.slice would copy every frame
             // on the hot decode path
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(p, off, len))
+            val img = readImage(p, off, len)
             require(img != null, s"undecodable MJPEG frame $f")
             val raster = img.getRaster
             channels = raster.getNumBands
@@ -462,12 +466,8 @@ object Multimodal {
         binCnt(bin) += 1
         f += 1
       }
-      val feat = new Array[Float](featDim)
-      var i = 0
-      while (i < featDim) {
-        feat(i) = if (binCnt(i) == 0) 0f else (binSum(i) / binCnt(i)).toFloat
-        i += 1
-      }
+      val feat = Array.tabulate(featDim)(i =>
+        if (binCnt(i) == 0) 0f else (binSum(i) / binCnt(i)).toFloat)
       Decoded(w, h, nF, channels, if (n == 0) 0.0 else sum / n, feat)
     }
   }
@@ -491,6 +491,37 @@ object Multimodal {
     }
   }
 
+  /** Runs `io` with ImageIO's stream cache in memory. The default
+    * cache is DISK-backed (a temp file per payload — silent file churn
+    * per row at scale), and payloads are already in memory. Every image
+    * read and encode in this object goes through here. */
+  private def memoryCached[T](io: => T): T = {
+    javax.imageio.ImageIO.setUseCache(false)
+    io
+  }
+
+  /** Decode the image in `p(off until off + len)`; null when no ImageIO
+    * reader recognizes it. */
+  private def readImage(p: Array[Byte], off: Int, len: Int): java.awt.image.BufferedImage =
+    memoryCached(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p, off, len)))
+
+  /** Encode `img` in ImageIO's `format` ("png", "jpg"). */
+  private def encodeImage(img: java.awt.image.RenderedImage, format: String): Array[Byte] =
+    memoryCached {
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, format, bos)
+      bos.toByteArray
+    }
+
+  /** A `width × height` grayscale image holding `pixels` row-major. */
+  private def grayImage(width: Int, height: Int,
+                        pixels: Array[Byte]): java.awt.image.BufferedImage = {
+    val img = new java.awt.image.BufferedImage(
+      width, height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    img.getRaster.setDataElements(0, 0, width, height, pixels)
+    img
+  }
+
   /** Encode a grayscale image as PNG bytes (lossless, so a decode
     * round-trip recovers the exact pixel values). Driver- or
     * executor-side; used by [[synthesizeGrayPng]] and tests.
@@ -498,13 +529,7 @@ object Multimodal {
   def pngBytes(width: Int, height: Int, pixels: Array[Byte]): Array[Byte] = {
     require(pixels.length == width * height,
       s"pixels length ${pixels.length} != $width*$height")
-    javax.imageio.ImageIO.setUseCache(false) // no temp file per encode
-    val img = new java.awt.image.BufferedImage(
-      width, height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    img.getRaster.setDataElements(0, 0, width, height, pixels)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    encodeImage(grayImage(width, height, pixels), "png")
   }
 
   /** Encode a truecolor image as PNG bytes — the multi-band sibling
@@ -513,7 +538,6 @@ object Multimodal {
     * (row-major); band order is color-component order (0 = R). */
   def rgbPngBytes(width: Int, height: Int,
                   sample: (Int, Int) => Int): Array[Byte] = {
-    javax.imageio.ImageIO.setUseCache(false) // no temp file per encode
     val img = new java.awt.image.BufferedImage(
       width, height, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
     val raster = img.getRaster
@@ -526,10 +550,26 @@ object Multimodal {
       }
       i += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    encodeImage(img, "png")
   }
+
+  /** Append a `payload` column computed by `encode` from the values of
+    * `inputCols` (in order). A null in any input column gives a null
+    * payload without calling `encode`; `encode` returns null for its
+    * own degenerate inputs. An exception from `encode` fails the query.
+    */
+  private def appendPayload(df: DataFrame, inputCols: String*)(
+      encode: Seq[Any] => Array[Byte]): DataFrame = {
+    val idx = inputCols.map(df.schema.fieldIndex)
+    Evaluate.appendColumns(df, Seq(StructField("payload", BinaryType))) { r =>
+      Seq(if (idx.exists(r.isNullAt)) null else encode(idx.map(r.get)))
+    }
+  }
+
+  /** `n` gray pixels cycling through the ASCII codes of `hex`, starting
+    * at character `from`: pixel i is `hex[(from + i) mod len]`. */
+  private def hexPixels(hex: String, from: Int, n: Int): Array[Byte] =
+    Array.tabulate(n)(i => hex.charAt((from + i) % hex.length).toByte)
 
   /** Append a `payload` column holding a real grayscale PNG whose
     * pixels cycle through the ASCII codes of `hexCol` (an md5 hex
@@ -537,36 +577,15 @@ object Multimodal {
     * exercising the real decode path at any scale. Encoding runs
     * per-partition (no shuffle); the PNG bytes are genuinely
     * compressed, so the decode step downstream does real work.
+    * Degenerate inputs (null, empty hex, non-positive dims) degrade to
+    * a null payload — a poison row must not abort the stage.
     */
   def synthesizeGrayPng(df: DataFrame, hexCol: String, wCol: String,
-                        hCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("payload", BinaryType))
-    val hi = df.schema.fieldIndex(hexCol)
-    val wi = df.schema.fieldIndex(wCol)
-    val hti = df.schema.fieldIndex(hCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        // degenerate inputs (null, empty hex, non-positive dims)
-        // degrade to a null payload like the null case — a poison row
-        // must not abort the stage
-        val payload: Any =
-          if (r.isNullAt(hi) || r.isNullAt(wi) || r.isNullAt(hti) ||
-              r.getString(hi).isEmpty || r.getInt(wi) <= 0 || r.getInt(hti) <= 0)
-            null
-          else {
-            val hex = r.getString(hi)
-            val w = r.getInt(wi); val h = r.getInt(hti)
-            val px = new Array[Byte](w * h)
-            var i = 0
-            while (i < px.length) { px(i) = hex.charAt(i % hex.length).toByte; i += 1 }
-            pngBytes(w, h, px)
-          }
-        Row.fromSeq(r.toSeq :+ payload)
-      }
+                        hCol: String): DataFrame =
+    appendPayload(df, hexCol, wCol, hCol) { case Seq(hex: String, w: Int, h: Int) =>
+      if (hex.isEmpty || w <= 0 || h <= 0) null
+      else pngBytes(w, h, hexPixels(hex, 0, w * h))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
 
   /** Append a `payload` column holding a real RGB PNG whose band-b
     * sample at flat pixel index i (row-major) is the ASCII code of
@@ -579,28 +598,11 @@ object Multimodal {
     * degenerate inputs degrade to a null payload (poison-safe).
     */
   def synthesizeRgbPng(df: DataFrame, hexCol: String, wCol: String,
-                       hCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("payload", BinaryType))
-    val hi = df.schema.fieldIndex(hexCol)
-    val wi = df.schema.fieldIndex(wCol)
-    val hti = df.schema.fieldIndex(hCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload: Any =
-          if (r.isNullAt(hi) || r.isNullAt(wi) || r.isNullAt(hti) ||
-              r.getString(hi).isEmpty || r.getInt(wi) <= 0 || r.getInt(hti) <= 0)
-            null
-          else {
-            val hex = r.getString(hi)
-            rgbPngBytes(r.getInt(wi), r.getInt(hti),
-              (i, b) => hex.charAt((3 * i + b) % hex.length).toInt)
-          }
-        Row.fromSeq(r.toSeq :+ payload)
-      }
+                       hCol: String): DataFrame =
+    appendPayload(df, hexCol, wCol, hCol) { case Seq(hex: String, w: Int, h: Int) =>
+      if (hex.isEmpty || w <= 0 || h <= 0) null
+      else rgbPngBytes(w, h, (i, b) => hex.charAt((3 * i + b) % hex.length).toInt)
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
 
   /** Append a `payload` column holding a real WAV whose sine
     * frequency and duration derive from `nCol` — the audio analog of
@@ -608,28 +610,17 @@ object Multimodal {
     * exercising [[AudioDecoder]] at any scale. Per-partition encode,
     * no shuffle; null/negative inputs degrade to a null payload.
     */
-  def synthesizeSineWav(df: DataFrame, nCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("payload", BinaryType))
-    val ni = df.schema.fieldIndex(nCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload: Any =
-          if (r.isNullAt(ni) || r.getLong(ni) < 0) null
-          else {
-            val n = r.getLong(ni)
-            val rate = 8000
-            val len = (800 + n % 800).toInt
-            val freq = (120 + n % 200).toDouble
-            val samples = Array.tabulate[Short](len)(i =>
-              (math.sin(2 * math.Pi * freq * i / rate) * 30000).toShort)
-            pcmBytes(rate, 1, samples)
-          }
-        Row.fromSeq(r.toSeq :+ payload)
+  def synthesizeSineWav(df: DataFrame, nCol: String): DataFrame =
+    appendPayload(df, nCol) { case Seq(n: Long) =>
+      if (n < 0) null
+      else {
+        val rate = 8000
+        val len = (800 + n % 800).toInt
+        val freq = (120 + n % 200).toDouble
+        pcmBytes(rate, 1, Array.tabulate[Short](len)(i =>
+          (math.sin(2 * math.Pi * freq * i / rate) * 30000).toShort))
       }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
 
   /** Synthesize a deterministic mono 16-bit WAV per row — the audio
     * analog of [[synthesizeGrayPng]]: sample i is the ASCII code of
@@ -640,27 +631,12 @@ object Multimodal {
     * short hex or non-positive length degrade to a null payload.
     */
   def synthesizeHexWav(df: DataFrame, hexCol: String, lenCol: String,
-                       sampleRate: Int = 8000): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("payload", BinaryType))
-    val hi = df.schema.fieldIndex(hexCol)
-    val li = df.schema.fieldIndex(lenCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload: Any =
-          if (r.isNullAt(hi) || r.isNullAt(li)) null
-          else {
-            val hex = r.getString(hi)
-            val len = r.getInt(li)
-            if (hex == null || hex.length < 32 || len <= 0) null
-            else pcmBytes(sampleRate, 1,
-              Array.tabulate[Short](len)(i => hex.charAt(i % 32).toShort))
-          }
-        Row.fromSeq(r.toSeq :+ payload)
-      }
+                       sampleRate: Int = 8000): DataFrame =
+    appendPayload(df, hexCol, lenCol) { case Seq(hex: String, len: Int) =>
+      if (hex.length < 32 || len <= 0) null
+      else pcmBytes(sampleRate, 1,
+        Array.tabulate[Short](len)(i => hex.charAt(i % 32).toShort))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
 
   /** Encode grayscale frames as a real AVI container — the video
     * analog of [[pngBytes]]/[[pcmBytes]]: a deterministic test-corpus
@@ -677,15 +653,8 @@ object Multimodal {
     grayFrames.foreach(f => require(f.length == width * height,
       s"frame length ${f.length} != $width*$height"))
     val blobs: Seq[Array[Byte]] =
-      if (mjpeg) grayFrames.map { g =>
-        javax.imageio.ImageIO.setUseCache(false)
-        val img = new java.awt.image.BufferedImage(
-          width, height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        img.getRaster.setDataElements(0, 0, width, height, g)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "jpg", bos)
-        bos.toByteArray
-      } else grayFrames.map { g =>
+      if (mjpeg) grayFrames.map(g => encodeImage(grayImage(width, height, g), "jpg"))
+      else grayFrames.map { g =>
         val stride = (3 * width + 3) & ~3
         val out = new Array[Byte](stride * height)
         var y = 0
@@ -757,38 +726,12 @@ object Multimodal {
     * a null payload.
     */
   def synthesizeGrayAvi(df: DataFrame, hexCol: String, wCol: String,
-                        hCol: String, nFramesCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("payload", BinaryType))
-    val hi = df.schema.fieldIndex(hexCol)
-    val wi = df.schema.fieldIndex(wCol)
-    val hti = df.schema.fieldIndex(hCol)
-    val fi = df.schema.fieldIndex(nFramesCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload: Any =
-          if (r.isNullAt(hi) || r.isNullAt(wi) || r.isNullAt(hti) ||
-              r.isNullAt(fi) || r.getString(hi).isEmpty ||
-              r.getInt(wi) <= 0 || r.getInt(hti) <= 0 || r.getInt(fi) <= 0)
-            null
-          else {
-            val hex = r.getString(hi)
-            val w = r.getInt(wi); val h = r.getInt(hti); val nf = r.getInt(fi)
-            val frames = (0 until nf).map { f =>
-              val px = new Array[Byte](w * h)
-              var i = 0
-              while (i < px.length) {
-                px(i) = hex.charAt((f * w * h + i) % hex.length).toByte; i += 1
-              }
-              px
-            }
-            aviBytes(w, h, 25, frames)
-          }
-        Row.fromSeq(r.toSeq :+ payload)
-      }
+                        hCol: String, nFramesCol: String): DataFrame =
+    appendPayload(df, hexCol, wCol, hCol, nFramesCol) {
+      case Seq(hex: String, w: Int, h: Int, nf: Int) =>
+        if (hex.isEmpty || w <= 0 || h <= 0 || nf <= 0) null
+        else aviBytes(w, h, 25, (0 until nf).map(f => hexPixels(hex, f * w * h, w * h)))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
 
   /** Attach the typed metadata struct to a binary payload column —
     * pure column expressions, no decode needed (codegen'd; this is
@@ -802,33 +745,93 @@ object Multimodal {
       length(col(payloadCol)).cast("long").as("n_bytes"),
       md5(col(payloadCol)).as("checksum")))
 
-  /** Run the decoder per partition, appending [[FeatureType]] columns.
-    * Null AND undecodable payloads degrade to null features — at
-    * 100 TB a single poison row (truncated upload, mislabeled bytes)
-    * must never fail the task 4× and kill the job; filter
-    * `width IS NULL` downstream to audit the bad rows. One decoder
-    * instance per partition — the real cost model for codec init.
-    * Defaults to the REAL [[ImageIoDecoder]]; pass a [[StubDecoder]]
-    * for payload types with no codec in the JDK.
+  /** Append `fields` computed by `f` from the binary payload in
+    * `payloadCol` — the poison rule every decode operator shares. Every
+    * new field is null when the payload is null, when `f` returns null
+    * (e.g. an image too small to resize) or when `f` throws: at 100 TB
+    * a single poison row (truncated upload, mislabeled bytes) must
+    * never fail the task 4× and kill the job.
+    */
+  private def appendDecoded(df: DataFrame, payloadCol: String,
+                            fields: Seq[StructField])(
+      f: Array[Byte] => Seq[Any]): DataFrame = {
+    val idx = df.schema.fieldIndex(payloadCol)
+    val nulls: Seq[Any] = Seq.fill(fields.length)(null)
+    Evaluate.appendColumns(df, fields) { r =>
+      if (r.isNullAt(idx)) nulls
+      else try Option(f(r.getAs[Array[Byte]](idx))).getOrElse(nulls)
+      catch { case scala.util.control.NonFatal(_) => nulls }
+    }
+  }
+
+  /** Run the decoder per row, appending [[FeatureType]] columns.
+    * Null AND undecodable payloads degrade to null features (the
+    * [[appendDecoded]] poison rule); filter `width IS NULL` downstream
+    * to audit the bad rows. The decoder is deserialized once per task,
+    * so codec init amortizes over the partition. Defaults to the REAL
+    * [[ImageIoDecoder]]; pass a [[StubDecoder]] for payload types with
+    * no codec in the JDK.
     */
   def decodeFeatures(df: DataFrame, payloadCol: String,
-                     decoder: Decoder = new ImageIoDecoder()): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ FeatureType.fields)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val nulls: Seq[Any] = Seq(null, null, null, null, null, null)
-    val rdd = df.rdd.mapPartitions { it =>
-      // decoder is reused across the whole partition (init amortized)
-      it.map { r =>
-        val payload = if (r.isNullAt(idx)) null else r.getAs[Array[Byte]](idx)
-        val extra: Seq[Any] = if (payload == null) nulls
-        else try {
-          val d = decoder.decode(payload)
-          Seq(d.width, d.height, d.nFrames, d.channels, d.pxMean, d.feature.toSeq)
-        } catch { case scala.util.control.NonFatal(_) => nulls }
-        Row.fromSeq(r.toSeq ++ extra)
-      }
+                     decoder: Decoder = new ImageIoDecoder()): DataFrame =
+    appendDecoded(df, payloadCol, FeatureType.fields.toSeq) { p =>
+      val d = decoder.decode(p)
+      Seq(d.width, d.height, d.nFrames, d.channels, d.pxMean, d.feature.toSeq)
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
+
+  /** The area partition [[resizeFeatures]] and [[perceptualHash]]
+    * share: source pixel (r, c) belongs to cell
+    * floor(r·gH/h)·gW + floor(c·gW/w). Returns the per-cell, per-band
+    * sample sums (index cell·bands + band), the per-cell pixel counts
+    * and the band count — exact integers (band samples are ints, cells
+    * hold ≤ h·w of them).
+    */
+  private def areaGrid(img: java.awt.image.BufferedImage, gW: Int,
+                       gH: Int): (Array[Long], Array[Long], Int) = {
+    val (w, h) = (img.getWidth, img.getHeight)
+    val raster = img.getRaster
+    val nb = raster.getNumBands
+    val sums = new Array[Long](gW * gH * nb)
+    val counts = new Array[Long](gW * gH)
+    var rr = 0
+    while (rr < h) {
+      val ti = rr.toLong * gH / h
+      var cc = 0
+      while (cc < w) {
+        val cell = (ti * gW + cc.toLong * gW / w).toInt
+        var b = 0
+        while (b < nb) {
+          sums(cell * nb + b) += raster.getSample(cc, rr, b)
+          b += 1
+        }
+        counts(cell) += 1
+        cc += 1
+      }
+      rr += 1
+    }
+    (sums, counts, nb)
+  }
+
+  /** Bit i set iff cell i's mean sums(i)/counts(i) STRICTLY exceeds
+    * the mean over all cells, compared in exact integer arithmetic
+    * (sums(i)·totalCount > totalSum·counts(i)). The products stay in
+    * long math while totalCount ≤ `longLaneMax`; past it the exact
+    * BigInt lane takes over (≤ 64 comparisons, noise next to the
+    * decode). Empty cells give 0-bits.
+    */
+  private def aboveMeanBits(sums: Array[Long], counts: Array[Long],
+                            longLaneMax: Long): Long = {
+    val ts = sums.sum; val tc = counts.sum
+    val big = tc > longLaneMax
+    var bits = 0L
+    var i = 0
+    while (i < sums.length) {
+      val gt = if (big) BigInt(sums(i)) * tc > BigInt(ts) * counts(i)
+               else sums(i) * tc > ts * counts(i)
+      if (gt) bits |= (1L << i)
+      i += 1
+    }
+    bits
   }
 
   /** Deterministic image RESIZE (pixel-area-partition downscale) over
@@ -854,53 +857,19 @@ object Multimodal {
   def resizeFeatures(df: DataFrame, payloadCol: String,
                      outW: Int, outH: Int): DataFrame = {
     require(outW >= 1 && outH >= 1, s"resize to ${outW}x$outH")
-    val outSchema = StructType(df.schema.fields ++ Seq(
-      StructField("thumb_w", IntegerType),
-      StructField("thumb_h", IntegerType),
-      StructField("thumb_bands", IntegerType),
-      StructField("thumb", ArrayType(DoubleType, containsNull = false))))
-    val idx = df.schema.fieldIndex(payloadCol)
-    val nulls: Seq[Any] = Seq(null, null, null, null)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload = if (r.isNullAt(idx)) null else r.getAs[Array[Byte]](idx)
-        val extra: Seq[Any] = if (payload == null) nulls
-        else try {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(payload))
-          if (img == null || img.getWidth < outW || img.getHeight < outH) nulls
-          else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            val raster = img.getRaster
-            val nb = raster.getNumBands
-            val sums = new Array[Long](outW * outH * nb)
-            val counts = new Array[Long](outW * outH)
-            var rr = 0
-            while (rr < h) {
-              val ti = rr.toLong * outH / h
-              var cc = 0
-              while (cc < w) {
-                val tj = cc.toLong * outW / w
-                val cell = (ti * outW + tj).toInt
-                var b = 0
-                while (b < nb) {
-                  sums(cell * nb + b) += raster.getSample(cc, rr, b)
-                  b += 1
-                }
-                counts(cell) += 1
-                cc += 1
-              }
-              rr += 1
-            }
-            val thumb = Array.tabulate(outW * outH * nb)(i =>
-              sums(i).toDouble / counts(i / nb))
-            Seq(outW, outH, nb, thumb.toSeq)
-          }
-        } catch { case scala.util.control.NonFatal(_) => nulls }
-        Row.fromSeq(r.toSeq ++ extra)
+    appendDecoded(df, payloadCol, Seq(
+        StructField("thumb_w", IntegerType),
+        StructField("thumb_h", IntegerType),
+        StructField("thumb_bands", IntegerType),
+        StructField("thumb", ArrayType(DoubleType, containsNull = false)))) { p =>
+      val img = readImage(p, 0, p.length)
+      if (img == null || img.getWidth < outW || img.getHeight < outH) null
+      else {
+        val (sums, counts, nb) = areaGrid(img, outW, outH)
+        Seq(outW, outH, nb,
+          Array.tabulate(outW * outH * nb)(i => sums(i).toDouble / counts(i / nb)).toSeq)
       }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Perceptual average-hash (aHash) over the [[resizeFeatures]]
@@ -929,60 +898,19 @@ object Multimodal {
                      gridW: Int = 8, gridH: Int = 8): DataFrame = {
     require(gridW >= 1 && gridH >= 1 && gridW * gridH <= 64,
       s"phash grid ${gridW}x$gridH needs ${gridW * gridH} bits — max 64")
-    val outSchema = StructType(df.schema.fields :+
-      StructField("phash", LongType))
-    val idx = df.schema.fieldIndex(payloadCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload = if (r.isNullAt(idx)) null else r.getAs[Array[Byte]](idx)
-        val hash: Any = if (payload == null) null
-        else try {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(payload))
-          if (img == null) null
-          else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            val raster = img.getRaster
-            val nb = raster.getNumBands
-            val cells = gridW * gridH
-            val sums = new Array[Long](cells)
-            val counts = new Array[Long](cells)
-            var rr = 0
-            while (rr < h) {
-              val ti = rr.toLong * gridH / h
-              var cc = 0
-              while (cc < w) {
-                val cell = (ti * gridW + cc.toLong * gridW / w).toInt
-                var b = 0
-                while (b < nb) { sums(cell) += raster.getSample(cc, rr, b); b += 1 }
-                counts(cell) += nb
-                cc += 1
-              }
-              rr += 1
-            }
-            var ts = 0L; var tc = 0L; var i = 0
-            while (i < cells) { ts += sums(i); tc += counts(i); i += 1 }
-            // cross-multiplied compare stays in long math only while
-            // sample·tc² cannot reach 2⁶³ for ANY sample width
-            // getSample can return (int, up to 2³¹): 2³¹·(2¹⁵)² = 2⁶¹
-            // — past 32 Ki samples the exact BigInt lane takes over
-            // (64 comparisons, noise next to the decode)
-            val big = tc > (1L << 15)
-            var bits = 0L
-            i = 0
-            while (i < cells) {
-              val gt = if (big) BigInt(sums(i)) * tc > BigInt(ts) * counts(i)
-                       else sums(i) * tc > ts * counts(i)
-              if (gt) bits |= (1L << i)
-              i += 1
-            }
-            bits
-          }
-        } catch { case scala.util.control.NonFatal(_) => null }
-        Row.fromSeq(r.toSeq :+ hash)
+    appendDecoded(df, payloadCol, Seq(StructField("phash", LongType))) { p =>
+      val img = readImage(p, 0, p.length)
+      if (img == null) null
+      else {
+        val (bandSums, pixels, nb) = areaGrid(img, gridW, gridH)
+        val sums = Array.tabulate(gridW * gridH)(c =>
+          (0 until nb).foldLeft(0L)((s, b) => s + bandSums(c * nb + b)))
+        // the cross-multiplied compare stays in long math only while
+        // sample·tc² cannot reach 2⁶³ for ANY sample width getSample
+        // can return (int, up to 2³¹): 2³¹·(2¹⁵)² = 2⁶¹
+        Seq(aboveMeanBits(sums, pixels.map(_ * nb), 1L << 15))
       }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Audio perceptual fingerprint — the temporal-energy analog of
@@ -1007,75 +935,19 @@ object Multimodal {
   def audioFingerprint(df: DataFrame, payloadCol: String,
                        bins: Int = 32): DataFrame = {
     require(bins >= 1 && bins <= 64, s"afp bins $bins outside [1, 64]")
-    val outSchema = StructType(df.schema.fields :+
-      StructField("afp", LongType))
-    val idx = df.schema.fieldIndex(payloadCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload = if (r.isNullAt(idx)) null else r.getAs[Array[Byte]](idx)
-        val fp: Any = if (payload == null) null
-        else try {
-          val ais = AudioSpi.open(payload)
-          try {
-            import javax.sound.sampled.AudioFormat.Encoding
-            val fmt = ais.getFormat
-            val enc = fmt.getEncoding
-            require(enc == Encoding.PCM_SIGNED || enc == Encoding.PCM_UNSIGNED,
-              s"unsupported audio encoding $enc")
-            val bits = fmt.getSampleSizeInBits
-            require(bits == 8 || bits == 16 || bits == 24 || bits == 32,
-              s"unsupported PCM sample size $bits bits")
-            val ch = fmt.getChannels
-            val bps = bits / 8
-            val frameSize = fmt.getFrameSize
-            require(frameSize == ch * bps,
-              s"unexpected PCM frame size $frameSize")
-            val data = ais.readAllBytes()
-            val nFrames = data.length / frameSize
-            val big = fmt.isBigEndian
-            val unsigned = enc == Encoding.PCM_UNSIGNED
-            val es = new Array[Long](bins)
-            val ec = new Array[Long](bins)
-            var f = 0
-            while (f < nFrames) {
-              val bin = (f.toLong * bins / nFrames).toInt
-              var c = 0
-              while (c < ch) {
-                val off = f * frameSize + c * bps
-                var v = 0L
-                var i = 0
-                while (i < bps) {
-                  val b = data(off + i) & 0xFFL
-                  v |= (if (big) b << (8 * (bps - 1 - i)) else b << (8 * i))
-                  i += 1
-                }
-                val s = if (unsigned) v - (1L << (bits - 1))
-                        else (v << (64 - bits)) >> (64 - bits)
-                val q = if (bits > 16) s >> (bits - 16) else s
-                es(bin) += q * q
-                ec(bin) += 1
-                c += 1
-              }
-              f += 1
-            }
-            var ts = 0L; var tc = 0L; var i = 0
-            while (i < bins) { ts += es(i); tc += ec(i); i += 1 }
-            val bigLane = tc > (1L << 16)
-            var acc = 0L
-            i = 0
-            while (i < bins) {
-              val gt = if (bigLane) BigInt(es(i)) * tc > BigInt(ts) * ec(i)
-                       else es(i) * tc > ts * ec(i)
-              if (gt) acc |= (1L << i)
-              i += 1
-            }
-            acc
-          } finally ais.close()
-        } catch { case scala.util.control.NonFatal(_) => null }
-        Row.fromSeq(r.toSeq :+ fp)
+    appendDecoded(df, payloadCol, Seq(StructField("afp", LongType))) { p =>
+      val pcm = new Pcm(p)
+      val shift = math.max(0, pcm.bits - 16)
+      val es = new Array[Long](bins)
+      val ec = new Array[Long](bins)
+      pcm.foreach { (f, _, s) =>
+        val bin = (f.toLong * bins / pcm.nFrames).toInt
+        val q = s >> shift
+        es(bin) += q * q
+        ec(bin) += 1
       }
+      Seq(aboveMeanBits(es, ec, 1L << 16))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Frame sampling plan for video payloads: emit (frame_no, byte

@@ -243,13 +243,19 @@ object Similarity {
   }
 
   /** One-shot convenience: build + probe. Query-time use should build
-    * once ([[buildIvfIndex]]) and probe many times.
+    * once ([[buildIvfIndex]]) and probe many times. The probe result
+    * is materialized to a disk snapshot before the index's persisted
+    * corpus copy is released.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
-              iters: Int = 2): DataFrame =
-    ivfProbe(buildIvfIndex(corpus, idCol, vecCol, nlist, iters),
-      queries, idCol, vecCol, k, nprobe)
+              iters: Int = 2): DataFrame = {
+    val idx = buildIvfIndex(corpus, idCol, vecCol, nlist, iters)
+    val out = org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
+      ivfProbe(idx, queries, idCol, vecCol, k, nprobe))
+    idx.unpersist()
+    out
+  }
 
   /** Per-label centroids: explode to (label, pos, value), average per
     * dimension — a single hash-agg shuffle, linear in rows×dim.

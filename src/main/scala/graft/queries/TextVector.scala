@@ -835,17 +835,19 @@ object TextVector {
         d.toString
       }
       val base = java.nio.file.Files.createTempDirectory("graft-ingest-")
-      FsUtil.deleteOnExit(base)
-      val schema = StructType(Seq(StructField("doc_id", LongType),
-        StructField("ts", TimestampType), StructField("text", StringType)))
-      val q = graft.streaming.StreamingPipelines.corpusIngestToParquet(
-        s, in, schema, base.resolve("out").toString,
-        base.resolve("ckpt").toString, availableNow = true,
-        // a few hundred windows of state: 4 store partitions, not the
-        // cluster batch default (see corpusIngestToParquet)
-        statePartitions = Some(4))
-      q.awaitTermination()
-      s.read.parquet(base.resolve("out").toString)
+      try {
+        val schema = StructType(Seq(StructField("doc_id", LongType),
+          StructField("ts", TimestampType), StructField("text", StringType)))
+        val q = graft.streaming.StreamingPipelines.corpusIngestToParquet(
+          s, in, schema, base.resolve("out").toString,
+          base.resolve("ckpt").toString, availableNow = true,
+          // a few hundred windows of state: 4 store partitions, not the
+          // cluster batch default (see corpusIngestToParquet)
+          statePartitions = Some(4))
+        q.awaitTermination()
+        // materialize before the finally deletes the sink it reads
+        DiskSnapshot.diskCachedEager(s.read.parquet(base.resolve("out").toString))
+      } finally FsUtil.deleteRecursively(base)
     })
   )
 

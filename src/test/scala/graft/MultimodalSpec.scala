@@ -633,4 +633,69 @@ class MultimodalSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("max 64"))
   }
+
+  test("resizeFeatures and perceptualHash decode through ImageIO's memory cache") {
+    import javax.imageio.ImageIO
+    val png = Multimodal.pngBytes(4, 4, Array.tabulate[Byte](16)(i => (i * 16).toByte))
+    val df = Seq((1L, png)).toDF("id", "payload")
+    val before = ImageIO.getUseCache
+    try {
+      ImageIO.setUseCache(true)
+      assert(!Multimodal.perceptualHash(df, "payload").first().isNullAt(2))
+      assert(!ImageIO.getUseCache, "perceptualHash read through ImageIO's disk cache")
+      ImageIO.setUseCache(true)
+      assert(!Multimodal.resizeFeatures(df, "payload", 2, 2).first().isNullAt(2))
+      assert(!ImageIO.getUseCache, "resizeFeatures read through ImageIO's disk cache")
+    } finally ImageIO.setUseCache(before)
+  }
+
+  test("RGB PNG, AVI and WAV synthesizers: null and degenerate inputs give a null payload and keep the row") {
+    def nullPayloads(df: org.apache.spark.sql.DataFrame): Map[Long, Boolean] =
+      df.collect().map(r => r.getLong(0) -> r.isNullAt(r.fieldIndex("payload"))).toMap
+    val hex = "0123456789abcdef0123456789abcdef"
+    val img = Seq[(Long, Option[String], Option[Int], Option[Int])](
+      (1L, Some(hex), Some(3), Some(2)), (2L, None, Some(3), Some(2)),
+      (3L, Some(hex), None, Some(2)), (4L, Some(hex), Some(3), None),
+      (5L, Some(""), Some(3), Some(2)), (6L, Some(hex), Some(0), Some(2)),
+      (7L, Some(hex), Some(3), Some(-1))).toDF("id", "hex", "w", "h")
+    val imgWant = (1L to 7L).map(i => i -> (i != 1L)).toMap
+    assert(nullPayloads(Multimodal.synthesizeRgbPng(img, "hex", "w", "h")) == imgWant)
+
+    val avi = Seq[(Long, Option[String], Option[Int], Option[Int], Option[Int])](
+      (1L, Some(hex), Some(3), Some(2), Some(2)), (2L, None, Some(3), Some(2), Some(2)),
+      (3L, Some(hex), None, Some(2), Some(2)), (4L, Some(hex), Some(3), None, Some(2)),
+      (5L, Some(hex), Some(3), Some(2), None), (6L, Some(""), Some(3), Some(2), Some(2)),
+      (7L, Some(hex), Some(0), Some(2), Some(2)), (8L, Some(hex), Some(3), Some(0), Some(2)),
+      (9L, Some(hex), Some(3), Some(2), Some(0))).toDF("id", "hex", "w", "h", "nf")
+    assert(nullPayloads(Multimodal.synthesizeGrayAvi(avi, "hex", "w", "h", "nf")) ==
+      (1L to 9L).map(i => i -> (i != 1L)).toMap)
+
+    val sine = Seq[(Long, Option[Long])]((1L, Some(0L)), (2L, None), (3L, Some(-1L)))
+      .toDF("id", "n")
+    assert(nullPayloads(Multimodal.synthesizeSineWav(sine, "n")) ==
+      Map(1L -> false, 2L -> true, 3L -> true))
+
+    val wav = Seq[(Long, Option[String], Option[Int])](
+      (1L, Some(hex), Some(40)), (2L, None, Some(40)), (3L, Some(hex), None),
+      (4L, Some(hex.take(31)), Some(40)), (5L, Some(hex), Some(0)))
+      .toDF("id", "hex", "len")
+    assert(nullPayloads(Multimodal.synthesizeHexWav(wav, "hex", "len")) ==
+      Map(1L -> false, 2L -> true, 3L -> true, 4L -> true, 5L -> true))
+  }
+
+  test("audioFingerprint: AIFF (big-endian) and two identical stereo channels equal the mono WAV") {
+    val hex = "0123456789abcdef0123456789abcdef"
+    val mono = Array.tabulate[Short](70)(i => hex.charAt(i % 32).toShort)
+    val stereo = mono.flatMap(v => Array(v, v))
+    val clips = Seq(
+      (1L, Multimodal.pcmBytes(8000, 1, mono)),
+      (2L, Multimodal.pcmBytes(8000, 1, mono, aiff = true)),
+      (3L, Multimodal.pcmBytes(8000, 2, stereo)),
+      (4L, Multimodal.pcmBytes(8000, 2, stereo, aiff = true))).toDF("id", "payload")
+    val fps = Multimodal.audioFingerprint(clips, "payload", bins = 32).collect()
+      .map(r => r.getLong(0) -> r.getAs[Long]("afp")).toMap
+    val want = refAfp(mono.map(_.toInt), 32)
+    assert(want != 0L)
+    assert(fps == (1L to 4L).map(_ -> want).toMap)
+  }
 }

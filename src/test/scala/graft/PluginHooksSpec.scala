@@ -126,4 +126,22 @@ class PluginHooksSpec extends SparkSpec {
       }
     } finally OCIO.Hooks.clear()
   }
+
+  test("openMany applies type-keyed open hooks") {
+    OCIO.Hooks.clear()
+    OCIO.Hooks.register("typed_halos")(d =>
+      d.copy(df = d.df.withColumn("typed", col("mass") > 1e13)))
+    val dirs = Seq("a", "b").map(n =>
+      java.nio.file.Files.createTempDirectory(s"graft_hookmany_$n"))
+    try {
+      val typed = halos.copy(header = halos.header.copy(dataType = "typed_halos"))
+      dirs.foreach(d => OCIO.write(typed, d.toString))
+      val back = OCIO.openMany(spark, dirs.map(_.toString))
+      assert(back.columns.contains("typed"), "openMany skipped the type-keyed hook")
+      assert(back.df.filter(col("typed")).count() == 4)
+    } finally {
+      OCIO.Hooks.clear()
+      dirs.foreach(graft.io.FsUtil.deleteRecursively)
+    }
+  }
 }

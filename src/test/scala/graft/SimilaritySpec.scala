@@ -330,6 +330,23 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.4, s"ivf recall $recall")
   }
 
+  test("ivfTopK releases its persisted index and returns what the index probe returns") {
+    val e = Tables(spark, sf001, "embeddings")
+    val q = e.filter(col("vec_id") < 10)
+    // numCachedEntries is private[sql] in Scala, public in bytecode
+    val cm = spark.sharedState.cacheManager
+    def cached() = cm.getClass.getMethod("numCachedEntries").invoke(cm)
+    val before = cached()
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // nlist 12: a plan no other test caches, so a leak adds an entry
+    val got = pairs(Similarity.ivfTopK(e, q, "vec_id", "embedding", 5, nlist = 12))
+    assert(cached() == before, "ivfTopK left its index cached")
+    val idx = Similarity.buildIvfIndex(e, "vec_id", "embedding", nlist = 12)
+    try assert(got == pairs(Similarity.ivfProbe(idx, q, "vec_id", "embedding", 5)))
+    finally idx.unpersist()
+  }
+
   test("PQ: codes compress, ADC+rerank recall vs brute force") {
     import graft.operators.Pq
     val e = Tables(spark, sf001, "embeddings")

@@ -447,6 +447,20 @@ class StreamingSpec extends SparkSpec {
     assert(sessions.length == 2)
     assert(sessions.map(_.getLong(2)).sorted.toSeq == Seq(1L, 2L))
   }
+
+  test("q147 deletes its stream sink and checkpoint and keeps the batch twin's rows") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // the staged input (graft-ingest-in-*) is cached for the session
+    def runDirs(): Set[String] =
+      Option(tmpRoot.list()).getOrElse(Array.empty[String])
+        .filter(n => n.startsWith("graft-ingest-") && !n.startsWith("graft-ingest-in-"))
+        .toSet
+    val before = runDirs()
+    val got = SparkEntry.queries("q147_corpus_ingest_stream")(spark, sf001)
+    val leaked = runDirs() -- before
+    assert(leaked.isEmpty, s"q147 left $leaked under $tmpRoot")
+    assert(got.count() == SparkEntry.queries("q139_corpus_ingest")(spark, sf001).count())
+  }
 }
 
 /** Top-level fixture types (encoders need a TypeTag — method-local
