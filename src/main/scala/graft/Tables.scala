@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import graft.io.OCIO
 
 /** Loader for the driver-generated TPC-H-ish parquet tables
   * (see /root/repo/TESTDATA.md). One parquet file per table.
@@ -12,9 +15,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Open one table; the schema comes from its footer, so the open
+    * starts no Spark job (`graft.io.OCIO.parquet`). */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else OCIO.parquet(spark, Seq(s"$dir/$name.parquet"))
 
   /** Load + spread an under-partitioned scan across the cluster. The
     * gate-scale tables are ONE parquet split each, so every per-row-
@@ -68,10 +73,22 @@ object Tables {
     * TimestampType; the NTZ cast is analyzed under a pinned UTC
     * timezone (restored afterwards), so it never shifts the instant
     * regardless of the caller's session timezone.
+    *
+    * The footer tells the physical type before anything runs. Only an
+    * `INT64 TIMESTAMP(NANOS)` ts sets
+    * `spark.sql.legacy.parquet.nanosAsLong=true` on the session, and
+    * leaves it set: the vectorized reader's converter reads the conf
+    * again when the scan executes, after this method has returned. A
+    * TIMESTAMP[us] file leaves the conf as found. When no footer was
+    * read (`mergeSchema` on, or an unreadable file) the type is unknown
+    * and the conf is set as a NANOS file needs it.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val paths = Seq(s"$dir/events.parquet")
+    val footer = OCIO.footer(spark, paths)
+    if (footer.forall(nanos(_, "ts")))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = OCIO.parquet(spark, paths, footer)
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts",
@@ -85,7 +102,9 @@ object Tables {
         // timezone is restored rather than mutated as a side effect
         // of reading a table (a library loader must not silently
         // shift every later timezone-dependent expression in the
-        // session). EventsSpec pins both properties.
+        // session). StreamingSpec's "events loader preserves instants…"
+        // test pins both properties; OpenSchemaSpec pins the NANOS
+        // branch and the untouched `nanosAsLong`.
         val tzKey = "spark.sql.session.timeZone"
         val prevTz = spark.conf.get(tzKey)
         spark.conf.set(tzKey, "UTC")
@@ -95,5 +114,16 @@ object Tables {
         throw new IllegalArgumentException(
           s"events.ts has unexpected parquet type $other")
     }
+  }
+
+  /** Whether `column` is stored as `TIMESTAMP(NANOS)` (an INT64). */
+  private def nanos(footer: Footer, column: String): Boolean = {
+    val schema = footer.getParquetMetadata.getFileMetaData.getSchema
+    schema.containsField(column) &&
+      (schema.getType(schema.getFieldIndex(column)).getLogicalTypeAnnotation match {
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      })
   }
 }

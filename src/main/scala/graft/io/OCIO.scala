@@ -1,6 +1,9 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 import graft.core.{Header, OCDataset}
@@ -163,7 +166,7 @@ object OCIO {
     }
     def files(name: String) = paths.map(p => s"$p/$name")
     val raw = format match {
-      case "parquet" => spark.read.parquet(files("data.parquet"): _*)
+      case "parquet" => parquet(spark, files("data.parquet"))
       case "json"    => spark.read.json(files("data.json"): _*)
       case "csv" =>
         val r = spark.read.option("header", "true")
@@ -177,6 +180,61 @@ object OCIO {
       .foldLeft(OCDataset(df, header))((d, h) => h(d))
     graft.plugins.Hooks.datasetOpen.fold(opened)
   }
+
+  /** The one parquet open behind every library table read ([[read]],
+    * the collection children, `graft.Tables`, the index reloads). The
+    * schema is read from one footer on the driver and declared to the
+    * reader, so the open starts no Spark job (SURVEY §1.4: the schema
+    * is fixed per file, read, not inferred); `spark.read.parquet` reads
+    * the same footer inside a job. The footer is the one
+    * `ParquetUtils.inferSchema` would touch, converted by Spark's own
+    * `ParquetFileFormat.readSchema`, so `nanosAsLong`, `binaryAsString`,
+    * `int96AsTimestamp` and `inferTimestampNTZ` apply as under
+    * inference, and partition columns are still discovered from the
+    * directory names. Nothing is cached: a rewritten path shows its new
+    * footer. Without a footer (see [[footer]]) this is plain inference,
+    * with its errors.
+    */
+  private[graft] def parquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    parquet(spark, paths, footer(spark, paths))
+
+  /** [[parquet]] with the footer already read (`graft.Tables.events`
+    * inspects it first). */
+  private[graft] def parquet(spark: SparkSession, paths: Seq[String],
+                             footer: Option[Footer]): DataFrame =
+    footer.flatMap(GraftFooters.schema(_, spark))
+      .fold(spark.read)(spark.read.schema)
+      .parquet(paths: _*)
+
+  /** The footer schema inference would read for `paths`: in Spark's
+    * listing (names starting `_` or `.` skipped, summary files kept),
+    * `_common_metadata`, then `_metadata`, else the first data file by
+    * path. None when `spark.sql.parquet.mergeSchema` is on (every file
+    * counts then), when the paths hold no parquet file, or when the
+    * listing or the footer cannot be read. */
+  private[graft] def footer(spark: SparkSession, paths: Seq[String]): Option[Footer] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else st.getPath.getFileSystem(conf).listStatus(st.getPath).toSeq
+          .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+      val files = paths.flatMap { p =>
+        val path = new Path(p)
+        leaves(path.getFileSystem(conf).getFileStatus(path))
+      }.sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+        .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+        .flatMap(GraftFooters.read(conf, _))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Spark's listing filter (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
 
   /** Write a structure collection: parent at <path>/, children under
     * <path>/children/<name>/, each clustered by the link key so a
@@ -214,7 +272,7 @@ object OCIO {
     val childDir = new java.io.File(s"$path/children")
     val children = Option(childDir.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory)
-      .map(d => d.getName -> spark.read.parquet(d.getPath)).toMap
+      .map(d => d.getName -> parquet(spark, Seq(d.getPath))).toMap
     // the sidecar key (what the children were actually clustered by)
     // wins over the caller's guess
     graft.collections.StructureCollection(parent, children,
@@ -253,7 +311,7 @@ object OCIO {
     // ONE parquet read shared by every step (one driver file listing,
     // not one per step); each step filters it — partition-pruned scan
     // (PartitionFilters on step)
-    val all = spark.read.parquet(s"$path/data.parquet")
+    val all = parquet(spark, Seq(s"$path/data.parquet"))
     val steps = n.fieldNames().asScala.map { s =>
       val step = s.toInt
       val df = all.filter(col("step") === step).drop("step")

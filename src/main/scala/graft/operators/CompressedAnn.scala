@@ -100,9 +100,9 @@ object CompressedAnn {
       (0 until row.size()).map(j => row.get(j).asDouble()).toArray
     }.toArray
     val tl = TwoLevel.TwoLevelQuantizer(sup,
-      spark.read.parquet(s"$path/children.parquet"),
+      graft.io.OCIO.parquet(spark, Seq(s"$path/children.parquet")),
       node.get("kChild").asInt())
-    Index(tl, spark.read.parquet(s"$path/cells.parquet"),
+    Index(tl, graft.io.OCIO.parquet(spark, Seq(s"$path/cells.parquet")),
       node.get("outDim").asInt(), node.get("dim").asInt())
   }
 

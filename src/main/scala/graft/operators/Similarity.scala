@@ -239,7 +239,7 @@ object Similarity {
       val row = node.get(i)
       (0 until row.size()).map(j => row.get(j).asDouble()).toArray
     }.toArray
-    IvfIndex(spark.read.parquet(s"$path/cells.parquet"), cents)
+    IvfIndex(graft.io.OCIO.parquet(spark, Seq(s"$path/cells.parquet")), cents)
   }
 
   /** One-shot convenience: build + probe. Query-time use should build

@@ -442,7 +442,11 @@ class SimilaritySpec extends SparkSpec {
     // persisted index round-trip: probing the reopened index is identical
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
     Similarity.writeIvfIndex(idx, dir)
-    val reopened = Similarity.openIvfIndex(spark, dir)
+    val (reopened, openJobs) = withJobCount(Similarity.openIvfIndex(spark, dir))
+    assert(openJobs == 0, s"openIvfIndex started $openJobs job(s)")
+    // the cells are partitionBy("cell"): discovery still adds the column
+    assert(reopened.cells.schema == spark.read.parquet(s"$dir/cells.parquet").schema)
+    assert(reopened.cells.columns.contains("cell"))
     assert(reopened.nlist == idx.nlist)
     val again = Similarity.ivfProbe(reopened, e.filter(col("vec_id") < 5),
       "vec_id", "embedding", 5)

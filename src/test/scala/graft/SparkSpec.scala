@@ -7,6 +7,32 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf001 = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs it started, counted
+    * once the listener bus has delivered every event. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    // `listenerBus` is private[spark]; its drain is the only exact count
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, Long.box(60000L))
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      drain()
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -96,7 +96,12 @@ class TwoLevelSpec extends SparkSpec {
     // disk roundtrip: a reopened index probes to the identical result
     val tmp = java.nio.file.Files.createTempDirectory("graft-cann-spec-").toString
     CompressedAnn.write(idx, tmp)
-    val reopened = CompressedAnn.open(spark, tmp)
+    val (reopened, openJobs) = withJobCount(CompressedAnn.open(spark, tmp))
+    assert(openJobs == 0, s"CompressedAnn.open started $openJobs job(s)")
+    assert(reopened.cells.schema == spark.read.parquet(s"$tmp/cells.parquet").schema)
+    assert(reopened.cells.columns.contains("cell"))
+    assert(reopened.quantizer.children.schema ==
+      spark.read.parquet(s"$tmp/children.parquet").schema)
     val again = CompressedAnn.probe(reopened, e, q, "vec_id", "embedding", 5,
         topCandidates = 64, nprobeSuper = 4, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
