@@ -33,24 +33,24 @@ object Events {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Staged stream-input cache, keyed by (gate, source dir): the
-    * parquet staging of the INPUT table is harness setup (the same
+  /** Staged stream-input cache, keyed by (session, gate, source dir):
+    * the parquet staging of the INPUT table is harness setup (the same
     * table every run — analogous to the Bench IVF-index warmup), so
-    * one JVM stages it once and every repeat drains the same files.
-    * Checkpoints and sinks stay strictly per-run. Dirs are removed on
-    * JVM exit; one cached copy per (gate, sf) replaces the old
-    * per-run create+delete cycle.
+    * one session stages it once and every repeat drains the same
+    * files. Checkpoints and sinks stay strictly per-run. Dirs are
+    * removed on JVM exit; one cached copy per (gate, sf) replaces the
+    * old per-run create+delete cycle. Same scope as q147's staged
+    * input and the ANN indexes ([[graft.Session.Cache]]).
     */
-  private val stagedInputs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stagedDir(gate: String, srcDir: String)
+  private val stagedInputs = new graft.Session.Cache[String]
+  private def stagedDir(s: SparkSession, gate: String, srcDir: String)
                        (write: String => Unit): String =
-    stagedInputs.getOrElseUpdate(s"$gate|$srcDir", {
+    stagedInputs(s, s"$gate|$srcDir") {
       val d = java.nio.file.Files.createTempDirectory(s"graft-$gate-in-")
       write(d.toString)
       graft.io.FsUtil.deleteOnExit(d)
       d.toString
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // tumbling 1h window per event_type.
@@ -111,13 +111,13 @@ object Events {
       val batch = t(s, dir)
       val maxTs = batch.agg(max(col("ts"))).head().getTimestamp(0)
       val cutoff = maxTs.getTime / 1000
-      // staged input comes from the per-JVM cache (see stagedDir);
+      // staged input comes from the per-session cache (see stagedDir);
       // checkpoint is per-run and deleted once the trigger drains
       val ckpt = java.nio.file.Files.createTempDirectory("graft-q47-ck-")
       try {
         // stage through the converted batch frame (the raw files carry
         // TIMESTAMP(NANOS), which a schema'd stream source won't read)
-        val stage = stagedDir("q47", dir) { d =>
+        val stage = stagedDir(s, "q47", dir) { d =>
           batch.write.mode("append").parquet(d)
           val flushTs = new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)
           batch.limit(1).select(col("event_id"), lit(flushTs).as("ts"),
@@ -152,7 +152,7 @@ object Events {
       val batch = t(s, dir)
       val ckpt = java.nio.file.Files.createTempDirectory("graft-q122-ck-")
       try {
-        val stage = stagedDir("q122", dir) { d =>
+        val stage = stagedDir(s, "q122", dir) { d =>
           batch.write.mode("append").parquet(d)
         }
         val in = s.readStream.schema(batch.schema).parquet(stage)
@@ -189,7 +189,7 @@ object Events {
       val batch = t(s, dir)
       val ckpt = java.nio.file.Files.createTempDirectory("graft-q48-ck-")
       try {
-        val stage = stagedDir("q48", dir) { d =>
+        val stage = stagedDir(s, "q48", dir) { d =>
           batch.write.mode("append").parquet(d)
           batch.write.mode("append").parquet(d) // redelivery
         }
@@ -230,10 +230,10 @@ object Events {
         // the windows staging writes few files (coalesced): a 32-way
         // distinct() would otherwise scatter near-empty staged files
         // the stream source then lists and plans around
-        val stageE = stagedDir("q49e", dir) { d =>
+        val stageE = stagedDir(s, "q49e", dir) { d =>
           batch.write.mode("append").parquet(d)
         }
-        val stageW = stagedDir("q49w", dir) { d =>
+        val stageW = stagedDir(s, "q49w", dir) { d =>
           windows.coalesce(8).write.mode("append").parquet(d)
         }
         val eIn = s.readStream.schema(batch.schema).parquet(stageE)

@@ -4,17 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat_ws, explode, lit, md5, round, transform}
 import org.apache.spark.sql.graftshim.DiskSnapshot
 
-/** Production-twin driver gates (rows-only by design — no oracle).
+/** Production twins whose production side is a different operator
+  * from its gate's (rows-only by design — no oracle).
   *
-  * The qNN gate kernels that CORRECTNESS hash-checks are the
-  * md5/quantized DuckDB-replayable twins; the xxhash64/float kernels
-  * below are what actually runs at scale. Specs already assert
-  * gate == production results, but until this module the production
-  * kernels were bench-only: one could silently break while its gate
-  * stayed green. Each entry here runs the production kernel under the
-  * driver per round as a rows-only sanity gate (their hash outputs
-  * are NOT SQL-replayable — that is the entire reason the gate twins
-  * exist — so `oracle` is deliberately empty).
+  * Each oracled qNN gate runs a DuckDB-replayable kernel (md5 hashes,
+  * quantized Lloyd, exact integer math); the entries here run the
+  * operator that serves at scale instead: the float/xxhash64 ANN and
+  * k-means probes (q33p, q33Lp, q75p, q78p, q91p, q119p), SemDeDup
+  * (q101p, q101Sp, q101Lp), the banded SimHash (q27p), the HLL and
+  * TF-IDF kernels (q115p, q127p), the entropy/deflate signals (q128p),
+  * the tokenize → pack → Arrow handoff (q129p) and the CMS sketch
+  * build (q90s). Their outputs are not SQL-replayable, so `oracle` is
+  * deliberately empty and the driver records a rows-only check;
+  * COVERAGE.md's No-oracle map lists the specs that pin them against
+  * their gate or an exact baseline. Twins that differ from their
+  * gate only in the [[graft.operators.HashFamily]] are not here: they
+  * share their gate's builder in [[TextVector]].
   */
 object Production {
 
@@ -51,37 +56,11 @@ object Production {
         "vec_id", "embedding", cb, k = 5, rerank = 50,
         rawCorpus = Some(e))
     }),
-    // production xxhash64/float kernels, same parameters as their qNN
-    // gate twins.
-    "q26p_minhash_prod" -> ((s, dir) =>
-      graft.operators.Dedup.minhashCandidates(t(s, dir, "documents"),
-        "doc_id", "text", shingleN = 3, k = 32, bands = 8,
-        minEstimate = 0.5)),
+    // xxhash64 SimHash over four fixed 16-bit bands (the q27 gate is
+    // simhashPairsMd5: md5-bit signature, maxHamming+1 pigeonhole bands)
     "q27p_simhash_prod" -> ((s, dir) =>
       graft.operators.Dedup.simhashPairs(t(s, dir, "documents"),
         "doc_id", "text", maxHamming = 6)),
-    "q30p_ann_lsh_prod" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      graft.operators.Similarity.lshTopK(e, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5)
-    }),
-    // incremental daily-delta dedup, xxhash64 kernel: same slices as
-    // the q146 gate, against its own persisted (parquet, reopened
-    // cold) snapshot-signature artifact. DedupSpec asserts this and
-    // the md5 gate keep the same survivor set.
-    "q146p_incremental_dedup_prod" -> ((s, dir) =>
-      graft.operators.Dedup.dropSeenBefore(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 0),
-        "doc_id", "text",
-        TextVector.dedupSnapshotFor(s, dir, graft.operators.HashFamily.Xx),
-        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5)
-        .select(col("doc_id"), col("n_chars"))),
-    "q35p_dedup_pipeline_prod" -> ((s, dir) =>
-      graft.operators.Dedup.dropNearDuplicates(t(s, dir, "documents"),
-        "doc_id", "text", minEstimate = 0.5)),
-    "q37p_neardup_lsh_prod" -> ((s, dir) =>
-      graft.operators.Similarity.cosineNearDupPairs(t(s, dir, "embeddings"),
-        "vec_id", "embedding", threshold = 0.3)),
     "q78p_text_ann_prod" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = DiskSnapshot.diskCachedEager(
@@ -100,34 +79,6 @@ object Production {
     "q101p_semantic_dedup_prod" -> ((s, dir) =>
       graft.operators.Similarity.semanticDedup(t(s, dir, "embeddings"),
         "vec_id", "embedding", threshold = 0.3)),
-    "q102p_span_dedup_prod" -> ((s, dir) =>
-      graft.operators.Dedup.duplicatedSpans(t(s, dir, "documents"),
-        "doc_id", "text", windowTokens = 8)),
-    // the output filters pin evaluation under the bench's count():
-    // without them Catalyst eliminates the unique-key left join and
-    // prices the rewrite as a bare scan (same trap ScaleProbe hit)
-    "q103p_span_removal_prod" -> ((s, dir) =>
-      graft.operators.Dedup.removeDuplicatedSpans(t(s, dir, "documents"),
-          "doc_id", "text", windowTokens = 8)
-        .filter(org.apache.spark.sql.functions.length(col("clean_text")) >= 0)),
-    "q104p_span_decontam_prod" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Dedup.removeContaminatedSpans(docs, "doc_id", "text",
-          docs.filter(col("doc_id") % 50 === 0), "text", windowTokens = 8)
-        .filter(org.apache.spark.sql.functions.length(col("clean_text")) >= 0)
-    }),
-    "q105p_dedup_keepbest_prod" -> ((s, dir) =>
-      graft.operators.Dedup.dropNearDuplicatesBest(t(s, dir, "documents"),
-        "doc_id", "text", col("n_chars"), minEstimate = 0.5)),
-    "q106p_hash_split_prod" -> ((s, dir) =>
-      graft.operators.Sampling.hashSplit(t(s, dir, "documents"), "doc_id",
-        Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))),
-    // xxhash64 A-ES weighted sample (the q132 gate oracles the md5
-    // twin's identical key algebra)
-    "q132p_weighted_sample_prod" -> ((s, dir) =>
-      graft.operators.Sampling.weightedSample(t(s, dir, "documents"),
-          "doc_id", "n_chars", k = 100)
-        .select(col("doc_id"), col("key9"))),
     // THE FULL HANDOFF: tokenize (one-pass BPE kernel) → pack into
     // 512-token bins → export the packed bins as Arrow IPC shard
     // files → re-read the SHARDS distributedly → per-bin digest of
@@ -185,12 +136,6 @@ object Production {
           md5(concat_ws("|", transform(col("tfidf"),
             w => round(w * lit(1e9)).cast("long").cast("string")))
             .cast("binary")).as("vec_fp"))),
-    // xxhash64 line keys over the same synthesized multi-line corpus
-    // the q112 gate dedups with md5 keys
-    "q112p_line_dedup_prod" -> ((s, dir) =>
-      graft.operators.Dedup.removeDuplicatedLines(
-        graft.queries.TextVector.linedDocs(t(s, dir, "documents")),
-        "doc_id", "text")),
     // the composed compressed-ANN recipe (JL projection → int8 →
     // two-level IVF → exact rerank) end to end under the driver; each
     // stage is individually oracled (q114/q107/q101L/q33Lp), the
@@ -201,21 +146,12 @@ object Production {
         graft.queries.TextVector.compressedAnnIndexFor(s, dir), e,
         e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
     }),
-    // the xxhash64 per-group sampler behind the q116 md5 gate
-    "q116p_sample_per_group_prod" -> ((s, dir) =>
-      graft.operators.Sampling.sampleNPerGroup(t(s, dir, "documents"),
-        "doc_id", Seq("source"), 5)),
     // the xxhash64 b=12 HLL production kernel behind the q115 md5 gate
     "q115p_hll_distinct_prod" -> ((s, dir) =>
       graft.operators.CorpusStats.hllDistinct(
         t(s, dir, "documents").select(col("source"),
           explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")),
         Seq("source"), "tok")),
-    // the TWO-LEVEL quantizer under the driver, end to end through the
-    // REAL production path (TwoLevel.fit → assign → dominance): k is
-    // forced past nothing here — at gate scale auto-k stays flat, so
-    // semanticDedupLarge is invoked explicitly, exactly as a caller
-    // holding a prebuilt corpus count would route it.
     // the sharded cross-batch SemDeDup recipe under the driver:
     // per-shard fit + union survivors + one merge pass (spec pins
     // shard-merge == whole-corpus on planted cliques)
@@ -223,6 +159,11 @@ object Production {
       graft.operators.Similarity.semanticDedupSharded(
         t(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.3, shards = 2, k = 8)),
+    // the TWO-LEVEL quantizer under the driver, end to end through the
+    // REAL production path (TwoLevel.fit → assign → dominance): k is
+    // forced past nothing here — at gate scale auto-k stays flat, so
+    // semanticDedupLarge is invoked explicitly, exactly as a caller
+    // holding a prebuilt corpus count would route it.
     "q101Lp_semantic_dedup_large_prod" -> ((s, dir) =>
       graft.operators.Similarity.semanticDedupLarge(t(s, dir, "embeddings"),
         "vec_id", "embedding", threshold = 0.3, k = 32, iters = 2)),
@@ -242,9 +183,8 @@ object Production {
     })
   )
 
-  /** empty on purpose: these kernels' hashes are not SQL-replayable —
-    * the driver records the weaker rows-only check, which is exactly
-    * the insurance wanted here (specs pin gate == production values).
+  /** empty on purpose: these outputs are not SQL-replayable, so the
+    * driver records the weaker rows-only check (see the object doc).
     */
   val oracle: Map[String, String] = Map.empty
 }

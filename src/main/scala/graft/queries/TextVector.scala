@@ -129,6 +129,149 @@ object TextVector {
     * — see the gate's comment. */
   private val stagedIngestInputs = new graft.Session.Cache[String]
 
+  // Gate/production twins. Each builder below is written once and
+  // registered twice in `queries`: the gate name with HashFamily.Md5
+  // (SQL-replayable, oracled) and the `*p_*_prod` name with
+  // HashFamily.Xx (the production kernel, rows-only), so a production
+  // twin runs exactly its gate's slices, parameters and projection.
+  // TwinSpec pins each pair's relation.
+  private type Build = (SparkSession, String) => DataFrame
+
+  // MinHash+LSH candidate pairs. The md5 kernel is hash-exact in
+  // DuckDB (per-shingle md5 salted by component index, lexicographic
+  // min, banded bucket join); DedupSpec asserts both families recover
+  // the same pair set.
+  private def minhashPairs(family: HashFamily): Build = (s, dir) =>
+    Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text",
+      shingleN = 3, k = 32, bands = 8, minEstimate = 0.5, family = family)
+
+  // LSH-bucketed ANN. The gate runs the md5-plane kernel with 6 static
+  // planes — small enough that the Hamming-2 probe ring is complete,
+  // so the probe set is exactly "all buckets within Hamming distance
+  // 2" and the oracle states it directly as bit_count(xor(sig_q,
+  // sig_c)) <= 2 over replayed signatures, then re-ranks by exact
+  // cosine. Production passes nPlanes = 0: autoPlanes + budgeted ring.
+  private def lshAnn(family: HashFamily, nPlanes: Int): Build = (s, dir) => {
+    val e = t(s, dir, "embeddings")
+    Similarity.lshTopK(e, e.filter(col("vec_id") < 10),
+      "vec_id", "embedding", 5, nPlanes = nPlanes, family = family)
+  }
+
+  // LSH-bucketed cosine near-dup (the linear-shuffle scale path). The
+  // gate's oracle rebuilds every bucket bit from md5-derived hyperplane
+  // weights at a static plane count, replays the bucket self-join, then
+  // applies the exact cosine filter; production passes nPlanes = 0
+  // (autoPlanes), cross-checked against the exact pairs in TwinSpec.
+  private def lshNearDup(family: HashFamily, nPlanes: Int): Build = (s, dir) =>
+    Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id",
+      "embedding", threshold = 0.3, nPlanes = nPlanes, family = family)
+
+  // SUBSTRING-level exact dedup (arXiv:2107.06499 shape): every
+  // 8-token window occurring >= 2 times in the corpus marks its
+  // position; marked windows merge per doc into maximal
+  // [span_start, span_end) spans. md5 window hashes let the oracle
+  // replay the marked set verbatim.
+  private def spanDedup(family: HashFamily): Build = (s, dir) =>
+    Dedup.duplicatedSpans(t(s, dir, "documents"), "doc_id", "text",
+      windowTokens = 8, family = family)
+
+  // The output filters of the three rewrites below reference the
+  // rewrite's OUTPUT, so a count() cannot let Catalyst eliminate the
+  // unique-key left join and price the query as a bare scan (verify
+  // writes the frame anyway; this pins the same honest cost under count).
+
+  // LINE-level dedup (C4/CCNet boilerplate removal): the fixture
+  // corpus is single-line, so linedDocs synthesizes multi-line docs
+  // deterministically (8-token lines + a shared boilerplate banner on
+  // every third doc — the op's actual target shape) and every
+  // non-canonical repeated line is stripped.
+  private def lineDedup(family: HashFamily): Build = (s, dir) =>
+    Dedup.removeDuplicatedLines(linedDocs(t(s, dir, "documents")),
+        "doc_id", "text", family = family)
+      .filter(length(col("clean_text")) >= 0)
+
+  // span REMOVAL: rewrite docs with duplicated windows cut, keeping the
+  // first global occurrence (canonical = min (doc,pos) per hash);
+  // token-granular with a canonical-cover carve-out so self-overlapping
+  // runs keep one full copy.
+  private def spanRemoval(family: HashFamily): Build = (s, dir) =>
+    Dedup.removeDuplicatedSpans(t(s, dir, "documents"), "doc_id", "text",
+        windowTokens = 8, family = family)
+      .filter(length(col("clean_text")) >= 0)
+
+  // span-level benchmark decontamination: every 8-token window of the
+  // "benchmark" (docs with doc_id % 50 = 0 — stands in for a held-out
+  // eval set, and plants real leaked content since those docs are in
+  // the corpus) cuts covered tokens from every doc.
+  private def spanDecontam(family: HashFamily): Build = (s, dir) => {
+    val docs = t(s, dir, "documents")
+    Dedup.removeContaminatedSpans(docs, "doc_id", "text",
+        docs.filter(col("doc_id") % 50 === 0), "text", windowTokens = 8,
+        family = family)
+      .filter(length(col("clean_text")) >= 0)
+  }
+
+  // end-to-end near-dup removal: LSH candidates -> connected components
+  // -> keep min id per cluster. The oracle replays the q26 pair CTE,
+  // then resolves components with a recursive transitive-closure CTE —
+  // a doc is dropped iff it reaches a smaller id. bands = 8 is also
+  // lshParams(32, 0.5)'s pick.
+  private def dedupPipeline(family: HashFamily): Build = (s, dir) =>
+    Dedup.dropNearDuplicates(t(s, dir, "documents"), "doc_id", "text",
+      bands = 8, minEstimate = 0.5, family = family)
+      .select(col("doc_id"), col("n_chars"))
+
+  // incremental daily-delta dedup: the delta slice (doc_id % 3 = 0)
+  // dedups against the PERSISTED snapshot-signature artifact of the
+  // corpus slice doc_id % 2 = 0 in the same family (built once per
+  // session, written to parquet, reopened cold — dedupSnapshotFor).
+  // Exact overlaps (doc_id % 6 = 0) and cross-slice near-dups drop;
+  // fresh rows survive. The oracle replays the signature CTEs for BOTH
+  // slices, bands both, verifies, anti-joins.
+  private def incrementalDedup(family: HashFamily): Build = (s, dir) =>
+    Dedup.dropSeenBefore(
+      t(s, dir, "documents").filter(col("doc_id") % 3 === 0),
+      "doc_id", "text", dedupSnapshotFor(s, dir, family),
+      shingleN = 3, k = 32, bands = 8, minEstimate = 0.5, family = family)
+      .select(col("doc_id"), col("n_chars"))
+
+  // quality-aware dedup: q35's candidate/component pipeline, but each
+  // duplicate cluster keeps its argmax-n_chars member (ties -> smallest
+  // id) — the keep-best survivor policy (RefinedWeb/FineWeb). The
+  // oracle extends q35's recursive closure with a component-label CTE
+  // and replays the two-stage winner (max score per label, min id
+  // among ties).
+  private def dedupKeepBest(family: HashFamily): Build = (s, dir) =>
+    Dedup.dropNearDuplicatesBest(t(s, dir, "documents"), "doc_id",
+      "text", col("n_chars"), bands = 8, minEstimate = 0.5, family = family)
+      .select(col("doc_id"), col("n_chars"))
+
+  // deterministic seeded train/val/test split: hash bucket vs integer
+  // thresholds (round(cum * 2^32)), replayed verbatim by the oracle's
+  // CASE chain.
+  private def hashSplit(family: HashFamily): Build = (s, dir) =>
+    graft.operators.Sampling.hashSplit(t(s, dir, "documents"),
+      "doc_id", Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)),
+      family = family)
+      .select(col("doc_id"), col("split"))
+
+  // weighted sampling without replacement (Efraimidis–Spirakis A-ES):
+  // rank by nano-quantized ln(u)/w with u from hash(id#seed),
+  // w = n_chars — the quality-weighted corpus subsampler. Top-100 keys,
+  // ties by weight desc then id.
+  private def weightedSample(family: HashFamily): Build = (s, dir) =>
+    graft.operators.Sampling.weightedSample(t(s, dir, "documents"),
+        "doc_id", "n_chars", k = 100, family = family)
+      .select(col("doc_id"), col("key9"))
+
+  // deterministic 5-doc-per-source uniform sample (eval panels): keep
+  // the 5 smallest hash(id#seed) per group via the two-phase salted
+  // window (SamplingSpec pins salt-invariance + determinism).
+  private def samplePerGroup(family: HashFamily): Build = (s, dir) =>
+    graft.operators.Sampling.sampleNPerGroup(t(s, dir, "documents"),
+        "doc_id", Seq("source"), 5, family = family)
+      .select(col("doc_id"), col("source"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // token counting (whitespace tokenizer, codegen'd).
     "q20_token_count" -> ((s, dir) => {
@@ -169,16 +312,8 @@ object TextVector {
       Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.8)
     }),
 
-    // MinHash+LSH candidate pairs. The GATE runs the md5 kernel
-    // (hash-exact DuckDB replay: per-shingle md5 salted by component
-    // index, lexicographic min, banded bucket join); the xxhash64
-    // kernel stays the production default and DedupSpec asserts both
-    // recover the same pair set.
-    "q26_minhash_pairs" -> ((s, dir) => {
-      Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text",
-        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5,
-        family = HashFamily.Md5)
-    }),
+    "q26_minhash_pairs" -> minhashPairs(HashFamily.Md5),
+    "q26p_minhash_prod" -> minhashPairs(HashFamily.Xx),
 
     // SimHash near-dup pairs. GATE = md5-bit signature with
     // maxHamming+1 disjoint bands — exact by pigeonhole, so the
@@ -261,18 +396,8 @@ object TextVector {
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", 5)
     }),
 
-    // LSH-bucketed ANN. The GATE runs the md5-plane kernel with 6
-    // static planes — small enough that the Hamming-2 probe ring is
-    // complete, so the probe set is exactly "all buckets within
-    // Hamming distance 2" and the oracle states it directly as
-    // bit_count(xor(sig_q, sig_c)) <= 2 over replayed signatures,
-    // then re-ranks by exact cosine. Production keeps lshTopK's
-    // xxhash64 planes + autoPlanes + budgeted ring.
-    "q30_ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.lshTopK(e, e.filter(col("vec_id") < 10),
-        "vec_id", "embedding", 5, nPlanes = 6, family = HashFamily.Md5)
-    }),
+    "q30_ann_lsh" -> lshAnn(HashFamily.Md5, nPlanes = 6),
+    "q30p_ann_lsh_prod" -> lshAnn(HashFamily.Xx, nPlanes = 0),
 
     // IVF-Flat ANN. The GATE builds the coarse quantizer with the
     // quantized md5-init Lloyd loop (bit-replayable centroids), probes
@@ -306,18 +431,8 @@ object TextVector {
         "vec_id", "embedding", threshold = 0.4)
     }),
 
-    // LSH-bucketed cosine near-dup (the linear-shuffle scale path;
-    // rows-only — recall cross-checked in SimilaritySpec).
-    // LSH-bucketed cosine near-dup. The GATE runs the md5-plane
-    // kernel with a static plane count (the oracle rebuilds every
-    // bucket bit from md5-derived hyperplane weights, replays the
-    // bucket self-join, then applies the exact cosine filter); the
-    // xxhash64 planes + autoPlanes tuning stay the production
-    // default, cross-checked in SimilaritySpec.
-    "q37_cosine_neardup_lsh" -> ((s, dir) => {
-      Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id",
-        "embedding", threshold = 0.3, nPlanes = 6, family = HashFamily.Md5)
-    }),
+    "q37_cosine_neardup_lsh" -> lshNearDup(HashFamily.Md5, nPlanes = 6),
+    "q37p_neardup_lsh_prod" -> lshNearDup(HashFamily.Xx, nPlanes = 0),
 
     // SemDeDup-shaped semantic dedup: quantized md5-Lloyd cluster
     // assignment + within-cluster keep-lowest-id cosine pruning.
@@ -340,54 +455,14 @@ object TextVector {
         "vec_id", "embedding", threshold = 0.3, k = 32)
     }),
 
-    // SUBSTRING-level exact dedup (arXiv:2107.06499 shape): every
-    // 8-token window occurring >= 2 times in the corpus marks its
-    // position; marked windows merge per doc into maximal
-    // [span_start, span_end) spans. GATE = md5 window hashes so the
-    // oracle replays the marked set verbatim; production keeps
-    // xxhash64 (same spans, DedupSpec pins equality).
-    "q102_span_dedup" -> ((s, dir) => {
-      Dedup.duplicatedSpans(t(s, dir, "documents"), "doc_id", "text",
-        windowTokens = 8, family = HashFamily.Md5)
-    }),
-
-    // LINE-level dedup (C4/CCNet boilerplate removal): the fixture
-    // corpus is single-line, so the gate synthesizes multi-line docs
-    // deterministically (8-token lines + a shared boilerplate banner
-    // on every third doc — the op's actual target shape) and strips
-    // every non-canonical repeated line. GATE = md5 line keys.
-    "q112_line_dedup" -> ((s, dir) => {
-      Dedup.removeDuplicatedLines(linedDocs(t(s, dir, "documents")),
-          "doc_id", "text", family = HashFamily.Md5)
-        .filter(length(col("clean_text")) >= 0)
-    }),
-
-    // span REMOVAL: rewrite docs with duplicated windows cut, keeping
-    // the first global occurrence (canonical = min (doc,pos) per
-    // hash); token-granular with a canonical-cover carve-out so
-    // self-overlapping runs keep one full copy. GATE = md5 hashes.
-    "q103_span_removal" -> ((s, dir) => {
-      // the always-true filter references the rewrite's OUTPUT so the
-      // bench's count() cannot let Catalyst eliminate the unique-key
-      // left join and price the query as a bare scan (verify writes
-      // the frame anyway; this pins the same honest cost under count)
-      Dedup.removeDuplicatedSpans(t(s, dir, "documents"), "doc_id", "text",
-          windowTokens = 8, family = HashFamily.Md5)
-        .filter(length(col("clean_text")) >= 0)
-    }),
-
-    // span-level benchmark decontamination: every 8-token window of
-    // the "benchmark" (docs with doc_id % 50 = 0 — stands in for a
-    // held-out eval set, and plants real leaked content since those
-    // docs are in the corpus) cuts covered tokens from every doc.
-    "q104_span_decontam" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // same count()-proof output filter as q103
-      Dedup.removeContaminatedSpans(docs, "doc_id", "text",
-          docs.filter(col("doc_id") % 50 === 0), "text", windowTokens = 8,
-          family = HashFamily.Md5)
-        .filter(length(col("clean_text")) >= 0)
-    }),
+    "q102_span_dedup" -> spanDedup(HashFamily.Md5),
+    "q102p_span_dedup_prod" -> spanDedup(HashFamily.Xx),
+    "q112_line_dedup" -> lineDedup(HashFamily.Md5),
+    "q112p_line_dedup_prod" -> lineDedup(HashFamily.Xx),
+    "q103_span_removal" -> spanRemoval(HashFamily.Md5),
+    "q103p_span_removal_prod" -> spanRemoval(HashFamily.Xx),
+    "q104_span_decontam" -> spanDecontam(HashFamily.Md5),
+    "q104p_span_decontam_prod" -> spanDecontam(HashFamily.Xx),
 
     // per-label embedding centroids (vector aggregation).
     "q31_label_centroids" -> ((s, dir) => {
@@ -402,82 +477,18 @@ object TextVector {
         ceil(length(col("text").cast("binary")) / lit(64.0)).cast("long").as("n_chunks"))
     }),
 
-    // end-to-end near-dup removal: LSH candidates -> connected
-    // components -> keep min id per cluster. The GATE runs the md5
-    // kernel end to end (the oracle replays the q26 pair CTE, then
-    // resolves components with a recursive transitive-closure CTE —
-    // a doc is dropped iff it reaches a smaller id); the xxhash64
-    // kernel stays the production default and DedupSpec asserts both
-    // keep the same survivor set.
-    "q35_dedup_pipeline" -> ((s, dir) => {
-      Dedup.dropNearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-        bands = 8, minEstimate = 0.5, family = HashFamily.Md5)
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    // incremental daily-delta dedup: the delta slice (doc_id % 3 = 0)
-    // dedups against the PERSISTED snapshot-signature artifact of the
-    // corpus slice doc_id % 2 = 0 (built once per session, written to
-    // parquet, reopened cold — dedupSnapshotFor). Exact overlaps
-    // (doc_id % 6 = 0) and cross-slice near-dups drop; fresh rows
-    // survive. GATE = md5 kernel (the oracle replays the signature
-    // CTEs for BOTH slices, bands both, verifies, anti-joins);
-    // production twin q146p runs the xxhash64 kernel on the same
-    // slices against its own persisted snapshot.
-    "q146_incremental_dedup" -> ((s, dir) => {
-      Dedup.dropSeenBefore(
-        t(s, dir, "documents").filter(col("doc_id") % 3 === 0),
-        "doc_id", "text",
-        dedupSnapshotFor(s, dir, HashFamily.Md5),
-        shingleN = 3, k = 32, bands = 8, minEstimate = 0.5,
-        family = HashFamily.Md5)
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    // quality-aware dedup: same md5 candidate/component pipeline as
-    // q35, but each duplicate cluster keeps its argmax-n_chars member
-    // (ties -> smallest id) — the keep-best survivor policy
-    // (RefinedWeb/FineWeb). The oracle extends q35's recursive
-    // closure with a component-label CTE and replays the two-stage
-    // winner (max score per label, min id among ties).
-    "q105_dedup_keepbest" -> ((s, dir) => {
-      Dedup.dropNearDuplicatesBest(t(s, dir, "documents"), "doc_id",
-        "text", col("n_chars"), bands = 8, minEstimate = 0.5,
-        family = HashFamily.Md5)
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    // deterministic seeded train/val/test split: md5 bucket vs
-    // integer thresholds (round(cum * 2^32)), replayed verbatim by
-    // the oracle's CASE chain. Production twin (q106p) runs the
-    // xxhash64 kernel.
-    "q106_hash_split" -> ((s, dir) => {
-      graft.operators.Sampling.hashSplit(t(s, dir, "documents"),
-        "doc_id", Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)),
-        family = HashFamily.Md5)
-        .select(col("doc_id"), col("split"))
-    }),
-
-    // weighted sampling without replacement (Efraimidis–Spirakis
-    // A-ES): rank by nano-quantized ln(u)/w with u from md5(id#seed),
-    // w = n_chars — the quality-weighted corpus subsampler. Top-100
-    // keys, ties by weight desc then id. Production twin q132p runs
-    // the xxhash64 key.
-    "q132_weighted_sample" -> ((s, dir) => {
-      graft.operators.Sampling.weightedSample(t(s, dir, "documents"),
-          "doc_id", "n_chars", k = 100, family = HashFamily.Md5)
-        .select(col("doc_id"), col("key9"))
-    }),
-
-    // deterministic 5-doc-per-source uniform sample (eval panels):
-    // keep the 5 smallest md5(id#seed) per group via the two-phase
-    // salted window. GATE = md5 ordering; production = xxhash64
-    // (q116p; SamplingSpec pins salt-invariance + determinism).
-    "q116_sample_per_group" -> ((s, dir) => {
-      graft.operators.Sampling.sampleNPerGroup(t(s, dir, "documents"),
-          "doc_id", Seq("source"), 5, family = HashFamily.Md5)
-        .select(col("doc_id"), col("source"))
-    }),
+    "q35_dedup_pipeline" -> dedupPipeline(HashFamily.Md5),
+    "q35p_dedup_pipeline_prod" -> dedupPipeline(HashFamily.Xx),
+    "q146_incremental_dedup" -> incrementalDedup(HashFamily.Md5),
+    "q146p_incremental_dedup_prod" -> incrementalDedup(HashFamily.Xx),
+    "q105_dedup_keepbest" -> dedupKeepBest(HashFamily.Md5),
+    "q105p_dedup_keepbest_prod" -> dedupKeepBest(HashFamily.Xx),
+    "q106_hash_split" -> hashSplit(HashFamily.Md5),
+    "q106p_hash_split_prod" -> hashSplit(HashFamily.Xx),
+    "q132_weighted_sample" -> weightedSample(HashFamily.Md5),
+    "q132p_weighted_sample_prod" -> weightedSample(HashFamily.Xx),
+    "q116_sample_per_group" -> samplePerGroup(HashFamily.Md5),
+    "q116p_sample_per_group_prod" -> samplePerGroup(HashFamily.Xx),
 
     // multimodal decode pipeline with a REAL codec: synthesize a
     // deterministic grayscale PNG per doc (pixels = md5-hex ASCII

@@ -386,6 +386,22 @@ class PlanShapeSpec extends SparkSpec {
         s"text shuffles in: $e"))
   }
 
+  test("span and line rewrites keep their left join under count(), production twins included") {
+    // each rewrite's output filter must keep count() from eliminating
+    // the unique-key left join and pricing the query as a bare scan
+    Seq("q103_span_removal", "q103p_span_removal_prod", "q104_span_decontam",
+        "q104p_span_decontam_prod", "q112_line_dedup", "q112p_line_dedup_prod")
+      .foreach { q =>
+        val counted = SparkEntry.queries(q)(spark, sf001).groupBy().count()
+          .queryExecution.optimizedPlan
+        val leftJoins = counted.collect {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join
+            if j.joinType == org.apache.spark.sql.catalyst.plans.LeftOuter => j
+        }
+        assert(leftJoins.nonEmpty, s"$q: count() pruned the rewrite:\n$counted")
+      }
+  }
+
   test("per-group sampler plans salted windows, not one global sort") {
     val p = plan("q116_sample_per_group")
     assert(!p.contains("Exchange SinglePartition"),

@@ -448,6 +448,21 @@ class StreamingSpec extends SparkSpec {
     assert(sessions.map(_.getLong(2)).sorted.toSeq == Seq(1L, 2L))
   }
 
+  test("q47 repeated in one session drains its staged input again, staging no new copy") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged(): Set[String] =
+      Option(tmpRoot.list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith("graft-q47-in-")).toSet
+    val first = SparkEntry.queries("q47_stream_tumbling")(spark, sf001)
+      .collect().map(_.toString).sorted.toSeq
+    val before = staged()
+    assert(before.nonEmpty, s"q47 staged no graft-q47-in-* dir under $tmpRoot")
+    val again = SparkEntry.queries("q47_stream_tumbling")(spark, sf001)
+      .collect().map(_.toString).sorted.toSeq
+    assert(staged() == before, s"repeat staged ${staged() -- before}")
+    assert(first.nonEmpty && again == first)
+  }
+
   test("q147 deletes its stream sink and checkpoint and keeps the batch twin's rows") {
     val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
     // the staged input (graft-ingest-in-*) is cached for the session
