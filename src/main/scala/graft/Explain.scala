@@ -1,5 +1,8 @@
 package graft
-/** Dev tool: dump formatted plans for selected queries. */
+/** Dev tool: dump formatted plans for selected queries. To compare
+  * plan text, dump q83 and q98 each in its own JVM: their distinct-
+  * aggregate `Expand` orders grouping sets by expression hash, which
+  * moves with the queries built before them. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val spark = Session.local(4)

@@ -17,9 +17,9 @@ object Clustering {
 
   /** Fitted model: k centroids, per-row (id, cluster, dist2), and the
     * within-cluster sum of squares (the Lloyd objective). The
-    * assignments are backed by the persisted index frame — call
-    * [[KMeansModel.unpersist]] when done (a hyperparameter sweep that
-    * never releases pins one cached corpus copy per fit).
+    * assignments are backed by the index's disk snapshot:
+    * [[KMeansModel.unpersist]] frees its blocks now, and a model
+    * dropped without it is reaped by the ContextCleaner.
     */
   final case class KMeansModel(centroids: Array[Array[Double]],
                                assignments: DataFrame,
@@ -81,7 +81,7 @@ object Clustering {
         element_at(Lloyd.cellDists(col("__qv"), cents), col("cluster") + 1))
       .select(col("__id").as(idCol), col("cluster"),
         round(col("__d2"), 6).as("dist2")))
-    q.unpersist()
+    DiskSnapshot.release(q)
     out
   }
 
@@ -105,7 +105,7 @@ object Clustering {
     // shared dominance rule (fused graft_cosine — IEEE-identical to
     // the HOF folds the SQL oracle replays)
     val out = Similarity.keptRows(asg, threshold, idCol)
-    q.unpersist()
+    DiskSnapshot.release(q)
     out
   }
 
@@ -134,7 +134,7 @@ object Clustering {
     val out = DiskSnapshot.diskCachedEager(Similarity.topKByCosine(
       cells.join(broadcast(probes), "cell").filter(col("query_id") =!= col("neighbor_id")),
       col("qv"), col("cv"), k))
-    q.unpersist()
+    DiskSnapshot.release(q)
     out
   }
 
@@ -182,16 +182,13 @@ object Clustering {
       .select(col("__id"), col("__vec"),
         (col("__super") * kChild + col("__child")).as("cluster")))
     val out = Similarity.keptRows(asg, threshold, idCol)
-    // `out` is materialized and the gate chain (asg → withSuper → q's
-    // cache) is corpus-sized: free ALL of it NOW rather than waiting
-    // for a GC + ContextCleaner cycle. `out` keeps lineage, so an
-    // executor loss recomputes through the released chain; both
+    // `out` is materialized and the gate chain (asg → withSuper → q,
+    // one lineage) is corpus-sized: free ALL of it NOW rather than
+    // waiting for a GC + ContextCleaner cycle. `out` keeps lineage, so
+    // an executor loss recomputes through the released chain; both
     // consumers of withSuper (the child Lloyd and asg) are already
-    // materialized, so releasing it here is safe. The child centroids
-    // are driver-side plan literals — nothing of theirs to release.
+    // materialized. The child centroids are plan literals.
     DiskSnapshot.release(asg)
-    DiskSnapshot.release(withSuper)
-    q.unpersist()
     out
   }
 
@@ -391,17 +388,16 @@ object Clustering {
   }
 
   /** Shared quantized md5-init Lloyd loop behind [[kmeansMd5]] and
-    * [[ivfTopKMd5]]: returns the persisted quantized frame
+    * [[ivfTopKMd5]]: returns the disk-snapshotted quantized frame
     * (`__id`, `__vec` original, `__qv` = round(x·scale) — caller
-    * unpersists) and the final centroids. Every cross-engine
+    * releases) and the final centroids. Every cross-engine
     * replayability property lives here; see [[kmeansMd5]].
     */
   private[operators] def lloydMd5(df: DataFrame, idCol: String, vecCol: String,
                                   k: Int, iters: Int,
                                   scale: Int): (DataFrame, Array[Array[Double]]) = {
-    val q = df.select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-        Lloyd.quantize(col(vecCol), scale).as("__qv"))
-      .persist()
+    val q = DiskSnapshot.diskCached(df.select(col(idCol).as("__id"),
+      col(vecCol).as("__vec"), Lloyd.quantize(col(vecCol), scale).as("__qv")))
     (q, Lloyd.flat(q, col("__qv"), md5Key, k, iters))
   }
 
@@ -427,9 +423,8 @@ object Clustering {
                 vecCol: String, k: Int, m: Int = 8, ksub: Int = 16,
                 iters: Int = 2, rerank: Int = 50, scale: Int = 1024): DataFrame = {
     graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
-    val q0 = corpus.select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-        Lloyd.quantize(col(vecCol), scale).as("__qv"))
-      .persist()
+    val q0 = DiskSnapshot.diskCached(corpus.select(col(idCol).as("__id"),
+      col(vecCol).as("__vec"), Lloyd.quantize(col(vecCol), scale).as("__qv")))
     val cents = pqCodebooks(q0, m, ksub, iters)
     val enc = q0.select(col("__id").as("neighbor_id"),
       array(perSubspace(col("__qv"), cents)(Lloyd.nearestCell): _*).as("__codes"))
@@ -454,7 +449,7 @@ object Clustering {
         cand.select(col("query_id"), col("neighbor_id"), col("qv")).join(raw, "neighbor_id"),
         col("qv"), col("cv"), k)
       .select(col("query_id"), col("neighbor_id"), col("rank")))
-    q0.unpersist()
+    DiskSnapshot.release(q0)
     out
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.DiskSnapshot
 import graft.functions.VectorFunctions
 
 /** The composed 100 TB ANN recipe — each stage is an independently
@@ -37,7 +38,7 @@ object CompressedAnn {
     * projector config needed to route queries the same way. */
   final case class Index(quantizer: TwoLevel.TwoLevelQuantizer,
                          cells: DataFrame, outDim: Int, dim: Int) {
-    def unpersist(): Unit = { cells.unpersist(); quantizer.unpersist() }
+    def unpersist(): Unit = { DiskSnapshot.release(cells); quantizer.unpersist() }
   }
 
   // float projection: the quantizer/index stack runs on array<float>
@@ -54,16 +55,14 @@ object CompressedAnn {
     // unpersisted proj recomputes the outDim x dim multiply-adds over
     // the WHOLE corpus on every one of those passes. DISK_ONLY,
     // lineage-preserving, ContextCleaner-reaped with the index.
-    val proj = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
+    val proj = DiskSnapshot.diskCached(
       corpus.select(col(idCol).as("neighbor_id"),
         project(col(vecCol), outDim, dim).as("pv")))
     val tl = TwoLevel.fit(proj, "neighbor_id", "pv", nlist, iters)
-    val cells = tl.assign(proj, "pv", "cell")
+    val cells = DiskSnapshot.diskCachedEager(tl.assign(proj, "pv", "cell")
       .withColumn("scale", VectorFunctions.int8Scale(col("pv")))
       .select(col("cell"), col("neighbor_id"), col("scale"),
-        VectorFunctions.int8Quantize(col("pv"), col("scale")).as("qv8"))
-      .persist()
-    cells.count()
+        VectorFunctions.int8Quantize(col("pv"), col("scale")).as("qv8")))
     Index(tl, cells, outDim, dim)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.DiskSnapshot
 import graft.functions.TextFunctions._
 
 /** The md5-family MinHash affine constants — one definition shared by
@@ -134,8 +135,7 @@ object Dedup {
     // MEMORY_AND_DISK persist) keeps the corpus-sized signature frame
     // OFF the executor heap, keeps lineage, and is ContextCleaner-
     // reaped with the result — no CacheManager entry to unpersist.
-    val sigs = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      minhashSignatures(df, idCol, textCol, shingleN, k, family))
+    val sigs = DiskSnapshot.diskCached(minhashSignatures(df, idCol, textCol, shingleN, k, family))
     // Candidate pairs carry ONLY ids through the bucket join + distinct;
     // signatures re-attach afterwards (two slim joins on doc id).
     val buckets = sigs.select(col("doc"),
@@ -168,7 +168,7 @@ object Dedup {
     // recomputes (through the sigs snapshot, which now stays
     // referenced on DISK rather than heap until the caller releases
     // the result — ContextCleaner reaps both together).
-    org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(scored)
+    DiskSnapshot.diskCachedEager(scored)
   }
 
   /** (doc, sig) md5-bit SimHash signatures — the map-side kernel of
@@ -260,8 +260,7 @@ object Dedup {
     // snapshot FIRST: the signature build (decode / tokenize+hash)
     // must price once — the bound probe and both join sides read the
     // slim (doc, sig) snapshot
-    val sigs = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      sigsIn.select(col(idCol).as("doc"), col(sigCol).as("sig")))
+    val sigs = DiskSnapshot.diskCached(sigsIn.select(col(idCol).as("doc"), col(sigCol).as("sig")))
     val nBands = if (exact) {
       val probe = sigs.select(col("doc")).limit((SimhashGateMaxDocs + 1).toInt).count()
       require(probe <= SimhashGateMaxDocs,
@@ -413,7 +412,7 @@ object Dedup {
     while (!done && i < maxIters) {
       // one round = large-star then small-star, ONE blocking checksum
       val next = roundCheckpoint(smallStar(largeStar(edges)))
-      edges.unpersist()
+      DiskSnapshot.release(edges)
       edges = next
       val c = checksum(edges)
       if (c._1 == prev._1 && (c._2 == prev._2 ||
@@ -546,7 +545,7 @@ object Dedup {
     // feeds THREE consumers (the per-label max, the winner join, the
     // doomed join) — without a snapshot each one re-scans the corpus
     // for the (id, score) projection and re-runs the comps join
-    val members = org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
+    val members = DiskSnapshot.diskCachedEager(
       df.select(col(idCol).as("__m"), score.as("__q"))
         .join(comps, col("__m") === col("node"))
         .select(col("__m"), col("__q"), col("label")))
@@ -754,8 +753,7 @@ object Dedup {
     // consumed TWICE (the dup-count agg and the marked semi-join) —
     // snapshot the slim (doc, pos, h) frame so the per-row kernel is
     // paid once; ContextCleaner reaps it with the result frame
-    val wins = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      windowHashes(df, idCol, textCol, w, family))
+    val wins = DiskSnapshot.diskCached(windowHashes(df, idCol, textCol, w, family))
     val dup = wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("h"))
     val marked = wins.join(dup, Seq("h"), "left_semi")
@@ -798,8 +796,7 @@ object Dedup {
     require(w > 0, s"windowTokens=$w must be positive")
     // consumed twice (canon agg + occ join) — snapshot like
     // duplicatedSpans so the window kernel is paid once
-    val wins = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
-      windowHashes(df, idCol, textCol, w, family))
+    val wins = DiskSnapshot.diskCached(windowHashes(df, idCol, textCol, w, family))
     // canonical occurrence per duplicated hash = min (doc, pos)
     val dup = wins.groupBy(col("h"))
       .agg(count(lit(1)).as("c"), min(struct(col("doc"), col("pos"))).as("canon"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.DiskSnapshot
 
 /** Corpus-shaping operators for training-data pipelines: deterministic
   * token-budget sampling and train/eval decontamination. No driver
@@ -453,8 +454,8 @@ object Sampling {
     graft.plans.GraftExtensions.registerAll(train.sparkSession)
     def grams(c: Column) = call_function("graft_ngram_hashes",
       transform(split(c, " "), t => xxhash64(t)), lit(n))
-    val benchGrams = bench.select(explode(grams(col(benchText))).as("g")).distinct()
-      .persist()
+    val benchGrams = DiskSnapshot.diskCached(
+      bench.select(explode(grams(col(benchText))).as("g")).distinct())
     try {
       val nGrams = math.max(benchGrams.count(), 1L)
       // standard bloom sizing: m = -n·ln(p)/ln(2)²
@@ -474,7 +475,8 @@ object Sampling {
       val keys = Seq(
         "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> nGrams,
         "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits)
-      val saved = keys.map { case (k, _) => k -> conf.getOption(k) }
+      // getAll: getOption reports defaults, which restore would set
+      val saved = keys.map { case (k, _) => k -> conf.getAll.get(k) }
       val sketch =
         try {
           keys.foreach { case (k, needed) =>
@@ -502,13 +504,13 @@ object Sampling {
         .groupBy(col(trainId))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= minShared)
-      // materialize before the unpersist in finally unpins the
-      // benchmark gram set the plan still references; the eager disk
-      // snapshot (vs round-14's localCheckpoint) keeps lineage, so a
-      // lost block recomputes through benchGrams' own lineage instead
-      // of failing the job
-      org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(flagged)
-    } finally benchGrams.unpersist()
+      // materialize before the release in finally drops the benchmark
+      // gram set the plan still references; the eager disk snapshot
+      // (vs round-14's localCheckpoint) keeps lineage, so a lost block
+      // recomputes through benchGrams' own lineage instead of failing
+      // the job
+      DiskSnapshot.diskCachedEager(flagged)
+    } finally DiskSnapshot.release(benchGrams)
   }
 
   /** Clean corpus via the bloom path (result equals [[decontaminate]]). */

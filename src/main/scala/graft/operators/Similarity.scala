@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.DiskSnapshot
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -166,21 +167,23 @@ object Similarity {
   }
 
   /** A built IVF-Flat index: the corpus with its cell assignment
-    * (persisted — build once, probe many) plus the coarse-quantizer
-    * centroids, which live on the DRIVER and enter probe plans as an
-    * array literal. Centroid argmin is therefore a pure MAP-SIDE
-    * expression — no crossJoin, no shuffle of the corpus, ever.
+    * (a lazy [[DiskSnapshot]] — build once, probe many) plus the
+    * coarse-quantizer centroids, which live on the DRIVER and enter
+    * probe plans as an array literal. Centroid argmin is therefore a
+    * pure MAP-SIDE expression — no crossJoin, no shuffle of the
+    * corpus, ever. `unpersist` releases the snapshot now; a dropped
+    * index is reaped by the ContextCleaner.
     */
   final case class IvfIndex(cells: DataFrame, centroids: Array[Array[Double]]) {
     def nlist: Int = centroids.length
-    def unpersist(): Unit = { cells.unpersist(); () }
+    def unpersist(): Unit = DiskSnapshot.release(cells)
   }
 
   /** Build the IVF coarse quantizer (k-means, `iters` Lloyd steps) and
     * assign every corpus row to its cell. Each Lloyd step costs exactly
     * one hash-agg shuffle of (cell, pos, partial-sums); the result's
-    * `cells` frame is persisted so repeated probes never re-run the
-    * build — the index is a separable, reusable artifact (write it
+    * `cells` frame is disk-snapshotted so repeated probes never re-run
+    * the build — the index is a separable, reusable artifact (write it
     * `partitionBy("cell")` via [[writeIvfIndex]] and probes prune
     * partitions at the source).
     *
@@ -194,7 +197,8 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     // deterministic init: the nlist vectors with smallest xxhash64(id)
     val cents = Lloyd.flat(c, col("cv"), xxhash64(col("neighbor_id")), nlist, iters)
-    val assigned = c.withColumn("cell", Lloyd.nearestCell(col("cv"), cents)).persist()
+    val assigned = DiskSnapshot.diskCached(
+      c.withColumn("cell", Lloyd.nearestCell(col("cv"), cents)))
     IvfIndex(assigned, cents)
   }
 
@@ -244,14 +248,14 @@ object Similarity {
 
   /** One-shot convenience: build + probe. Query-time use should build
     * once ([[buildIvfIndex]]) and probe many times. The probe result
-    * is materialized to a disk snapshot before the index's persisted
-    * corpus copy is released.
+    * is materialized to a disk snapshot before the index's corpus
+    * snapshot is released.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
               iters: Int = 2): DataFrame = {
     val idx = buildIvfIndex(corpus, idCol, vecCol, nlist, iters)
-    val out = org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
+    val out = DiskSnapshot.diskCachedEager(
       ivfProbe(idx, queries, idCol, vecCol, k, nprobe))
     idx.unpersist()
     out
@@ -317,7 +321,7 @@ object Similarity {
       else autoPlanes(df.count(), targetBucket = 16L)
     // snapshot: the per-row plane fold feeds BOTH sides of the
     // bucket self-join — pay it once (the simhash/minhash pattern)
-    val b = org.apache.spark.sql.graftshim.DiskSnapshot.diskCached(
+    val b = DiskSnapshot.diskCached(
       df.select(col(idCol).as("doc"), col(vecCol).as("v"),
         family.lshBucket(col(vecCol), planes, dim).as("bucket")))
     val a = b.as("a"); val c = b.as("b")
@@ -387,14 +391,14 @@ object Similarity {
         math.min(desired, TwoLevel.MaxClusters).toInt, iters)
     else {
       val nClusters = desired.toInt
-      // the index frame already persists (id, vector, cell): build it
+      // the index frame already snapshots (id, vector, cell): build it
       // directly rather than via KMeansModel and a corpus re-join to
       // recover the vectors — one full-corpus shuffle saved
       val idx = buildIvfIndex(df, idCol, vecCol, nClusters, iters)
       val asg = idx.cells.select(col("neighbor_id").as("__id"),
         col("cv").as("__vec"), col("cell").as("cluster"))
       // eager disk snapshot (NOT localCheckpoint): the #docs-sized
-      // survivor frame must materialize before the bigger index cache
+      // survivor frame must materialize before the bigger index snapshot
       // is released, but it keeps lineage (executor loss recomputes
       // instead of failing) and lives on disk, not heap
       val out = keptRows(asg, threshold, idCol)
@@ -523,6 +527,6 @@ object Similarity {
     * snapshot so the caller can release its clustering caches. */
   private[operators] def keptRows(asg: DataFrame, threshold: Double,
                                   idCol: String): DataFrame =
-    org.apache.spark.sql.graftshim.DiskSnapshot.diskCachedEager(
+    DiskSnapshot.diskCachedEager(
       dominanceSurvivors(asg, threshold).select(col("__id").as(idCol), col("cluster")))
 }

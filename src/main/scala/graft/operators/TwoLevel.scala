@@ -99,12 +99,9 @@ object TwoLevel {
         .drop("__tl_super", "__tl_s2", "__tl_mat")
     }
 
-    def unpersist(): Unit = {
-      // children is a DiskSnapshot chain (LogicalRDD, invisible to the
-      // CacheManager BY DESIGN) — Dataset.unpersist would be a silent
-      // no-op; release every persisted RDD in the chain explicitly
-      org.apache.spark.sql.graftshim.DiskSnapshot.release(children)
-    }
+    /** Frees the children snapshot chain now, down to the level-1
+      * assignment of [[fit]] that the chain was built from. */
+    def unpersist(): Unit = DiskSnapshot.release(children)
   }
 
   /** (super, child, ctr) rows → (super → child matrix ordered by
@@ -131,8 +128,9 @@ object TwoLevel {
     val kSuper = math.ceil(math.sqrt(k.toDouble)).toInt
     val kChild = math.ceil(k.toDouble / kSuper).toInt
 
-    // level 1: the proven flat Lloyd build; its persisted cells frame
-    // doubles as the super-assigned corpus for child training
+    // level 1: the proven flat Lloyd build. Its cells snapshot is the
+    // super-assigned corpus every child round reads; it lies in the
+    // children chain's lineage, so the quantizer's release frees it.
     val sup = Similarity.buildIvfIndex(df, idCol, vecCol, kSuper, superIters)
     val corpusS = sup.cells.select(col("neighbor_id").as("__id"),
       col("cv"), col("cell").as("super"))
@@ -185,28 +183,26 @@ object TwoLevel {
         .select(col("super"), col("child"),
           coalesce(col("nw.ctr"), col("o.ctr")).as("ctr")))
     }
-    sup.unpersist()
     TwoLevelQuantizer(sup.centroids, children, kChild)
   }
 
   /** Two-level IVF index — the ANN analog of the semantic-dedup
     * routing: nlist past the flat literal ceiling with no
     * O(nlist·dim) literal anywhere. `cells` is the corpus with its
-    * global cell id (persisted; probe-side scans never shuffle it).
+    * global cell id (a lazy disk snapshot; probe-side scans never
+    * shuffle it).
     */
   final case class TwoLevelIvfIndex(quantizer: TwoLevelQuantizer,
                                     cells: DataFrame) {
     def nlist: Int = quantizer.k
-    def unpersist(): Unit = { cells.unpersist(); quantizer.unpersist() }
+    def unpersist(): Unit = { DiskSnapshot.release(cells); quantizer.unpersist() }
   }
 
   def buildIvfIndexLarge(corpus: DataFrame, idCol: String, vecCol: String,
                          nlist: Int, iters: Int = 2): TwoLevelIvfIndex = {
     val tl = fit(corpus, idCol, vecCol, nlist, iters)
-    val cells = tl.assign(
-        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        "cv", "cell")
-      .persist()
+    val cells = DiskSnapshot.diskCached(tl.assign(
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")), "cv", "cell"))
     TwoLevelIvfIndex(tl, cells)
   }
 

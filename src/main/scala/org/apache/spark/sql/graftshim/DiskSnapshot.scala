@@ -25,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   */
 private final class LazyQueryRDD(
     sc: SparkContext,
-    @transient private var thunk: () => RDD[InternalRow])
+    @transient @volatile private var thunk: () => RDD[InternalRow])
   extends RDD[InternalRow](sc, Nil) {
 
   @transient private lazy val delegate: RDD[InternalRow] = {
@@ -33,6 +33,8 @@ private final class LazyQueryRDD(
     thunk = null
     d
   }
+
+  private[graftshim] def planned: Boolean = thunk == null
 
   override protected def getPartitions: Array[Partition] = delegate.partitions
 
@@ -74,8 +76,8 @@ private final class LazyQueryRDD(
   *     caller, the blocks are dropped automatically — no unpersist
   *     bookkeeping, no CacheManager entry, no cross-query plan
   *     interference.
-  *   - `DISK_ONLY` by default: these intermediates are corpus-shaped;
-  *     at scale they belong on local disk, not in executor heap.
+  *   - `DISK_ONLY` always: these intermediates are corpus-shaped; at
+  *     scale they belong on local disk, not in executor heap.
   *
   * Lives under `org.apache.spark.sql` because rebuilding a `DataFrame`
   * from an `RDD[InternalRow]` without a round-trip through external
@@ -98,19 +100,18 @@ object DiskSnapshot {
     * deferred inside a [[LazyQueryRDD]] until the first action
     * touches the snapshot's partitions.
     */
-  def diskCached(df: DataFrame,
-                 level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+  def diskCached(df: DataFrame): DataFrame = {
     val cdf = df.asInstanceOf[ClassicDataset[Row]]
     val spark = cdf.sparkSession
     val rdd: RDD[InternalRow] = new LazyQueryRDD(spark.sparkContext,
       () => cdf.queryExecution.toRdd.map(_.copy()))
-    rdd.persist(level)
+    rdd.persist(StorageLevel.DISK_ONLY)
     spark.internalCreateDataFrame(rdd, cdf.schema, isStreaming = false)
   }
 
   /** [[diskCached]], materialized NOW: for the "compute the (smaller)
     * output, then release the (bigger) cached input" lifecycle —
-    * the input's unpersist is only safe once the output no longer
+    * the input's release is only safe once the output no longer
     * needs it, so the output must be eager. Unlike
     * `localCheckpoint(true)` the blocks keep lineage (executor loss
     * recomputes — through the full upstream if the input cache is
@@ -121,12 +122,11 @@ object DiskSnapshot {
     * set, so the blocks are complete even though the closure reads
     * nothing.
     */
-  def diskCachedEager(df: DataFrame,
-                      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+  def diskCachedEager(df: DataFrame): DataFrame = {
     val cdf = df.asInstanceOf[ClassicDataset[Row]]
     val spark = cdf.sparkSession
     val rdd: RDD[InternalRow] = cdf.queryExecution.toRdd.map(_.copy())
-    rdd.persist(level)
+    rdd.persist(StorageLevel.DISK_ONLY)
     rdd.foreachPartition(_ => ())
     spark.internalCreateDataFrame(rdd, cdf.schema, isStreaming = false)
   }
@@ -153,14 +153,18 @@ object DiskSnapshot {
     * are DELIBERATELY invisible to the CacheManager, so
     * `Dataset.unpersist()` on a snapshot-backed frame is a silent
     * no-op — a caller looping fits in one session calls this to drop
-    * blocks NOW instead of waiting for a GC + cleaner cycle.
+    * blocks NOW instead of waiting for a GC + cleaner cycle. It plans
+    * nothing: below a lazy snapshot no action has read (no blocks yet)
+    * it stops, since building the delegate would, under AQE, run jobs.
     */
   def release(df: DataFrame): Unit = {
     val seen = scala.collection.mutable.Set.empty[Int]
     def walk(r: RDD[_]): Unit = if (seen.add(r.id)) {
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(blocking = false)
-      r.dependencies.foreach(d => walk(d.rdd))
+      if (r.getStorageLevel != StorageLevel.NONE) r.unpersist(blocking = false)
+      r match {
+        case l: LazyQueryRDD if !l.planned =>
+        case _ => r.dependencies.foreach(d => walk(d.rdd))
+      }
     }
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd

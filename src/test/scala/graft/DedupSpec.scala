@@ -217,6 +217,31 @@ class DedupSpec extends SparkSpec {
     assert(star.forall(_._2 == 1L), "chain did not collapse to its minimum")
   }
 
+  test("connectedComponentsStar frees each round's edges: persisted RDDs stay flat") {
+    // each round replaces a localCheckpoint'ed edge list; the replaced
+    // one must be released, not left registered until a GC. A watcher
+    // holds every RDD registered during the call, so a GC cannot reap
+    // what the loop failed to release.
+    val chain = (1 until 1000).map(i => (i.toLong, (i + 1).toLong))
+      .toDF("doc_a", "doc_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keysIterator.toSet
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, org.apache.spark.rdd.RDD[_]]
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val watcher = new Thread(() => while (running.get) {
+      sc.getPersistentRDDs.foreach { case (id, r) => if (!before(id)) seen.putIfAbsent(id, r) }
+      Thread.sleep(5)
+    })
+    watcher.start()
+    val labels = try Dedup.connectedComponentsStar(chain, "doc_a", "doc_b")
+      finally { running.set(false); watcher.join() }
+    import scala.jdk.CollectionConverters._
+    val kept = seen.asScala.filter(_._2.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(seen.size > 5, s"only ${seen.size} edge lists registered: the chain took under 5 rounds")
+    assert(kept.size <= 2, s"star CC left ${kept.size} of ${seen.size} persisted RDDs: ${kept.keys}")
+    assert(labels.count() == 1000L)
+  }
+
   test("dropNearDuplicates keeps one doc per near-dup cluster") {
     val d = Tables(spark, sf001, "documents")
     val kept = Dedup.dropNearDuplicates(d, "doc_id", "text", minEstimate = 0.5)

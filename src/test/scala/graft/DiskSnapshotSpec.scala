@@ -141,6 +141,30 @@ class DiskSnapshotSpec extends SparkSpec {
     assert(left.isEmpty, s"release left persisted RDDs behind: $left")
   }
 
+  test("release() of a snapshot no action has read plans nothing, under AQE too") {
+    // walking into an unread LazyQueryRDD would build its delegate, and
+    // under AQE building it runs the upstream shuffle stages
+    val conf = spark.conf
+    val prevAqe = conf.getOption("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val snap = DiskSnapshot.diskCached(spark.range(0, 2000, 1, 4)
+        .select((col("id") % 13).as("k"), col("id"))
+        .groupBy(col("k")).agg(sum(col("id")).as("s")))
+      val id = snap.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.head
+      assert(spark.sparkContext.getPersistentRDDs.contains(id))
+      val (_, jobs) = withJobCount(DiskSnapshot.release(snap))
+      assert(jobs == 0, s"releasing an unread snapshot started $jobs jobs")
+      assert(!spark.sparkContext.getPersistentRDDs.contains(id),
+        "the unread snapshot is still registered as persistent")
+      // released, not broken: the frame recomputes through its lineage
+      assert(snap.count() == 13L)
+    } finally prevAqe.fold(conf.unset("spark.sql.adaptive.enabled"))(
+      conf.set("spark.sql.adaptive.enabled", _))
+  }
+
   test("released snapshot blocks are ContextCleaner-reaped (weak-ref probe)") {
     // The no-unpersist-bookkeeping contract: the persisted RDD is only
     // strongly reachable through the returned frame's LogicalRDD leaf;

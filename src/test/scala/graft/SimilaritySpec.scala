@@ -333,15 +333,19 @@ class SimilaritySpec extends SparkSpec {
   test("ivfTopK releases its persisted index and returns what the index probe returns") {
     val e = Tables(spark, sf001, "embeddings")
     val q = e.filter(col("vec_id") < 10)
-    // numCachedEntries is private[sql] in Scala, public in bytecode
-    val cm = spark.sharedState.cacheManager
-    def cached() = cm.getClass.getMethod("numCachedEntries").invoke(cm)
-    val before = cached()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // nlist 12: a plan no other test caches, so a leak adds an entry
-    val got = pairs(Similarity.ivfTopK(e, q, "vec_id", "embedding", 5, nlist = 12))
-    assert(cached() == before, "ivfTopK left its index cached")
+    val res = Similarity.ivfTopK(e, q, "vec_id", "embedding", 5, nlist = 12)
+    // the result's own snapshot is the only persisted RDD ivfTopK may
+    // leave: the index snapshot under it must be released
+    val own = res.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    val left = sc.getPersistentRDDs.keySet -- before -- own
+    assert(left.isEmpty, s"ivfTopK left its index persisted: RDDs $left")
+    val got = pairs(res)
     val idx = Similarity.buildIvfIndex(e, "vec_id", "embedding", nlist = 12)
     try assert(got == pairs(Similarity.ivfProbe(idx, q, "vec_id", "embedding", 5)))
     finally idx.unpersist()
