@@ -111,7 +111,6 @@ object ScaleProbe {
     // the q136 one-pass Gopher kernel: per-row O(len·n), no shuffle,
     // no state — the exponent must sit at ~1.0 (pure map scaling)
     time("rep_signals_kernel", base, scaled) { d =>
-      graft.plans.GraftExtensions.registerAll(d.sparkSession)
       d.agg(sum(element_at(
         graft.functions.TextFunctions.repetitionSignals(col("text")), 5)))
         .collect().head.getLong(0)
@@ -229,7 +228,6 @@ object ScaleProbe {
     time("kn_bigram_lm", base, scaled)(d =>
       CorpusStats.bigramKnScore(d, "doc_id", "text").count())
     time("quality_kernels", base, scaled) { d =>
-      graft.plans.GraftExtensions.registerAll(spark)
       d.agg(sum(graft.functions.TextFunctions.charEntropy(col("text"))),
           sum(graft.functions.TextFunctions.compressionRatio(col("text"))))
         .collect()(0); 0L

@@ -457,7 +457,6 @@ final case class OCDataset(
         // The key is "stored" only for the span of this plan — the
         // range budget stays at the computed tier (no storage pruning
         // to pay for wide plans).
-        graft.spatial.Morton.register(df.sparkSession)
         val keyCol = graft.spatial.Morton.keyColumnNative(
           col(cx), col(cy), col(cz), origin, size, level)
         val withKey = df.withColumn(BoundKeyCol, keyCol)

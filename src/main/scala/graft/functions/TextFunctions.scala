@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.GraftExtensions
 
 /** Text-analysis column builders for the training-data pipeline ops
   * (builder prompt: language-ID, quality scoring, token counting,
@@ -142,9 +143,8 @@ object TextFunctions {
     // is an O(dim) fold over the kernel's OWN sums attribute (bound
     // once per row via the single-element-transform idiom, so the
     // divide lambda reads an attribute, not a re-inlined reduction).
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val sums = graft.Tables.spreadDf(df).select(col(idCol),
-        call_function("graft_xx_sign_sums",
+        GraftExtensions.call("graft_xx_sign_sums",
           tokens(col(textCol)), lit(dim)).as("__sums"))
       .filter(col("__sums").isNotNull)
       .select(col(idCol), col("__sums"),
@@ -176,9 +176,8 @@ object TextFunctions {
     // Exchanges removed outright (guide §2.4: the sum only ever
     // needed the row's own tokens). Null text → null sums → filtered
     // (the exploded form emitted no row there).
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     graft.Tables.spreadDf(df).select(col(idCol),
-        call_function("graft_md5_sign_sums",
+        GraftExtensions.call("graft_md5_sign_sums",
           tokens(col(textCol)), lit(dim)).as("__sums"))
       .filter(col("__sums").isNotNull)
       .select(col(idCol), col("__sums").cast("array<float>").as("embedding"))
@@ -242,10 +241,9 @@ object TextFunctions {
   /** One-pass native form of [[normalizeText]] (codegen'd byte loop —
     * one scan and one buffer instead of three regex passes and two
     * intermediates; CorpusSpec asserts byte equality on random input).
-    * Requires `GraftExtensions.registerAll` on the session first.
     */
   def normalizeTextNative(text: Column): Column =
-    call_function("graft_normalize", text)
+    GraftExtensions.call("graft_normalize", text)
 
   /** PII patterns (shared RE2/Java-regex subset — no lookaround, no
     * backrefs — so Spark and the DuckDB oracle match identically).
@@ -337,10 +335,10 @@ object TextFunctions {
 
   /** Shannon entropy (nats) of the text's code-point distribution —
     * the gibberish/templating detector (near 0 for repeated filler).
-    * Codegen'd one-pass kernel; requires GraftExtensions registered.
+    * Codegen'd one-pass kernel.
     */
   def charEntropy(text: Column): Column =
-    call_function("graft_char_entropy", text)
+    GraftExtensions.call("graft_char_entropy", text)
 
   /** DEFLATE compression ratio compressed/raw of the UTF-8 text
     * (raw deflate at `level`): low ratio ⇒ repetitive/boilerplate,
@@ -350,7 +348,7 @@ object TextFunctions {
   def compressionRatio(text: Column, level: Int = 6): Column = {
     require(level >= 0 && level <= 9, s"deflate level must be 0..9, got $level")
     val raw = octet_length(text).cast("double")
-    val packed = call_function("graft_deflate_len", text, lit(level)).cast("double")
+    val packed = GraftExtensions.call("graft_deflate_len", text, lit(level)).cast("double")
     when(raw > 0, packed / raw)
   }
 
@@ -361,10 +359,10 @@ object TextFunctions {
     * double counting), [11]=token count (1-based `element_at`
     * indices). One codegen'd pass per row; integer outputs so the
     * signals hash-compare across engines — the filter fractions are
-    * signal/total. Requires GraftExtensions registered.
+    * signal/total.
     */
   def repetitionSignals(text: Column): Column =
-    call_function("graft_rep_signals", text)
+    GraftExtensions.call("graft_rep_signals", text)
 
   /** The Gopher repetition FILTER (arXiv:2112.11446 table A1 row set
     * "repetition"): keep a document iff every within-doc n-gram

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.GraftExtensions
 
 /** Vector math over `array<float>` embedding columns, expressed with
   * higher-order functions (`aggregate`/`zip_with`) so everything stays
@@ -144,14 +145,13 @@ object VectorFunctions {
     * (`graft_jl_project`) — bit-identical output (the dot is pure
     * 64-bit integer arithmetic on both paths; PropertySpec pins
     * equality), one JVM loop instead of outDim·dim interpreted lambda
-    * dispatches per row. Requires `GraftExtensions.registerAll` on
-    * the session (the HOF form above stays the session-free default).
+    * dispatches per row.
     */
   def randomProjectMd5QKernel(v: Column, outDim: Int, dim: Int): Column = {
     require(outDim >= 1 && dim >= 1)
     val flat = (0 until outDim).flatMap(p =>
       hyperplaneMd5IntValues(p, dim).toIndexedSeq)
-    call_function("graft_jl_project", v,
+    GraftExtensions.call("graft_jl_project", v,
       array(flat.map(lit): _*), lit(outDim), lit(65536.0))
   }
 

@@ -96,7 +96,6 @@ object OCIO {
                    numPartitions: Option[Int] = None): Unit = {
     require(!ds.columns.contains("morton_key"),
       "dataset already has a morton_key column")
-    graft.plans.GraftExtensions.registerAll(ds.df.sparkSession)
     // level 0 = occupancy-adaptive: one count() sizes the tree
     val lvl = if (level > 0) level else chooseSpatialLevel(ds.count())
     val (cx, cy, cz) = coords

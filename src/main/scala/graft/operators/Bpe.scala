@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.plans.GraftExtensions
 
 /** Distributed BPE tokenizer training + encoding (Sennrich et al.
   * 2016, arXiv:1508.07909 — the subword-vocabulary step every
@@ -318,11 +319,10 @@ object Bpe {
     */
   def encodeSymbols(df: DataFrame, idCol: String, textCol: String,
                     merges: Seq[Merge]): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val lit = mergesLit(merges)
     df.select(col(idCol),
       transform(TextFunctions.tokens(col(textCol)),
-        w => call_function("graft_bpe_word", w, lit)).as("syms"))
+        w => GraftExtensions.call("graft_bpe_word", w, lit)).as("syms"))
   }
 
   /** [[encode]]'s exact output shape (n_symbols, sym_fp) computed by
@@ -380,11 +380,10 @@ object Bpe {
     * gate shape). Map-side only. */
   def encodeIds(df: DataFrame, idCol: String, textCol: String,
                 merges: Seq[Merge], vocab: Seq[String]): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val vlit = array(vocab.map(org.apache.spark.sql.functions.lit): _*)
     encodeSymbols(df, idCol, textCol, merges)
       .select(col(idCol), flatten(transform(col("syms"),
-        w => call_function("graft_syms_to_ids", w, vlit))).as("ids"))
+        w => GraftExtensions.call("graft_syms_to_ids", w, vlit))).as("ids"))
   }
 
   /** Tokenizer FERTILITY report (the evaluation a tokenizer change
@@ -396,14 +395,13 @@ object Bpe {
     */
   def fertilityStats(df: DataFrame, textCol: String, groupCol: String,
                      merges: Seq[Merge]): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val mlit = mergesLit(merges)
     df.select(col(groupCol), TextFunctions.tokens(col(textCol)).as("__toks"))
       .select(col(groupCol),
         size(col("__toks")).cast("long").as("__w"),
         aggregate(col("__toks"), lit(0L), (a, t) => a + length(t)).as("__c"),
         aggregate(transform(col("__toks"),
-            w => size(call_function("graft_bpe_word", w, mlit))),
+            w => size(GraftExtensions.call("graft_bpe_word", w, mlit))),
           lit(0L), (a, n) => a + n).as("__s"))
       .groupBy(col(groupCol))
       .agg(sum(col("__w")).as("n_words"), sum(col("__s")).as("n_symbols"),

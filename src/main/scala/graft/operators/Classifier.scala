@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 
 import graft.functions.TextFunctions
+import graft.plans.GraftExtensions
 
 /** Trained quality classifier for corpus filtering — the
   * fastText-shaped hashed-bag-of-words logistic regression that LLM
@@ -79,12 +80,11 @@ object Classifier {
     // to the former explode → two-groupBy chain (Md5KernelsSpec pins
     // the equality) — both per-document Exchanges removed outright
     // (guide §2.4: a bag-of-words histogram never needed a shuffle).
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // spread: the kernel is the whole map stage (one-split gate corpora
     // would hash on one core; a real corpus never takes the shuffle)
     graft.Tables.spreadDf(base).select(keyCols :+
         TextFunctions.tokenCount(col("__text")).as("n") :+
-        call_function("graft_md5_bucket_counts",
+        GraftExtensions.call("graft_md5_bucket_counts",
           TextFunctions.tokens(col("__text")), lit(dim)).as("cs"): _*)
       .select(keyCols :+
         transform(col("cs"), c => c.cast("double") / col("n")).as("xs"): _*)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
+import graft.plans.GraftExtensions
 
 /** First-class distributed k-means (the corpus-organization step of a
   * training pipeline: topic bucketing, mixture analysis, ANN coarse
@@ -73,7 +74,6 @@ object Clustering {
     */
   def kmeansMd5(df: DataFrame, idCol: String, vecCol: String,
                 k: Int = 8, iters: Int = 3, scale: Int = 1024): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val (q, cents) = lloydMd5(df, idCol, vecCol, k, iters, scale)
     val out = DiskSnapshot.diskCachedEager(q
       .withColumn("cluster", Lloyd.nearestCell(col("__qv"), cents))
@@ -98,7 +98,6 @@ object Clustering {
   def semanticDedupMd5(df: DataFrame, idCol: String, vecCol: String,
                        threshold: Double, k: Int = 8, iters: Int = 3,
                        scale: Int = 1024): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val (q, cents) = lloydMd5(df, idCol, vecCol, k, iters, scale)
     val asg = q.select(col("__id"), col("__vec"),
       Lloyd.nearestCell(col("__qv"), cents).as("cluster"))
@@ -122,7 +121,6 @@ object Clustering {
   def ivfTopKMd5(corpus: DataFrame, queries: DataFrame, idCol: String,
                  vecCol: String, k: Int, nlist: Int = 16, iters: Int = 2,
                  nprobe: Int = 4, scale: Int = 1024): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val (q, cents) = lloydMd5(corpus, idCol, vecCol, nlist, iters, scale)
     val cells = q.select(col("__id").as("neighbor_id"), col("__vec").as("cv"),
       Lloyd.nearestCell(col("__qv"), cents).as("cell"))
@@ -156,7 +154,6 @@ object Clustering {
   def semanticDedupLargeMd5(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, k: Int, superIters: Int = 2,
                             iters: Int = 2, scale: Int = 1024): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val kSuper = math.ceil(math.sqrt(k.toDouble)).toInt
     val kChild = math.ceil(k.toDouble / kSuper).toInt
     val (q, superCents) = lloydMd5(df, idCol, vecCol, kSuper, superIters, scale)
@@ -257,7 +254,7 @@ object Clustering {
     val lit3 = typedlit[Seq[Seq[Seq[Double]]]](mats.map { m =>
       if (m.isEmpty) Seq(Seq(0.0)) else m.map(_.toSeq).toSeq
     }.toSeq)
-    call_function("graft_nearest_cell", col("__qv"), element_at(lit3, col("__super") + 1))
+    GraftExtensions.call("graft_nearest_cell", col("__qv"), element_at(lit3, col("__super") + 1))
   }
 
   /** DuckDB-replayable gate twin of the composed [[CompressedAnn]]
@@ -280,10 +277,9 @@ object Clustering {
       superIters: Int = 2, iters: Int = 2, nprobeSuper: Int = 3,
       nprobeCells: Int = 8, topCandidates: Int = 64): DataFrame = {
     import graft.functions.VectorFunctions
-    graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     require(topCandidates >= k, s"topCandidates=$topCandidates < k=$k")
     def codes(vec: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      // fused codegen projection (registerAll ran above) — bit-equal
+      // fused codegen projection — bit-equal
       // to randomProjectMd5Q, one JVM loop per row instead of
       // outDim·dim interpreted lambda dispatches
       val pj = VectorFunctions.randomProjectMd5QKernel(vec, outDim, dim)
@@ -366,7 +362,7 @@ object Clustering {
     // exact integers here regardless); the fold ran in the per-pair
     // candidate scorer, the gate's hottest remaining expression.
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("graft_dot_q", a, b)
+      GraftExtensions.call("graft_dot_q", a, b)
     // norms price ONCE per query / per corpus row — computing them in
     // the candidate-pair loop re-ran the interpreted fold per PAIR
     val cpN = cp.withColumn("__qn", dot(col("qqv"), col("qqv")))
@@ -422,7 +418,6 @@ object Clustering {
   def pqTopKMd5(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, m: Int = 8, ksub: Int = 16,
                 iters: Int = 2, rerank: Int = 50, scale: Int = 1024): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val q0 = DiskSnapshot.diskCached(corpus.select(col(idCol).as("__id"),
       col(vecCol).as("__vec"), Lloyd.quantize(col(vecCol), scale).as("__qv")))
     val cents = pqCodebooks(q0, m, ksub, iters)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 import graft.functions.VectorFunctions
+import graft.plans.GraftExtensions
 
 /** The composed 100 TB ANN recipe — each stage is an independently
   * gated operator, this wires them into the pipeline a production
@@ -114,7 +115,6 @@ object CompressedAnn {
             idCol: String, vecCol: String, k: Int,
             topCandidates: Int = 64, nprobeSuper: Int = 4,
             nprobe: Int = 8): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(queries.sparkSession)
     require(topCandidates >= k, s"topCandidates=$topCandidates < k=$k")
     val q = queries.select(col(idCol).as("query_id"),
       project(col(vecCol), index.outDim, index.dim).as("qv"))
@@ -124,7 +124,7 @@ object CompressedAnn {
     // dequantized components
     val cands = index.cells.join(broadcast(probes), "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("ac", call_function("graft_cosine_int8",
+      .withColumn("ac", GraftExtensions.call("graft_cosine_int8",
         col("qv"), col("qv8"), col("scale")))
       .transform(Similarity.topPerQuery(topCandidates, "__r",
         col("ac").desc, col("neighbor_id")))

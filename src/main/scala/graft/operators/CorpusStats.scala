@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 import graft.functions.TextFunctions
+import graft.plans.GraftExtensions
 
 /** Corpus-level statistics and retrieval operators for training-data
   * pipelines: n-gram frequency (exact + sketched), vocabulary stats,
@@ -113,10 +114,9 @@ object CorpusStats {
     // projection. Two Exchanges and one join removed (guide §2.4);
     // docs with < 2 tokens yield an empty gram array → null max →
     // filtered, exactly the rows the explode form dropped.
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     df.select(col(idCol), TextFunctions.tokenCount(col(textCol)).as("__n"),
         array_max(transform(
-          call_function("graft_gram_counts",
+          GraftExtensions.call("graft_gram_counts",
             TextFunctions.tokens(col(textCol)), lit(2)),
           gc => struct(gc.getField("c").as("__c"), gc.getField("g").as("__g"))))
           .as("__m"))
@@ -373,9 +373,8 @@ object CorpusStats {
     // outright (guide §2.4); within-doc repeats arrive pre-combined
     // exactly as the aggregate combined them. Md5KernelsSpec pins
     // kernel == aggregate form.
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val dgc = toks
-      .select(col(idCol), explode(call_function("graft_gram_counts",
+      .select(col(idCol), explode(GraftExtensions.call("graft_gram_counts",
         col("__w"), lit(2))).as("__gc"))
       .select(col(idCol), col("__gc.g").as("__g"), col("__gc.c").as("__n"))
     val bgc = dgc.groupBy(col("__g")).agg(sum(col("__n")).as("__cb"))
@@ -448,9 +447,8 @@ object CorpusStats {
       .groupBy(col("__g")).agg(count(lit(1)).as("__cb"))
     // map-side (doc, gram) counts — same kernel rationale as
     // [[bigramLmScore]]
-    graft.plans.GraftExtensions.registerAll(target.sparkSession)
     val dgc = target
-      .select(col(idCol), explode(call_function("graft_gram_counts",
+      .select(col(idCol), explode(GraftExtensions.call("graft_gram_counts",
         TextFunctions.tokens(col(textCol)), lit(2))).as("__gc"))
       .select(col(idCol), col("__gc.g").as("__g"), col("__gc.c").as("__n"))
     val scored = dgc
@@ -1065,11 +1063,10 @@ object CorpusStats {
     // corpus-shaped frames that the LAZY result below keeps alive —
     // lineage-preserving disk blocks that drop automatically when the
     // caller releases the result
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // map-side (doc, gram) counts (graft_gram_counts — guide §2.4, see
     // [[bigramLmScore]]); the snapshot stays: dgc is consumed twice
     val dgc = DiskSnapshot.diskCached(toks
-      .select(col(idCol), explode(call_function("graft_gram_counts",
+      .select(col(idCol), explode(GraftExtensions.call("graft_gram_counts",
         col("__w"), lit(2))).as("__gc"))
       .select(col(idCol), col("__gc.g").as("__g"), col("__gc.c").as("__n")))
     val bgc = DiskSnapshot.diskCached(
@@ -1135,9 +1132,8 @@ object CorpusStats {
     val ctx = bgc.groupBy(col("__w1"))
       .agg(sum(col("__cb")).as("__ctx"), count(lit(1)).as("__fert"))
     val cont = bgc.groupBy(col("__w2")).agg(count(lit(1)).as("__cont"))
-    graft.plans.GraftExtensions.registerAll(target.sparkSession)
     val dgc = target
-      .select(col(idCol), explode(call_function("graft_gram_counts",
+      .select(col(idCol), explode(GraftExtensions.call("graft_gram_counts",
         TextFunctions.tokens(col(textCol)), lit(2))).as("__gc"))
       .select(col(idCol), col("__gc.g").as("__g"), col("__gc.c").as("__n"))
       .withColumn("__w1", split(col("__g"), " ").getItem(0))
@@ -1325,9 +1321,8 @@ object CorpusStats {
     // of the row (= the former sum over its token counts). Null-text
     // docs drop via the isNotNull filter exactly as the explode form
     // dropped them.
-    graft.plans.GraftExtensions.registerAll(docs.sparkSession)
     val dt = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(call_function("graft_gram_counts",
+      .select(col(idCol), explode(GraftExtensions.call("graft_gram_counts",
         TextFunctions.tokens(col(textCol)), lit(1))).as("__gc"))
       .select(col(idCol), col("__gc.g").as("token"), col("__gc.c").as("__n"))
     val dn = docs.filter(col(textCol).isNotNull)
@@ -1414,7 +1409,6 @@ object CorpusStats {
                                    textCol: String, dim: Int,
                                    countsKernel: String): DataFrame = {
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val nDocs = df.count().toDouble
     // the (doc, bucket, tf) table is now MAP-SIDE: one SPARSE
     // bucket-entries kernel per row (non-zero cells only — the dense
@@ -1427,7 +1421,7 @@ object CorpusStats {
     // bigramKnScore lesson); lineage-preserving + self-cleaning
     val tb = DiskSnapshot.diskCached(graft.Tables.spreadDf(df)
       .select(col(idCol),
-        explode(call_function(countsKernel,
+        explode(GraftExtensions.call(countsKernel,
           TextFunctions.tokens(col(textCol)), lit(dim))).as("__e"))
       .select(col(idCol), col("__e.b").cast("long").as("__b"),
         col("__e.c").as("__tf")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.spatial.{Healpix, Region}
+import graft.plans.GraftExtensions
 
 /** Sky cross-match — nearest-neighbor join within an angular radius,
   * the standard multi-catalog association step (beyond the reference,
@@ -28,7 +29,6 @@ object CrossMatch {
                     leftId: String, rightId: String,
                     coords: (String, String),
                     radiusDeg: Double, nside: Int = 16): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(left.sparkSession)
     val (ra, dec) = coords
     val l = left.select(col(leftId).as("__lid"),
       col(ra).as("__lra"), col(dec).as("__ldec"))
@@ -54,7 +54,7 @@ object CrossMatch {
       .withColumn("__rpix",
         Healpix.pixelColumn(nside, col("__rra"), col("__rdec")))
       .withColumn("__pix", explode(
-        org.apache.spark.sql.functions.call_function("graft_healpix_disc",
+        GraftExtensions.call("graft_healpix_disc",
           col("__rpix"), lit(nside), lit(radiusDeg + pad))))
       .drop("__rpix")
     // haversine separation — THE shared expression (Region.angSepDegCol,

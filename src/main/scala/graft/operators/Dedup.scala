@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
 import graft.functions.TextFunctions._
+import graft.plans.GraftExtensions
 
 /** The md5-family MinHash affine constants — one definition shared by
   * [[HashFamily.Md5]], the oracle SQL builders, and the map-side
@@ -195,10 +196,9 @@ object Dedup {
     // gone (guide §2.4; the vote sum only ever needed the row's own
     // tokens). Null text → null sig → filtered (the exploded form
     // emitted no row there).
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // NO spread (measured, see HashFamily.Md5.minhashSignatures)
     df.select(col(idCol).as("doc"),
-        call_function("graft_md5_simhash64", tokens(col(textCol))).as("sig"))
+        GraftExtensions.call("graft_md5_simhash64", tokens(col(textCol))).as("sig"))
       .filter(col("sig").isNotNull)
   }
 
@@ -582,7 +582,6 @@ object Dedup {
     */
   private def shingleIntersections(df0: DataFrame, idCol: String,
                                    textCol: String, n: Int): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df0.sparkSession)
     // spread the one-split gate scan (r20, guide §2.5 input skew):
     // all three consumers below re-run the tokenize+shingle kernel
     // over the INPUT scan, and a gate-scale corpus arrives as ONE
@@ -599,7 +598,7 @@ object Dedup {
     // the opposite trade from the md5-family kernels, whose per-row
     // hashing dwarfs their slim (doc, sig) snapshots)
     val sh = df.select(col(idCol).as("doc"),
-      explode(call_function("graft_ngram_hashes",
+      explode(GraftExtensions.call("graft_ngram_hashes",
         transform(tokens(col(textCol)), t => xxhash64(t)), lit(n))).as("s"))
     // per-doc shingle counts are the SIZE of the (already-distinct)
     // kernel array — map-side, no groupBy(doc) Exchange (guide §2.4);
@@ -611,7 +610,7 @@ object Dedup {
     // carries a unique document id; the same contract holds for
     // naiveBayesApply's per-doc token count.
     val counts = df.select(col(idCol).as("doc"),
-        size(call_function("graft_ngram_hashes",
+        size(GraftExtensions.call("graft_ngram_hashes",
           transform(tokens(col(textCol)), t => xxhash64(t)), lit(n)))
           .cast("long").as("n_sh"))
       .filter(col("n_sh") > 0)
@@ -702,7 +701,6 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 8): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // one-pass codegen'd kernel over the token hashes (vs 64 HOF
     // traversals in TextFunctions.simhash64 — same semantics up to
     // the vote tie-break, cross-checked in DedupSpec). The shared
@@ -710,7 +708,7 @@ object Dedup {
     // (doc, sig) frame and self-joins on four fixed 16-bit bands.
     hammingBandPairs(
       df.select(col(idCol).as("doc"),
-        call_function("graft_simhash64",
+        GraftExtensions.call("graft_simhash64",
           transform(tokens(col(textCol)), t => xxhash64(t))).as("sig")),
       "doc", "sig", maxHamming, exact = false)
   }
@@ -889,10 +887,9 @@ object Dedup {
     */
   private def windowHashes(df: DataFrame, idCol: String, textCol: String,
                            w: Int, family: HashFamily): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // spread: same one-split rationale as shingleIntersections
     graft.Tables.spreadDf(df).select(col(idCol).as("doc"),
-        posexplode(call_function(family.windowKernel, tokens(col(textCol)), lit(w)))
+        posexplode(GraftExtensions.call(family.windowKernel, tokens(col(textCol)), lit(w)))
           .as(Seq("pos", "h")))
       .select(col("doc"), col("pos").cast("long").as("pos"), col("h"))
   }

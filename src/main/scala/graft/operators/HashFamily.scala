@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.{lshBands, tokens}
 import graft.functions.VectorFunctions
+import graft.plans.GraftExtensions
 
 /** The hash family a hashing operator runs on — the ONE place the
   * hash algorithm is chosen, so MinHash, window-hash spans, line dedup,
@@ -75,12 +76,11 @@ object HashFamily {
     private[operators] def minhashSignatures(df: DataFrame, idCol: String,
                                              textCol: String, shingleN: Int,
                                              k: Int): DataFrame = {
-      graft.plans.GraftExtensions.registerAll(df.sparkSession)
       df.select(col(idCol).as("doc"),
-          call_function("graft_ngram_hashes",
+          GraftExtensions.call("graft_ngram_hashes",
             transform(tokens(col(textCol)), t => xxhash64(t)), lit(shingleN)).as("hs"))
         .filter(size(col("hs")) > 0)
-        .select(col("doc"), call_function("graft_minhash_sig", col("hs"), lit(k)).as("sig"))
+        .select(col("doc"), GraftExtensions.call("graft_minhash_sig", col("hs"), lit(k)).as("sig"))
     }
     private[operators] def bandKeys(sig: Column, bands: Int, r: Int): Column =
       lshBands(sig, bands, r)
@@ -114,7 +114,6 @@ object HashFamily {
       // derived only from a row's own text never needed a shuffle).
       // Docs with < shingleN tokens return a null sig → filtered, the
       // exact row set the exploded form produced.
-      graft.plans.GraftExtensions.registerAll(df.sparkSession)
       // NO spread here (measured): the signature feeds a bucket-join
       // shuffle chain, and at gate scale the spread's extra exchange +
       // 32-way task fan-out costs more than the parallel hashing buys
@@ -122,7 +121,7 @@ object HashFamily {
       // trade the windowHashes/denseFeatures kernels measure the other
       // way (their corpora explode ×W / carry dense arrays).
       df.select(col(idCol).as("doc"),
-          call_function("graft_md5_minhash_sig",
+          GraftExtensions.call("graft_md5_minhash_sig",
             tokens(col(textCol)), lit(shingleN), lit(k)).as("sig"))
         .filter(col("sig").isNotNull)
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import graft.plans.GraftExtensions
 
 /** The one driver-side Lloyd loop of the k-means/ANN family. Its
   * callers:
@@ -49,11 +50,11 @@ private[operators] object Lloyd {
   /** Argmin cell of `v` against `cents` (fused `graft_nearest_cell`;
     * sequential left-to-right distance sums, ties to the lowest cell). */
   def nearestCell(v: Column, cents: Array[Array[Double]]): Column =
-    call_function("graft_nearest_cell", v, matrix(cents))
+    GraftExtensions.call("graft_nearest_cell", v, matrix(cents))
 
   /** Squared-L2 distances of `v` to every centroid (`graft_cell_dists`). */
   def cellDists(v: Column, cents: Array[Array[Double]]): Column =
-    call_function("graft_cell_dists", v, matrix(cents))
+    GraftExtensions.call("graft_cell_dists", v, matrix(cents))
 
   /** The gate twins' integer quantization: round(x·scale) per element,
     * exact in doubles, so every Lloyd sum over it is exact. */
@@ -89,8 +90,6 @@ private[operators] object Lloyd {
     * current centroids. */
   def run(df: DataFrame, vec: Column, init: Array[Array[Double]], iters: Int)
          (assign: Array[Array[Double]] => Seq[Column]): Array[Array[Double]] = {
-    // the steps assign with the fused centroid kernels (idempotent)
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val width = init.find(_ != null).fold(0)(_.length)
     (0 until iters).foldLeft(init)((cents, _) =>
       update(cents, stepSums(df, vec, assign(cents), width)))

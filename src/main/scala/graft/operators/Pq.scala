@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.GraftExtensions
 
 /** Product quantization for memory-bound ANN at corpus scale (public
   * method: Jégou, Douze, Schmid, "Product Quantization for Nearest
@@ -101,7 +102,6 @@ object Pq {
     */
   def encode(df: DataFrame, vecCol: String, cb: PqCodebook,
              outCol: String = "pq_code"): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // codegen'd kernel over a flat [sub][k][i] codeword literal (KBs)
     // — the round-14 UDF boxed every corpus vector to Seq[Float] and
     // copied each subspace slice per row; same nearest-codeword
@@ -110,7 +110,7 @@ object Pq {
     require(cb.centers.forall(_.length == ksub),
       "subspace codebooks must be uniform")
     val flat: Array[Float] = cb.centers.flatMap(_.flatten)
-    df.withColumn(outCol, call_function("graft_pq_encode", col(vecCol),
+    df.withColumn(outCol, GraftExtensions.call("graft_pq_encode", col(vecCol),
       lit(flat), lit(cb.m), lit(cb.dsub), lit(ksub)))
   }
 
@@ -152,7 +152,6 @@ object Pq {
                 nprobe: Int = 4, rerank: Int = 0,
                 rawCorpus: Option[DataFrame] = None,
                 codeCol: String = "pq_code"): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(encodedCells.sparkSession)
     val q = withAdcTables(queries, idCol, vecCol, cb)
       .withColumn("__d", Lloyd.cellDists(col("qv"), ivf.centroids))
       .withColumn("probe", Similarity.nearestCells(col("__d"), ivf.nlist, nprobe))
@@ -175,7 +174,6 @@ object Pq {
            vecCol: String, cb: PqCodebook, k: Int,
            rerank: Int = 0, rawCorpus: Option[DataFrame] = None,
            codeCol: String = "pq_code"): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(encoded.sparkSession)
     // queries (with tables) broadcast, corpus never shuffles
     val scored = encoded
       .select(col(idCol).as("neighbor_id"), col(codeCol))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.DiskSnapshot
+import graft.plans.GraftExtensions
 
 /** Corpus-shaping operators for training-data pipelines: deterministic
   * token-budget sampling and train/eval decontamination. No driver
@@ -413,8 +414,7 @@ object Sampling {
   def contaminatedDocs(train: DataFrame, trainId: String, trainText: String,
                        bench: DataFrame, benchText: String,
                        n: Int = 13, minShared: Int = 1): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(train.sparkSession)
-    def grams(c: Column) = call_function("graft_ngram_hashes",
+    def grams(c: Column) = GraftExtensions.call("graft_ngram_hashes",
       transform(split(c, " "), t => xxhash64(t)), lit(n))
     val benchGrams = bench.select(explode(grams(col(benchText))).as("g")).distinct()
     val trainGrams = train.select(col(trainId), explode(grams(col(trainText))).as("g"))
@@ -451,8 +451,7 @@ object Sampling {
                             bench: DataFrame, benchText: String,
                             n: Int = 13, minShared: Int = 1,
                             fpp: Double = 0.03): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(train.sparkSession)
-    def grams(c: Column) = call_function("graft_ngram_hashes",
+    def grams(c: Column) = GraftExtensions.call("graft_ngram_hashes",
       transform(split(c, " "), t => xxhash64(t)), lit(n))
     val benchGrams = DiskSnapshot.diskCached(
       bench.select(explode(grams(col(benchText))).as("g")).distinct())
@@ -483,7 +482,7 @@ object Sampling {
             if (conf.get(k, "0").toLong < needed) conf.set(k, needed)
           }
           benchGrams
-            .agg(call_function("graft_bloom_agg", col("g"), lit(nGrams), lit(numBits)))
+            .agg(GraftExtensions.call("graft_bloom_agg", col("g"), lit(nGrams), lit(numBits)))
             .head().getAs[Array[Byte]](0)
         } finally saved.foreach {
           case (k, Some(v)) => conf.set(k, v)
@@ -494,7 +493,7 @@ object Sampling {
           "conf clamp still active; raise spark.sql.optimizer.runtime.bloomFilter.*")
       val trainGrams = train.select(col(trainId), explode(grams(col(trainText))).as("g"))
       val flagged = trainGrams
-        .filter(call_function("graft_might_contain", lit(sketch), col("g")))
+        .filter(GraftExtensions.call("graft_might_contain", lit(sketch), col("g")))
         // exact fp kill — NO broadcast hint: the whole point of the
         // bloom path is benchmark gram sets too big to broadcast (the
         // prefilter already shrank the STREAM side to the candidate

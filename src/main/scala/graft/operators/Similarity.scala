@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.DiskSnapshot
+import graft.plans.GraftExtensions
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -63,7 +64,6 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     topKByCosine(c.crossJoin(broadcast(q)).filter(col("query_id") =!= col("neighbor_id")),
@@ -80,7 +80,7 @@ object Similarity {
                                       k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("cos", call_function("graft_cosine", qVec, nVec))
+    scored.withColumn("cos", GraftExtensions.call("graft_cosine", qVec, nVec))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
@@ -143,7 +143,6 @@ object Similarity {
               family: HashFamily = HashFamily.Xx): DataFrame = {
     if (family == HashFamily.Md5) require(nPlanes > 0 && nPlanes <= MaxHamming2Planes,
       s"gate kernel needs 1..$MaxHamming2Planes static planes (full Hamming-2 ring)")
-    graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val planes = if (nPlanes > 0) nPlanes else autoPlanes(corpus.count())
     val cB = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       family.lshBucket(col(vecCol), planes, dim).as("bucket"))
@@ -193,7 +192,6 @@ object Similarity {
     */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     nlist: Int = 16, iters: Int = 2): IvfIndex = {
-    graft.plans.GraftExtensions.registerAll(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     // deterministic init: the nlist vectors with smallest xxhash64(id)
     val cents = Lloyd.flat(c, col("cv"), xxhash64(col("neighbor_id")), nlist, iters)
@@ -209,7 +207,6 @@ object Similarity {
     */
   def ivfProbe(index: IvfIndex, queries: DataFrame, idCol: String,
                vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val probes = q.withColumn("__d", Lloyd.cellDists(col("qv"), index.centroids))
       .withColumn("probe", nearestCells(col("__d"), index.nlist, nprobe))
@@ -277,7 +274,6 @@ object Similarity {
     */
   def cosineNearDupPairsExact(df: DataFrame, idCol: String, vecCol: String,
                               threshold: Double): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // spread the STREAMED side: the broadcast-NL self-join runs its
     // n²/2 cosine kernel over the streamed partitions, and a gate-
     // scale corpus arrives as ONE parquet split — without the spread
@@ -290,7 +286,7 @@ object Similarity {
     val a = v.select(col("doc").as("doc_a"), col("v").as("va"))
     val b = v.select(col("doc").as("doc_b"), col("v").as("vb"))
     a.join(broadcast(b), col("doc_a") < col("doc_b"))
-      .withColumn("cos", call_function("graft_cosine", col("va"), col("vb")))
+      .withColumn("cos", GraftExtensions.call("graft_cosine", col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("cos"), 6).as("cosine"))
   }
@@ -330,9 +326,8 @@ object Similarity {
     // bucket expansion is the HOT pair loop, and the interpreted HOF
     // would make the scale path slower per pair than the exact
     // baseline it exists to beat
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     a.join(c, col("a.bucket") === col("b.bucket") && col("a.doc") < col("b.doc"))
-      .withColumn("cos", org.apache.spark.sql.functions.call_function(
+      .withColumn("cos", GraftExtensions.call(
         "graft_cosine", col("a.v"), col("b.v")))
       .filter(col("cos") >= threshold)
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
@@ -378,7 +373,6 @@ object Similarity {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, k: Int = 0,
                     iters: Int = 3): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     // desired stays Long until compared (a wrapped count past ~137B
     // rows must not silently recreate the quadratic blowup auto-k
     // prevents); past the flat literal ceiling the TWO-LEVEL quantizer
@@ -419,7 +413,6 @@ object Similarity {
   def semanticDedupLarge(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, k: Int,
                          iters: Int = 2): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val tl = TwoLevel.fit(df, idCol, vecCol, k, iters)
     val asg = tl.assign(
         df.select(col(idCol).as("__id"), col(vecCol).as("__vec")),
@@ -516,7 +509,7 @@ object Similarity {
     val a = asg.as("a"); val b = asg.as("b")
     val dropped = a
       .join(b, col("a.cluster") === col("b.cluster") && col("a.__id") > col("b.__id"))
-      .filter(call_function("graft_cosine",
+      .filter(GraftExtensions.call("graft_cosine",
         col("a.__vec"), col("b.__vec")) >= threshold)
       .select(col("a.__id").as("__drop")).distinct()
     asg.join(dropped, col("__id") === col("__drop"), "left_anti")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DiskSnapshot
+import graft.plans.GraftExtensions
 
 /** Two-level coarse quantizer: the scale path past the flat-argmin
   * centroid-literal ceiling ([[Similarity.MaxAutoClusters]] — the
@@ -80,7 +81,6 @@ object TwoLevel {
       */
     def assign(df: DataFrame, vecCol: String,
                cellCol: String = "cell"): DataFrame = {
-      graft.plans.GraftExtensions.registerAll(df.sparkSession)
       // internal columns ride a reserved __tl_ prefix END TO END: a
       // caller frame already carrying a "super" or "mat" column would
       // otherwise make the join condition ambiguous (or the final
@@ -95,7 +95,7 @@ object TwoLevel {
         else withSuper.join(mats, col("__tl_super") === col("__tl_s2"), "left")
       joined.withColumn(cellCol,
           col("__tl_super") * kChild + coalesce(
-            call_function("graft_nearest_cell", col(vecCol), col("__tl_mat")), lit(0)))
+            GraftExtensions.call("graft_nearest_cell", col(vecCol), col("__tl_mat")), lit(0)))
         .drop("__tl_super", "__tl_s2", "__tl_mat")
     }
 
@@ -124,7 +124,6 @@ object TwoLevel {
           iters: Int = 2, superIters: Int = 2): TwoLevelQuantizer = {
     require(k > 1 && k.toLong <= MaxClusters,
       s"two-level quantizer: k=$k out of range (2..$MaxClusters)")
-    graft.plans.GraftExtensions.registerAll(df.sparkSession)
     val kSuper = math.ceil(math.sqrt(k.toDouble)).toInt
     val kChild = math.ceil(k.toDouble / kSuper).toInt
 
@@ -158,7 +157,7 @@ object TwoLevel {
           corpusS.join(broadcast(mats), "super")
         else corpusS.join(mats, "super")
       val asg = joined.withColumn("child",
-        call_function("graft_nearest_cell", col("cv"), col("mat")))
+        GraftExtensions.call("graft_nearest_cell", col("cv"), col("mat")))
       // one partial-sum shuffle per step, exactly like the flat Lloyd,
       // but grouped by (super, child, pos) and NEVER collected
       val sums = asg
@@ -225,7 +224,7 @@ object TwoLevel {
       if (tl.matBytes <= broadcastBytes(q.sparkSession))
         supers.join(broadcast(tl.childMats), "super")
       else broadcast(supers).join(tl.childMats, "super"))
-      .withColumn("cd", call_function("graft_cell_dists", col("qv"), col("mat")))
+      .withColumn("cd", GraftExtensions.call("graft_cell_dists", col("qv"), col("mat")))
       .withColumn("pc", explode(zip_with(col("cd"),
         sequence(lit(0), size(col("cd")) - 1),
         (d, i) => struct(d.as("d"), i.as("child")))))
@@ -251,7 +250,6 @@ object TwoLevel {
   def ivfProbeTwoLevel(index: TwoLevelIvfIndex, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        nprobeSuper: Int = 4, nprobe: Int = 8): DataFrame = {
-    graft.plans.GraftExtensions.registerAll(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val probes = probeCells(index.quantizer, q, nprobeSuper, nprobe)
     Similarity.topKByCosine(index.cells.join(broadcast(probes), "cell")

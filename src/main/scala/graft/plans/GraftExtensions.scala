@@ -1,18 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftshim.KernelColumn
 import org.apache.spark.sql.types._
 import scala.reflect.ClassTag
 import graft.spatial.{Healpix, Morton}
 import KernelExpr._
 
-/** Catalyst extension point (builder-prompt preference order (b)/(c):
-  * a custom `Expression` with `doGenCode`, registered through the
-  * public `SparkSessionExtensions` API — no Catalyst internals are
-  * monkey-patched).
+/** The `graft_*` kernels as SQL functions: custom `Expression`s with
+  * `doGenCode`, injected through the public `SparkSessionExtensions`
+  * API (no Catalyst internals are monkey-patched).
   *
+  * Registration only serves SQL text (`spark.sql`, `expr`,
+  * `selectExpr`): Column callers use [[GraftExtensions.call]], whose
+  * Column carries the kernel's expression and resolves in any session.
   * Enable per-session with
   *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   * or imperatively via [[GraftExtensions.registerAll]].
@@ -90,7 +93,20 @@ object GraftExtensions {
           children(0), children(1)): Expression
       }))
 
-  /** Imperative registration into an existing session (idempotent). */
+  private val builders = descriptors.map { case (id, _, b) => id.funcName -> b }.toMap
+
+  /** The kernel `name` over `args`, as a Column that carries its
+    * expression: no session has to know the name. An unknown name
+    * throws here, naming the kernel. */
+  def call(name: String, args: Column*): Column = builders.get(name) match {
+    case Some(build) => KernelColumn(build, args)
+    case None => throw new IllegalArgumentException(
+      s"unknown graft kernel '$name': not in GraftExtensions.descriptors")
+  }
+
+  /** Registers every kernel's SQL name in an existing session
+    * (idempotent), for SQL text only; Column callers need no
+    * registration (see [[call]]). */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     descriptors.foreach { case (id, info, builder) =>

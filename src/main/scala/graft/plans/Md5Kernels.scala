@@ -37,7 +37,7 @@ object Md5Kernels {
 
   /** Null-element guard (r19 ADVICE): every internal call site feeds
     * split()-derived arrays (never null elements), but these kernels
-    * are session-registered SQL functions a user can call on any
+    * are public kernels a user can call on any
     * array<string> — a null element used to NPE inside
     * MessageDigest.update mid-task. Reject by kernel name instead.
     * Callers run it FIRST, before any short-array early return (e.g.

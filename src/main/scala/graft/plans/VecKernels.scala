@@ -11,9 +11,7 @@ import KernelExpr._
   * Semantically identical to functions/VectorFunctions (sequential
   * left-to-right double accumulation — same IEEE result), but one
   * fused JVM loop instead of zip_with+aggregate lambda trees: less
-  * janino compile time and no per-element closure dispatch. The HOF
-  * versions remain the session-free default; operators switch to
-  * these after GraftExtensions.registerAll.
+  * janino compile time and no per-element closure dispatch.
   */
 object VecKernels {
 

@@ -82,7 +82,6 @@ object Corpus {
     // composition; spec-asserted), so the oracle regex replay also
     // gates the custom expression.
     "q86_normalize" -> ((s, dir) => {
-      graft.plans.GraftExtensions.registerAll(s)
       val d = t(s, dir, "documents")
       val norm = TextFunctions.normalizeTextNative(augCase(col("text"), col("doc_id")))
       d.select(col("doc_id"), md5(norm).as("norm_fp"),
@@ -457,7 +456,6 @@ object Corpus {
     // its own 20-token prefix → partial coverage, 1 in 11 doubles →
     // near-full coverage) with the identical CASE replayed in SQL.
     "q136_gopher_repetition" -> ((s, dir) => {
-      graft.plans.GraftExtensions.registerAll(s)
       val toks = split(col("text"), " ")
       val aug = when(col("doc_id") % 7 === 0,
           concat(col("text"), lit(" "), array_join(slice(toks, 1, 20), " ")))

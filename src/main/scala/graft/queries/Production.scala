@@ -119,7 +119,6 @@ object Production {
     // ratio (not SQL-replayable: JDK Deflater); the q128 gate oracles
     // the entropy algebra via the dual form, spec pins kernel==dual
     "q128p_quality_signals_prod" -> ((s, dir) => {
-      graft.plans.GraftExtensions.registerAll(s)
       t(s, dir, "documents").select(col("doc_id"),
         round(graft.functions.TextFunctions.charEntropy(col("text")), 6)
           .as("char_entropy"),

@@ -8,6 +8,7 @@ import graft.io.FsUtil
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
 import graft.operators.{Clustering, CompressedAnn, Dedup, HashFamily, Multimodal, Pq, Similarity}
+import graft.plans.GraftExtensions
 
 /** Training-data pipeline operators (builder prompt §beyond-reference):
   * text analysis, dedup, similarity search, multimodal plumbing — each
@@ -326,9 +327,8 @@ object TextVector {
     // embedding L2 norm — native fused kernel (graft_l2norm), same
     // sequential accumulation as the HOF form (oracle-identical).
     "q28_embed_norm" -> ((s, dir) => {
-      graft.plans.GraftExtensions.registerAll(s)
       t(s, dir, "embeddings").select(col("vec_id"),
-        round(call_function("graft_l2norm", col("embedding")), 6).as("l2_norm"))
+        round(GraftExtensions.call("graft_l2norm", col("embedding")), 6).as("l2_norm"))
     }),
 
     // symmetric per-vector int8 quantization (FAISS-SQ8 shape): the

@@ -1,6 +1,7 @@
 package graft.spatial
 
 import org.apache.spark.sql.Column
+import graft.plans.GraftExtensions
 
 
 /** Minimal HEALPix (NESTED ordering) — the reference delegates to
@@ -207,19 +208,13 @@ object Healpix {
   /** Pixel-id column: the codegen'd [[graft.plans.HealpixPixExpr]]
     * Catalyst expression (round 14 used a Scala UDF here — opaque to
     * Catalyst, boxed per row; the expression fuses into whole-stage
-    * codegen like the Morton key). Registration is idempotent and
-    * rides the active session; stored pixel columns written by
+    * codegen like the Morton key). Stored pixel columns written by
     * earlier rounds are identical bit-for-bit (same ang2pixNest
     * kernel underneath).
     */
-  def pixelColumn(nside: Int, ra: Column, dec: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.plans.GraftExtensions.registerAll)
+  def pixelColumn(nside: Int, ra: Column, dec: Column): Column =
     // explicit double casts preserve the old UDF's input coercion
     // (the expression's eval assumes doubles)
-    org.apache.spark.sql.functions.call_function(
-      "graft_healpix_pix", ra.cast("double"), dec.cast("double"),
+    GraftExtensions.call("graft_healpix_pix", ra.cast("double"), dec.cast("double"),
       org.apache.spark.sql.functions.lit(nside))
-  }
 }

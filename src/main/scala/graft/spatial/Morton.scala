@@ -1,7 +1,8 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.GraftExtensions
 
 /** Morton (z-order) spatial keys (reference
   * python/opencosmo/spatial/octree.py:48-78 `get_octtree_index` —
@@ -90,16 +91,10 @@ object Morton {
     terms.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** Native-expression column form — requires [[register]] (or the
-    * `graft.plans.GraftExtensions` session extension) first.
-    */
+  /** Native-expression column form: the codegen'd
+    * [[graft.plans.MortonKeyExpr]], one JVM call per row. */
   def keyColumnNative(x: Column, y: Column, z: Column,
                       origin: Double, size: Double, level: Int): Column =
-    call_function("graft_morton_key", x.cast("double"), y.cast("double"), z.cast("double"), lit(origin), lit(size), lit(level))
-
-  /** Register the native Morton expression in this session's function
-    * registry (idempotent).
-    */
-  def register(spark: SparkSession): Unit =
-    graft.plans.GraftExtensions.registerAll(spark)
+    GraftExtensions.call("graft_morton_key", x.cast("double"), y.cast("double"),
+      z.cast("double"), lit(origin), lit(size), lit(level))
 }

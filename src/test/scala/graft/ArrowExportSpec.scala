@@ -12,7 +12,7 @@ class ArrowExportSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-arrow-$tag-").toString
+    tempDir(s"graft-arrow-$tag-").toString
 
   private def readAll(paths: Seq[String]): (Seq[String], Seq[Seq[Any]]) = {
     val parts = paths.map(ArrowExport.readArrowIpc)

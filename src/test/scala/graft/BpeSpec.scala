@@ -260,7 +260,7 @@ class BpeSpec extends SparkSpec {
     val df = Tables(spark, sf001, "documents")
     val merges = Bpe.trainMerges(df, "text", numMerges = 16)
     val vocab = Bpe.vocabulary(df, "text", merges)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bpe-art-").toString
+    val tmp = tempDir("graft-bpe-art-").toString
     Bpe.save(merges, vocab, tmp)
     val (m2, v2) = Bpe.load(tmp)
     assert(m2 == merges && v2 == vocab)

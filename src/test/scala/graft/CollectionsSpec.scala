@@ -176,7 +176,7 @@ class CollectionsSpec extends SparkSpec {
   }
 
   test("structure collection IO roundtrip with child clustering") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_struct").toString
+    val dir = tempDir("graft_struct").toString
     graft.io.OCIO.writeStructure(coll, dir)
     val back = graft.io.OCIO.openStructure(spark, dir, "halo_tag")
     assert(back.properties.count() == 3)
@@ -194,7 +194,7 @@ class CollectionsSpec extends SparkSpec {
     val parent = OCDataset(Seq((10L, 1.0), (20L, 2.0)).toDF("tree_node_id", "m"))
     val kids = Seq((10L, 5.0), (10L, 6.0), (20L, 7.0)).toDF("tree_node_id", "v")
     val coll = StructureCollection(parent, Map("leaves" -> kids), "tree_node_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_structkey").toString
+    val dir = tempDir("graft_structkey").toString
     graft.io.OCIO.writeStructure(coll, dir)
     val any = graft.io.OCIO.openAny(spark, dir) // no key hint given
       .asInstanceOf[StructureCollection]
@@ -210,7 +210,7 @@ class CollectionsSpec extends SparkSpec {
       graft.core.Header(redshift = 0.5))
     val s601 = OCDataset(Seq((3L, 7.0)).toDF("id", "v"),
       graft.core.Header(redshift = 1.5))
-    val dir = java.nio.file.Files.createTempDirectory("graft_lc").toString
+    val dir = tempDir("graft_lc").toString
     graft.io.OCIO.writeLightcone(Lightcone(Map(600 -> s600, 601 -> s601)), dir)
     val back = graft.io.OCIO.openLightcone(spark, dir)
     assert(back.steps.keySet == Set(600, 601))
@@ -277,7 +277,7 @@ class CollectionsSpec extends SparkSpec {
     import graft.spatial.{Healpix, Region}
     val nside = 8
     val pts = Seq((1L, 45.0, 30.0), (2L, 225.0, -30.0), (3L, 46.0, 31.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sky").toString
+    val dir = tempDir("graft_sky").toString
     pts.map { case (id, ra, dec) =>
       (id, ra, dec, Healpix.ang2pixNest(nside, ra, dec))
     }.toDF("id", "ra", "decl", "hp").write.mode("overwrite").parquet(dir)
@@ -321,7 +321,7 @@ class CollectionsSpec extends SparkSpec {
   }
 
   test("healpix map and simulation collection IO + openAny dispatch") {
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_hpm").toString
+    val dir1 = tempDir("graft_hpm").toString
     val m = HealpixMap((0L until 48L).map(p => (p, p * 2.0)).toDF("pixel", "value"),
       nside = 2)
     graft.io.OCIO.writeHealpixMap(m, dir1)
@@ -331,7 +331,7 @@ class CollectionsSpec extends SparkSpec {
     assert(hm.nside == 2 && hm.df.count() == 48)
     assert(hm.withResolution(1).df.count() == 12)
 
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_simc").toString
+    val dir2 = tempDir("graft_simc").toString
     graft.io.OCIO.writeSimulation(
       SimulationCollection(Map("simA" -> props, "simB" -> props)), dir2)
     val backS = graft.io.OCIO.openAny(spark, dir2)
@@ -341,8 +341,8 @@ class CollectionsSpec extends SparkSpec {
   }
 
   test("openMany reads several dataset dirs as one distributed scan") {
-    val d1 = java.nio.file.Files.createTempDirectory("graft_m1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_m2").toString
+    val d1 = tempDir("graft_m1").toString
+    val d2 = tempDir("graft_m2").toString
     graft.io.OCIO.write(OCDataset(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v")), d1)
     graft.io.OCIO.write(OCDataset(Seq((3L, 3.0)).toDF("id", "v")), d2)
     val all = graft.io.OCIO.openMany(spark, Seq(d1, d2))

@@ -97,7 +97,7 @@ class CoreSpec extends SparkSpec {
       assert(math.abs(decg - decT) < 1e-9, s"dec($id)")
     }
     // registered as a hook, it enriches at open — the plugin pattern
-    val dir = java.nio.file.Files.createTempDirectory("graft_skyhook").toString
+    val dir = tempDir("graft_skyhook").toString
     OCIO.write(OCDataset(df, Header(dataType = "lc_positions", cosmology = c)), dir)
     try {
       OCIO.Hooks.register("lc_positions")(SkyGeometry.hook())
@@ -300,7 +300,7 @@ class CoreSpec extends SparkSpec {
       halos.withNewColumns(Map("nope" -> "x"), "r2" -> ocCol("x"))
     }
     // survives write/reopen via the sidecar, like units
-    val dir = java.nio.file.Files.createTempDirectory("graft_desc").toString
+    val dir = tempDir("graft_desc").toString
     OCIO.write(d, dir)
     val back = OCIO.open(spark, dir)
     assert(back.header.columnDescriptions("r2") == "squared radius in the xy plane")
@@ -452,7 +452,7 @@ class CoreSpec extends SparkSpec {
   }
 
   test("OCIO write/open roundtrip with sidecar") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ocio").toString
+    val dir = tempDir("graft_ocio").toString
     OCIO.write(halos, dir, sortColumn = Some("halo_tag"))
     val back = OCIO.open(spark, dir)
     assert(back.header == halos.header)
@@ -462,7 +462,7 @@ class CoreSpec extends SparkSpec {
 
   test("registered data-type hooks run at open, before per-call hooks") {
     import org.apache.spark.sql.functions.{col, lit}
-    val dir = java.nio.file.Files.createTempDirectory("graft_hooks").toString
+    val dir = tempDir("graft_hooks").toString
     OCIO.write(OCDataset(Seq((1L, 2.0)).toDF("id", "v"),
       Header(dataType = "hooked")), dir)
     try {
@@ -501,7 +501,7 @@ class CoreSpec extends SparkSpec {
 
   test("multi-format IO: json and csv roundtrip with sidecar") {
     for (fmt <- Seq("json", "csv")) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_$fmt").toString
+      val dir = tempDir(s"graft_$fmt").toString
       graft.io.OCIO.writeAs(halos, dir, fmt)
       val back = graft.io.OCIO.openAs(spark, dir, fmt,
         csvSchema = if (fmt == "csv") Some(halos.df.schema) else None)
@@ -598,7 +598,7 @@ class CoreSpec extends SparkSpec {
     assert(real.count() > 0)
 
     // long-typed drop: micros-as-nanos round-trips to the same instant
-    val dir = java.nio.file.Files.createTempDirectory("evts").toString
+    val dir = tempDir("evts").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:07.179575")
     val epochNanos = (t0.getTime * 1000L + 575L) * 1000L
     Seq((0L, epochNanos)).toDF("event_id", "ts")

@@ -102,7 +102,6 @@ class CorpusSpec extends SparkSpec {
     // Unicode edge: characters whose LOWERCASE maps into ASCII
     // (U+212A KELVIN → k) must survive in BOTH forms; ordinary
     // non-ASCII (é, 汉) collapses to a space in both
-    graft.plans.GraftExtensions.registerAll(spark)
     val uni = Seq(("mix K naïve 汉字 Ab1", 0)).toDF("t", "i")
       .select(TextFunctions.normalizeText($"t").as("re"),
         TextFunctions.normalizeTextNative($"t").as("nat"))
@@ -362,7 +361,6 @@ class CorpusSpec extends SparkSpec {
     }
     val df = texts.toDF("id", "raw", "salted")
     val n = 3; val w = 4
-    graft.plans.GraftExtensions.registerAll(spark)
     val got = df.select($"id",
       TextFunctions.ngrams($"raw", n).as("g"),
       TextFunctions.tokenChunks($"raw", w).as("c"),
@@ -907,7 +905,6 @@ class CorpusSpec extends SparkSpec {
 
   test("charEntropy kernel: exact small cases, matches dual form on real docs") {
     import spark.implicits._
-    graft.plans.GraftExtensions.registerAll(spark)
     val cases = Seq(
       (1L, "aaaa"),          // single symbol -> 0
       (2L, "abab"),          // two equiprobable -> ln 2
@@ -944,7 +941,6 @@ class CorpusSpec extends SparkSpec {
 
   test("compressionRatio orders repetitive below high-entropy text") {
     import spark.implicits._
-    graft.plans.GraftExtensions.registerAll(spark)
     val rnd = new scala.util.Random(7)
     val noisy = (0 until 400).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
     val d = Seq(

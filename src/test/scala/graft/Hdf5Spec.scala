@@ -19,7 +19,7 @@ class Hdf5Spec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String = {
-    val d = Files.createTempDirectory("graft-h5-").toString
+    val d = tempDir("graft-h5-").toString
     s"$d/$name"
   }
 
@@ -554,7 +554,7 @@ class Hdf5Spec extends SparkSpec {
   }
 
   test("reader rejects non-HDF5 and truncated files loudly") {
-    val d = Files.createTempDirectory("graft-h5-bad")
+    val d = tempDir("graft-h5-bad")
     val bad = d.resolve("bad.hdf5")
     Files.write(bad, "not an hdf5 file at all, just text".getBytes)
     val e = intercept[Exception](new Hdf5Reader(bad.toString).rootHeaderAddr)
@@ -595,7 +595,7 @@ class Hdf5Spec extends SparkSpec {
   }
 
   test("corrupted v2 object header fails its checksum loudly") {
-    val d = Files.createTempDirectory("graft-h5-corrupt")
+    val d = tempDir("graft-h5-corrupt")
     val p = d.resolve("corrupt.hdf5")
     val b = Files.readAllBytes(java.nio.file.Paths.get(latestFixture))
     // flip one bit inside the root object header's message area (the
@@ -728,7 +728,7 @@ class Hdf5Spec extends SparkSpec {
   }
 
   test("corrupted fractal-heap direct block fails its checksum loudly") {
-    val d = Files.createTempDirectory("graft-h5-densecorrupt")
+    val d = tempDir("graft-h5-densecorrupt")
     val p = d.resolve("corrupt_dense.hdf5")
     val src = getClass.getResource("/nation_dense.hdf5").getPath
     val b = Files.readAllBytes(java.nio.file.Paths.get(src))
@@ -964,7 +964,7 @@ class Hdf5Spec extends SparkSpec {
     // hand-built v2 object header carrying an Attribute Info message
     // (0x0015) whose fractal heap address is DEFINED but holds no
     // FRHP — the dense walk must error by name, not drop metadata
-    val d = Files.createTempDirectory("graft-h5-dense")
+    val d = tempDir("graft-h5-dense")
     val p = d.resolve("dense.hdf5")
     val bb = java.nio.ByteBuffer.allocate(256)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -1048,7 +1048,7 @@ class Hdf5Spec extends SparkSpec {
     val fixtures = Seq("nation_latest", "nation_paged", "nation_dense",
       "nation_ea", "nation_ea_sblk", "nation_ea_paged", "nation_bt2",
       "nation_dattr")
-    val dir = Files.createTempDirectory("graft-h5-trunc")
+    val dir = tempDir("graft-h5-trunc")
     val rnd = new scala.util.Random(42) // deterministic
     fixtures.foreach { fx =>
       val src = java.nio.file.Paths.get(getClass.getResource(s"/$fx.hdf5").getPath)

@@ -17,7 +17,7 @@ class OpenSchemaSpec extends SparkSpec {
   private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   /** The frame `open` returns, after asserting it started no job. */
   private def noJob[T](what: String)(open: => T): T = {

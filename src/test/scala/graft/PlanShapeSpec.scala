@@ -311,7 +311,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bucketed tables join without an exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val wh = tempDir("graft_buckets").toString
     val orders = Tables(spark, sf001, "orders")
     val lineitem = Tables(spark, sf001, "lineitem")
     ScaleOps.writeBucketed(orders.select("o_orderkey", "o_totalprice"),
@@ -335,7 +335,6 @@ class PlanShapeSpec extends SparkSpec {
     // cluster-confined: the self-join must plan as an equi-join on the
     // cluster key (hash/sort-merge), not a cartesian or nested-loop
     // product over the corpus
-    graft.plans.GraftExtensions.registerAll(spark)
     val e = Tables(spark, sf001, "embeddings")
     val asg = e.select(col("vec_id").as("__id"),
       col("embedding").as("__vec"), (col("vec_id") % 8).cast("int").as("cluster"))
@@ -351,7 +350,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(!proj.contains("Exchange"), s"projection shuffles:\n$proj")
     // executedPlan renders whole-stage codegen spans as "*(id)"
     assert(proj.contains("*("), s"projection not codegen'd:\n$proj")
-    graft.plans.GraftExtensions.registerAll(spark)
     val d = Tables(spark, sf001, "documents")
     val merges = graft.operators.Bpe.trainMerges(d, "text", 16)
     val enc = graft.operators.Bpe.encodeFast(d, "doc_id", "text", merges)

@@ -74,7 +74,7 @@ class PluginHooksSpec extends SparkSpec {
 
   test("partition query replaces the opened frame; first non-None wins") {
     Hooks.clearAll()
-    val dir = java.nio.file.Files.createTempDirectory("graft_hookpart").toString
+    val dir = tempDir("graft_hookpart").toString
     OCIO.write(halos, dir)
     try {
       // a deferring plugin (None) followed by a responding one
@@ -89,9 +89,9 @@ class PluginHooksSpec extends SparkSpec {
 
   test("datasetOpen and lightconeOpen folds enrich at open") {
     Hooks.clearAll()
-    val dir = java.nio.file.Files.createTempDirectory("graft_hookopen").toString
+    val dir = tempDir("graft_hookopen").toString
     OCIO.write(halos, dir)
-    val lcDir = java.nio.file.Files.createTempDirectory("graft_hooklc").toString
+    val lcDir = tempDir("graft_hooklc").toString
     val lc = graft.collections.Lightcone(Map(
       600 -> halos.copy(header = halos.header.copy(redshift = 0.1)),
       601 -> halos.copy(header = halos.header.copy(redshift = 0.2))))
@@ -117,7 +117,7 @@ class PluginHooksSpec extends SparkSpec {
       d.copy(df = d.df.withColumn("typed", col("mass") > 1e13)))
     try {
       for (fmt <- Seq("parquet", "json")) {
-        val dir = java.nio.file.Files.createTempDirectory(s"graft_hookas_$fmt").toString
+        val dir = tempDir(s"graft_hookas_$fmt").toString
         OCIO.writeAs(halos.copy(header = halos.header.copy(dataType = "typed_halos")),
           dir, fmt)
         val back = OCIO.openAs(spark, dir, fmt)

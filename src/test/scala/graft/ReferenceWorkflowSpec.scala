@@ -58,7 +58,7 @@ class ReferenceWorkflowSpec extends SparkSpec {
     val keyed = halosRows.withColumn("morton_l4",
       graft.spatial.Morton.keyColumn($"fof_halo_center_x", $"fof_halo_center_y",
         $"fof_halo_center_z", 0.0, boxSize, 4))
-    val dir = java.nio.file.Files.createTempDirectory("graft_halos").toString
+    val dir = tempDir("graft_halos").toString
     OCIO.write(OCDataset(keyed, header), dir, sortColumn = Some("morton_l4"))
     val ds = OCIO.open(spark, dir)
 

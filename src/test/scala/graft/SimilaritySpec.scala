@@ -21,7 +21,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graft_jl_project kernel == randomProjectMd5Q HOF bit-for-bit") {
-    graft.plans.GraftExtensions.registerAll(spark)
     val e = Tables(spark, sf001, "embeddings").limit(50)
     def proj(c: org.apache.spark.sql.Column) =
       e.select(col("vec_id"), c.as("p")).collect()
@@ -444,7 +443,7 @@ class SimilaritySpec extends SparkSpec {
       "vec_id", "embedding", 5)
     assert(r1.count() == 25 && r2.count() == 25)
     // persisted index round-trip: probing the reopened index is identical
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     Similarity.writeIvfIndex(idx, dir)
     val (reopened, openJobs) = withJobCount(Similarity.openIvfIndex(spark, dir))
     assert(openJobs == 0, s"openIvfIndex started $openJobs job(s)")

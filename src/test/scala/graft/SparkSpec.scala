@@ -8,6 +8,13 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf001 = "/root/testdata/sf0.001"
 
+  /** A fresh temp directory, deleted with its contents at JVM exit. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    graft.io.FsUtil.deleteOnExit(d)
+    d
+  }
+
   /** `body`'s result and the number of Spark jobs it started, counted
     * once the listener bus has delivered every event. */
   def withJobCount[T](body: => T): (T, Int) = {

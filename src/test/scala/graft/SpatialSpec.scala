@@ -58,7 +58,6 @@ class SpatialSpec extends SparkSpec {
   }
 
   test("native morton expression matches and is registered via extensions") {
-    Morton.register(spark)
     val pts = Seq((1.0, 2.0, 3.0), (87.3, 12.9, 55.5)).toDF("x", "y", "z")
     val native = pts.select(Morton.keyColumnNative($"x", $"y", $"z", 0.0, 100.0, 6))
       .collect().map(_.getLong(0)).toSeq
@@ -224,7 +223,7 @@ class SpatialSpec extends SparkSpec {
 
   test("writeSpatial stored index: bound matches brute force and prunes row groups") {
     import graft.core.{Header, OCDataset}
-    val dir = java.nio.file.Files.createTempDirectory("graft_spatial").toString
+    val dir = tempDir("graft_spatial").toString
     val rnd = new scala.util.Random(7)
     val pts = (0 until 20000).map(i =>
       (i.toLong, rnd.nextDouble * 100, rnd.nextDouble * 100, rnd.nextDouble * 100))
@@ -317,7 +316,7 @@ class SpatialSpec extends SparkSpec {
     val pts = (0 until 1000).map(i =>
       (i.toLong, rnd.nextDouble * 10, rnd.nextDouble * 10, rnd.nextDouble * 10))
       .toDF("id", "x", "y", "z")
-    val dir = java.nio.file.Files.createTempDirectory("graft_auto").toString
+    val dir = tempDir("graft_auto").toString
     OCIO.writeSpatial(OCDataset(pts, Header(boxSize = 10.0)), dir)
     val re = OCIO.open(spark, dir)
     assert(re.header.spatialIndexLevel == 1)
@@ -328,7 +327,7 @@ class SpatialSpec extends SparkSpec {
 
   test("stored index records its coords; bound over OTHER columns ignores it") {
     import graft.core.{Header, OCDataset}
-    val dir = java.nio.file.Files.createTempDirectory("graft_coords").toString
+    val dir = tempDir("graft_coords").toString
     val rnd = new scala.util.Random(11)
     val pts = (0 until 2000).map(i =>
       (i.toLong, rnd.nextDouble * 100, rnd.nextDouble * 100, rnd.nextDouble * 100,
@@ -398,7 +397,7 @@ class SpatialSpec extends SparkSpec {
   test("stored index survives a unit conversion (key region rescaled to base)") {
     import graft.core.{Header, OCDataset}
     import graft.units.Units.{Cosmology, Physical}
-    val dir = java.nio.file.Files.createTempDirectory("graft_spatial_conv").toString
+    val dir = tempDir("graft_spatial_conv").toString
     val rnd = new scala.util.Random(13)
     val pts = (0 until 5000).map(i =>
       (i.toLong, rnd.nextDouble * 100, rnd.nextDouble * 100, rnd.nextDouble * 100))

@@ -389,7 +389,7 @@ class StreamingSpec extends SparkSpec {
   test("file-source corpus ingest: landing docs -> gated/deduped window stats -> parquet") {
     import graft.streaming.StreamingPipelines
     import StreamingSpecFixtures.Doc
-    val base = java.nio.file.Files.createTempDirectory("graft_corpus_stream").toString
+    val base = tempDir("graft_corpus_stream").toString
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
     val good = "the quick brown fox jumps over the lazy dog again and again today"
     val first = Seq(
@@ -414,7 +414,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-source pipeline: readStream parquet -> tumbling agg -> parquet sink") {
     import graft.streaming.StreamingPipelines
-    val base = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val base = tempDir("graft_stream").toString
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
     val batch1 = evs.filter(_.event_id <= 3).toDF()
     batch1.write.parquet(inDir)

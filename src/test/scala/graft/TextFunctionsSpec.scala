@@ -134,7 +134,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("repetition signals: planted doc, exact integers") {
-    graft.plans.GraftExtensions.registerAll(spark)
     // "ab cd ab cd ab x" — 6 tokens, 11 chars total.
     // 2-grams: "ab cd"×2, "cd ab"×2, "ab x"×1 → max count 2, tie
     // breaks to the smallest gram "ab cd" (4 chars) → top2 = 2×4 = 8.
@@ -153,7 +152,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("repetition signals: dup coverage unions overlapping occurrences") {
-    graft.plans.GraftExtensions.registerAll(spark)
     // doubled text: every 5-gram of the first copy repeats, so
     // coverage spans ALL tokens → dup5 = total chars; a doc shorter
     // than n yields 0 for that n, and empty text is all-zero
@@ -171,7 +169,6 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("Gopher repetition filter: clean text passes, looped text fails") {
-    graft.plans.GraftExtensions.registerAll(spark)
     // the clean doc must be LONG enough that a count-1 top-4-gram is
     // a small char fraction — the thresholds assume real documents,
     // and a 10-token doc's unique 4-gram is already ~40% of its chars

@@ -94,7 +94,7 @@ class TwoLevelSpec extends SparkSpec {
         assert(math.abs(c - r.getDouble(3)) < 1e-9, s"cosine mismatch at $key"))
     }
     // disk roundtrip: a reopened index probes to the identical result
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cann-spec-").toString
+    val tmp = tempDir("graft-cann-spec-").toString
     CompressedAnn.write(idx, tmp)
     val (reopened, openJobs) = withJobCount(CompressedAnn.open(spark, tmp))
     assert(openJobs == 0, s"CompressedAnn.open started $openJobs job(s)")
